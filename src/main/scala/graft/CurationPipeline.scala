@@ -216,65 +216,19 @@ object CurationPipeline {
     * vals) so a measurement harness ([[CurationBench]]) can
     * materialize stage k before stage k+1's construction begins and
     * attribute wall-clock per stage — the near-dup clustering stage
-    * runs its label-propagation rounds EAGERLY at construction, so a
-    * strict decomposition would charge all upstream work to whichever
-    * stage is built first. The last entry is [[curateExtended]]'s
-    * return value; forcing only it reproduces the plain composed
-    * flow. */
-  /** The tail-rule-INVARIANT prefix of [[curateExtendedStages]]: the
-    * frames that are byte-identical across pipeline variants that only
-    * differ in their stage-3+ rules (LM-tail mode, DSIR target) —
-    * exact-dedup reps, line-dedup rewritten text, the per-doc
-    * surprisal frame, and the repetition-quality survivor ids. Two
-    * such variants over the SAME (docs, segs, lineMinDf, cfg) can
-    * share one prefix and pay its construction once (the q253/q256
-    * gate pair).
+    * runs its label-propagation rounds EAGERLY at construction, and
+    * under AQE an eager staging (or a localCheckpoint's toRdd) runs a
+    * frame's shuffle stages at construction too, so a strict
+    * decomposition would charge all upstream work to whichever stage
+    * is built first. The last entry is [[curateExtended]]'s return
+    * value; forcing only it reproduces the plain composed flow.
     *
-    * Members are individually LAZY: under AQE an eager staging `st`
-    * (or even a localCheckpoint's toRdd) runs a frame's shuffle
-    * stages at construction, so building all four at once would
-    * charge the whole prefix to whichever stage is forced first — a
-    * per-stage measurement harness (CurationBench) wants each frame
-    * to materialize inside its OWN stage's timing. Evaluated at most
-    * once per instance; a cached instance hands later variants the
-    * already-evaluated frames. */
-  final class SharedPrefix(
-      repsF: () => DataFrame, rewrittenF: () => DataFrame,
-      surprisalF: () => DataFrame, qualityIdsF: () => DataFrame) {
-    lazy val reps: DataFrame = repsF()
-    lazy val rewritten: DataFrame = rewrittenF()
-    lazy val surprisal: DataFrame = surprisalF()
-    lazy val qualityIds: DataFrame = qualityIdsF()
-  }
-
-  /** Builds a [[SharedPrefix]] with `st` as the staging function for
-    * every frame (each one has 2+ consumers across the sharing
-    * variants). A caller that needs the prefix to SURVIVE session
-    * RDD cleanup between queries passes a parquet-backed `st` (the
-    * funnel gates do — localCheckpoint blocks die with an
-    * unpersist, parquet does not). Nothing materializes until a
-    * member is first used. */
-  def buildSharedPrefix(docs: DataFrame, segs: Column, lineMinDf: Int,
-      cfg: Config, st: DataFrame => DataFrame): SharedPrefix = {
-    lazy val self: SharedPrefix = new SharedPrefix(
-      () => st(Dedup.exact(docs, "text", "doc_id")),
-      () => st {
-        val kept = Curation.lineDedup(self.reps, "doc_id", segs, ". ", lineMinDf)
-          .select(col("doc_id"), col("kept_text"))
-        self.reps.drop("text")
-          .join(kept.withColumnRenamed("kept_text", "text"), Seq("doc_id"))
-          .filter(length(col("text")) > 0)
-      },
-      () => st(Curation.unigramSurprisal(self.rewritten, "text", "doc_id")),
-      () => st(qualitySurvivors(
-        Curation.repetitionStats(self.rewritten, "text", "doc_id"), cfg, st)))
-    self
-  }
-
-  /** `sharedPrefix`: optionally inject an already-built (and typically
-    * already-materialized) [[SharedPrefix]] instead of rebuilding it.
-    * Caller's contract: the prefix MUST have been built from these
-    * exact (docs, segs, lineMinDf, cfg) — nothing re-validates it. */
+    * `staging` materializes each multi-consumer frame of the flow.
+    * `None` applies the scan-footprint rule of [[stageAt]]. A caller
+    * that forces every stage (the q253/q256 funnel gates) passes a
+    * function that stages every frame unconditionally — the funnel's
+    * writes the frame as parquet and reads it back. Either way the
+    * rows are identical. */
   def curateExtendedStages(docs: DataFrame, evalPred: Column, segs: Column,
       dsirTarget: Option[Column] = None,
       seed: String = "ep1", nShards: Int = 8,
@@ -282,38 +236,41 @@ object CurationPipeline {
       lineMinDf: Int = 2,
       surprisalTailPct: Option[Int] = None,
       cfg: Config = Config(),
-      sharedPrefix: Option[SharedPrefix] = None): Seq[(String, () => DataFrame)] = {
-    val st = stageAt(Dedup.atScale(docs)) _
+      staging: Option[DataFrame => DataFrame] = None): Seq[(String, () => DataFrame)] = {
+    val st = staging.getOrElse(stageAt(Dedup.atScale(docs)) _)
     // 1. exact dedup, then line-level dedup rewrites the text the rest
-    // of the flow sees (boilerplate lines vanish before any signal);
-    // with the surprisal + quality frames these form the
-    // tail-rule-invariant prefix, shareable across variants
-    lazy val pre = sharedPrefix.getOrElse(
-      buildSharedPrefix(docs, segs, lineMinDf, cfg, st))
-    lazy val reps = pre.reps
-    lazy val rewritten = pre.rewritten
+    // of the flow sees (boilerplate lines vanish before any signal)
+    lazy val reps = st(Dedup.exact(docs, "text", "doc_id"))
+    lazy val rewritten = st {
+      val kept = Curation.lineDedup(reps, "doc_id", segs, ". ", lineMinDf)
+        .select(col("doc_id"), col("kept_text"))
+      reps.drop("text")
+        .join(kept.withColumnRenamed("kept_text", "text"), Seq("doc_id"))
+        .filter(length(col("text")) > 0)
+    }
+    // the per-doc surprisal frame (read twice in pct mode: threshold
+    // + cut) and the repetition-quality survivor ids
+    lazy val surprisal = st(Curation.unigramSurprisal(rewritten, "text", "doc_id"))
+    lazy val qualityIds = st(qualitySurvivors(
+      Curation.repetitionStats(rewritten, "text", "doc_id"), cfg, st))
 
     // 2. quality gate + 3. LM-surprisal tail drop (fixed milli-bits
     // cut, or — when `surprisalTailPct` is set — the corpus-relative
     // percentile cut derived from the SAME surprisal frame in one
     // extra dim-sized pass; see [[surprisalTailThreshold]])
     lazy val qualified = st {
-      // the repetition-survivor ids and the surprisal frame come from
-      // the (possibly shared) prefix — both staged there, since the
-      // pct mode reads surprisal twice (threshold + cut) and sharing
-      // variants read everything twice
       val lmTail = surprisalTailPct match {
         case Some(pct) =>
-          pre.surprisal
-            .crossJoin(broadcast(surprisalTailThreshold(pre.surprisal, pct)))
+          surprisal
+            .crossJoin(broadcast(surprisalTailThreshold(surprisal, pct)))
             .filter(col("milli_bits_per_token") >= col("thr"))
             .select(col("doc_id"))
         case None =>
-          pre.surprisal
+          surprisal
             .filter(col("milli_bits_per_token") >= surprisalTailMilli)
             .select(col("doc_id"))
       }
-      rewritten.join(pre.qualityIds, Seq("doc_id"), "left_semi")
+      rewritten.join(qualityIds, Seq("doc_id"), "left_semi")
         .join(lmTail, Seq("doc_id"), "left_anti")
     }
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Time a single SparkEntry query: runMain graft.QBench <name> [sfDir] [reps].
   * Materializes via noop write, prints seconds per rep — the scalpel for
   * profiling one query without the full Bench sweep. */
@@ -10,12 +8,7 @@ object QBench {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 2
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder("32").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     (1 to reps).foreach { r =>
       val t0 = System.nanoTime()

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one local-session recipe shared by the harness mains (Bench,
-  * Verify, ScaleBench, CurationBench, ABBench).
+  * Verify, ScaleBench, CurationBench, ABBench) and the profilers
+  * (QBench, JobProf, StageScan).
   *
   * The bench must measure the same engine the oracle verifies and the
   * scale runner exercises: a conf that lives in only one main measures

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Fleet diagnostic: for every SparkEntry query, how much of its
   * executor time runs in LOW-PARALLELISM stages (1-2 tasks on a
@@ -14,12 +13,7 @@ object StageScan {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val minSerialMs = if (args.length > 1) args(1).toLong else 300L
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder("32").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val stages = new scala.collection.mutable.ArrayBuffer[(Long, Int)]() // (runtimeMs, nTasks)

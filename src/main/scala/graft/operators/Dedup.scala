@@ -43,15 +43,19 @@ object Dedup {
     *  - with `spark.graft.stagingDir` set: a staging parquet write +
     *    read-back — the reliable production form (any executor can
     *    re-read lost partitions from shared storage). */
-  def stage(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    spark.conf.getOption(StagingDirConf) match {
-      case Some(dir) =>
-        val path = s"$dir/stage_${java.util.UUID.randomUUID()}"
-        df.write.mode("overwrite").parquet(path)
-        spark.read.parquet(path)
+  def stage(df: DataFrame): DataFrame =
+    df.sparkSession.conf.getOption(StagingDirConf) match {
+      case Some(dir) => stageParquet(df, dir)
       case None => df.localCheckpoint(false)
     }
+
+  /** Writes `df` as parquet to a fresh directory under `root` and
+    * returns the read-back scan: the staged frame survives RDD cleanup
+    * (an unpersist between queries), which a localCheckpoint does not. */
+  def stageParquet(df: DataFrame, root: String): DataFrame = {
+    val path = s"$root/stage_${java.util.UUID.randomUUID()}"
+    df.write.mode("overwrite").parquet(path)
+    df.sparkSession.read.parquet(path)
   }
 
   /** Exact dedup: keep the smallest id per content hash. Min-agg +
@@ -182,6 +186,12 @@ object Dedup {
     probe.inputFiles.isEmpty || inputBytes(probe) >= thr
   }
 
+  /** Spark conf key: kill switch for [[spread]], for in-JVM A/B
+    * measurement (ABBench interleaves arms with it). Only an explicit
+    * `false` (any case) turns spread off; any other value, or none,
+    * leaves it on, so a malformed value never fails a query. */
+  val SpreadEnabledConf = "spark.graft.spread.enabled"
+
   /** Spread a SMALL scan across the cluster before per-row-EXPENSIVE
     * work (regex cascades, timestamp parsing, tokenization, codec
     * decode). A parquet scan parallelizes at ROW-GROUP granularity:
@@ -206,9 +216,7 @@ object Dedup {
     * also returns unchanged. */
   def spread(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    // kill switch for in-JVM A/B measurement (ABBench interleaves arms
-    // with this conf); shipped default is enabled
-    if (!spark.conf.getOption("spark.graft.spread.enabled").forall(_.toBoolean))
+    if (spark.conf.getOption(SpreadEnabledConf).exists(_.equalsIgnoreCase("false")))
       return df
     val files = df.inputFiles
     if (files.isEmpty) return df
@@ -1178,11 +1186,6 @@ object Dedup {
     * count; strictly less data moved per round. */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 20): DataFrame = {
-    // A/B switch for the r15 3-exchange-per-round loop (ABBench arms);
-    // shipped default is the frontier form below
-    if (pairs.sparkSession.conf.getOption("spark.graft.cc.frontier")
-        .exists(v => !v.toBoolean))
-      return connectedComponentsSimple(pairs, aCol, bCol, maxIter)
     val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
       .repartition(col("dst"))
@@ -1204,33 +1207,6 @@ object Dedup {
       // both views below read the checkpointed blocks — no recompute
       frontier = updated.filter(col("new_lab") < col("lab"))
         .select(col("node"), col("new_lab").as("lab"))
-      labels = updated.select(col("node"), col("new_lab").as("lab"))
-      iter += 1
-    }
-    labels
-  }
-
-  /** The r15 loop shape (kept for in-JVM A/B): full label frame joined
-    * every round, no pre-partitioned edges — 3 exchanges per round. */
-  private def connectedComponentsSimple(pairs: DataFrame, aCol: String,
-      bCol: String, maxIter: Int): DataFrame = {
-    val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .localCheckpoint()
-    var labels = edges.select(col("src").as("node")).distinct()
-      .withColumn("lab", col("node"))
-      .localCheckpoint()
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val nbrMin = edges.join(labels, edges("dst") === labels("node"))
-        .groupBy(col("src")).agg(min(col("lab")).as("nbr_lab"))
-      val updated = labels
-        .join(nbrMin, labels("node") === nbrMin("src"), "left")
-        .select(col("node"), col("lab"),
-          least(col("lab"), coalesce(col("nbr_lab"), col("lab"))).as("new_lab"))
-        .localCheckpoint()
-      converged = updated.filter(col("new_lab") < col("lab")).isEmpty
       labels = updated.select(col("node"), col("new_lab").as("lab"))
       iter += 1
     }

@@ -794,7 +794,7 @@ object Similarity {
   val AllowCellSplitConf = "spark.graft.allowCellSplit"
 
   private def allowCellSplit(spark: org.apache.spark.sql.SparkSession): Boolean =
-    spark.conf.getOption(AllowCellSplitConf).exists(_.toBoolean)
+    spark.conf.getOption(AllowCellSplitConf).exists(java.lang.Boolean.parseBoolean)
 
   /** Occupancy-bounded cell refinement — the scale contract that keeps
     * SemDeDup's within-cell pairwise from going quadratic when the

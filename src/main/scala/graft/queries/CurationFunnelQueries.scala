@@ -32,10 +32,9 @@ import graft.operators.Dedup
   * independently end to end.
   *
   * Scale shape: identical to curateExtended (each stage is the audited
-  * operator; the funnel adds only 8 scalar aggregates). At gate scale
-  * the flow is one fused DAG; past [[graft.operators.Dedup.StageMinInputBytes]]
-  * the multi-consumer staging materializes each survivor chain once
-  * (the zipf x64 CurationBench datum in SURVEY §5).
+  * operator; the funnel adds only 8 scalar aggregates), except that
+  * every multi-consumer frame is staged as parquet at any corpus size
+  * (see `funnel`), so each survivor chain materializes once.
   */
 object CurationFunnelQueries {
 
@@ -57,208 +56,58 @@ object CurationFunnelQueries {
     * either LM-tail mode (`tailPct = None` -> the fixed `TailMilli`
     * cut of q253; `Some(p)` -> q256's corpus-relative percentile cut).
     *
-    * Gate-scale staging: the funnel forces EVERY stage thunk, and
-    * each of the 8 scalar aggregates consumes the full stage prefix —
-    * unstaged (the gate corpora sit below `StageMinInputBytes`) stage
-    * k's plan re-runs every upstream stage once per consumer, and the
-    * near-dup stage's label-propagation rounds re-derive the whole
-    * prefix once per round (the 27.7 s q253 price in the r13 sweep).
-    * Forcing the multi-consumer staging ON for the funnel's
-    * construction makes each stage materialize exactly once and every
-    * consumer (aggregate rows, component rounds, downstream stages)
-    * read the checkpoint — row-identical by the staging contract
-    * (CurationPipelineSpec pins both shapes), ~3x cheaper at gate
-    * scale. The conf is restored on exit; the localCheckpoint plan
-    * nodes already built keep their staged shape regardless. */
-  /** The two funnel gates share their tail-rule-invariant prefix
-    * BYTE-IDENTICALLY (exact dedup, line dedup, surprisal, quality
-    * ids — the rules only diverge at stage 3), so whichever gate runs
-    * first builds the prefix ONCE as PARQUET-backed staged frames and
-    * this memo hands the other gate the already-materialized
-    * [[graft.CurationPipeline.SharedPrefix]], keyed by (session, dir).
-    * Parquet (a temp dir, same pattern as `Dedup.stage`'s stagingDir
-    * branch) rather than localCheckpoint because the gate harness
-    * (Verify/Bench) unpersists every session RDD between queries —
-    * checkpoint blocks would be gone by the second gate, parquet
-    * survives.
+    * Staging: the funnel forces EVERY stage thunk, and each of the 8
+    * scalar aggregates consumes the full stage prefix — unstaged (the
+    * gate corpora sit below `StageMinInputBytes`), stage k's plan
+    * re-runs every upstream stage once per consumer, and the near-dup
+    * stage's label-propagation rounds re-derive the whole prefix once
+    * per round. So the funnel passes a `staging` function that writes
+    * each multi-consumer frame once as parquet and reads it back
+    * ([[Dedup.stageParquet]]): every consumer (aggregate rows,
+    * component rounds, downstream stages) reads the staged scan,
+    * row-identical by the staging contract. Parquet, not the default
+    * localCheckpoint: a checkpointed frame carries its origin plan's
+    * inflated size estimates into later join choices.
     *
-    * Staleness + lifecycle (r16):
-    *  - each entry carries an INPUT FINGERPRINT (file names, lengths,
-    *    modification times of the docs scan) — a corpus regenerated
-    *    under the same dir within one JVM (a harness rewriting test
-    *    data between rounds) misses the memo and rebuilds instead of
-    *    silently reading the stale staged prefix;
-    *  - entries whose SparkSession has stopped are evicted on every
-    *    lookup AND by [[close]], and their staged parquet dirs are
-    *    deleted (a stopped session can hold no live plan over them);
-    *  - dirs of LIVE-session entries displaced by a fingerprint
-    *    mismatch or the size bound are NOT deleted — a caller may
-    *    still hold a DataFrame reading them (the caller-holds-plan
-    *    hazard) — they fall to JVM tmpdir cleanup, the established
-    *    staging convention.
-    * Bounded: one entry per (session, dir) pair a JVM ever gates —
-    * cleared wholesale past a small size. */
-  private case class PrefixEntry(session: SparkSession, fingerprint: Long,
-    root: String, pre: CurationPipeline.SharedPrefix)
-
-  private val prefixCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), PrefixEntry]()
-
-  def clearPrefixCache(): Unit = {
-    evictStale(s => s.sparkContext.isStopped)
-    prefixCache.clear()
-  }
-
-  /** Deletes the staged prefix dirs of every STOPPED-session entry and
-    * drops those entries; live-session entries stay (their dirs may
-    * back plans a caller still holds). Call when a harness retires a
-    * session. */
-  def close(): Unit = evictStale(s => s.sparkContext.isStopped)
-
-  // test hooks: the lifecycle (eviction + fingerprint invalidation)
-  // is only observable through the private map
-  private[graft] def stagePrefixEntryForTest(s: SparkSession, dir: String,
-      root: String): Unit =
-    prefixCache.put((System.identityHashCode(s), dir),
-      PrefixEntry(s, 0L, root, null))
-  private[graft] def prefixCacheSize: Int = prefixCache.size
-  private[graft] def prefixEntryRoot(s: SparkSession, dir: String): Option[String] =
-    Option(prefixCache.get((System.identityHashCode(s), dir))).map(_.root)
-
-  /** Eviction core, predicate-injected so specs can pin the lifecycle
-    * without stopping the shared test session. */
-  private[graft] def evictStale(isStopped: SparkSession => Boolean): Unit = {
-    val it = prefixCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (isStopped(e.getValue.session)) {
-        deleteRoot(e.getValue.root)
-        it.remove()
-      }
-    }
-  }
-
-  /** Staged-dir delete via the Hadoop FS resolved from the path's own
-    * scheme (the dir may live on the shared stagingDir of a cluster
-    * run, not the local tmpdir). Best-effort: the JVM tmp sweep is
-    * the backstop. */
-  private def deleteRoot(root: String): Unit =
-    try {
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(new org.apache.hadoop.conf.Configuration()).delete(p, true)
-      ()
-    } catch { case _: java.io.IOException => () }
-
-  /** Driver-side metadata fingerprint of the docs scan: file names,
-    * lengths and modification times, one batched listing per parent
-    * dir (the `Dedup.inputBytes` RPC pattern — object-store-polite).
-    * A vanished file counts as a change, never a failure. */
-  private def inputFingerprint(df: DataFrame): Long = {
-    val conf = df.sparkSession.sparkContext.hadoopConfiguration
-    val files = df.inputFiles.sorted
-    var h = 1125899906842597L
-    def mix(x: Long): Unit = h = h * 31 + x
-    files.map(new org.apache.hadoop.fs.Path(_)).groupBy(_.getParent)
-      .toSeq.sortBy(_._1.toString).foreach { case (parent, children) =>
-        val want = children.map(_.getName).toSet
-        try
-          parent.getFileSystem(conf).listStatus(parent)
-            .filter(s => want(s.getPath.getName))
-            .sortBy(_.getPath.getName)
-            .foreach { s =>
-              mix(s.getPath.getName.hashCode.toLong)
-              mix(s.getLen)
-              mix(s.getModificationTime)
-            }
-        catch { case _: java.io.FileNotFoundException => mix(0L) }
-      }
-    mix(files.length.toLong)
-    h
-  }
-
-  /** Construction lock: the funnel temporarily forces the
-    * multi-consumer staging conf on the SHARED session (restored on
-    * exit) — two funnels constructed concurrently on one session
-    * would race the restore and leak the forced shape to unrelated
-    * concurrent plans. The gate harness (Verify/Bench) is
-    * single-threaded; this lock pins that assumption for any other
-    * caller. Only CONSTRUCTION serializes — the returned plan
-    * executes whenever the caller runs it. */
-  private val constructionLock = new Object
-
+    * The staged files live under one fresh root per call — below
+    * `spark.graft.stagingDir` when it is set (a multi-node cluster
+    * needs executor-visible storage), else below the JVM tmpdir — that
+    * is registered with the Hadoop FileSystem's delete-on-exit, so it
+    * cannot outlive the JVM. It is not deleted earlier: the returned
+    * plan reads it. Building the funnel touches no JVM-global state
+    * and no session conf. */
   private def funnel(s: SparkSession, dir: String,
-      tailPct: Option[Int]): DataFrame = constructionLock.synchronized {
-    val docs = Tables.documents(s, dir)
-    val segs = sentenceSegs(col("text"))
-    val prev = s.conf.getOption(Dedup.StageMinInputBytesConf)
-    s.conf.set(Dedup.StageMinInputBytesConf, "0")
-    try {
-      evictStale(sess => sess.sparkContext.isStopped)
-      if (prefixCache.size > 8) clearPrefixCache()
-      val cacheKey = (System.identityHashCode(s), dir)
-      val fp = inputFingerprint(docs)
-      val shared = Option(prefixCache.get(cacheKey)).collect {
-        // the session must be the SAME live object (identityHashCode
-        // can collide after GC) with its context still running, AND
-        // the corpus under `dir` must be byte-for-byte the one the
-        // prefix was staged from (fingerprint: names/lengths/mtimes)
-        case PrefixEntry(sess, f, _, pre)
-          if (sess eq s) && !s.sparkContext.isStopped && f == fp => pre
-      }
-      val pre = shared.getOrElse {
-        // parquet-backed staging: write each prefix frame once under
-        // a temp dir and hand every consumer (this funnel AND the
-        // sibling gate) the scan — eager at construction, like the
-        // label-propagation rounds the funnel already runs here.
-        // Root: the shared stagingDir when configured (a multi-node
-        // cluster needs executor-visible storage — the Dedup.stage
-        // contract), else the driver-local tmpdir (the single-box
-        // gate harness)
-        val root = s.conf.getOption(Dedup.StagingDirConf) match {
-          case Some(d) => s"$d/graft_funnel_prefix_${java.util.UUID.randomUUID()}"
-          case None => java.nio.file.Files
-            .createTempDirectory("graft_funnel_prefix").toString
-        }
-        var k = 0
-        def pq(df: DataFrame): DataFrame = {
-          k += 1
-          val path = s"$root/f$k"
-          df.write.mode("overwrite").parquet(path)
-          s.read.parquet(path)
-        }
-        val built = CurationPipeline.buildSharedPrefix(
-          docs, segs, LineMinDf, cfg, pq)
-        prefixCache.put(cacheKey, PrefixEntry(s, fp, root, built))
-        built
-      }
-      val stages = CurationPipeline.curateExtendedStages(
-        docs, col("doc_id") % EvalMod === 0, segs,
-        dsirTarget = Some(col("lang") === "en"),
-        seed = Seed, nShards = NShards,
-        surprisalTailMilli = TailMilli, lineMinDf = LineMinDf,
-        surprisalTailPct = tailPct, cfg = cfg,
-        sharedPrefix = Some(pre))
-      val rows = stages.zipWithIndex.map { case ((name, thunk), i) =>
-        val df = thunk()
-        // text stages: Σ length(text) pins the (possibly rewritten)
-        // payload; the packed stage: Σ cum_tokens pins layout + order
-        val payload =
-          if (name == "shuffle_pack") col("cum_tokens")
-          else length(col("text")).cast("long")
-        df.agg(
-          count(lit(1)).as("n_docs"),
-          coalesce(sum(col("doc_id")), lit(0L)).as("id_sum"),
-          coalesce(sum(payload), lit(0L)).as("payload_sum"))
-          .select(lit((i + 1).toLong).as("stage_ord"), lit(name).as("stage"),
-            col("n_docs"), col("id_sum"), col("payload_sum"))
-      }
-      rows.reduce(_.union(_)).orderBy(col("stage_ord"))
-    } finally {
-      prev match {
-        case Some(v) => s.conf.set(Dedup.StageMinInputBytesConf, v)
-        case None => s.conf.unset(Dedup.StageMinInputBytesConf)
-      }
+      tailPct: Option[Int]): DataFrame = {
+    val root = new org.apache.hadoop.fs.Path(
+      s.conf.getOption(Dedup.StagingDirConf)
+        .getOrElse(System.getProperty("java.io.tmpdir")),
+      s"graft_funnel_${java.util.UUID.randomUUID()}")
+    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    fs.mkdirs(root)
+    fs.deleteOnExit(root)
+    val stages = CurationPipeline.curateExtendedStages(
+      Tables.documents(s, dir), col("doc_id") % EvalMod === 0,
+      sentenceSegs(col("text")),
+      dsirTarget = Some(col("lang") === "en"),
+      seed = Seed, nShards = NShards,
+      surprisalTailMilli = TailMilli, lineMinDf = LineMinDf,
+      surprisalTailPct = tailPct, cfg = cfg,
+      staging = Some(Dedup.stageParquet(_, root.toString)))
+    val rows = stages.zipWithIndex.map { case ((name, thunk), i) =>
+      val df = thunk()
+      // text stages: Σ length(text) pins the (possibly rewritten)
+      // payload; the packed stage: Σ cum_tokens pins layout + order
+      val payload =
+        if (name == "shuffle_pack") col("cum_tokens")
+        else length(col("text")).cast("long")
+      df.agg(
+        count(lit(1)).as("n_docs"),
+        coalesce(sum(col("doc_id")), lit(0L)).as("id_sum"),
+        coalesce(sum(payload), lit(0L)).as("payload_sum"))
+        .select(lit((i + 1).toLong).as("stage_ord"), lit(name).as("stage"),
+          col("n_docs"), col("id_sum"), col("payload_sum"))
     }
+    rows.reduce(_.union(_)).orderBy(col("stage_ord"))
   }
 
   def curationFunnel(s: SparkSession, dir: String): DataFrame =

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.queries.CurationFunnelQueries
 
-/** q253: the composed-pipeline funnel gate. The per-stage operators
+/** q253/q256: the composed-pipeline funnel gates. The per-stage operators
   * are spec-pinned in their own suites and oracle-gated individually;
   * what the funnel ADDS is the per-stage aggregation + union wiring,
   * so the spec recomputes every stage's (count, id_sum, payload_sum)
@@ -14,7 +14,15 @@ import graft.queries.CurationFunnelQueries
 class CurationFunnelSpec extends SparkSpec {
 
   test("funnel rows match independently materialized stage aggregates") {
-    val out = CurationFunnelQueries.curationFunnel(spark, sfDir).collect()
+    // q253 (fixed LM-tail cut) and q256 (corpus-relative percentile cut)
+    Seq(None, Some(CurationFunnelQueries.TailPct)).foreach(checkFunnel)
+  }
+
+  private def checkFunnel(tailPct: Option[Int]): Unit = {
+    val out = (tailPct match {
+      case None => CurationFunnelQueries.curationFunnel(spark, sfDir)
+      case Some(_) => CurationFunnelQueries.curationPctFunnel(spark, sfDir)
+    }).collect()
     assert(out.map(_.getAs[String]("stage")).toSeq == Seq(
       "exact_dedup", "line_dedup", "quality_lm_gate", "decontaminate",
       "neardup_cluster", "dupgram_filter", "dsir_select", "shuffle_pack"))
@@ -30,81 +38,25 @@ class CurationFunnelSpec extends SparkSpec {
       seed = CurationFunnelQueries.Seed,
       nShards = CurationFunnelQueries.NShards,
       surprisalTailMilli = CurationFunnelQueries.TailMilli,
-      lineMinDf = CurationFunnelQueries.LineMinDf)
+      lineMinDf = CurationFunnelQueries.LineMinDf,
+      surprisalTailPct = tailPct)
     stages.zip(out).foreach { case ((name, thunk), row) =>
+      val at = s"$name (tailPct $tailPct)"
       val rows = thunk().collect()
-      assert(row.getAs[Long]("n_docs") == rows.length.toLong, s"n_docs @ $name")
+      assert(row.getAs[Long]("n_docs") == rows.length.toLong, s"n_docs @ $at")
       assert(row.getAs[Long]("id_sum") == rows.map(_.getAs[Long]("doc_id")).sum,
-        s"id_sum @ $name")
+        s"id_sum @ $at")
       val payload =
         if (name == "shuffle_pack") rows.map(_.getAs[Long]("cum_tokens")).sum
         else rows.map(r => Option(r.getAs[String]("text")).fold(0L)(_.length.toLong)).sum
-      assert(row.getAs[Long]("payload_sum") == payload, s"payload_sum @ $name")
+      assert(row.getAs[Long]("payload_sum") == payload, s"payload_sum @ $at")
     }
 
     // the funnel property: every stage 2..7 filters (or rewrites) the
     // previous survivor set, and the packed stage is the sample subset
     val n = out.map(_.getAs[Long]("n_docs"))
-    (1 until 7).foreach(i => assert(n(i) <= n(i - 1), s"stage ${i + 1} grew"))
+    (1 until 7).foreach(i => assert(n(i) <= n(i - 1), s"stage ${i + 1} grew (tailPct $tailPct)"))
     assert(n(7) <= n(6))
-    assert(n(7) > 0, "packed output is empty")
-  }
-
-  test("prefix cache evicts stopped-session entries and deletes their staged dirs") {
-    import java.nio.file.{Files, Paths}
-    CurationFunnelQueries.clearPrefixCache()
-    // fabricate entries with real on-disk roots; a sibling session
-    // stands in for the stopped one via the injected predicate
-    // (stopping the shared spec session would kill every other suite)
-    val roots = (1 to 3).map { i =>
-      val r = Files.createTempDirectory(s"funnel_evict_$i").toString
-      Files.write(Paths.get(r, "marker.parquet"), Array[Byte](1, 2, 3))
-      r
-    }
-    val other = spark.newSession()
-    CurationFunnelQueries.stagePrefixEntryForTest(spark, "dirA", roots(0))
-    CurationFunnelQueries.stagePrefixEntryForTest(other, "dirB", roots(1))
-    CurationFunnelQueries.stagePrefixEntryForTest(other, "dirC", roots(2))
-    assert(CurationFunnelQueries.prefixCacheSize === 3)
-    // a no-op predicate removes nothing and touches no dir
-    CurationFunnelQueries.evictStale(_ => false)
-    assert(CurationFunnelQueries.prefixCacheSize === 3)
-    assert(roots.forall(r => Files.exists(Paths.get(r, "marker.parquet"))))
-    // treat `other` as the stopped session: its entries evict AND
-    // their staged dirs are deleted; the live entry is untouched
-    CurationFunnelQueries.evictStale(sess => sess eq other)
-    assert(CurationFunnelQueries.prefixCacheSize === 1)
-    assert(!Files.exists(Paths.get(roots(1))), "stopped-session dir must be deleted")
-    assert(!Files.exists(Paths.get(roots(2))), "stopped-session dir must be deleted")
-    assert(Files.exists(Paths.get(roots(0), "marker.parquet")),
-      "live-session dir must be untouched")
-    CurationFunnelQueries.clearPrefixCache()
-  }
-
-  test("prefix cache misses when the corpus under the same dir is regenerated") {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    CurationFunnelQueries.clearPrefixCache()
-    // a writable copy of the gate corpus (the real one is read-only)
-    val dir = Files.createTempDirectory("funnel_fp").toString
-    Files.copy(Paths.get(s"$sfDir/documents.parquet"),
-      Paths.get(s"$dir/documents.parquet"), StandardCopyOption.REPLACE_EXISTING)
-    val first = CurationFunnelQueries.curationFunnel(spark, dir).collect()
-    val root1 = CurationFunnelQueries.prefixEntryRoot(spark, dir)
-    assert(root1.isDefined)
-    // same corpus, second gate: memo hit — the staged root is reused
-    CurationFunnelQueries.curationPctFunnel(spark, dir).collect()
-    assert(CurationFunnelQueries.prefixEntryRoot(spark, dir) === root1)
-    // "regenerate" the corpus in place (same bytes, new mtime): the
-    // fingerprint must miss and the prefix must rebuild under a NEW
-    // root — the stale-read hazard the fingerprint exists to kill
-    Files.setLastModifiedTime(Paths.get(s"$dir/documents.parquet"),
-      java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() + 5000))
-    val second = CurationFunnelQueries.curationFunnel(spark, dir).collect()
-    val root2 = CurationFunnelQueries.prefixEntryRoot(spark, dir)
-    assert(root2.isDefined && root2 != root1, "regenerated corpus reused a stale prefix")
-    // same bytes -> same funnel rows either way
-    assert(second.map(_.toSeq).toSeq === first.map(_.toSeq).toSeq)
-    CurationFunnelQueries.clearPrefixCache()
+    assert(n(7) > 0, s"packed output is empty (tailPct $tailPct)")
   }
 }
