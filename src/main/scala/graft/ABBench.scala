@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** In-JVM A/B bench for runtime SQL confs: runs each query's reps with
   * the conf OFF and ON interleaved inside ONE session, reporting the
   * min per arm — cross-JVM run-to-run noise (JIT, GC, box load) hits
@@ -14,7 +12,7 @@ object ABBench {
     val confs = args(0).split(",").map { kv =>
       val Array(k, v) = kv.split("=", 2); (k, v)
     }
-    val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
+    val names = QueryRun.names(args(1))
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
     val reps = if (args.length > 3) args(3).toInt else 3
     // product session recipe, so the A/B arms run the benched engine
@@ -22,14 +20,6 @@ object ABBench {
     spark.sparkContext.setLogLevel("ERROR")
     val baseline = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
 
-    def runOnce(name: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      val t = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      t
-    }
     def setArm(on: Boolean): Unit =
       if (on) confs.foreach { case (k, v) => spark.conf.set(k, v) }
       else baseline.foreach {
@@ -37,16 +27,15 @@ object ABBench {
         case (k, None) => spark.conf.unset(k)
       }
 
-    // warmup
-    try { setArm(false); SparkEntry.entry(spark).write.format("noop").mode("overwrite").save() }
-    catch { case _: Throwable => () }
+    setArm(false)
+    QueryRun.warmup(spark)
 
     var sumA = 0.0; var sumB = 0.0
     names.foreach { n =>
       val a = new Array[Double](reps); val b = new Array[Double](reps)
       (0 until reps).foreach { r =>
-        setArm(false); a(r) = runOnce(n)
-        setArm(true); b(r) = runOnce(n)
+        setArm(false); a(r) = QueryRun(spark, n, sfDir).seconds
+        setArm(true); b(r) = QueryRun(spark, n, sfDir).seconds
       }
       val (ma, mb) = (a.min, b.min)
       sumA += ma; sumB += mb

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Bpe
@@ -23,12 +22,7 @@ object BpeDemo {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val totalMerges = args.headOption.map(_.toInt).getOrElse(1000)
     val batchK = args.drop(1).headOption.map(_.toInt).getOrElse(64)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder("32").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val dict = spark.read.parquet(s"$sfDir/customer.parquet")

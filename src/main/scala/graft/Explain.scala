@@ -2,11 +2,10 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes EXPLAIN.md: formatted physical plans for headline queries,
   * the artifact to eyeball for pushdown/broadcast/codegen regressions.
-  * Usage: runMain graft.Explain [sfDir] [outFile]
+  * A comma list of query names replaces the headline set.
+  * Usage: runMain graft.Explain [sfDir] [outFile] [q1,q2,...]
   */
 object Explain {
   val Headline: Seq[String] = Seq(
@@ -76,46 +75,19 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = if (args.length > 1) args(1) else "EXPLAIN.md"
-    val spark = SparkSession.builder()
+    val names = if (args.length > 2) QueryRun.names(args(2)) else Headline
+    // fixed local[4] sizing keeps EXPLAIN.md comparable across boxes
+    val spark = Sessions.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
-    sb.append("# Physical plans (headline queries)\n\n")
+    sb.append(s"# Physical plans (${if (names == Headline) "headline" else "selected"} queries)\n\n")
     sb.append(s"Generated by `graft.Explain` against `$sfDir`. Things to check:\n")
     sb.append("`PushedFilters`/`ReadSchema` on scans, `BroadcastHashJoin` for dims,\n")
     sb.append("`partial_*` aggregates before exchanges, `WholeStageCodegen` spans.\n\n")
-    sb.append("Bench note (round 8, second half): the 28-query widening batch\n")
-    sb.append("(q202-q229) prices at 0.14-1.33 s each at sf0.1; full sweep\n")
-    sb.append("156.9 s for 214 queries (vs 180.8 s / 193 at the prior record),\n")
-    sb.append("and the 8x-clone replay of the batch lands at 2.3x total wall\n")
-    sb.append("for 8x data. The clamped recurrences (q208 CUSUM, q210 bucket)\n")
-    sb.append("run as two window aggregates via the Lindley closed form; the\n")
-    sb.append("frontier rank (q204) and the PPS cumsum (q215) reuse the\n")
-    sb.append("two-level sub-shard trick under value and scan orderings.\n\n")
-    sb.append("Bench note (round 8): q139's Gram build fused into the native\n")
-    sb.append("GramMatrix outer-product aggregate (one scan, no explode/join,\n")
-    sb.append("count folded into the buffer) with the bounded 64x64 power\n")
-    sb.append("iteration driver-local: 1.31 -> 0.33 s in-sweep at sf0.1. The\n")
-    sb.append("q74/q137 per-stratum row_number windows became the two-level\n")
-    sb.append("md5-prefix sub-shard rank (identical hashes, no single-stratum\n")
-    sb.append("sort): q74 0.40 s, q137 0.54 s. Sub-second queries bench min-of-3\n")
-    sb.append("now, so driver tails stop manufacturing phantom regressions.\n\n")
-    sb.append("Bench note (round 7): the interpreted higher-order-function fold\n")
-    sb.append("family became native codegen'd expressions (TextGeometry,\n")
-    sb.append("RepairSelector): q15 2.6->1.2 s, q16 2.5->1.0 s, q61 1.3->0.5 s,\n")
-    sb.append("q92 ->0.2 s at sf0.1. The context-gazetteer chain went WINDOWLESS\n")
-    sb.append("(StreamSignals computes sentence ids, char offsets, the +-48-char\n")
-    sb.append("admin window, per-sentence ctx-UF, grams and sentence text in one\n")
-    sb.append("pass before the explode): q56 3.0->1.3 s, q57 2.7->1.3 s, and the\n")
-    sb.append("~1.7x JIT-warmth swing that read as last round's q57 regression is\n")
-    sb.append("gone with the window chain. Round 6's note for context: the q69\n")
-    sb.append("spike was leftover cached blocks (fixed by Bench's between-query\n")
-    sb.append("unpersist); ArgMinCodebook cut the ANN family 22.2 -> 16.0 s.\n\n")
-    Headline.foreach { name =>
+    names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       sb.append(s"## $name\n\n```\n")
       sb.append(df.queryExecution.explainString(

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -19,12 +18,8 @@ object JaccardProbe {
     require(args.nonEmpty, "usage: JaccardProbe <docsDir> [dfCap]")
     val dir = args(0)
     val cap = if (args.length > 1) args(1).toInt else 1000
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+    val spark = Sessions.builder("32")
       .config("spark.sql.shuffle.partitions", "512")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // mirror the q22/CurationPipeline input: exact dedup FIRST (the

@@ -1,29 +1,40 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import scala.collection.mutable.ArrayBuffer
 
-/** Job-level profile of one SparkEntry query: construction wall-clock
-  * vs execution, per-job durations, and per-stage shuffle volumes —
-  * the local[N] stand-in for the Spark UI's Jobs/Stages tabs (no UI in
-  * the sandbox). Usage: runMain graft.JobProf <name> [sfDir] [reps].
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.GraftInternals
+
+/** Job-level profile of SparkEntry queries — the local[N] stand-in for
+  * the Spark UI's Jobs/Stages tabs (the UI is disabled). Each rep of
+  * each query prints construction vs execution seconds, job and stage
+  * counts, shuffle volumes, and the query's serial-stage share: the
+  * executor time spent in stages of 1-2 tasks. A single-row-group
+  * parquet scan cannot be split, so per-row-expensive chains sitting
+  * directly on a small scan serialize on one core; `all` finds them
+  * fleet-wide. For a single query the last rep also lists its jobs.
+  *
+  * Usage: runMain graft.JobProf <q|q1,q2,...|all> [sfDir] [reps]
   */
 object JobProf {
+  private case class Job(id: Int, desc: String, start: Long, var ms: Long = -1)
+  private case class Stage(runMs: Long, tasks: Int, shuffleRead: Long, shuffleWrite: Long)
+
   def main(args: Array[String]): Unit = {
-    val name = args(0)
+    require(args.nonEmpty, "usage: JobProf <q|q1,q2,...|all> [sfDir] [reps]")
+    val names =
+      if (args(0) == "all") SparkEntry.queries.keys.toSeq.sorted else QueryRun.names(args(0))
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 2
     val spark = Sessions.builder("32").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    case class Job(id: Int, desc: String, var ms: Long = -1,
-      var start: Long = 0)
-    val jobs = new scala.collection.mutable.ArrayBuffer[Job]()
-    val stages = new scala.collection.mutable.ArrayBuffer[(Int, Long, Long, Long, Int)]()
-    val listener = new SparkListener {
+    val jobs = ArrayBuffer.empty[Job]
+    val stages = ArrayBuffer.empty[Stage]
+    spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.synchronized {
         jobs += Job(e.jobId,
-          Option(e.properties.getProperty("spark.job.description")).getOrElse(""),
-          start = e.time)
+          Option(e.properties.getProperty("spark.job.description")).getOrElse(""), e.time)
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit = jobs.synchronized {
         jobs.find(_.id == e.jobId).foreach(j => j.ms = e.time - j.start)
@@ -31,32 +42,31 @@ object JobProf {
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
         stages.synchronized {
           val m = e.stageInfo.taskMetrics
-          stages += ((e.stageInfo.stageId,
-            m.shuffleReadMetrics.totalBytesRead,
-            m.shuffleWriteMetrics.bytesWritten,
-            m.executorRunTime, e.stageInfo.numTasks))
+          stages += Stage(m.executorRunTime, e.stageInfo.numTasks,
+            m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten)
         }
-    }
-    spark.sparkContext.addSparkListener(listener)
+    })
+    QueryRun.warmup(spark)
+    GraftInternals.drainListenerBus(spark)
 
-    (1 to reps).foreach { r =>
-      jobs.synchronized(jobs.clear()); stages.synchronized(stages.clear())
-      val t0 = System.nanoTime()
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val t1 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      val t2 = System.nanoTime()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      Thread.sleep(300) // let listener events drain
-      println(f"[jobprof] $name rep $r: construct ${(t1 - t0) / 1e9}%.2f s, " +
-        f"execute ${(t2 - t1) / 1e9}%.2f s, jobs ${jobs.size}")
-      if (r == reps) {
-        jobs.foreach(j => println(f"[jobprof]   job ${j.id}%3d ${j.ms}%6d ms  ${j.desc.take(80)}"))
-        val totSR = stages.map(_._2).sum / 1e6
-        val totSW = stages.map(_._3).sum / 1e6
-        val totRun = stages.map(_._4).sum / 1e3
-        println(f"[jobprof]   stages ${stages.size}, shuffleRead ${totSR}%.1f MB, " +
-          f"shuffleWrite ${totSW}%.1f MB, executorRunTime ${totRun}%.1f s (sum over tasks)")
+    names.foreach { name =>
+      var ok = true // a failed rep fails the query: its later reps are skipped
+      for (r <- 1 to reps if ok) {
+        jobs.synchronized(jobs.clear()); stages.synchronized(stages.clear())
+        val run = QueryRun(spark, name, sfDir)
+        GraftInternals.drainListenerBus(spark)
+        val serialMs = stages.filter(_.tasks <= 2).map(_.runMs).sum
+        val totalMs = stages.map(_.runMs).sum
+        println(f"[jobprof] $name rep $r: construct ${run.constructS}%.2f s, " +
+          f"execute ${run.executeS}%.2f s, jobs ${jobs.size}, stages ${stages.size}, " +
+          f"shuffleRead ${stages.map(_.shuffleRead).sum / 1e6}%.1f MB, " +
+          f"shuffleWrite ${stages.map(_.shuffleWrite).sum / 1e6}%.1f MB, " +
+          f"serialMs $serialMs / totalMs $totalMs " +
+          f"(${100.0 * serialMs / math.max(1L, totalMs)}%.0f%%)")
+        run.failure.foreach(e => System.err.println(s"[jobprof] $name rep $r failed: $e"))
+        ok = run.failure.isEmpty
+        if (names.size == 1 && (r == reps || !ok))
+          jobs.foreach(j => println(f"[jobprof]   job ${j.id}%3d ${j.ms}%6d ms  ${j.desc.take(80)}"))
       }
     }
     spark.stop()

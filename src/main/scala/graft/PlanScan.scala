@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic sweep: for every SparkEntry query, report scan-level
   * DataFilters that inline heavy derived expressions (the inferred-
   * filter pushdown recompute class). runMain graft.PlanScan [sfDir]. */
@@ -10,10 +8,10 @@ object PlanScan {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
+    val spark = Sessions.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.adaptive.enabled", "false") // concrete plans for collect()
-      .config("spark.ui.enabled", "false").getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, q) =>
       try {

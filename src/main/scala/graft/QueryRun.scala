@@ -1,0 +1,69 @@
+package graft
+
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.SparkSession
+
+/** The one "run a query, time it, clean up" core behind the harness
+  * mains (Bench, ABBench, ScaleBench, JobProf); Verify shares its
+  * clean-up.
+  *
+  * Materialization uses the `noop` sink, not count(): count() lets
+  * Catalyst prune projection work (a map-only query would measure an
+  * empty scan).
+  */
+object QueryRun {
+
+  /** One timed run of a `SparkEntry.queries` entry, in seconds:
+    * construction (building the DataFrame, including any eager jobs the
+    * query runs while doing so) and execution (the noop write). On a
+    * non-fatal throw `failure` holds it and the phase that threw is
+    * timed up to the throw. */
+  final case class Run(name: String, constructS: Double, executeS: Double,
+      failure: Option[Throwable]) {
+    /** Wall seconds of a successful run; rethrows the failure. */
+    def seconds: Double = failure match {
+      case Some(e) => throw e
+      case None => constructS + executeS
+    }
+  }
+
+  def apply(spark: SparkSession, name: String, dir: String): Run = {
+    val t0 = System.nanoTime()
+    var built = Option.empty[Long]
+    val failure =
+      try {
+        val df = SparkEntry.queries(name)(spark, dir)
+        built = Some(System.nanoTime())
+        df.write.format("noop").mode("overwrite").save()
+        None
+      } catch { case NonFatal(e) => Some(e) }
+    val t2 = System.nanoTime()
+    val t1 = built.getOrElse(t2)
+    cleanUp(spark)
+    Run(name, (t1 - t0) / 1e9, (t2 - t1) / 1e9, failure)
+  }
+
+  /** Registered query names from a comma list; an unknown name fails
+    * before any query runs. */
+  def names(csv: String): Seq[String] = {
+    val ns = csv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val unknown = ns.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
+    ns
+  }
+
+  /** Queries that localCheckpoint iterative models (kmeansFit and
+    * friends) leave cached RDD blocks behind; across a sweep those
+    * accumulate into real GC/storage pressure that bills later queries
+    * (q69 measured 8x slower inside the full sweep than alone). Each
+    * query starts from a clean storage state. */
+  def cleanUp(spark: SparkSession): Unit =
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+
+  /** Pays session/codegen startup outside the timings: one run of
+    * `SparkEntry.entry`. A failure is reported on stderr, not fatal. */
+  def warmup(spark: SparkSession): Unit =
+    try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
+    catch { case NonFatal(e) => System.err.println(s"WARNING: warmup failed: $e") }
+}

@@ -1,24 +1,20 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale-trajectory bench: times a named query subset against a list
   * of scale directories (the ScaleUp outputs) and prints one JSON line
   * per directory — the raw numbers behind SURVEY §5's trajectory
   * table.
   *
   * Usage: runMain graft.ScaleBench <q1,q2,...> <dir1,dir2,...> [reps]
-  * Timing = min over reps of a noop-sink materialization (same
-  * convention as graft.Bench).
+  * Timing = min over reps of a [[QueryRun]] (same convention as
+  * graft.Bench); a failed rep aborts the run.
   */
 object ScaleBench {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: ScaleBench <queries> <dirs> [reps]")
-    val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
+    val names = QueryRun.names(args(0))
     val dirs = args(1).split(",").map(_.trim).filter(_.nonEmpty)
     val reps = if (args.length > 2) args(2).toInt else 2
-    val unknown = names.toSet.diff(SparkEntry.queries.keySet)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
     val spark = Sessions.builder("32")
       // scale-correct shuffle sizing: let AQE pick per-stage
       // parallelism downward from a high initial count instead of
@@ -52,19 +48,9 @@ object ScaleBench {
       spark.conf.set(graft.operators.Dedup.JaccardPrefixConf, m)
     }
 
-    def runOnce(name: String, dir: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      val t = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      t
-    }
-
     dirs.foreach { dir =>
       val times = names.map { n =>
-        val t = (1 to reps).map(_ => runOnce(n, dir)).min
+        val t = (1 to reps).map(_ => QueryRun(spark, n, dir).seconds).min
         System.err.println(f"[scalebench] $dir $n: $t%.2f s")
         n -> t
       }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 
 /** Clone-based corpus scale-up for the 100x trajectory runs: writes an
   * N-times larger copy of every table with join-consistent key
@@ -63,11 +63,8 @@ object ScaleUp {
     require(args.length >= 3, "usage: ScaleUp <srcSfDir> <outDir> <clones> [zipf]")
     val (src, out, clones) = (args(0), args(1), args(2).toInt)
     val zipf = args.length > 3 && args(3) == "zipf"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+    val spark = Sessions.builder("32")
       .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

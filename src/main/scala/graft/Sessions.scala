@@ -2,9 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one local-session recipe shared by the harness mains (Bench,
-  * Verify, ScaleBench, CurationBench, ABBench) and the profilers
-  * (QBench, JobProf, StageScan).
+/** The one local-session recipe: every session in the repo starts here.
+  * Callers: the harness mains (Bench, Verify, ABBench, ScaleBench,
+  * CurationBench, StreamBench), the profilers and plan tools (JobProf,
+  * Explain, PlanScan, JaccardProbe), the demos and data tools (BpeDemo,
+  * ScaleUp), the test fixture (SparkSpec) and the benchmark harness
+  * under perfbench/.
   *
   * The bench must measure the same engine the oracle verifies and the
   * scale runner exercises: a conf that lives in only one main measures

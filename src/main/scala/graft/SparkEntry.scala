@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.queries.{BehaviorQueries, CatalogBuildQueries, CatalogEnrichQueries, CdcQueries, CohortQueries, CollectJobQueries, ContextQueries, CorpusAuditQueries, CorpusOpsQueries, CorpusStatsQueries, CurationFunnelQueries, CurationQueries, DateParseQueries, QueueReplayQueries, PortalRegistryQueries, EnrichQueries, ErrorReplayQueries, EventOpsQueries, ExtractJobQueries, ExtractorQueries, FallbackUrlQueries, FrontierQueries, FuzzyMatchQueries, GeoCliQueries, GraphTsQueries, InfraOpsQueries, IntegritySimQueries, KnapsackQueries, ListingQueries, MatchAggQueries, PatternMiningQueries, PatternQueries, PayloadQueries, PersonNerQueries, ProfileQueries, QualityAuditQueries, RetrievalEvalQueries, ScaleOpsQueries, SinkPayloadQueries, StatsQueries, SynopsisQueries, TemporalDpQueries, TokenizerQueries, VectorMiningQueries, WebOpsQueries, DedupQueries, DisambiguationQueries, EventQueries, FingerprintQueries, GeoQueries, LangNgramQueries, MultimodalQueries, RelationalQueries, ReportQueries, ScrapeQueries, SimilarityQueries, SkewQueries, TextQueries}
+import graft.queries._
 
 /** Driver contract — see /root/repo/SURVEY.md §2/§7. */
 object SparkEntry {
@@ -11,20 +11,41 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     RelationalQueries.joinEnrich(spark, "/root/testdata/sf0.001")
 
+  /** Every query family; `queries` and `oracleSql` are derived from it. */
+  val families: Seq[QueryFamily] = Seq(
+    RelationalQueries, TextQueries, DedupQueries, SimilarityQueries,
+    EventQueries, GeoQueries, MultimodalQueries, ReportQueries,
+    DisambiguationQueries, ScrapeQueries, FingerprintQueries,
+    LangNgramQueries, DateParseQueries, QueueReplayQueries,
+    PortalRegistryQueries, CohortQueries, EnrichQueries, ProfileQueries,
+    StatsQueries, ContextQueries, CurationQueries, SkewQueries,
+    ExtractorQueries, ListingQueries, CatalogBuildQueries, CdcQueries,
+    VectorMiningQueries, PatternQueries, ScaleOpsQueries, GeoCliQueries,
+    PayloadQueries, CollectJobQueries, MatchAggQueries, ExtractJobQueries,
+    FallbackUrlQueries, TokenizerQueries, PersonNerQueries,
+    CatalogEnrichQueries, ErrorReplayQueries, EventOpsQueries,
+    RetrievalEvalQueries, WebOpsQueries, InfraOpsQueries,
+    PatternMiningQueries, GraphTsQueries, QualityAuditQueries,
+    IntegritySimQueries, BehaviorQueries, TemporalDpQueries,
+    KnapsackQueries, FuzzyMatchQueries, SynopsisQueries, CorpusOpsQueries,
+    SinkPayloadQueries, CorpusStatsQueries, CorpusAuditQueries,
+    FrontierQueries, CurationFunnelQueries)
+
+  /** Merges one map per family; a name in two families is an error. */
+  private def merged[V](part: QueryFamily => Map[String, V]): Map[String, V] = {
+    val all = families.flatMap(part(_).toSeq)
+    val twice = all.groupBy(_._1).collect { case (k, vs) if vs.size > 1 => k }
+    require(twice.isEmpty,
+      s"query names registered by two families: ${twice.toSeq.sorted.mkString(",")}")
+    all.toMap
+  }
+  private lazy val allQueries = merged(_.queries)
+  private lazy val allOracles = merged(_.oracles)
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    RelationalQueries.queries ++ TextQueries.queries ++
-      DedupQueries.queries ++ SimilarityQueries.queries ++
-      EventQueries.queries ++ GeoQueries.queries ++ MultimodalQueries.queries ++
-      ReportQueries.queries ++ DisambiguationQueries.queries ++ ScrapeQueries.queries ++
-      FingerprintQueries.queries ++ LangNgramQueries.queries ++ DateParseQueries.queries ++ QueueReplayQueries.queries ++ PortalRegistryQueries.queries ++ CohortQueries.queries ++ EnrichQueries.queries ++ ProfileQueries.queries ++ StatsQueries.queries ++ ContextQueries.queries ++ CurationQueries.queries ++ SkewQueries.queries ++ ExtractorQueries.queries ++ ListingQueries.queries ++ CatalogBuildQueries.queries ++ CdcQueries.queries ++ VectorMiningQueries.queries ++ PatternQueries.queries ++ ScaleOpsQueries.queries ++ GeoCliQueries.queries ++ PayloadQueries.queries ++ CollectJobQueries.queries ++ MatchAggQueries.queries ++ ExtractJobQueries.queries ++ FallbackUrlQueries.queries ++ TokenizerQueries.queries ++ PersonNerQueries.queries ++ CatalogEnrichQueries.queries ++ ErrorReplayQueries.queries ++ EventOpsQueries.queries ++ RetrievalEvalQueries.queries ++ WebOpsQueries.queries ++ InfraOpsQueries.queries ++ PatternMiningQueries.queries ++ GraphTsQueries.queries ++ QualityAuditQueries.queries ++ IntegritySimQueries.queries ++ BehaviorQueries.queries ++ TemporalDpQueries.queries ++ KnapsackQueries.queries ++ FuzzyMatchQueries.queries ++ SynopsisQueries.queries ++ CorpusOpsQueries.queries ++ SinkPayloadQueries.queries ++ CorpusStatsQueries.queries ++ CorpusAuditQueries.queries ++ FrontierQueries.queries ++ CurationFunnelQueries.queries
+  def queries: Map[String, (SparkSession, String) => DataFrame] = allQueries
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    RelationalQueries.oracles ++ TextQueries.oracles ++
-      DedupQueries.oracles ++ SimilarityQueries.oracles ++
-      EventQueries.oracles ++ GeoQueries.oracles ++ MultimodalQueries.oracles ++
-      ReportQueries.oracles ++ DisambiguationQueries.oracles ++ ScrapeQueries.oracles ++
-      FingerprintQueries.oracles ++ LangNgramQueries.oracles ++ DateParseQueries.oracles ++ QueueReplayQueries.oracles ++ PortalRegistryQueries.oracles ++ CohortQueries.oracles ++ EnrichQueries.oracles ++ ProfileQueries.oracles ++ StatsQueries.oracles ++ ContextQueries.oracles ++ CurationQueries.oracles ++ SkewQueries.oracles ++ ExtractorQueries.oracles ++ ListingQueries.oracles ++ CatalogBuildQueries.oracles ++ CdcQueries.oracles ++ VectorMiningQueries.oracles ++ PatternQueries.oracles ++ ScaleOpsQueries.oracles ++ GeoCliQueries.oracles ++ PayloadQueries.oracles ++ CollectJobQueries.oracles ++ MatchAggQueries.oracles ++ ExtractJobQueries.oracles ++ FallbackUrlQueries.oracles ++ TokenizerQueries.oracles ++ PersonNerQueries.oracles ++ CatalogEnrichQueries.oracles ++ ErrorReplayQueries.oracles ++ EventOpsQueries.oracles ++ RetrievalEvalQueries.oracles ++ WebOpsQueries.oracles ++ InfraOpsQueries.oracles ++ PatternMiningQueries.oracles ++ GraphTsQueries.oracles ++ QualityAuditQueries.oracles ++ IntegritySimQueries.oracles ++ BehaviorQueries.oracles ++ TemporalDpQueries.oracles ++ KnapsackQueries.oracles ++ FuzzyMatchQueries.oracles ++ SynopsisQueries.oracles ++ CorpusOpsQueries.oracles ++ SinkPayloadQueries.oracles ++ CorpusStatsQueries.oracles ++ CorpusAuditQueries.oracles ++ FrontierQueries.oracles ++ CurationFunnelQueries.oracles
+  def oracleSql: Map[String, String] = allOracles
 }

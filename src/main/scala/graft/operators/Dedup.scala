@@ -198,7 +198,7 @@ object Dedup {
     * a table written as one file with one row group scans as ONE task
     * no matter how many cores the cluster has, so an expensive map
     * chain rooted directly on it serializes on one core while the
-    * rest idle (measured fleet-wide by `graft.StageScan`: the
+    * rest idle (measured fleet-wide by `graft.JobProf all`: the
     * single-task scan stage is 90-100% of executor time for the
     * map-shaped queries at gate scale). One round-robin exchange of
     * the (projected — project BEFORE calling this) input unlocks full

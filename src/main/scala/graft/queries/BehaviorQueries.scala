@@ -11,9 +11,7 @@ import graft.Tables
   * — the two standard "who matters now" reads over an event stream,
   * both in exact integer arithmetic.
   */
-object BehaviorQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object BehaviorQueries extends QueryFamily {
 
   // ---- q234: RFM segmentation ----
 

@@ -14,9 +14,7 @@ import graft.Tables
   * by (numeric id, name). The HTTP fetch/fallback is I/O outside the
   * engine; the payload normalization at catalog scale is inside it.
   */
-object CatalogBuildQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object CatalogBuildQueries extends QueryFamily {
 
   /** q98: the `_normalize_ibge` + `_normalize_records` chain over
     * synthesized nested-JSON payloads (keyed off the customer table so

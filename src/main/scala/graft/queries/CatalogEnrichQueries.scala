@@ -42,9 +42,7 @@ import graft.Tables
   * capital summary is a bounded per-UF aggregate broadcast back; the
   * refresh metadata is one global aggregate cross-joined as a 1-row
   * broadcast. */
-object CatalogEnrichQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object CatalogEnrichQueries extends QueryFamily {
 
   val Ufs: Seq[String] =
     Seq("SP", "RJ", "MG", "BA", "RS", "PR", "PE", "CE", "PA")

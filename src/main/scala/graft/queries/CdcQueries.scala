@@ -20,9 +20,7 @@ import graft.operators.Dedup
   * re-deduplicates. Fixed-size blocks lose ALL alignment after one
   * insertion; that is precisely why storage dedup is content-defined.
   */
-object CdcQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object CdcQueries extends QueryFamily {
 
   private val FoldSql =
     "lower(strip_accents(translate(text, '-‐‑‒–—―­', '       ')))"

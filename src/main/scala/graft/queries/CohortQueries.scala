@@ -9,9 +9,7 @@ import graft.Tables
   * counted per whole days-since-signup bucket. The standard engagement
   * matrix every event pipeline reports; one shuffle on user_id for the
   * cohort join, one aggregation on (cohort, bucket). */
-object CohortQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object CohortQueries extends QueryFamily {
 
   def cohortRetention(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.events(s, dir).withColumn("ts_us", unix_micros(col("ts")))

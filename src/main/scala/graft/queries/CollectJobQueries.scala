@@ -18,9 +18,7 @@ import graft.Tables
   * holds run state on the driver, unlike the reference's in-memory
   * `seen_urls` set.
   */
-object CollectJobQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object CollectJobQueries extends QueryFamily {
 
   /** q116: the collect() day loop, set-wise. Cross-day URL dedup keeps
     * every occurrence from the url's FIRST day in the run

@@ -25,9 +25,7 @@ import graft.operators.Gazetteer
   *    as a word-bounded token), mirroring the reference where rule 4's
   *    matches are a subset of rule 3's case-insensitive \bUF\b scan.
   */
-object ContextQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object ContextQueries extends QueryFamily {
 
   // ---- shared SQL fragments (must mirror TextFunctions exactly) ----
   private val FoldSql =

@@ -18,9 +18,7 @@ import graft.functions.TextFunctions.{fold, tokens}
   * the token-balanced shard manifest a writer emits next to its output
   * (q166 — per-shard accounting with an order-free checksum).
   */
-object CorpusAuditQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object CorpusAuditQueries extends QueryFamily {
 
   // shared oracle fragments (folded whitespace tokens, as DedupQueries)
   private val FoldSql =

@@ -18,9 +18,7 @@ import graft.operators.{Curation, Dedup}
   * layout audit (q136), upsampling repeats (q137), integer PageRank
   * (q138) and the distributed-PCA power iteration (q139).
   */
-object CorpusOpsQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object CorpusOpsQueries extends QueryFamily {
 
   // shared oracle fragments (folded whitespace tokens, as DedupQueries)
   private val FoldSql =

@@ -20,9 +20,7 @@ import graft.plans.Plans
   * collapse diagnostic run before trusting cosine retrieval over an
   * embedding column).
   */
-object CorpusStatsQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object CorpusStatsQueries extends QueryFamily {
 
   // shared oracle fragments (folded whitespace tokens, as DedupQueries)
   private val FoldSql =

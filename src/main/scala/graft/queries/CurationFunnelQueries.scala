@@ -36,9 +36,7 @@ import graft.operators.Dedup
   * every multi-consumer frame is staged as parquet at any corpus size
   * (see `funnel`), so each survivor chain materializes once.
   */
-object CurationFunnelQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object CurationFunnelQueries extends QueryFamily {
 
   /** Gate parameters: eval set/segmentation/DSIR target reuse the
     * conventions of the stage-level gates (q73's mod-97 eval set,

@@ -11,9 +11,7 @@ import graft.operators.Curation
   * per-domain stratified downsampling — the steps between ingest and
   * tokenization in an LLM data pipeline.
   */
-object CurationQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object CurationQueries extends QueryFamily {
 
   // shared oracle fragments (folded whitespace tokens, as DedupQueries)
   private val FoldSql =

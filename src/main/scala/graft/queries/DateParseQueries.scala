@@ -10,9 +10,7 @@ import graft.Tables
   * the numeric month for the Portuguese name, then parse numerically,
   * so no OS locale dependency). Surfaces are synthesized from
   * o_orderdate, parsed back, and must round-trip. */
-object DateParseQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object DateParseQueries extends QueryFamily {
 
   /** Month number -> Portuguese name (scraper.py:581). */
   val PtMonths: Seq[(Int, String)] = Seq(

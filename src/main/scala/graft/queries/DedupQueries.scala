@@ -12,9 +12,7 @@ import graft.operators.Dedup
   * Near-dup detection always runs on exact-dedup survivors (reps) —
   * the production ordering for a training-data pipeline.
   */
-object DedupQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object DedupQueries extends QueryFamily {
 
   private def reps(s: SparkSession, dir: String): DataFrame =
     Dedup.exact(Tables.documents(s, dir), "text", "doc_id")

@@ -9,9 +9,7 @@ import graft.operators.Disambiguation
 /** q38: the reference disambiguation decision tree over every mention
   * of an ambiguous catalog surface, with SENTENCE-scoped context
   * signals (see operators.Disambiguation). */
-object DisambiguationQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object DisambiguationQueries extends QueryFamily {
 
   def disambiguation(s: SparkSession, dir: String): DataFrame =
     Disambiguation.resolve(Tables.documents(s, dir), s, "text", "doc_id")

@@ -20,9 +20,7 @@ import graft.operators.Gazetteer
   *    and aggregate the typed field (JSON-path extraction stays native
   *    on both engines).
   */
-object EnrichQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object EnrichQueries extends QueryFamily {
 
   private val FoldSql =
     "lower(strip_accents(translate(text, '-‐‑‒–—―­', '       ')))"

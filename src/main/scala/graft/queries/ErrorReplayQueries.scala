@@ -37,9 +37,7 @@ import graft.Tables
   * url alone — Spark reuses the single exchange; the base-url join is
   * key-co-partitioned (no broadcast assumption: the store is as large
   * as the corpus at 100 TB). */
-object ErrorReplayQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object ErrorReplayQueries extends QueryFamily {
 
   private val NUrls = 150L
 

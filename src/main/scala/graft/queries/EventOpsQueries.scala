@@ -24,9 +24,7 @@ import graft.operators.{Dedup, EventOps}
   * no iteration — so every query here is one shuffle on its natural
   * key plus per-key ordered scans.
   */
-object EventOpsQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object EventOpsQueries extends QueryFamily {
 
   /** Re-occurrences of the same (user, type, props) within 3 days chain
     * into one duplicate group; a later re-occurrence starts a fresh

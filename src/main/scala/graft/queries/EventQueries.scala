@@ -11,9 +11,7 @@ import graft.operators.Sessionize
   * equivalents live in graft.streaming and are spec-gated (DuckDB has
   * no streaming surface to oracle against).
   */
-object EventQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object EventQueries extends QueryFamily {
 
   val SessionGapMicros: Long = 30L * 60 * 1000000 // 30 min
 

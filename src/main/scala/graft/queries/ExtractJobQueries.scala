@@ -18,9 +18,7 @@ import graft.Tables
   * range-bucket rank sorts ≤1/4096 of a portal per task and measured
   * 6.9s (x64: 8.5→4.1s). The rollup is one partial-agg groupBy on
   * (portal, batch). */
-object ExtractJobQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object ExtractJobQueries extends QueryFamily {
 
   val BatchSize = 100
 

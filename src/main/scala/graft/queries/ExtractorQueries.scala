@@ -35,9 +35,7 @@ import graft.operators.Gazetteer
   * gram explode stays embarrassingly parallel, and the only join is the
   * broadcast variant table — same posture as q15/q63.
   */
-object ExtractorQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object ExtractorQueries extends QueryFamily {
 
   def fieldExtraction(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)

@@ -23,9 +23,7 @@ import graft.Tables
   * Pure map-side string algebra: the candidate slots are CASE columns,
   * the ordered normalized dedup a bounded fold over a 5-slot array —
   * no joins, no shuffles but the presentation sort. */
-object FallbackUrlQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object FallbackUrlQueries extends QueryFamily {
 
   private def rstripSlash(c: Column): Column = rtrim(c, "/")
 

@@ -18,9 +18,7 @@ import graft.functions.TextFunctions._
   * window min (ROWS w-1 FOLLOWING), then distinct mins. One shuffle on
   * doc_id; window is per-key, never global.
   */
-object FingerprintQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object FingerprintQueries extends QueryFamily {
 
   val WindowSize = 4
 

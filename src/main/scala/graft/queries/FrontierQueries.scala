@@ -13,9 +13,7 @@ import graft.functions.TextFunctions.{fold, tokens}
   * (q246), and consistent-hash ring placement with virtual nodes
   * (q247, the ring-based companion of q217's rendezvous hashing).
   */
-object FrontierQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object FrontierQueries extends QueryFamily {
 
   private val FoldSql =
     "lower(strip_accents(translate(text, '-‐‑‒–—―­', '       ')))"

@@ -12,9 +12,7 @@ import graft.functions.TextFunctions.fold
   * angle; edit distance catches the one-typo re-post (a dropped
   * letter, a transposed pair) that none of those see as close.
   */
-object FuzzyMatchQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object FuzzyMatchQueries extends QueryFamily {
 
   val FzTitleLen = 40
   val FzMaxDist = 2L

@@ -19,9 +19,7 @@ import graft.Tables
   * the fact. q113's matches_total is the only shuffle (partial-agg
   * count per article).
   */
-object GeoCliQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object GeoCliQueries extends QueryFamily {
 
   /** `_normalize_name` (geo_cli.py:196-197): lower + whitespace
     * collapse via split/join — leading/trailing runs vanish too. */

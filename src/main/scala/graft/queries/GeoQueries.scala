@@ -10,9 +10,7 @@ import graft.operators.{Gazetteer, Geo}
   * (reference: city_matching/geoutils.py, geo_enrichment_job.py).
   * Coordinates are derived deterministically from integer keys since
   * the testdata carries none. */
-object GeoQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object GeoQueries extends QueryFamily {
 
   /** q33: scalar haversine over every customer point to a fixed origin. */
   def haversine(s: SparkSession, dir: String): DataFrame =

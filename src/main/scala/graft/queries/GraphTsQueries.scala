@@ -16,9 +16,7 @@ import graft.operators.Dedup
   * exact-integer answer to "give every source floor(share) and spend
   * the remainder where it is owed most".
   */
-object GraphTsQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object GraphTsQueries extends QueryFamily {
 
   // ---- q223: lag autocorrelation (ACF) of per-type daily counts ----
 

@@ -18,9 +18,7 @@ import graft.operators.Geo
   * and the storage layer gains the two standard placement algorithms
   * (balance by load, move-minimally on reshard).
   */
-object InfraOpsQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object InfraOpsQueries extends QueryFamily {
 
   // ---- q213: grid-bucketed nearest-neighbor spatial join ----
 

@@ -15,9 +15,7 @@ import graft.operators.Dedup
   * the lexical-VECTOR complement of q22's set Jaccard and q25's
   * embedding cosine.
   */
-object IntegritySimQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object IntegritySimQueries extends QueryFamily {
 
   // ---- q232: Merkle tree over the shard manifest ----
 

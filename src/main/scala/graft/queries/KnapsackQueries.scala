@@ -12,9 +12,7 @@ import graft.Tables
   * licensing/retention question where a source ships entirely or not
   * at all.
   */
-object KnapsackQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object KnapsackQueries extends QueryFamily {
 
   /** Capacity resolution: weights discretize to ~256 units of the
     * corpus total (ceil), budget = half the units. The discretization

@@ -12,9 +12,7 @@ import graft.plans.Plans
   * trigram-profile heuristic — complements q17's stopword profile) and
   * q47: the custom TopKPerKey physical operator run inside the
   * correctness gate. */
-object LangNgramQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object LangNgramQueries extends QueryFamily {
 
   /** (lang, trigram) profiles. Every trigram is self-overlap-free
     * (first char != last char), so the non-overlapping `replace` count

@@ -30,9 +30,7 @@ import graft.operators.Gazetteer
   * slice, never the corpus); the param table is a broadcast 2-row dim;
   * the only shuffles are the per-doc mention dedup/count on doc_id.
   */
-object ListingQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object ListingQueries extends QueryFamily {
 
   private val Portal = "src3"
   private val RangeStart = "1997-01-15"

@@ -31,9 +31,7 @@ import graft.Tables
   * row_number exchange; no driver-side state replaces the reference's
   * in-memory dicts. The per-group method-list collect is bounded by
   * group size (a handful of methods). */
-object MatchAggQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object MatchAggQueries extends QueryFamily {
 
   def matchAggregate(s: SparkSession, dir: String): DataFrame = {
     val seqW = Window.partitionBy(col("article_id"))

@@ -12,9 +12,7 @@ import graft.operators.Dedup
   * computed from it with native expressions — the column-level side of
   * the multimodal plumbing (the batched mapPartitions decode stub is
   * spec-gated in graft.multimodal). */
-object MultimodalQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object MultimodalQueries extends QueryFamily {
 
   /** q28: binary payload metadata + deterministic fake decode. */
   def binaryMeta(s: SparkSession, dir: String): DataFrame =

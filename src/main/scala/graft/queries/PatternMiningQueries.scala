@@ -16,9 +16,7 @@ import graft.operators.Curation
   * "A then B within T" detection without a self-join, and
   * market-basket association strength.
   */
-object PatternMiningQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object PatternMiningQueries extends QueryFamily {
 
   // ---- q215: systematic PPS (probability-proportional-to-size) sample ----
 

@@ -39,9 +39,7 @@ import graft.expressions.RegexSpans
   * every partition holds only same-document matches — bounded by
   * matches-per-doc, never corpus size.
   */
-object PatternQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object PatternQueries extends QueryFamily {
 
   // ---- the reference's three patterns (gazetteer.py:86-97) ----
   // Plain numbered groups (named groups differ across engines):

@@ -19,9 +19,7 @@ import graft.Tables
   * bounded survivor dim; q115 is pure map-side column math until the
   * presentation sort.
   */
-object PayloadQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object PayloadQueries extends QueryFamily {
 
   /** q114: the store's mutation semantics, replayed set-wise. An
     * append with a (ner_version, gazetteer_version) differing from the

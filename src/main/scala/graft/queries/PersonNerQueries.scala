@@ -37,9 +37,7 @@ import graft.functions.TextFunctions
   * stream. At 100 TB `ensure_person` would be a keyed store/dedup
   * service; the first-appearance window here runs on the aggregated
   * person table, never the corpus. */
-object PersonNerQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object PersonNerQueries extends QueryFamily {
 
   /** Synthesized title-case person names (the corpus text is an
     * all-lowercase token stream, so detected entities are exactly the

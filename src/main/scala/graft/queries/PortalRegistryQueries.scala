@@ -22,9 +22,7 @@ import graft.Tables
   * the fold is one dim-sized aggregation + a broadcast join back —
   * no window, no iteration; at scale the ops log streams map-side
   * against the broadcast winner dim. */
-object PortalRegistryQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object PortalRegistryQueries extends QueryFamily {
 
   /** Registered-name pool size; gets probe [[GetNames]] names. */
   val NamePool = 7

@@ -11,9 +11,7 @@ import graft.functions.Money.cents
   * ingestion in a production pipeline. One scan, all columns profiled
   * in a single aggregate per column; emitted long-form (one row per
   * column) the way profilers report. */
-object ProfileQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object ProfileQueries extends QueryFamily {
 
   private val Profiled = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
 

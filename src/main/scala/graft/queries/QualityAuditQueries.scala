@@ -15,9 +15,7 @@ import graft.Tables
   * distribution-skewness check; q229 is the classic foreign-key audit
   * every warehouse runs before trusting a join.
   */
-object QualityAuditQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object QualityAuditQueries extends QueryFamily {
 
   /** Dense per-type daily counts with a 0-based day index — shared by
     * the OLS and Theil-Sen trend estimators. */

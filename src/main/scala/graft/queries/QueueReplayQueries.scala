@@ -29,9 +29,7 @@ import graft.Tables
   * depths are a 1-row broadcast. At 100 TB the log shuffles once on
   * url and everything else is map-side.
   */
-object QueueReplayQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object QueueReplayQueries extends QueryFamily {
 
   /** Scripted op sequences, one family per doc_id mod 6, covering:
     * clean delivery, retry-then-deliver, retry-left-queued, stuck

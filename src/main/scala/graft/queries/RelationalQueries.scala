@@ -21,9 +21,7 @@ import graft.functions.Money._
   *  - sentinela/application/servico_coleta_noticias.py (collect: new vs
   *    already-stored split)
   */
-object RelationalQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object RelationalQueries extends QueryFamily {
 
   /** q01: multi-aggregate scan+groupBy (per-portal article-stats analog;
     * TPC-H Q1 shape). Partial aggregation is map-side; the shuffle moves

@@ -9,9 +9,7 @@ import graft.operators.Gazetteer
 /** Reporting surface (reference: cli.py report-articles — a
   * denormalized article x city CSV export — and the per-portal listing
   * summaries). */
-object ReportQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object ReportQueries extends QueryFamily {
 
   /** q35: denormalized doc x keyword-mention report — one row per
     * (doc, mention); docs with no mentions keep one row with empty

@@ -25,9 +25,7 @@ import graft.operators.{Curation, Similarity}
   * integers before summation — the same bit-reproducibility discipline
   * as q134's rational idf.
   */
-object RetrievalEvalQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object RetrievalEvalQueries extends QueryFamily {
 
   // shared oracle fragments (identical to CorpusOpsQueries)
   private val FoldSql =

@@ -39,9 +39,7 @@ import graft.plans.Plans
   * because the affine map is the identical double expression tree, and
   * chunk hashes are md5 of reconstructed text.
   */
-object ScaleOpsQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object ScaleOpsQueries extends QueryFamily {
 
   private val FoldSql =
     "lower(strip_accents(translate(text, '-‐‑‒–—―­', '       ')))"

@@ -14,9 +14,7 @@ import graft.sources.PortalCatalog
   * real markup to chew on (all regexes are RE2-safe: no lookaround, no
   * backreferences).
   */
-object ScrapeQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object ScrapeQueries extends QueryFamily {
 
   private val ScriptRegex = "<script[^>]*>.*?</script>"
   private val TagRegex = "<[^>]+>"

@@ -10,9 +10,7 @@ import graft.operators.{Dedup, Similarity}
 /** Layers D(q25)+E of SURVEY.md §2: embedding near-dup and ANN search
   * over the `embeddings` table (64-dim float vectors).
   */
-object SimilarityQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object SimilarityQueries extends QueryFamily {
 
   val Dim = 64
   val NearDupThreshold = 0.4

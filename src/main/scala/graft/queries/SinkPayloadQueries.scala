@@ -41,9 +41,7 @@ import graft.Tables
   * natural (portal, url) key — the repository-exists probe, keyed so
   * it co-partitions with any article store at any scale.
   */
-object SinkPayloadQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object SinkPayloadQueries extends QueryFamily {
 
   private val IsoFmt = "yyyy-MM-dd'T'HH:mm:ss"
 

@@ -13,9 +13,7 @@ import graft.operators.Skew
   * oracle (plain GROUP BY / plain join) checks. Values are integer
   * cents, so the two-phase re-aggregation is associative and exact.
   */
-object SkewQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object SkewQueries extends QueryFamily {
 
   /** q85: two-phase salted aggregation over a 3-key groupBy —
     * l_returnflag is the canonical hot key (every reducer would

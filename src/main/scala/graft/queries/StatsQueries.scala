@@ -17,9 +17,7 @@ import graft.functions.Money.cents
   *  - q55: value histogram with integer bucket edges (floor division —
   *    no float boundary ambiguity).
   */
-object StatsQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object StatsQueries extends QueryFamily {
 
   def correlation(s: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(s, dir)

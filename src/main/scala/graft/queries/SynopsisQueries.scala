@@ -11,9 +11,7 @@ import graft.Tables
   * interval join (q241): events against maintenance windows through
   * day-bucket equi-keys instead of a range join.
   */
-object SynopsisQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object SynopsisQueries extends QueryFamily {
 
   // ---- q240: v-optimal histogram ----
 

@@ -14,9 +14,7 @@ import graft.Tables
   * integer costs), and q237 factors out the weekly rhythm that both
   * detectors would otherwise chase.
   */
-object TemporalDpQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object TemporalDpQueries extends QueryFamily {
 
   // ---- q236: two-state burst labeling (integer Viterbi) ----
 

@@ -16,9 +16,7 @@ import graft.operators.Gazetteer
   * SQL: identical operation order means per-row float math is
   * bit-reproducible, and all aggregates are exact integers.
   */
-object TextQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object TextQueries extends QueryFamily {
 
   // ---- shared SQL fragments (must mirror TextFunctions exactly) ----
   /** fold(): lower + strip accents + hyphen variants -> space. */

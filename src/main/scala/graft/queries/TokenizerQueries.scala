@@ -28,9 +28,7 @@ import graft.Tables
   * driver-side single-row collect (the same dim-sized decision as
   * collecting trained centroids); the dictionary is localCheckpointed
   * per round to keep lineage flat. */
-object TokenizerQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object TokenizerQueries extends QueryFamily {
 
   val MergeRounds = 8
 

@@ -18,9 +18,7 @@ import graft.plans.Plans
   * fine-tuning). All candidate generation rides the multi-band LSH of
   * q25 — never an all-pairs scan — and every ranking key is integer,
   * so results are engine-exact. */
-object VectorMiningQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object VectorMiningQueries extends QueryFamily {
 
   private val Dim = Similarity.Dim
 

@@ -18,9 +18,7 @@ import graft.operators.Curation
   * frontier must spread fetches across domains under per-domain
   * politeness delays.
   */
-object WebOpsQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object WebOpsQueries extends QueryFamily {
 
   /** Tracking parameters dropped by the canonicalizer. */
   val TrackingRe = "^(utm_[^=]*|fbclid|gclid)="

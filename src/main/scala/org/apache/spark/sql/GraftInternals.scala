@@ -27,6 +27,11 @@ object GraftInternals {
     }
   }
 
+  /** Block until every event posted so far reached the listeners
+    * (`listenerBus` is `private[spark]`). */
+  def drainListenerBus(s: SparkSession): Unit =
+    s.sparkContext.listenerBus.waitUntilEmpty()
+
   def analyzedPlan(df: Dataset[Row]): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
 

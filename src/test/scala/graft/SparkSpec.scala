@@ -17,10 +17,10 @@ object SparkSpec {
   // inside the shared 8g heap (the r16 full-sweep lesson: 32 threads
   // in a tight heap GC-thrash). shuffle.partitions stays 4 — test
   // frames are tiny and more reduce tasks is pure scheduler overhead.
-  lazy val session: SparkSession = SparkSession.builder()
+  // The product recipe (Sessions.builder) underneath, so the suite tests
+  // the engine configuration Bench and Verify run.
+  lazy val session: SparkSession = Sessions.builder()
     .master(s"local[${math.min(16, Runtime.getRuntime.availableProcessors())}]")
     .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 }
