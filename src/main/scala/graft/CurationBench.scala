@@ -37,6 +37,8 @@ import org.apache.spark.sql.functions._
   *  - SPARK_GRAFT_CUR_COUNTS=1 -> also report per-stage survivor
   *    counts (stages mode; counted after timing, over the staged
   *    frames)
+  * The near-dup stage's jaccard shape is measured, not configured
+  * (see [[graft.operators.Dedup.jaccardPairs]]), as in ScaleBench.
   *
   * The corpus recipe matches the CurationPipelineSpec end-to-end test
   * shape at scale: eval set = every 97th doc, line segmentation =
@@ -62,11 +64,6 @@ object CurationBench {
     }
     sys.env.get("SPARK_GRAFT_STAGING_DIR").foreach { d =>
       spark.conf.set(graft.operators.Dedup.StagingDirConf, d)
-    }
-    // banded bounded-memory jaccard core for the near-dup stage (the
-    // x256 composition form — same knob as ScaleBench)
-    sys.env.get("SPARK_GRAFT_JACCARD_BANDS").foreach { n =>
-      spark.conf.set(graft.operators.Dedup.JaccardBandsConf, n)
     }
 
     val docs = Tables.documents(spark, dir)

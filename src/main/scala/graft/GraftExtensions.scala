@@ -5,19 +5,23 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.{GraftInternals, SparkSession, SparkSessionExtensions}
 
 import graft.expressions.{ArrayDot, PolyHash, StripAccents}
+import graft.plans.TopKPerKeyStrategy
 
 /** SQL-surface registration of graft's native expressions, so
   * `spark.sql("SELECT graft_strip_accents(name) ...")` works next to
-  * the Column API:
+  * the Column API, plus the planner strategy for graft's plan nodes:
   *
   *  - cluster deployments: `--conf spark.sql.extensions=graft.GraftExtensions`
-  *  - existing sessions (tests, notebooks): `GraftFunctions.register(spark)`
+  *  - existing sessions (tests, notebooks): `GraftFunctions.register(spark)`;
+  *    `Plans.install` adds the strategy on first use (idempotent)
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.all.foreach { case (name, info, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info, builder))
     }
+    ext.injectPlannerStrategy(_ => TopKPerKeyStrategy)
+  }
 }
 
 object GraftFunctions {

@@ -8,6 +8,15 @@ package graft
   * Usage: runMain graft.ScaleBench <q1,q2,...> <dir1,dir2,...> [reps]
   * Timing = min over reps of a [[QueryRun]] (same convention as
   * graft.Bench); a failed rep aborts the run.
+  *
+  * Env knobs: SPARK_GRAFT_STAGING_DIR -> spark.graft.stagingDir
+  * (parquet staging instead of localCheckpoint), SPARK_GRAFT_CPUS
+  * (see [[Sessions]]). The near-dup operators pick their jaccard shape
+  * (one pass, prefix-filtered or banded) from what they measure on
+  * each rung; the only input to that choice is the deployment budget
+  * spark.graft.jaccardAutoBandVolume (1 bands every at-scale corpus,
+  * Long.MaxValue never bands), which a `spark.*` JVM system property
+  * of the run sets like any other session conf.
   */
 object ScaleBench {
   def main(args: Array[String]): Unit = {
@@ -36,16 +45,6 @@ object ScaleBench {
     // lets the ladder A/B localCheckpoint blocks vs on-disk staging
     sys.env.get("SPARK_GRAFT_STAGING_DIR").foreach { d =>
       spark.conf.set(graft.operators.Dedup.StagingDirConf, d)
-    }
-    // optional banded bounded-memory jaccard core (the x256 form:
-    // sequential shingle bands trade wall-clock for bounded RAM)
-    sys.env.get("SPARK_GRAFT_JACCARD_BANDS").foreach { n =>
-      spark.conf.set(graft.operators.Dedup.JaccardBandsConf, n)
-    }
-    // optional candidate-generation override (on/off/auto) for the
-    // prefix-filter A/B on flat vs Zipf rungs
-    sys.env.get("SPARK_GRAFT_JACCARD_PREFIX").foreach { m =>
-      spark.conf.set(graft.operators.Dedup.JaccardPrefixConf, m)
     }
 
     dirs.foreach { dir =>

@@ -181,8 +181,8 @@ object Dedup {
     * q128 x16 measured 56s staged vs 33s recomputed). A scan-less
     * plan has an UNKNOWN footprint, not a zero one → at-scale. */
   def atScale(probe: DataFrame): Boolean = {
-    val thr = probe.sparkSession.conf.getOption(StageMinInputBytesConf)
-      .map(_.toLong).getOrElse(StageMinInputBytes)
+    val thr = longConf(probe.sparkSession.conf, StageMinInputBytesConf, 0L,
+      "a byte count >= 0").getOrElse(StageMinInputBytes)
     probe.inputFiles.isEmpty || inputBytes(probe) >= thr
   }
 
@@ -250,24 +250,6 @@ object Dedup {
     (if (large) stage(withSize) else withSize, key)
   }
 
-  /** Spark conf key: when set to an int > 1, [[jaccardPairs]] runs the
-    * BANDED bounded-memory formulation with that many sequential
-    * shingle bands (see [[jaccardPairsBanded]]). `auto` sizes the
-    * band count from the measured post-cap join volume (Σdf² — the
-    * same probe the prefix dispatch reads, one aggregate per (input,
-    * cap) per JVM): corpora whose one-pass candidate shuffle would
-    * exceed the effective per-pass budget ([[autoBandVolume]]: the
-    * [[AutoBandVolumeConf]] override or the heap-derived default)
-    * take ceil(vol / budget) bands, everything smaller keeps its
-    * established one-pass shape. DEFAULT `auto` (the jaccardPrefix
-    * precedent: measured dispatch over magic constants) — the probe
-    * only runs at scale, so gate corpora keep their one-pass plan
-    * without paying it; set 1 to force one-pass for an A/B.
-    * ScaleBench exposes it via SPARK_GRAFT_JACCARD_BANDS for the
-    * trajectory rungs where the one-pass candidate shuffle exceeds
-    * single-box RAM. */
-  val JaccardBandsConf = "spark.graft.jaccardBands"
-
   /** Measured shuffle+sort footprint of ONE candidate pair row through
     * the inverted-join/agg machinery, the constant behind the derived
     * per-pass budget: the r14 zipf-rung calibration (SURVEY §5) put the
@@ -286,7 +268,7 @@ object Dedup {
     * the sequential banded path. */
   val ClusterBudgetFloor = 150_000_000L
 
-  /** Per-pass candidate-volume budget of the `auto` banding dispatch
+  /** Per-pass candidate-volume budget of the measured banding dispatch
     * (post-cap Σdf², an upper bound on candidate pair rows entering
     * one join pass), overridable via [[AutoBandVolumeConf]]. The
     * default DERIVES from this JVM's heap (maxMemory /
@@ -326,21 +308,27 @@ object Dedup {
   /** The effective budget: the conf override (validated — 0 or a
     * negative count would divide-by-zero or nonsense the band sizing)
     * or the heap-derived default. */
-  def autoBandVolume(conf: org.apache.spark.sql.RuntimeConfig): Long = {
-    val b = conf.getOption(AutoBandVolumeConf).map { s =>
-      val v = try s.trim.toLong catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"$AutoBandVolumeConf='$s' — must be a positive candidate count")
-      }
-      require(v > 0, s"$AutoBandVolumeConf must be a positive candidate count, got $v")
-      v
-    }.getOrElse(autoBandVolumeDefault)
-    b
-  }
+  def autoBandVolume(conf: org.apache.spark.sql.RuntimeConfig): Long =
+    longConf(conf, AutoBandVolumeConf, 1L, "a positive candidate count")
+      .getOrElse(autoBandVolumeDefault)
 
-  /** Band-count ceiling for `auto` — MEASURED, not cosmetic (flat
-    * x256, SURVEY §5 r15): phase-1 partials hold one row per
-    * candidate pair PER BAND it co-occurs in, i.e. min(shared
+  /** A count or byte conf, parsed loudly: a malformed or below-`min`
+    * value is an IllegalArgumentException naming the key, never a bare
+    * NumberFormatException halfway through a query. */
+  private def longConf(conf: org.apache.spark.sql.RuntimeConfig, key: String,
+      min: Long, legal: String): Option[Long] =
+    conf.getOption(key).map { s =>
+      val v = try s.trim.toLong catch {
+        case _: NumberFormatException =>
+          throw new IllegalArgumentException(s"$key='$s' — must be $legal")
+      }
+      require(v >= min, s"$key must be $legal, got $v")
+      v
+    }
+
+  /** Band-count ceiling of the measured dispatch — MEASURED, not
+    * cosmetic (flat x256, SURVEY §5 r15): phase-1 partials hold one
+    * row per candidate pair PER BAND it co-occurs in, i.e. min(shared
     * shingles, N) rows per pair, so on heavy-overlap corpora the
     * staged partial footprint grows ~linearly with N — at the r15
     * rung bands=16 completes (1597.8 s) while bands=32 and the
@@ -352,16 +340,6 @@ object Dedup {
     * don't stack passes on one box. */
   val MaxAutoBands = 16
 
-  /** Spark conf key selecting the candidate-generation strategy:
-    * "auto" (default — df-shape-keyed dispatch at scale), "on"
-    * (force the prefix-filtered path), "off" (force the plain
-    * inverted join). See [[jaccardPairsPrefix]]. A forced mode is an
-    * A/B guarantee: it bypasses the auto banding dispatch (explicit
-    * [[JaccardBandsConf]] values still win — they return before the
-    * prefix choice is read) and skips the df-shape probe, so a forced
-    * run pays no corpus-wide aggregate it never reads. */
-  val JaccardPrefixConf = "spark.graft.jaccardPrefix"
-
   /** The df-shape dispatch signal (see [[jaccardPairs]]): the prefix
     * path wins when the join volume is NOT concentrated in
     * high-df shingles — on the Zipf x16 rung shingles with df >
@@ -371,49 +349,35 @@ object Dedup {
     * SURVEY §5). */
   val HeavyDf = 64
 
-  /** Memo for the auto-dispatch df-shape probe: the probe is an eager
-    * corpus-wide aggregation over the shingle stream, and callers like
-    * CurationPipeline invoke [[jaccardPairs]] more than once per job
-    * on the SAME logical input — keyed by (analyzed-plan semantic
-    * hash, cap) so each (input, cap) pays the probe once per JVM.
-    * The cached value is the raw (Σdf² join volume, heavy-df share)
-    * pair, shared by BOTH auto dispatches (banding and prefix).
-    * Cleared wholesale past a small bound (the key space is one entry
-    * per distinct corpus plan — a handful in any real job). */
-  private val dispatchCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Int), (Long, Long)]()
+  /** What the df-shape probe measures over a df-capped shingle
+    * stream: post-cap Σdf² (`vol`, an upper bound on one-pass
+    * candidate pair rows), the part of it carried by heavy
+    * (df > [[HeavyDf]]) shingles, and the post-cap shingle and row
+    * counts. */
+  final case class DfShape(vol: Long, heavy: Long, nShingles: Long, nRows: Long)
 
-  // test hooks: the probe-skip contract for forced modes is only
-  // observable through the memo (the probe is otherwise side-effect-free)
-  private[graft] def clearDispatchCache(): Unit = dispatchCache.clear()
-  private[graft] def dispatchCacheSize: Int = dispatchCache.size
-
-  /** The memoized df-shape probe behind the auto dispatches: post-cap
-    * Σdf² (an upper bound on one-pass candidate pair rows) and the
-    * share of it carried by heavy (df > [[HeavyDf]]) shingles.
-    * The probe runs OUTSIDE the map (get → run → putIfAbsent):
-    * a Spark action inside computeIfAbsent would hold the bin
-    * lock for the whole query, blocking unrelated probes that
-    * hash into it. Two threads racing the same key at most run
-    * the probe twice — same numbers, no lock convoy. Staleness:
-    * the key is the ANALYZED plan's semantic hash, so a path
-    * re-read after an append reuses the old numbers for the
-    * rest of the JVM — acceptable for a shape heuristic whose
-    * every outcome is row-identical. */
-  private def dfShapeProbe(sh: DataFrame, cap: Int): (Long, Long) = {
-    if (dispatchCache.size > 64) dispatchCache.clear()
-    val key = (sh.queryExecution.analyzed.semanticHash(), cap)
-    Option(dispatchCache.get(key)).getOrElse {
-      val r = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-        .filter(col("df") <= cap)
-        .agg(sum(col("df") * col("df")).as("vol"),
-          sum(when(col("df") > HeavyDf, col("df") * col("df"))
-            .otherwise(0L)).as("heavy")).first()
-      val probed = if (r.isNullAt(0)) (0L, 0L) else (r.getLong(0), r.getLong(1))
-      dispatchCache.putIfAbsent(key, probed)
-      probed
-    }
+  /** The df-shape probe: ONE eager aggregate over the df dim the cap
+    * computes anyway. An empty post-cap shingle set measures zeros. */
+  def dfShape(sh: DataFrame, cap: Int): DfShape = {
+    val sq = col("df") * col("df")
+    val r = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
+      .filter(col("df") <= cap)
+      .agg(sum(sq), sum(when(col("df") > HeavyDf, sq).otherwise(0L)),
+        count(lit(1)), sum(col("df"))).first()
+    def at(i: Int) = if (r.isNullAt(i)) 0L else r.getLong(i)
+    DfShape(at(0), at(1), at(2), at(3))
   }
+
+  /** Band count for a measured volume against the per-pass budget:
+    * one pass within budget, else ceil(vol / budget) — at least 2 —
+    * capped at [[MaxAutoBands]]. */
+  def autoBands(vol: Long, budget: Long): Int =
+    if (vol <= budget) 1
+    else math.min(MaxAutoBands.toLong, (vol - 1) / budget + 1).toInt
+
+  /** The prefix verdict: prefix filtering wins when the join volume is
+    * NOT concentrated in heavy shingles (see [[HeavyDf]]). */
+  def prefixWins(vol: Long, heavy: Long): Boolean = vol > 0L && heavy * 2 < vol
 
   /** The default Jaccard gate (t = 0.5) as an e6-scaled integer — the
     * threshold every call site used before `thrE6` was a parameter. */
@@ -435,72 +399,35 @@ object Dedup {
     require(thrE6 > 0L && thrE6 <= 1000000L,
       s"jaccard thrE6 must be in (0, 1000000], got $thrE6")
 
+  /** Exact Jaccard pairs (J >= `thrE6`/1e6) over a shingle stream, in
+    * one of three row-identical shapes (spec-pinned) picked from the
+    * input and what it measures, nothing else:
+    *  - below the staging threshold ([[atScale]]) or with no df cap:
+    *    the one-pass inverted self-join, and no probe is paid (the
+    *    gate corpora keep their plan);
+    *  - at scale, ONE [[dfShape]] probe decides. A volume over the
+    *    per-pass budget ([[autoBandVolume]]) runs
+    *    [[jaccardPairsBanded]] with [[autoBands]] bands — banding beats
+    *    BOTH one-pass shapes there on wall-clock AND scratch (zipf
+    *    x256: 181.7 s banded vs 272.5 s one-pass, SURVEY §5 r14) and
+    *    never pays back below it. Within budget, [[prefixWins]] picks
+    *    [[jaccardPairsPrefix]] or the one-pass join.
+    * A caller that needs one shape calls its entry point; a deployment
+    * forces banding (or one pass) at scale by setting
+    * [[AutoBandVolumeConf]] to 1 (or Long.MaxValue).
+    * `runMain graft.JaccardProbe <docsDir>` prints the probe numbers
+    * and the shape they imply. */
   def jaccardPairs(sh: DataFrame, idCol: String, dfCap: Option[Int] = None,
       probeFrom: Option[DataFrame] = None,
       thrE6: Long = JaccardThrE6Default): DataFrame = {
     requireThr(thrE6)
-    val conf = sh.sparkSession.conf
-    val bandsMode = conf.getOption(JaccardBandsConf).getOrElse("auto")
-    // parse once, loudly: anything but `auto` or a positive int is a
-    // configuration error, not a NumberFormatException from a guard
-    val explicitBands: Option[Int] = bandsMode match {
-      case "auto" => None
-      case s =>
-        val n = try s.trim.toInt catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"$JaccardBandsConf='$s' — legal values: 'auto' or a positive band count")
-        }
-        require(n >= 1,
-          s"$JaccardBandsConf must be 'auto' or a positive band count, got $n")
-        Some(n)
-    }
-    explicitBands match {
-      case Some(n) if n > 1 =>
-        return jaccardPairsBanded(sh, idCol, dfCap, n, probeFrom, thrE6)
-      case _ =>
-    }
-    val prefixMode = conf.getOption(JaccardPrefixConf).getOrElse("auto")
-    require(prefixMode == "auto" || prefixMode == "on" || prefixMode == "off",
-      s"$JaccardPrefixConf='$prefixMode' — legal values: auto | on | off")
-    // A/B-forcing contract: a FORCED prefix mode (on/off) guarantees
-    // that candidate-generation path — auto banding steps aside and
-    // the df-shape probe (an eager corpus-wide aggregate the forced
-    // run never reads) is skipped entirely. Likewise bands=1 forces
-    // one-pass; only the prefix on/off choice may still need the probe.
-    val prefixForced = prefixMode != "auto"
-    // auto dispatches: only pay the df-shape probe at scale (below the
-    // staging threshold the whole query is sub-second in every shape,
-    // and the gate corpora keep their established plan); the probe
-    // reads the df dim the cap computes anyway, and its numbers are
-    // memoized per (input plan, cap) and shared by both verdicts
-    val probe: Option[(Long, Long)] =
-      if (!prefixForced && dfCap.isDefined && atScale(probeFrom.getOrElse(sh)))
-        Some(dfShapeProbe(sh, dfCap.get))
-      else None
-    if (explicitBands.isEmpty && !prefixForced) {
-      // banding preempts the prefix dispatch: at the rung where the
-      // one-pass candidate volume exceeds the budget, bands beat BOTH
-      // one-pass shapes on wall-clock AND scratch (zipf x256: 181.7 s
-      // banded vs 272.5 s one-pass — SURVEY §5 r14), while below it
-      // the ~N-pass cost never pays back
-      val budget = autoBandVolume(conf)
-      probe match {
-        case Some((vol, _)) if vol > budget =>
-          val n = math.min(MaxAutoBands.toLong,
-            (vol + budget - 1) / budget).toInt
-          return jaccardPairsBanded(sh, idCol, dfCap, math.max(2, n), probeFrom, thrE6)
-        case _ =>
-      }
-    }
-    val usePrefix = prefixMode match {
-      case "on" => true
-      case "off" => false
-      case _ =>
-        // prefix wins when the join volume is NOT concentrated in
-        // heavy shingles (see HeavyDf)
-        probe.exists { case (vol, heavy) => vol > 0L && heavy * 2 < vol }
-    }
-    if (usePrefix) return jaccardPairsPrefix(sh, idCol, dfCap, probeFrom, thrE6)
+    val budget = autoBandVolume(sh.sparkSession.conf)
+    val shape = dfCap.filter(_ => atScale(probeFrom.getOrElse(sh))).map(dfShape(sh, _))
+    val nBands = shape.fold(1)(s => autoBands(s.vol, budget))
+    if (nBands > 1)
+      return bandedPairs(sh, idCol, dfCap, nBands, probeFrom, thrE6, shape.map(_.vol))
+    if (shape.exists(s => prefixWins(s.vol, s.heavy)))
+      return jaccardPairsPrefix(sh, idCol, dfCap, probeFrom, thrE6)
     val (withSize, key) = sizedKeyed(sh, idCol, dfCap, probeFrom)
     val a = withSize.select(col(idCol).as("doc_a"), col(key), col("set_size").as("size_a"))
     val b = withSize.select(col(idCol).as("doc_b"), col(key), col("set_size").as("size_b"))
@@ -614,7 +541,7 @@ object Dedup {
     * `getUsableSpace` for local paths, else -1 (unknown). */
   def scratchBytes(conf: org.apache.spark.sql.RuntimeConfig,
       root: String): Long =
-    conf.getOption(JaccardScratchBytesConf).map(_.trim.toLong).getOrElse {
+    longConf(conf, JaccardScratchBytesConf, 0L, "a byte count >= 0").getOrElse {
       val uri = new org.apache.hadoop.fs.Path(root).toUri
       if (uri.getScheme == null || uri.getScheme == "file")
         new java.io.File(uri.getPath).getUsableSpace
@@ -626,20 +553,11 @@ object Dedup {
     * the 4 GiB fallback when free is unknowable. */
   def jaccardMergeBytes(conf: org.apache.spark.sql.RuntimeConfig,
       root: String): Long =
-    conf.getOption(JaccardMergeBytesConf) match {
-      case Some("off") => Long.MaxValue
-      case Some(s) =>
-        val v = try s.trim.toLong catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"$JaccardMergeBytesConf='$s' — must be 'off' or a byte count >= 0")
-        }
-        require(v >= 0,
-          s"$JaccardMergeBytesConf must be 'off' or a byte count >= 0, got $v")
-        v
-      case None =>
-        val free = scratchBytes(conf, root)
-        if (free >= 0) math.max(1L << 30, free / JaccardMergeFreeDivisor)
-        else JaccardMergeBytesFallback
+    if (conf.getOption(JaccardMergeBytesConf).contains("off")) Long.MaxValue
+    else longConf(conf, JaccardMergeBytesConf, 0L, "'off' or a byte count >= 0").getOrElse {
+      val free = scratchBytes(conf, root)
+      if (free >= 0) math.max(1L << 30, free / JaccardMergeFreeDivisor)
+      else JaccardMergeBytesFallback
     }
 
   /** Spark conf keys for the banded pre-flight DISK guard: `warn`
@@ -661,6 +579,19 @@ object Dedup {
     * zipf x256 vol 8.89e8 ⟹ 7.1 GB vs 2.9-4.0 GB realized. */
   val PartialBytesPerVolUnit = 8L
 
+  /** Peak-scratch estimate of a `bands`-band run over volume `vol`
+    * (0 for one pass). With the incremental merge, realized peak is
+    * acc + unmerged (≤ threshold + one band) + the fold's rewrite
+    * copy; the acc is O(distinct pairs) and not probeable a priori, so
+    * the estimate prices the fold machinery (4x `mergeBytes`) plus two
+    * bands' worth of the un-merged ceiling, bounded by that ceiling. */
+  def peakScratchBytes(vol: Long, bands: Int, mergeBytes: Long): Long = {
+    val ceiling = vol * PartialBytesPerVolUnit
+    if (bands <= 1) 0L
+    else if (mergeBytes == Long.MaxValue) ceiling
+    else math.min(ceiling, 4L * mergeBytes + 2L * ceiling / bands)
+  }
+
   /** Pre-flight disk estimate for a banded run (SURVEY §5: the r15
     * 94-band run died of disk 20+ minutes into phase 1 with no
     * warning). Prints one JSON line with the un-merged partial
@@ -668,25 +599,19 @@ object Dedup {
     * working estimate, and free scratch; `refuse` mode throws with
     * remediation instead of letting phase 1 die mid-flight. Free
     * scratch: the conf override, else `getUsableSpace` for local
-    * paths, else unknown (-1, never refused on). */
+    * paths, else unknown (-1, never refused on). The volume is the
+    * dispatch's measured one when it has it, else one [[dfShape]]. */
   private def preflightDiskGuard(spark: org.apache.spark.sql.SparkSession,
       sh: DataFrame, dfCap: Option[Int], nBands: Int, root: String,
-      mergeBytes: Long): Unit = {
+      mergeBytes: Long, measuredVol: Option[Long]): Unit = {
     val conf = spark.conf
     val mode = conf.getOption(JaccardDiskGuardConf).getOrElse("warn")
     require(mode == "off" || mode == "warn" || mode == "refuse",
       s"$JaccardDiskGuardConf='$mode' — legal values: off | warn | refuse")
     if (mode == "off" || dfCap.isEmpty) return
-    val (vol, _) = dfShapeProbe(sh, dfCap.get)
+    val vol = measuredVol.getOrElse(dfShape(sh, dfCap.get).vol)
     val ceiling = vol * PartialBytesPerVolUnit
-    // with the incremental merge, realized peak is acc + unmerged
-    // (≤ threshold + one band) + the fold's rewrite copy; the acc is
-    // O(distinct pairs) and not probeable a priori, so the working
-    // estimate prices the fold machinery (4x threshold) plus two
-    // bands' worth of the ceiling — bounded by the no-merge ceiling
-    val est =
-      if (mergeBytes == Long.MaxValue) ceiling
-      else math.min(ceiling, 4L * mergeBytes + 2L * ceiling / nBands)
+    val est = peakScratchBytes(vol, nBands, mergeBytes)
     val free = scratchBytes(conf, root)
     println(s"""{"jaccard_disk_guard":{"vol":$vol,"bands":$nBands,""" +
       s""""merge_bytes":${if (mergeBytes == Long.MaxValue) -1 else mergeBytes},""" +
@@ -745,14 +670,19 @@ object Dedup {
     * fold-every-band forced). */
   def jaccardPairsBanded(sh: DataFrame, idCol: String, dfCap: Option[Int],
       nBands: Int, probeFrom: Option[DataFrame] = None,
-      thrE6: Long = JaccardThrE6Default): DataFrame = {
+      thrE6: Long = JaccardThrE6Default): DataFrame =
+    bandedPairs(sh, idCol, dfCap, nBands, probeFrom, thrE6, measuredVol = None)
+
+  private def bandedPairs(sh: DataFrame, idCol: String, dfCap: Option[Int],
+      nBands: Int, probeFrom: Option[DataFrame], thrE6: Long,
+      measuredVol: Option[Long]): DataFrame = {
     require(nBands >= 2, s"nBands $nBands: use jaccardPairs below 2")
     requireThr(thrE6)
     val spark = sh.sparkSession
     val root = spark.conf.getOption(StagingDirConf)
       .getOrElse(System.getProperty("java.io.tmpdir"))
     val mergeBytes = jaccardMergeBytes(spark.conf, root)
-    preflightDiskGuard(spark, sh, dfCap, nBands, root, mergeBytes)
+    preflightDiskGuard(spark, sh, dfCap, nBands, root, mergeBytes, measuredVol)
     val (withSize0, key) = sizedKeyed(sh, idCol, dfCap, probeFrom)
     val withSize = withSize0.withColumn("__band", pmod(hash(col(key)), lit(nBands)))
     val sizes = withSize.select(col(idCol), col("set_size")).distinct()
@@ -936,27 +866,12 @@ object Dedup {
 
   val MinhashK = 8
 
-  /** Compile-time default for [[MinhashBands]]. */
-  val MinhashBandsDefault = 4 // 2 rows per band
-
-  /** Spark conf key overriding the MinHash band count (q180 measures
-    * the geometry's recall/precision curve; this applies its verdict
-    * without a recompile). Must divide [[MinhashK]]. */
-  val MinhashBandsConf = "spark.graft.minhashBands"
-
-  /** Session-conf-tunable sketch geometry: read from the active (or
-    * default) session so an operator and the oracle SQL built in the
-    * same session always agree; compile-time default when no session
-    * is up (e.g. doc tooling). Read ONCE per operator call — call
-    * sites capture the value locally so one plan never mixes two
-    * geometries mid-build. */
-  private def intConf(key: String, default: Int): Int =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .flatMap(_.conf.getOption(key)).map(_.toInt).getOrElse(default)
-
-  /** MinHash band count (bands x K/bands rows; conf-tunable). */
-  def MinhashBands: Int = intConf(MinhashBandsConf, MinhashBandsDefault)
+  /** MinHash band count over the K-value signature (4 bands x 2 rows
+    * per band). A constant, not a session conf: the q23/q128 oracle SQL
+    * is built from it once per JVM, so a per-session value would change
+    * the engine's rows but not the oracle's. q180 sweeps other
+    * geometries through [[minhashBandsConfig]]. */
+  val MinhashBands = 4
 
   /** K min-hash values per doc: ONE string fold per shingle, K affine
     * family members derived arithmetically. */
@@ -967,11 +882,11 @@ object Dedup {
       .groupBy(col(idCol)).agg(mins.head, mins.tail: _*)
   }
 
-  /** (id, band_id, band_val) — banded LSH signature rows. */
-  def minhashBands(sig: DataFrame, idCol: String): DataFrame = {
-    val nBands = MinhashBands
-    require(MinhashK % nBands == 0,
-      s"$MinhashBandsConf=$nBands must divide K=$MinhashK")
+  /** (id, band_id, band_val) — banded LSH signature rows: `nBands`
+    * bands of K/nBands rows each. */
+  def minhashBands(sig: DataFrame, idCol: String,
+      nBands: Int = MinhashBands): DataFrame = {
+    require(MinhashK % nBands == 0, s"minhash bands $nBands must divide K=$MinhashK")
     minhashBandsConfig(sig, idCol, nBands, MinhashK / nBands)
   }
 
@@ -992,8 +907,9 @@ object Dedup {
   }
 
   /** Candidate pairs sharing >=1 LSH band, with the band-agreement count. */
-  def minhashCandidates(sig: DataFrame, idCol: String): DataFrame = {
-    val bands = stage(minhashBands(sig, idCol))
+  def minhashCandidates(sig: DataFrame, idCol: String,
+      nBands: Int = MinhashBands): DataFrame = {
+    val bands = stage(minhashBands(sig, idCol, nBands))
     val a = bands.select(col(idCol).as("doc_a"), col("band_id"), col("band_val"))
     val b = bands.select(col(idCol).as("doc_b"), col("band_id"), col("band_val"))
     a.join(b, Seq("band_id", "band_val"))
@@ -1002,31 +918,22 @@ object Dedup {
       .agg(countDistinct(col("band_id")).as("n_bands"))
   }
 
-  /** Compile-time defaults for [[SimhashBits]]/[[SimhashBandCount]]. */
-  val SimhashBitsDefault = 24
-  val SimhashBandsDefault = 3 // 8-bit bands
+  /** SimHash geometry: 24 bits (inside the portable hash's 30-bit
+    * range) in 3 contiguous 8-bit bands. Constants, not session confs:
+    * the q24/q251 oracle SQL is built from them once per JVM. By
+    * pigeonhole, B bands guarantee full recall at hamming <= B-1 —
+    * q251 measures the radius curve, and [[simhashPairs]] takes
+    * another band count as a parameter. */
+  val SimhashBits = 24
+  val SimhashBandCount = 3
 
-  /** Spark conf keys overriding the SimHash geometry (q251 measures
-    * the radius operating curve of exactly these knobs; the confs
-    * apply its verdict without a recompile). Bands must divide bits;
-    * bits must stay within the portable hash's 30-bit range. */
-  val SimhashBitsConf = "spark.graft.simhashBits"
-  val SimhashBandsConf = "spark.graft.simhashBands"
-
-  /** SimHash width in bits (conf-tunable, default 24). */
-  def SimhashBits: Int = intConf(SimhashBitsConf, SimhashBitsDefault)
-
-  /** SimHash band count (conf-tunable, default 3). By pigeonhole,
-    * B contiguous bands guarantee full recall at hamming <= B-1. */
-  def SimhashBandCount: Int = intConf(SimhashBandsConf, SimhashBandsDefault)
-
-  /** Band width in bits for the current geometry; bands must tile the
-    * sketch exactly or two values differing only inside the dropped
-    * remainder bits would silently always collide. */
-  private def simhashBandWidth(bits: Int, nBands: Int): Int = {
-    require(nBands >= 1 && bits % nBands == 0,
-      s"$SimhashBandsConf=$nBands must divide $SimhashBitsConf=$bits")
-    bits / nBands
+  /** Band width in bits; bands must tile the sketch exactly or two
+    * values differing only inside the dropped remainder bits would
+    * silently always collide. */
+  private def simhashBandWidth(nBands: Int): Int = {
+    require(nBands >= 1 && SimhashBits % nBands == 0,
+      s"simhash bands $nBands must divide $SimhashBits bits")
+    SimhashBits / nBands
   }
 
   /** 24-bit SimHash per doc: one portable hash per distinct token, bit
@@ -1034,17 +941,14 @@ object Dedup {
     * hamming collisions (<=3) around 1e-4 while staying inside the
     * portable hash's 30-bit range. */
   def simhash(df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val nBits = SimhashBits
-    require(nBits >= 1 && nBits <= 30,
-      s"$SimhashBitsConf=$nBits outside the portable hash's 30-bit range")
     val toks = df
       .select(col(idCol), explode(tokens(fold(col(textCol)))).as("tok"))
       .distinct()
       .withColumn("h", Hashing.polyHash(col("tok")))
-    val votes = (0 until nBits).map(j =>
+    val votes = (0 until SimhashBits).map(j =>
       sum(shiftright(col("h"), j).bitwiseAND(lit(1L)) * 2 - 1).as(s"v$j"))
     val agg = toks.groupBy(col(idCol)).agg(votes.head, votes.tail: _*)
-    val bits = (0 until nBits).map(j =>
+    val bits = (0 until SimhashBits).map(j =>
       when(col(s"v$j") > 0, lit(1L << j)).otherwise(lit(0L)))
     agg.select(col(idCol), bits.reduce(_ + _).as("simhash"))
   }
@@ -1058,9 +962,9 @@ object Dedup {
     * slowdown on the synthetic corpus). Each value row carries its doc
     * count and min doc id, so cluster membership stays linear — the
     * dictionary-encode-before-quadratic-work rule that holds at 100 TB. */
-  def simhashPairs(sims: DataFrame, idCol: String, maxHamming: Int = 3): DataFrame = {
-    val (nBits, nBands) = (SimhashBits, SimhashBandCount)
-    val width = simhashBandWidth(nBits, nBands)
+  def simhashPairs(sims: DataFrame, idCol: String, maxHamming: Int = 3,
+      nBands: Int = SimhashBandCount): DataFrame = {
+    val width = simhashBandWidth(nBands)
     val values = sims.groupBy(col("simhash"))
       .agg(count(lit(1)).as("n_docs"), min(col(idCol)).as("min_doc"))
     val bandStructs = (0 until nBands).map(b =>
@@ -1107,16 +1011,15 @@ object Dedup {
     * Manku et al. 2007's simhash dedup at Google scale — the curve
     * quantifies what banding trades away against it). */
   def simhashRadiusCurve(sims: DataFrame, idCol: String,
-      maxRadius: Int = 3): DataFrame = {
-    val nBits = SimhashBits
-    require(maxRadius >= 1 && maxRadius < nBits,
+      maxRadius: Int = 3, nBands: Int = SimhashBandCount): DataFrame = {
+    require(maxRadius >= 1 && maxRadius < SimhashBits,
       s"bad radius $maxRadius")
     val s = sims.sparkSession
     val values = stage(sims.groupBy(col("simhash")).agg(count(lit(1)).as("n_docs")))
     // the bounded mask model: every bit pattern with 1..maxRadius set
     // bits over the simhash width (2,324 rows at 24/3)
     val masks = (1 to maxRadius).flatMap { r =>
-      (0 until nBits).combinations(r)
+      (0 until SimhashBits).combinations(r)
         .map(c => (c.map(1L << _).sum, r.toLong))
     }
     import s.implicits._
@@ -1128,7 +1031,7 @@ object Dedup {
       .join(values.select(col("simhash").as("nb")), Seq("nb"))
       .filter(col("simhash") < col("nb"))
       .select(col("r"))
-    val cands = simhashPairs(sims, idCol, maxHamming = nBits)
+    val cands = simhashPairs(sims, idCol, maxHamming = SimhashBits, nBands)
       .select(col("hamming"))
     // coalesce: sum(when(...)) over an EMPTY truth/candidate set is
     // NULL where the oracle's COUNT(*) subqueries read 0 — a

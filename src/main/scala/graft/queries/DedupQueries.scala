@@ -88,7 +88,7 @@ object DedupQueries extends QueryFamily {
     val mins = (0 until Dedup.MinhashK)
       .map(k => s"MIN(${Hashing.affineSql("h_base", k)}) AS h$k")
       .mkString(",\n    ")
-    // geometry from the same conf-backed vals the operator reads, so
+    // geometry from the same constants the operator reads, so
     // engine and oracle stay pinned to one (bands x rows) shape
     val nBands = Dedup.MinhashBands
     val rows = Dedup.MinhashK / nBands

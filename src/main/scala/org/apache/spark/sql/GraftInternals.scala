@@ -27,6 +27,11 @@ object GraftInternals {
     }
   }
 
+  /** The planner strategies an extensions object would build into a
+    * session (`buildPlannerStrategies` is `private[sql]`). */
+  def plannerStrategies(ext: SparkSessionExtensions, s: SparkSession)
+      : Seq[org.apache.spark.sql.execution.SparkStrategy] = ext.buildPlannerStrategies(s)
+
   /** Block until every event posted so far reached the listeners
     * (`listenerBus` is `private[spark]`). */
   def drainListenerBus(s: SparkSession): Unit =

@@ -392,19 +392,10 @@ class DedupSpec extends SparkSpec {
       Dedup.shingles(reps, "text", "doc_id"), "doc_id",
       dfCap = Some(graft.queries.DedupQueries.JaccardDfCap)))
     assert(single.nonEmpty)
-    // the explicit banded entry point...
     val banded = rows(Dedup.jaccardPairsBanded(
       Dedup.shingles(reps, "text", "doc_id"), "doc_id",
       dfCap = Some(graft.queries.DedupQueries.JaccardDfCap), nBands = 4))
     assert(banded === single)
-    // ...and the conf-keyed dispatch ScaleBench uses
-    spark.conf.set(Dedup.JaccardBandsConf, "3")
-    try {
-      val dispatched = rows(Dedup.jaccardPairs(
-        Dedup.shingles(reps, "text", "doc_id"), "doc_id",
-        dfCap = Some(graft.queries.DedupQueries.JaccardDfCap)))
-      assert(dispatched === single)
-    } finally spark.conf.unset(Dedup.JaccardBandsConf)
   }
 
   test("auto banding dispatches on the measured volume and stays row-identical") {
@@ -421,26 +412,26 @@ class DedupSpec extends SparkSpec {
       df.inputFiles.exists(_.contains("jacc_bands"))
     val single = rows(pairs())
     assert(single.nonEmpty)
-    spark.conf.set(Dedup.JaccardBandsConf, "auto")
+    // below the staging threshold the probe never runs: one-pass
+    assert(!isBanded(pairs()))
+    spark.conf.set(Dedup.StageMinInputBytesConf, "0") // force at-scale
     try {
-      // below the staging threshold the probe never runs: one-pass
-      assert(!isBanded(pairs()))
-      spark.conf.set(Dedup.StageMinInputBytesConf, "0") // force at-scale
-      try {
-        // at scale with a tiny budget the volume exceeds it: banded,
-        // and row-identical to the one-pass shape
-        spark.conf.set(Dedup.AutoBandVolumeConf, "1")
-        val banded = pairs()
-        assert(isBanded(banded))
-        assert(rows(banded) === single)
-        // at scale with a huge budget: the probe says one-pass
-        spark.conf.set(Dedup.AutoBandVolumeConf, Long.MaxValue.toString)
-        assert(!isBanded(pairs()))
-      } finally {
-        spark.conf.unset(Dedup.StageMinInputBytesConf)
-        spark.conf.unset(Dedup.AutoBandVolumeConf)
-      }
-    } finally spark.conf.unset(Dedup.JaccardBandsConf)
+      // at scale with a tiny budget the volume exceeds it: banded,
+      // and row-identical to the one-pass shape
+      spark.conf.set(Dedup.AutoBandVolumeConf, "1")
+      val banded = pairs()
+      assert(isBanded(banded))
+      assert(rows(banded) === single)
+      // at scale with a huge budget: the probe says one pass (prefix
+      // or plain), row-identical too
+      spark.conf.set(Dedup.AutoBandVolumeConf, Long.MaxValue.toString)
+      val within = pairs()
+      assert(!isBanded(within))
+      assert(rows(within) === single)
+    } finally {
+      spark.conf.unset(Dedup.StageMinInputBytesConf)
+      spark.conf.unset(Dedup.AutoBandVolumeConf)
+    }
   }
 
   test("prefix-filtered jaccard is row-identical to the single-pass shape") {
@@ -467,14 +458,6 @@ class DedupSpec extends SparkSpec {
         dfCap = Some(graft.queries.DedupQueries.JaccardDfCap)))
       assert(prefixScale === single)
     } finally spark.conf.unset(Dedup.StageMinInputBytesConf)
-    // the conf-keyed forced dispatch
-    spark.conf.set(Dedup.JaccardPrefixConf, "on")
-    try {
-      val dispatched = rows(Dedup.jaccardPairs(
-        Dedup.shingles(reps, "text", "doc_id"), "doc_id",
-        dfCap = Some(graft.queries.DedupQueries.JaccardDfCap)))
-      assert(dispatched === single)
-    } finally spark.conf.unset(Dedup.JaccardPrefixConf)
   }
 
   test("jaccard dispatch confs fail loudly on garbage and the budget derives from the heap") {
@@ -482,21 +465,21 @@ class DedupSpec extends SparkSpec {
     def pairs() = Dedup.jaccardPairs(
       Dedup.shingles(reps, "text", "doc_id"), "doc_id",
       dfCap = Some(graft.queries.DedupQueries.JaccardDfCap))
-    // garbage band counts: a typed error naming the conf and legal
-    // values, not a bare NumberFormatException from a match guard
-    for (bad <- Seq("fast", "0", "-3")) {
-      spark.conf.set(Dedup.JaccardBandsConf, bad)
+    // garbage byte counts: a typed error naming the conf, not a bare
+    // NumberFormatException ("For input string") halfway through a query
+    for (bad <- Seq("8m", "-1", "")) {
+      spark.conf.set(Dedup.StageMinInputBytesConf, bad)
       try {
         val e = intercept[IllegalArgumentException](pairs())
-        assert(e.getMessage.contains(Dedup.JaccardBandsConf), s"bands=$bad")
-      } finally spark.conf.unset(Dedup.JaccardBandsConf)
+        assert(e.getMessage.contains(Dedup.StageMinInputBytesConf), s"minBytes=$bad")
+      } finally spark.conf.unset(Dedup.StageMinInputBytesConf)
+      spark.conf.set(Dedup.JaccardScratchBytesConf, bad)
+      try {
+        val e = intercept[IllegalArgumentException](
+          Dedup.jaccardMergeBytes(spark.conf, "/tmp"))
+        assert(e.getMessage.contains(Dedup.JaccardScratchBytesConf), s"scratch=$bad")
+      } finally spark.conf.unset(Dedup.JaccardScratchBytesConf)
     }
-    // garbage prefix mode: same contract
-    spark.conf.set(Dedup.JaccardPrefixConf, "sometimes")
-    try {
-      val e = intercept[IllegalArgumentException](pairs())
-      assert(e.getMessage.contains(Dedup.JaccardPrefixConf))
-    } finally spark.conf.unset(Dedup.JaccardPrefixConf)
     // budget override validation: 0 and negatives would divide-by-zero
     // or nonsense the band sizing — rejected before any plan is built
     spark.conf.set(Dedup.StageMinInputBytesConf, "0") // force at-scale
@@ -554,43 +537,6 @@ class DedupSpec extends SparkSpec {
     assert(cont.count() === 1L)
   }
 
-  test("forced prefix mode bypasses auto banding and skips the df-shape probe") {
-    import org.apache.spark.sql.functions.col
-    val reps = Dedup.exact(Tables.documents(spark, sfDir), "text", "doc_id")
-    def pairs() = Dedup.jaccardPairs(
-      Dedup.shingles(reps, "text", "doc_id"), "doc_id",
-      dfCap = Some(graft.queries.DedupQueries.JaccardDfCap))
-    def rows(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("doc_a"), col("doc_b"), col("intersect_n"), col("jaccard_e6"))
-      .collect().map(_.toSeq).toSet
-    def isBanded(df: org.apache.spark.sql.DataFrame) =
-      df.inputFiles.exists(_.contains("jacc_bands"))
-    val single = rows(pairs())
-    assert(single.nonEmpty)
-    spark.conf.set(Dedup.StageMinInputBytesConf, "0") // force at-scale
-    spark.conf.set(Dedup.AutoBandVolumeConf, "1") // any volume over-budget
-    try {
-      // auto prefix: the tiny budget makes auto banding take the plan
-      assert(isBanded(pairs()))
-      // forced prefix: the A/B guarantee — the requested path, no
-      // banding preemption, and the probe (observable only through
-      // its memo) never runs
-      for (mode <- Seq("on", "off")) {
-        spark.conf.set(Dedup.JaccardPrefixConf, mode)
-        try {
-          Dedup.clearDispatchCache()
-          val forced = pairs()
-          assert(!isBanded(forced), s"prefix=$mode")
-          assert(rows(forced) === single, s"prefix=$mode")
-          assert(Dedup.dispatchCacheSize === 0, s"prefix=$mode paid the probe")
-        } finally spark.conf.unset(Dedup.JaccardPrefixConf)
-      }
-    } finally {
-      spark.conf.unset(Dedup.StageMinInputBytesConf)
-      spark.conf.unset(Dedup.AutoBandVolumeConf)
-    }
-  }
-
   test("q251 radius curve: truth recomputed all-pairs, pigeonhole anchor, candidate volume") {
     import graft.queries.DedupQueries
     val rows = DedupQueries.simhashSweep(spark, sfDir)
@@ -641,68 +587,55 @@ class DedupSpec extends SparkSpec {
     assert(recalls === recalls.sorted.reverse)
   }
 
-  test("sketch geometry confs: 4 simhash bands give full recall at r <= 3 (pigeonhole)") {
-    // q251 measures the radius curve so an operator can TUNE the band
-    // count; the conf applies that verdict without a recompile. At 4
-    // bands of 6 bits, any pair with hamming < 4 shares a band, so
-    // every r <= 3 arm must read recall 1.0 — the anchor the default
-    // 3-band geometry only guarantees through r = 2.
+  test("sketch geometry: 4 simhash bands give full recall at r <= 3 (pigeonhole)") {
+    // q251 measures the radius curve so an operator can pick a band
+    // count; the operators take it as a parameter. At 4 bands of 6
+    // bits, any pair with hamming < 4 shares a band, so every r <= 3
+    // arm must read recall 1.0 — the anchor the default 3-band
+    // geometry only guarantees through r = 2.
     val docs = Tables.documents(spark, sfDir)
     val reps = Dedup.exact(docs, "text", "doc_id")
-    try {
-      spark.conf.set(Dedup.SimhashBandsConf, "4")
-      assert(Dedup.SimhashBandCount === 4)
-      val rows = Dedup.simhashRadiusCurve(
-        Dedup.simhash(reps, "text", "doc_id"), "doc_id", maxRadius = 3)
-        .collect().sortBy(_.getAs[Long]("radius"))
-      assert(rows.map(_.getAs[Long]("radius")).toSeq === Seq(1L, 2L, 3L))
-      // non-vacuous: the corpus must hold true pairs somewhere in the
-      // swept radii or full recall asserts nothing
-      assert(rows.exists(_.getAs[Long]("n_true") > 0L), "vacuous corpus")
-      rows.foreach { r =>
-        assert(r.getAs[Long]("recall_e6") === 1000000L,
-          s"4-band pigeonhole broken at radius ${r.getAs[Long]("radius")}")
-      }
-      // independent check of the 6-bit banding itself: driver-side
-      // re-banding of the value dictionary agrees with the engine's
-      // candidate volume
-      val values = Dedup.simhash(reps, "text", "doc_id")
-        .select(col("simhash")).distinct()
-        .collect().map(_.getLong(0)).sorted
-      def bandVals(v: Long) = (0 until 4).map(b => (b, (v >> (6 * b)) & 63L))
-      val nCands = (for {
-        i <- values.indices
-        j <- (i + 1) until values.length
-        if bandVals(values(i)).zip(bandVals(values(j))).exists { case (a, b) => a == b }
-      } yield 1).size.toLong
-      assert(rows.head.getAs[Long]("n_candidates") === nCands)
-    } finally spark.conf.unset(Dedup.SimhashBandsConf)
-    // back at the default geometry after unset
-    assert(Dedup.SimhashBandCount === Dedup.SimhashBandsDefault)
+    val rows = Dedup.simhashRadiusCurve(
+      Dedup.simhash(reps, "text", "doc_id"), "doc_id", maxRadius = 3, nBands = 4)
+      .collect().sortBy(_.getAs[Long]("radius"))
+    assert(rows.map(_.getAs[Long]("radius")).toSeq === Seq(1L, 2L, 3L))
+    // non-vacuous: the corpus must hold true pairs somewhere in the
+    // swept radii or full recall asserts nothing
+    assert(rows.exists(_.getAs[Long]("n_true") > 0L), "vacuous corpus")
+    rows.foreach { r =>
+      assert(r.getAs[Long]("recall_e6") === 1000000L,
+        s"4-band pigeonhole broken at radius ${r.getAs[Long]("radius")}")
+    }
+    // independent check of the 6-bit banding itself: driver-side
+    // re-banding of the value dictionary agrees with the engine's
+    // candidate volume
+    val values = Dedup.simhash(reps, "text", "doc_id")
+      .select(col("simhash")).distinct()
+      .collect().map(_.getLong(0)).sorted
+    def bandVals(v: Long) = (0 until 4).map(b => (b, (v >> (6 * b)) & 63L))
+    val nCands = (for {
+      i <- values.indices
+      j <- (i + 1) until values.length
+      if bandVals(values(i)).zip(bandVals(values(j))).exists { case (a, b) => a == b }
+    } yield 1).size.toLong
+    assert(rows.head.getAs[Long]("n_candidates") === nCands)
 
     // a geometry that does not tile the sketch is rejected loudly, not
     // silently truncated (dropped remainder bits would always collide)
-    try {
-      spark.conf.set(Dedup.SimhashBandsConf, "5")
-      intercept[IllegalArgumentException] {
-        Dedup.simhashPairs(Dedup.simhash(reps, "text", "doc_id"), "doc_id")
-      }
-    } finally spark.conf.unset(Dedup.SimhashBandsConf)
+    intercept[IllegalArgumentException] {
+      Dedup.simhashPairs(Dedup.simhash(reps, "text", "doc_id"), "doc_id", nBands = 5)
+    }
 
-    // the minhash band conf reshapes the signature the same way:
+    // the minhash band count reshapes the signature the same way:
     // 2 bands x 4 rows has strictly fewer-or-equal collisions than
     // the default 4 x 2 on the same signatures (rows-per-band is the
     // precision knob)
     val sh = Dedup.shingles(reps, "text", "doc_id")
     val sig = Dedup.minhashSignatures(sh, "doc_id")
     val defaultCands = Dedup.minhashCandidates(sig, "doc_id").count()
-    try {
-      spark.conf.set(Dedup.MinhashBandsConf, "2")
-      assert(Dedup.MinhashBands === 2)
-      val strictCands = Dedup.minhashCandidates(sig, "doc_id").count()
-      assert(strictCands <= defaultCands,
-        s"2x4 banding must not out-recall 4x2 ($strictCands > $defaultCands)")
-    } finally spark.conf.unset(Dedup.MinhashBandsConf)
+    val strictCands = Dedup.minhashCandidates(sig, "doc_id", nBands = 2).count()
+    assert(strictCands <= defaultCands,
+      s"2x4 banding must not out-recall 4x2 ($strictCands > $defaultCands)")
   }
 
   /** A corpus whose pairwise Jaccards straddle the 0.3/0.5/0.7 gates:
@@ -828,6 +761,39 @@ class DedupSpec extends SparkSpec {
       spark.conf.unset(Dedup.JaccardDiskGuardConf)
       spark.conf.unset(Dedup.JaccardScratchBytesConf)
     }
+  }
+
+  test("jaccard dispatch functions: one pass within budget, capped bands past it, prefix on a light shape") {
+    // pure functions of what the probe measures — no Spark job runs
+    assert(Dedup.MaxAutoBands === 16)
+    val vols = Seq(0L, 1L, 999L, 1000L, 1001L, 1999L, 2000L, 2001L, 15999L,
+      16000L, 16001L, 1L << 40, Long.MaxValue)
+    for (vol <- vols; budget <- Seq(1L, 1000L, 1L << 20, Long.MaxValue)) {
+      val n = Dedup.autoBands(vol, budget)
+      if (vol <= budget) assert(n === 1, s"vol=$vol budget=$budget")
+      else {
+        val ceil = BigInt(vol) / budget + (if (vol % budget == 0) 0 else 1)
+        assert(n >= 2, s"vol=$vol budget=$budget")
+        assert(n === ceil.min(Dedup.MaxAutoBands).toInt, s"vol=$vol budget=$budget")
+      }
+    }
+    assert(Dedup.autoBands(1001L, 1000L) === 2)
+    assert(Dedup.autoBands(5000L, 1000L) === 5)
+    assert(Dedup.autoBands(16001L, 1000L) === Dedup.MaxAutoBands)
+    assert(Dedup.autoBands(Long.MaxValue, 1L) === Dedup.MaxAutoBands)
+    for (vol <- Seq(0L, 1L, 10L, 11L, 1L << 40); heavy <- Seq(0L, 1L, 5L, 6L, 1L << 39))
+      assert(Dedup.prefixWins(vol, heavy) === (vol > 0 && 2 * heavy < vol), s"vol=$vol heavy=$heavy")
+    // an empty volume: one pass, no prefix, no scratch
+    assert(Dedup.autoBands(0L, 1L) === 1)
+    assert(!Dedup.prefixWins(0L, 0L))
+    assert(Dedup.peakScratchBytes(0L, 1, 1L << 30) === 0L)
+    // the scratch estimate: none for one pass, the un-merged ceiling
+    // with the merge off, else capped by the fold machinery
+    val ceiling = 1000000L * Dedup.PartialBytesPerVolUnit
+    assert(Dedup.peakScratchBytes(1000000L, 1, Long.MaxValue) === 0L)
+    assert(Dedup.peakScratchBytes(1000000L, 4, Long.MaxValue) === ceiling)
+    assert(Dedup.peakScratchBytes(1000000L, 4, 1000L) === 4000L + 2L * ceiling / 4)
+    assert(Dedup.peakScratchBytes(1000000L, 4, 1L << 30) === ceiling)
   }
 
   test("cluster-mode budget floor: the heap derivation only rules in local mode") {

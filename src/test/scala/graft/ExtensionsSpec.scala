@@ -14,4 +14,11 @@ class ExtensionsSpec extends SparkSpec {
     assert(r.getLong(1) == "ab1".foldLeft(0L)((a, c) => (a * 31 + c.toLong) % 1000000007L))
     assert(r.getDouble(2) == 11.0)
   }
+
+  test("the extension injects the TopKPerKey planner strategy") {
+    val ext = new org.apache.spark.sql.SparkSessionExtensions
+    new GraftExtensions().apply(ext)
+    assert(org.apache.spark.sql.GraftInternals.plannerStrategies(ext, spark)
+      .contains(graft.plans.TopKPerKeyStrategy))
+  }
 }
