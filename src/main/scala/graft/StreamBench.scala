@@ -15,7 +15,7 @@ import graft.streaming.StreamingIngestPipeline.IngestDoc
   * the SURVEY §5 streaming datum.
   *
   * Per-batch latency = addData + processAllAvailable wall time: the
-  * full foreachBatch turn including every state read, index append,
+  * full micro-batch turn including every state read, index append,
   * dim snapshot and packed-output write. The first batch is reported
   * separately (plan + codec warmup) and excluded from p50/p95.
   *

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.queries.CdcQueries
 
@@ -28,12 +28,7 @@ import graft.queries.CdcQueries
   * micro-batch (broadcastable), so incremental cost is an index seek
   * per arriving chunk, never a corpus scan.
   *
-  * Replay idempotency: Structured Streaming's foreachBatch contract
-  * re-delivers a batch whose processing did not commit, so every
-  * index write is keyed by batchId (`chunkDir/batch=<id>`, written
-  * with overwrite) and the probe reads only batches strictly BEFORE
-  * the current id — a replayed batch overwrites its own partial
-  * append instead of accumulating it, and never probes against it. */
+  * Replay idempotency is the batch-keyed contract of [[StreamingState]]. */
 class StreamingCdcDedup(val chunkDir: String) {
 
   private val chunkSchema = StructType(Seq(
@@ -42,22 +37,11 @@ class StreamingCdcDedup(val chunkDir: String) {
     StructField("clen", LongType),
     StructField("h", StringType)))
 
-  /** Committed batch ids present in the index, ascending. */
-  def batchIds(): Seq[Long] = StreamingState.batchIds(chunkDir)
-
-  /** The persisted chunk index, optionally restricted to batches
-    * strictly before `before` (empty before the first batch). */
-  def historicalChunks(s: SparkSession, before: Option[Long] = None): DataFrame = {
-    val dirs = StreamingState.batchDirs(chunkDir, before)
-    if (dirs.nonEmpty) s.read.schema(chunkSchema).parquet(dirs: _*)
-    else s.createDataFrame(s.sparkContext.emptyRDD[Row], chunkSchema)
-  }
-
   /** One micro-batch: returns the arrivals' at-ingest verdicts
     * (doc_id, n_chars, n_chunks, dup_chunks_at_ingest,
     * dup_chars_at_ingest, dup_share_at_ingest_e6) and writes the
     * batch's chunks to the index under `batch=<batchId>` (overwrite —
-    * a foreachBatch replay of the same id is idempotent). A chunk
+    * a replay of the same id is idempotent). A chunk
     * occurrence is a dup at ingest when its hash already exists in
     * the store, OR an EARLIER doc of the same batch carries it, OR it
     * repeats within its own document — exactly the verdict a
@@ -85,7 +69,7 @@ class StreamingCdcDedup(val chunkDir: String) {
     // batch's hashes (cheaper than the former full-history count agg —
     // the scan is column-pruned either way, but nothing re-aggregates
     // the whole store per batch)
-    val histHit = historicalChunks(s, Some(batchId))
+    val histHit = StreamingState.history(s, chunkDir, chunkSchema, Some(batchId))
       .join(newChunks.select(col("h")).distinct(), Seq("h"), "left_semi")
       .select(col("h")).distinct()
       .withColumn("in_hist", lit(true))
@@ -101,34 +85,20 @@ class StreamingCdcDedup(val chunkDir: String) {
       .withColumn("dup_share_at_ingest_e6",
         expr("dup_chars_at_ingest * 1000000 div n_chars"))
       .localCheckpoint()
-    newChunks.write.mode("overwrite")
-      .parquet(StreamingState.writeDir(chunkDir, batchId))
+    StreamingState.append(newChunks, chunkDir, batchId)
     verdicts
   }
-
-  /** Legacy entry point: allocates the next sequential batch id from
-    * the index itself (max committed id + 1). */
-  def processBatch(arrivals: DataFrame, textCol: String, idCol: String): DataFrame =
-    processBatch(arrivals, textCol, idCol,
-      batchIds().lastOption.map(_ + 1L).getOrElse(0L))
 
   /** Fold the chunk index into the batch q181 audit on everything
     * ingested so far — the SAME aggregation the batch query runs. */
   def foldAudit(s: SparkSession): DataFrame =
-    CdcQueries.chunkAudit(historicalChunks(s))
+    CdcQueries.chunkAudit(StreamingState.history(s, chunkDir, chunkSchema, None))
 
-  /** Drive a document stream through foreachBatch, writing each
+  /** Drive a document stream through [[StreamingState.run]], writing each
     * batch's at-ingest verdicts to `verdictDir/batch=<id>` (overwrite,
     * so a replayed batch is idempotent end to end). */
   def run(stream: DataFrame, textCol: String, idCol: String,
       verdictDir: String, checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        processBatch(batch, textCol, idCol, epochId)
-          .write.mode("overwrite")
-          .parquet(StreamingState.writeDir(verdictDir, epochId))
-        ()
-      }
-      .start()
+    StreamingState.run(stream, Some(verdictDir), checkpointDir)(
+      processBatch(_, textCol, idCol, _))
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.functions.TextFunctions.{fold, tokens}
 import graft.queries.ScaleOpsQueries
@@ -22,10 +22,7 @@ import graft.queries.ScaleOpsQueries
   * with the dim-sized drift monitor and the corpus-sized dedup band
   * index, the three streaming state regimes are all represented.
   *
-  * Replay idempotency: counter partials are keyed by batchId
-  * (overwrite) — the abelian fold of the log is then exactly-once
-  * under foreachBatch's at-least-once re-delivery (see
-  * [[StreamingState]]).
+  * Replay idempotency is the batch-keyed contract of [[StreamingState]].
   *
   * Estimates never undercount (CMS guarantee, asserted in the batch
   * q171 gate); a monitor probes `estimates` with any watchlist — the
@@ -39,17 +36,9 @@ class StreamingCmsCounter(val sketchDir: String) {
     StructField("cell", LongType),
     StructField("cnt", LongType)))
 
-  /** The persisted per-batch counter log (empty before the first
-    * batch). Readers fold by (d, cell). */
-  def historicalCells(s: SparkSession): DataFrame = {
-    val dirs = StreamingState.batchDirs(sketchDir)
-    if (dirs.nonEmpty) s.read.schema(cellSchema).parquet(dirs: _*)
-    else s.createDataFrame(s.sparkContext.emptyRDD[Row], cellSchema)
-  }
-
   /** The folded sketch over everything seen so far. */
   def sketch(s: SparkSession): DataFrame =
-    historicalCells(s)
+    StreamingState.history(s, sketchDir, cellSchema, None)
       .groupBy(col("d"), col("cell")).agg(sum(col("cnt")).as("cnt"))
 
   /** One micro-batch: fold the arrivals' token counts into the sketch.
@@ -63,29 +52,16 @@ class StreamingCmsCounter(val sketchDir: String) {
         .groupBy(col("tok")).agg(count(lit(1)).as("c")))
       .select(col("d").cast("int").as("d"), col("cell"), col("cnt"))
       .localCheckpoint()
-    batchCells.write.mode("overwrite")
-      .parquet(StreamingState.writeDir(sketchDir, batchId))
+    StreamingState.append(batchCells, sketchDir, batchId)
     batchCells
   }
-
-  /** Legacy entry point: allocates the next sequential batch id from
-    * the counter log itself (max committed id + 1). */
-  def processBatch(arrivals: DataFrame, textCol: String): DataFrame =
-    processBatch(arrivals, textCol,
-      StreamingState.batchIds(sketchDir).lastOption.map(_ + 1L).getOrElse(0L))
 
   /** CMS estimates for a (tok) watchlist against the current state. */
   def estimates(s: SparkSession, probes: DataFrame): DataFrame =
     ScaleOpsQueries.cmsEstimates(probes, sketch(s))
 
-  /** Drive a document stream through foreachBatch. */
+  /** Drive a document stream through [[StreamingState.run]]. */
   def run(stream: DataFrame, textCol: String,
       checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        processBatch(batch, textCol, epochId)
-        ()
-      }
-      .start()
+    StreamingState.run(stream, None, checkpointDir)(processBatch(_, textCol, _))
 }

@@ -71,19 +71,12 @@ class StreamingContamGuard(val benchDir: String) {
           .otherwise("flagged"))
   }
 
-  /** Drive a document stream through foreachBatch, writing each
-    * batch's verdicts to `verdictDir/batch=<id>` (overwrite — the
-    * guard is stateless per batch, so keying the OUTPUT by epochId is
-    * all replay idempotency needs; see [[StreamingState]]). */
+  /** Drive a document stream, writing each batch's verdicts to
+    * `verdictDir/batch=<id>` (the guard is stateless per batch, so
+    * keying the output by epochId is all [[StreamingState]]'s replay
+    * contract needs). */
   def run(stream: DataFrame, textCol: String, idCol: String,
       verdictDir: String, checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        verdicts(batch, textCol, idCol)
-          .write.mode("overwrite")
-          .parquet(StreamingState.writeDir(verdictDir, epochId))
-        ()
-      }
-      .start()
+    StreamingState.run(stream, Some(verdictDir), checkpointDir)((batch, _) =>
+      verdicts(batch, textCol, idCol))
 }

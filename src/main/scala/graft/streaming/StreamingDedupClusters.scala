@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.Dedup
 
@@ -32,10 +32,7 @@ import graft.operators.Dedup
   * and writes only the touched rows. Nothing per batch is
   * proportional to corpus size except the one assignment-table probe.
   *
-  * Replay idempotency: deltas land in `clustersDir/batch=<id>` with
-  * overwrite and the contraction reads assignments strictly BEFORE
-  * the current id, so a foreachBatch re-delivery recomputes the same
-  * delta against the same pre-batch state (see [[StreamingState]]). */
+  * Replay idempotency is the batch-keyed contract of [[StreamingState]]. */
 class StreamingDedupClusters(val indexDir: String, val clustersDir: String) {
 
   val lsh = new StreamingLshDedup(indexDir)
@@ -48,16 +45,10 @@ class StreamingDedupClusters(val indexDir: String, val clustersDir: String) {
   /** Latest-wins view of the log-structured assignment table,
     * optionally restricted to deltas strictly before `before`. */
   def currentAssignments(s: SparkSession,
-      before: Option[Long] = None): DataFrame = {
-    val dirs = StreamingState.batchDirs(clustersDir, before)
-    if (dirs.isEmpty)
-      s.createDataFrame(s.sparkContext.emptyRDD[Row],
-        StructType(assignSchema.take(2)))
-    else
-      s.read.schema(assignSchema).parquet(dirs: _*)
-        .groupBy(col("node"))
-        .agg(max_by(col("lab"), col("batch_seq")).as("lab"))
-  }
+      before: Option[Long] = None): DataFrame =
+    StreamingState.history(s, clustersDir, assignSchema, before)
+      .groupBy(col("node"))
+      .agg(max_by(col("lab"), col("batch_seq")).as("lab"))
 
   /** One micro-batch: probe LSH, contract to the label graph, run CC,
     * write the assignment delta under `batch=<batchSeq>`. Returns the
@@ -85,7 +76,6 @@ class StreamingDedupClusters(val indexDir: String, val clustersDir: String) {
         .distinct()
         .join(assign, Seq("node"), "left_anti")
         .localCheckpoint()
-      val deltaDir = StreamingState.writeDir(clustersDir, batchSeq)
       if (!edges.isEmpty) {
         val comp = Dedup.connectedComponents(edges, "a", "b")
           .localCheckpoint() // (node = old label or new node, lab = root)
@@ -96,16 +86,14 @@ class StreamingDedupClusters(val indexDir: String, val clustersDir: String) {
         val newAssigned = newNodes
           .join(comp.withColumnRenamed("lab", "root"), Seq("node"), "left")
           .select(col("node"), coalesce(col("root"), col("node")).as("lab"))
-        relabelExisting.unionByName(newAssigned)
+        StreamingState.append(relabelExisting.unionByName(newAssigned)
           .withColumn("batch_seq", lit(batchSeq))
-          .localCheckpoint()
-          .write.mode("overwrite").parquet(deltaDir)
+          .localCheckpoint(), clustersDir, batchSeq)
       } else if (!newNodes.isEmpty) {
         // every new pair collapsed inside existing clusters — only
         // genuinely-new nodes (paired with their own label) remain
-        newNodes.select(col("node"), col("node").as("lab"))
-          .withColumn("batch_seq", lit(batchSeq))
-          .write.mode("overwrite").parquet(deltaDir)
+        StreamingState.append(newNodes.select(col("node"), col("node").as("lab"))
+          .withColumn("batch_seq", lit(batchSeq)), clustersDir, batchSeq)
       }
     }
     verdicts
@@ -116,13 +104,6 @@ class StreamingDedupClusters(val indexDir: String, val clustersDir: String) {
     * assignments accumulate in `clustersDir`. */
   def run(stream: DataFrame, textCol: String, idCol: String,
       verdictDir: String, checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, textCol, idCol, batchId)
-          .write.mode("overwrite")
-          .parquet(StreamingState.writeDir(verdictDir, batchId))
-        ()
-      }
-      .start()
+    StreamingState.run(stream, Some(verdictDir), checkpointDir)(
+      processBatch(_, textCol, idCol, _))
 }

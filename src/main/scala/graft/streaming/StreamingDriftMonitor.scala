@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 import graft.queries.CorpusAuditQueries
 
@@ -25,11 +25,7 @@ import graft.queries.CorpusAuditQueries
   * the exact batch-q162 core — the replay spec pins micro-batch
   * equivalence to the batch query on the union).
   *
-  * Replay idempotency: histogram partials and verdict snapshots are
-  * keyed by batchId (overwrite), and the fold reads only ids strictly
-  * before the current batch plus the batch itself — exactly-once
-  * state under foreachBatch's at-least-once re-delivery (see
-  * [[StreamingState]]).
+  * Replay idempotency is the batch-keyed contract of [[StreamingState]].
   */
 class StreamingDriftMonitor(val histDir: String) {
 
@@ -37,15 +33,6 @@ class StreamingDriftMonitor(val histDir: String) {
     StructField("source", StringType),
     StructField("bin", LongType),
     StructField("c_sb", LongType)))
-
-  /** The persisted per-batch histogram log (empty before the first
-    * batch). Rows accumulate per batch; readers fold by (source, bin). */
-  def historicalBins(s: SparkSession,
-      before: Option[Long] = None): DataFrame = {
-    val dirs = StreamingState.batchDirs(histDir, before)
-    if (dirs.nonEmpty) s.read.schema(histSchema).parquet(dirs: _*)
-    else s.createDataFrame(s.sparkContext.emptyRDD[Row], histSchema)
-  }
 
   /** One micro-batch: fold the arrivals' histogram into state and
     * return the drift verdict over everything seen so far (the q162
@@ -58,34 +45,21 @@ class StreamingDriftMonitor(val histDir: String) {
         CorpusAuditQueries.lengthBin(col(textCol)).as("bin"))
       .groupBy(col("source"), col("bin")).agg(count(lit(1)).as("c_sb"))
       .localCheckpoint()
-    val folded = historicalBins(s, Some(batchId)).unionByName(batchBins)
+    val folded = StreamingState.history(s, histDir, histSchema, Some(batchId))
+      .unionByName(batchBins)
       .groupBy(col("source"), col("bin")).agg(sum(col("c_sb")).as("c_sb"))
     val verdict = CorpusAuditQueries.driftFromBins(folded).localCheckpoint()
-    batchBins.write.mode("overwrite")
-      .parquet(StreamingState.writeDir(histDir, batchId))
+    StreamingState.append(batchBins, histDir, batchId)
     verdict
   }
 
-  /** Legacy entry point: allocates the next sequential batch id from
-    * the histogram log itself (max committed id + 1). */
-  def processBatch(arrivals: DataFrame, textCol: String,
-      sourceCol: String): DataFrame =
-    processBatch(arrivals, textCol, sourceCol,
-      StreamingState.batchIds(histDir).lastOption.map(_ + 1L).getOrElse(0L))
-
-  /** Drive a document stream through foreachBatch, writing each
+  /** Drive a document stream through [[StreamingState.run]], writing each
     * batch's refreshed verdict snapshot (tagged by batch id) to
     * `verdictDir`. */
   def run(stream: DataFrame, textCol: String, sourceCol: String,
       verdictDir: String, checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, textCol, sourceCol, batchId)
-          .withColumn("batch_seq", lit(batchId))
-          .write.mode("overwrite")
-          .parquet(StreamingState.writeDir(verdictDir, batchId))
-        ()
-      }
-      .start()
+    StreamingState.run(stream, Some(verdictDir), checkpointDir) { (batch, batchId) =>
+      processBatch(batch, textCol, sourceCol, batchId)
+        .withColumn("batch_seq", lit(batchId))
+    }
 }

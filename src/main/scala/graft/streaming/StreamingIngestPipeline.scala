@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -58,18 +60,10 @@ object StreamingIngestPipeline {
   * near-dup, and the index append happens before the gate filter so
   * transitive duplicates cannot slip through between representatives.
   *
-  * Replay idempotency (the foreachBatch contract: a batch whose
-  * processing did not commit to the streaming checkpoint is
-  * RE-DELIVERED with the same epochId): every piece of state is keyed
-  * by that id — index appends and the packed output land in
-  * `batch=<id>` dirs with overwrite, and the dims are per-batch
-  * SNAPSHOTS rather than a single rewritten file, read as-of
-  * `batchId - 1`. A replayed batch therefore re-reads exactly the
-  * pre-batch dims (no double-charged admission cost), overwrites its
-  * own partial index/output contribution, and probes history that
-  * excludes it — byte-identical to a first delivery. Old dim
-  * snapshots beyond a short tail are pruned (replays only reach back
-  * to the last uncommitted batch). */
+  * Replay idempotency is the batch-keyed contract of [[StreamingState]];
+  * the dims follow it as per-batch SNAPSHOTS read as-of `batchId - 1`
+  * (a replay re-reads exactly the pre-batch dims, so no admission cost
+  * is double-charged), with old snapshots beyond a short tail pruned. */
 class StreamingIngestPipeline(
     val stateRoot: String,
     val costMicro: Long, val capMicro: Long,
@@ -91,76 +85,66 @@ class StreamingIngestPipeline(
     StructField("source", StringType),
     StructField("cum_tokens", LongType)))
 
-  /** The dim as of the latest snapshot strictly BEFORE `batchId` —
-    * what a replay of `batchId` must see. */
+  /** The dim rows of the latest snapshot strictly BEFORE `batchId` —
+    * what a replay of `batchId` must see (|sources| rows at most). */
   private def readDim(s: SparkSession, dir: String, schema: StructType,
-      batchId: Long): Map[String, (Long, Long)] = {
-    val dirs = StreamingState.batchDirs(dir, Some(batchId))
-    if (dirs.isEmpty) Map.empty
-    else s.read.schema(schema).parquet(dirs.last).collect()
-      .map(r => r.getString(0) -> ((r.getLong(1),
-        if (r.length > 2) r.getLong(2) else 0L))).toMap
-  }
+      batchId: Long): Seq[Row] =
+    StreamingState.batchDirs(dir, Some(batchId)).lastOption
+      .fold(Seq.empty[Row])(d => s.read.schema(schema).parquet(d).collect().toSeq)
+
+  private def dimFrame(s: SparkSession, schema: StructType, rows: Seq[Row]): DataFrame =
+    s.createDataFrame(rows.asJava, schema)
 
   private def writeDim(s: SparkSession, dir: String, schema: StructType,
       rows: Seq[Row], batchId: Long): Unit = {
-    val df = s.createDataFrame(
-      s.sparkContext.parallelize(rows, 1), schema)
-    df.write.mode("overwrite")
-      .parquet(StreamingState.writeDir(dir, batchId))
+    StreamingState.append(dimFrame(s, schema, rows).coalesce(1), dir, batchId)
     StreamingState.pruneBefore(dir, batchId, DimSnapshotsKept)
   }
 
   /** Stage 1: per-source leaky-bucket admission for one micro-batch.
     * Returns (admitted docs, updated per-source states). The fold is
     * per-source sequential — exactly `Streaming.advanceBucket` — run
-    * distributed via groupByKey; prior levels come from the bounded
-    * persisted dim as of the previous batch. */
+    * once, distributed via groupByKey; prior levels come from the
+    * bounded persisted dim as of the previous batch. */
   def admitBatch(batch: Dataset[IngestDoc], batchId: Long)
       : (Dataset[IngestDoc], Seq[Row]) = {
     val s = batch.sparkSession
     import s.implicits._
     val prior = readDim(s, bucketDir, bucketSchema, batchId)
+      .map(r => r.getString(0) -> Streaming.BucketState(r.getLong(1), r.getLong(2))).toMap
     val bPrior = s.sparkContext.broadcast(prior)
     // locals so the task closures capture values, not `this`
     val cost = costMicro
     val cap = capMicro
-    val admitted = batch.groupByKey(_.source).flatMapGroups {
+    // every doc with its admission flag and the post-fold bucket state;
+    // the state after a source's last doc in fold order is its final one
+    val folded = batch.groupByKey(_.source).flatMapGroups {
       (src: String, rows: Iterator[IngestDoc]) =>
         var st = bPrior.value.get(src)
-          .map { case (last, lvl) => Streaming.BucketState(last, lvl) }
-        rows.toSeq.sortBy(d => (d.ts_us, d.doc_id)).flatMap { d =>
+        val docs = rows.toSeq.sortBy(d => (d.ts_us, d.doc_id))
+        docs.iterator.zipWithIndex.map { case (d, i) =>
           val (next, lvl) = Streaming.advanceBucket(st, d.ts_us, cost)
           st = Some(next)
-          if (lvl > cap) None else Some(d)
-        }.iterator
-    }
-    // the batch's final per-source states: a second distributed fold
-    // that collects only the |sources|-row dim, never the batch
-    val finals = batch.groupByKey(_.source).mapGroups {
-      (src: String, rows: Iterator[IngestDoc]) =>
-        var st = bPrior.value.get(src)
-          .map { case (last, lvl) => Streaming.BucketState(last, lvl) }
-        rows.toSeq.sortBy(d => (d.ts_us, d.doc_id)).foreach { d =>
-          st = Some(Streaming.advanceBucket(st, d.ts_us, cost)._1)
+          (d, lvl <= cap, i == docs.length - 1, next.lastUs, next.level)
         }
-        (src, st.get.lastUs, st.get.level)
-    }.collect().map { case (src, last, lvl) => Row(src, last, lvl) }.toSeq
-    val untouched = (prior.keySet -- finals.map(_.getString(0)).toSet)
-      .toSeq.map(src => Row(src, prior(src)._1, prior(src)._2))
+    }.toDF("doc", "admitted", "final", "last_us", "level").localCheckpoint()
+    val admitted = folded.filter(col("admitted")).select(col("doc.*")).as[IngestDoc]
+    // only the |sources|-row dim is collected, never the batch
+    val finals = folded.filter(col("final"))
+      .select(col("doc.source"), col("last_us"), col("level")).collect().toSeq
+    val untouched = (prior.keySet -- finals.map(_.getString(0)))
+      .toSeq.map(src => Row(src, prior(src).lastUs, prior(src).level))
     (admitted, finals ++ untouched)
   }
 
   /** One micro-batch through all four stages; returns this batch's
     * packed survivor rows (the sequencePack schema) and advances every
-    * piece of state, keyed by `batchId` so a foreachBatch replay of
+    * piece of state, keyed by `batchId` so a replay of
     * the same id reproduces (not compounds) the state transition. */
-  def processBatch(batch0: Dataset[IngestDoc], batchId: Long): DataFrame = {
-    val s = batch0.sparkSession
-    // the micro-batch is read twice (admission + state fold): pin it
-    val batch = batch0.localCheckpoint()
+  def processBatch(batch: Dataset[IngestDoc], batchId: Long): DataFrame = {
+    val s = batch.sparkSession
     val (admittedDs, bucketRows) = admitBatch(batch, batchId)
-    val admitted = admittedDs.toDF().localCheckpoint()
+    val admitted = admittedDs.toDF()
     writeDim(s, bucketDir, bucketSchema, bucketRows, batchId)
 
     // CDC gate: at-ingest storage-dup share, index write inside
@@ -177,17 +161,19 @@ class StreamingIngestPipeline(
       .select(col("doc_b").as("doc_id")).distinct()
     val s2 = s1.join(lshReject, Seq("doc_id"), "left_anti")
 
-    // pack survivors onto each source's running window cursor
+    // pack survivors onto each source's running window cursor: the base
+    // is a broadcast join against the cursor dim, so the plan stays the
+    // same size at any number of sources
     val cursors = readDim(s, cursorDir, cursorSchema, batchId)
-    val bCursors = s.sparkContext.broadcast(cursors)
-    val baseCol = udfFreeBase(col("source"), bCursors.value)
+    val base = dimFrame(s, cursorSchema, cursors).withColumnRenamed("cum_tokens", "base")
     val wPrev = Window.partitionBy(col("source")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val packed = s2
       .select(col("doc_id"), col("source"),
         size(TextFunctions.tokens(col("text"))).cast("long").as("n_tokens"))
-      .withColumn("cum_tokens",
-        coalesce(sum(col("n_tokens")).over(wPrev), lit(0L)) + baseCol)
+      .join(broadcast(base), Seq("source"), "left")
+      .withColumn("cum_tokens", coalesce(sum(col("n_tokens")).over(wPrev), lit(0L)) +
+        coalesce(col("base"), lit(0L)))
       .select(col("doc_id"), col("source"), col("n_tokens"), col("cum_tokens"),
         expr(s"cum_tokens div $ctxLen").as("seq_id"),
         (col("cum_tokens") % ctxLen).as("offset_in_seq"),
@@ -196,32 +182,15 @@ class StreamingIngestPipeline(
     val advanced = packed.groupBy(col("source"))
       .agg(max(col("cum_tokens") + col("n_tokens")).as("cum")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val merged = (cursors.view.mapValues(_._1).toMap ++ advanced)
+    val merged = (cursors.map(r => r.getString(0) -> r.getLong(1)).toMap ++ advanced)
       .map { case (src, cum) => Row(src, cum) }.toSeq
     writeDim(s, cursorDir, cursorSchema, merged, batchId)
     packed
   }
 
-  /** The per-source cursor base as a foldable CASE over the bounded
-    * cursor dim — no UDF, stays inside codegen. */
-  private def udfFreeBase(src: org.apache.spark.sql.Column,
-      cursors: Map[String, (Long, Long)]): org.apache.spark.sql.Column =
-    if (cursors.isEmpty) lit(0L)
-    else cursors.foldLeft(lit(0L)) { case (acc, (k, (cum, _))) =>
-      when(src === k, cum).otherwise(acc)
-    }
-
   /** Drive a document stream end-to-end, writing each batch's packed
-    * survivors to `outDir/batch=<id>` (overwrite — replay-idempotent,
-    * and readable as one table via `spark.read.parquet(outDir)`). */
+    * survivors to `outDir/batch=<id>` through [[StreamingState.run]]. */
   def run(stream: Dataset[IngestDoc], outDir: String,
       checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[IngestDoc], epochId: Long) =>
-        processBatch(batch, epochId).write.mode("overwrite")
-          .parquet(StreamingState.writeDir(outDir, epochId))
-        ()
-      }
-      .start()
+    StreamingState.run(stream, Some(outDir), checkpointDir)(processBatch(_, _))
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, StructField, StructType}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.functions.VectorFunctions._
 import graft.operators.Similarity
@@ -59,18 +59,6 @@ class StreamingKnnGraph(val stateDir: String) {
     StructField("embedding", ArrayType(FloatType, containsNull = false)),
     StructField("nrm", org.apache.spark.sql.types.DoubleType)))
 
-  private def readOrEmpty(s: SparkSession, dir: String, schema: StructType,
-      before: Option[Long]): DataFrame = {
-    val dirs = StreamingState.batchDirs(dir, before)
-    if (dirs.nonEmpty) s.read.schema(schema).parquet(dirs: _*)
-    else s.createDataFrame(s.sparkContext.emptyRDD[Row], schema)
-  }
-
-  def historicalBands(s: SparkSession, before: Option[Long] = None): DataFrame =
-    readOrEmpty(s, bandsDir, bandSchema, before)
-  def historicalVecs(s: SparkSession, before: Option[Long] = None): DataFrame =
-    readOrEmpty(s, vecsDir, vecSchema, before)
-
   /** One micro-batch: returns this batch's scored directed edge deltas
     * (src, dst, cos_e6 — both directions of each new candidate pair)
     * and appends the arrivals' bands and vectors to the state. Deltas
@@ -84,7 +72,8 @@ class StreamingKnnGraph(val stateDir: String) {
     val newBands = Similarity.neardupBandRows(newVecs, "vec_id", "embedding")
       .select(col("vec_id"), col("band_id").cast("int"), col("band_val"))
       .localCheckpoint()
-    val targetBands = historicalBands(s, Some(batchId)).unionByName(newBands)
+    val targetBands = StreamingState.history(s, bandsDir, bandSchema, Some(batchId))
+      .unionByName(newBands)
     val cand = newBands.select(col("vec_id").as("p_id"), col("band_id"), col("band_val"))
       .join(targetBands.select(col("vec_id").as("t_id"), col("band_id"), col("band_val")),
         Seq("band_id", "band_val"))
@@ -92,7 +81,8 @@ class StreamingKnnGraph(val stateDir: String) {
       .select(least(col("p_id"), col("t_id")).as("vec_id_a"),
         greatest(col("p_id"), col("t_id")).as("vec_id_b"))
       .distinct()
-    val allVecs = historicalVecs(s, Some(batchId)).unionByName(newVecs)
+    val allVecs = StreamingState.history(s, vecsDir, vecSchema, Some(batchId))
+      .unionByName(newVecs)
     val scored = cand
       .join(allVecs.select(col("vec_id").as("vec_id_a"), col("embedding").as("emb_a"),
         col("nrm").as("norm_a")), Seq("vec_id_a"))
@@ -103,18 +93,10 @@ class StreamingKnnGraph(val stateDir: String) {
     val edges = scored.select(col("vec_id_a").as("src"), col("vec_id_b").as("dst"), col("cos_e6"))
       .union(scored.select(col("vec_id_b").as("src"), col("vec_id_a").as("dst"), col("cos_e6")))
       .localCheckpoint()
-    newBands.write.mode("overwrite")
-      .parquet(StreamingState.writeDir(bandsDir, batchId))
-    newVecs.write.mode("overwrite")
-      .parquet(StreamingState.writeDir(vecsDir, batchId))
+    StreamingState.append(newBands, bandsDir, batchId)
+    StreamingState.append(newVecs, vecsDir, batchId)
     edges
   }
-
-  /** Legacy entry point: allocates the next sequential batch id from
-    * the band index itself (max committed id + 1). */
-  def processBatch(arrivals: DataFrame): DataFrame =
-    processBatch(arrivals,
-      StreamingState.batchIds(bandsDir).lastOption.map(_ + 1L).getOrElse(0L))
 
   /** Fold an edge log into the current graph audit — exactly q183's
     * output on the vectors ingested so far. */
@@ -123,19 +105,12 @@ class StreamingKnnGraph(val stateDir: String) {
     val ranked = Plans.topKPerKeyRanked(log, Seq(log("src")),
       Seq((log("cos_e6"), true), (log("dst"), false)), VectorMiningQueries.KnnK, "rnk")
     VectorMiningQueries.knnAudit(
-      historicalVecs(s).select(col("vec_id")), ranked)
+      StreamingState.history(s, vecsDir, vecSchema, None).select(col("vec_id")), ranked)
   }
 
-  /** Drive an embedding stream through foreachBatch, writing each
+  /** Drive an embedding stream through [[StreamingState.run]], writing each
     * batch's edge deltas to `edgeLogDir/batch=<id>` (overwrite, so a
     * replayed batch is idempotent end to end). */
   def run(stream: DataFrame, edgeLogDir: String, checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        processBatch(batch, epochId).write.mode("overwrite")
-          .parquet(StreamingState.writeDir(edgeLogDir, epochId))
-        ()
-      }
-      .start()
+    StreamingState.run(stream, Some(edgeLogDir), checkpointDir)(processBatch(_, _))
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 import graft.operators.Dedup
 
@@ -31,10 +31,7 @@ import graft.operators.Dedup
   * micro-batch — broadcastable — so the incremental cost per batch
   * is a banded index seek, not a corpus scan-and-shuffle.
   *
-  * Replay idempotency: index writes are keyed by batchId (overwrite)
-  * and the probe reads only ids strictly before the current one, so a
-  * foreachBatch re-delivery neither double-appends bands nor probes
-  * against its own partial output (see [[StreamingState]]). */
+  * Replay idempotency is the batch-keyed contract of [[StreamingState]]. */
 class StreamingLshDedup(val indexDir: String) {
 
   private val bandSchema = StructType(Seq(
@@ -42,21 +39,10 @@ class StreamingLshDedup(val indexDir: String) {
     StructField("band_id", IntegerType),
     StructField("band_val", StringType)))
 
-  /** Committed batch ids present in the index, ascending. */
-  def batchIds(): Seq[Long] = StreamingState.batchIds(indexDir)
-
-  /** The persisted band index, optionally restricted to batches
-    * strictly before `before` (empty before the first batch). */
-  def historicalBands(s: SparkSession, before: Option[Long] = None): DataFrame = {
-    val dirs = StreamingState.batchDirs(indexDir, before)
-    if (dirs.nonEmpty) s.read.schema(bandSchema).parquet(dirs: _*)
-    else s.createDataFrame(s.sparkContext.emptyRDD[Row], bandSchema)
-  }
-
   /** One micro-batch: returns this batch's candidate verdicts
     * (doc_a < doc_b, n_bands — q23's output shape) and writes the
     * batch's bands to the index under `batch=<batchId>` (overwrite —
-    * a foreachBatch replay of the same id is idempotent). The
+    * a replay of the same id is idempotent). The
     * verdicts are materialized BEFORE the write so the probe never
     * sees its own output. */
   def processBatch(arrivals: DataFrame, textCol: String,
@@ -68,7 +54,8 @@ class StreamingLshDedup(val indexDir: String) {
       .select(col(idCol).cast("long").as("doc_id"),
         col("band_id").cast("int"), col("band_val"))
       .localCheckpoint()
-    val target = historicalBands(s, Some(batchId)).unionByName(newBands)
+    val target = StreamingState.history(s, indexDir, bandSchema, Some(batchId))
+      .unionByName(newBands)
     val verdicts = newBands
       .select(col("doc_id").as("p_id"), col("band_id"), col("band_val"))
       .join(target.select(col("doc_id").as("t_id"), col("band_id"),
@@ -79,29 +66,15 @@ class StreamingLshDedup(val indexDir: String) {
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(count_distinct(col("band_id")).as("n_bands"))
       .localCheckpoint()
-    newBands.write.mode("overwrite")
-      .parquet(StreamingState.writeDir(indexDir, batchId))
+    StreamingState.append(newBands, indexDir, batchId)
     verdicts
   }
 
-  /** Legacy entry point: allocates the next sequential batch id from
-    * the index itself (max committed id + 1). */
-  def processBatch(arrivals: DataFrame, textCol: String, idCol: String): DataFrame =
-    processBatch(arrivals, textCol, idCol,
-      batchIds().lastOption.map(_ + 1L).getOrElse(0L))
-
-  /** Drive a document stream through foreachBatch, writing each
+  /** Drive a document stream through [[StreamingState.run]], writing each
     * batch's verdicts to `verdictDir/batch=<id>` (overwrite, so a
     * replayed batch is idempotent end to end). */
   def run(stream: DataFrame, textCol: String, idCol: String,
       verdictDir: String, checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        processBatch(batch, textCol, idCol, epochId)
-          .write.mode("overwrite")
-          .parquet(StreamingState.writeDir(verdictDir, epochId))
-        ()
-      }
-      .start()
+    StreamingState.run(stream, Some(verdictDir), checkpointDir)(
+      processBatch(_, textCol, idCol, _))
 }

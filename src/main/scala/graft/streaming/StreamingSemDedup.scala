@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.Similarity
 
@@ -32,10 +32,7 @@ import graft.operators.Similarity
   * the clusters it touches, so incremental cost is Sum(touched
   * cluster sizes), the SemDeDup bound, not a corpus scan.
   *
-  * Replay idempotency: member writes are keyed by batchId (overwrite)
-  * and the probe reads only ids strictly before the current one, so a
-  * foreachBatch re-delivery neither double-appends members nor scores
-  * against its own partial output (see [[StreamingState]]). */
+  * Replay idempotency is the batch-keyed contract of [[StreamingState]]. */
 class StreamingSemDedup(val memberDir: String, val tauE6: Long) {
 
   private val memberSchema = StructType(Seq(
@@ -43,14 +40,6 @@ class StreamingSemDedup(val memberDir: String, val tauE6: Long) {
     StructField("cluster", LongType),
     StructField("dist", LongType),
     StructField("m", ArrayType(LongType, containsNull = false))))
-
-  /** The persisted member table, optionally restricted to batches
-    * strictly before `before` (empty before the first batch). */
-  def historicalMembers(s: SparkSession, before: Option[Long] = None): DataFrame = {
-    val dirs = StreamingState.batchDirs(memberDir, before)
-    if (dirs.nonEmpty) s.read.schema(memberSchema).parquet(dirs: _*)
-    else s.createDataFrame(s.sparkContext.emptyRDD[Row], memberSchema)
-  }
 
   private def cosE6(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
     round(Similarity.intDot(a, b).cast("double") /
@@ -76,7 +65,7 @@ class StreamingSemDedup(val memberDir: String, val tauE6: Long) {
       .select(col("vec_id").cast("long"), col("cluster").cast("long"),
         col("dist").cast("long"), col("m"))
       .localCheckpoint()
-    val hist = historicalMembers(s, Some(batchId))
+    val hist = StreamingState.history(s, memberDir, memberSchema, Some(batchId))
     val target = hist.unionByName(newMem)
     // arrivals dominated by anything already known (history or batch)
     val asTarget = (d: DataFrame) => d.select(col("cluster"),
@@ -102,16 +91,9 @@ class StreamingSemDedup(val memberDir: String, val tauE6: Long) {
       .select(col("vec_id"), col("cluster"), col("dist"),
         coalesce(col("near_delta"), lit(0L)).as("near_delta"), col("max_cos_e6"))
     val deltas = baseline.unionByName(domOld).localCheckpoint()
-    newMem.write.mode("overwrite")
-      .parquet(StreamingState.writeDir(memberDir, batchId))
+    StreamingState.append(newMem, memberDir, batchId)
     deltas
   }
-
-  /** Legacy entry point: allocates the next sequential batch id from
-    * the member table itself (max committed id + 1). */
-  def processBatch(arrivals: DataFrame, cents: DataFrame): DataFrame =
-    processBatch(arrivals, cents,
-      StreamingState.batchIds(memberDir).lastOption.map(_ + 1L).getOrElse(0L))
 
   /** Fold a delta log into final q156-shaped verdicts: baseline rows
     * carry the assignment, retro rows only add dominators. */
@@ -125,17 +107,10 @@ class StreamingSemDedup(val memberDir: String, val tauE6: Long) {
         when(col("n_prio_near") > 0, col("max_cos_e6")).as("max_cos_e6"),
         when(col("n_prio_near") > 0, "dropped").otherwise("kept").as("verdict"))
 
-  /** Drive an embedding stream through foreachBatch, writing each
+  /** Drive an embedding stream through [[StreamingState.run]], writing each
     * batch's deltas to `deltaDir/batch=<id>` (overwrite, so a replayed
     * batch is idempotent end to end). */
   def run(stream: DataFrame, cents: DataFrame, deltaDir: String,
       checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        processBatch(batch, cents, epochId).write.mode("overwrite")
-          .parquet(StreamingState.writeDir(deltaDir, epochId))
-        ()
-      }
-      .start()
+    StreamingState.run(stream, Some(deltaDir), checkpointDir)(processBatch(_, cents, _))
 }

@@ -2,18 +2,25 @@ package graft.streaming
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 
-/** Batch-keyed on-disk state layout shared by the streaming
-  * components: every state write lands in `<root>/batch=<id>` with
-  * overwrite semantics, so foreachBatch's replay contract (a batch
-  * whose processing did not commit is re-delivered with the SAME
-  * epochId) makes each write idempotent — a replay overwrites its own
-  * earlier partial output instead of accumulating a second copy, and
-  * readers of "history" take only ids strictly before the batch being
-  * processed. The `batch=<id>` naming is deliberately hive-style so a
-  * plain `spark.read.parquet(root)` still works for consumers (the
-  * partition column surfaces as `batch`).
+/** The micro-batch state contract every streaming operator shares, and
+  * the one foreachBatch runner that drives them.
+  *
+  * Replay rule: Structured Streaming's foreachBatch delivers
+  * at-least-once — a batch whose processing did not commit to the
+  * streaming checkpoint is re-delivered with the SAME epochId. So every
+  * state write lands in `<root>/batch=<id>` with overwrite
+  * ([[append]]), and every read of history takes only ids strictly
+  * before the batch being processed ([[history]]). A replay then
+  * overwrites its own earlier partial output instead of accumulating a
+  * second copy, and never probes against it: the state transition is
+  * byte-identical to a first delivery. [[run]] applies the same rule
+  * to each batch's output frame. The `batch=<id>` naming is
+  * deliberately hive-style so a plain `spark.read.parquet(root)` still
+  * works for consumers (the partition column surfaces as `batch`).
   *
   * All listing/existence/delete goes through the Hadoop FileSystem
   * API resolved from the root path's own scheme — a `file:/` root in
@@ -144,4 +151,33 @@ object StreamingState {
       }
     }
   }
+
+  /** The committed batches of `root` strictly before `before` (all of
+    * them when `before` is None) as one frame, or an empty frame with
+    * `schema` when there are none: the history a batch may see. */
+  def history(s: SparkSession, root: String, schema: StructType,
+      before: Option[Long]): DataFrame = {
+    val dirs = batchDirs(root, before)
+    if (dirs.nonEmpty) s.read.schema(schema).parquet(dirs: _*)
+    else s.createDataFrame(s.sparkContext.emptyRDD[Row], schema)
+  }
+
+  /** Write batch `batchId`'s contribution to `root` with overwrite, so a
+    * replay of the same id replaces its earlier partial write. */
+  def append(df: DataFrame, root: String, batchId: Long): Unit =
+    df.write.mode("overwrite").parquet(writeDir(root, batchId))
+
+  /** Drive `stream` through foreachBatch: each micro-batch goes through
+    * `batch` with its epochId, and when `outDir` is set the returned
+    * frame is [[append]]ed to `outDir/batch=<epochId>` — readable as
+    * one table via `spark.read.parquet(outDir)`. */
+  def run[T](stream: Dataset[T], outDir: Option[String], checkpointDir: String)
+      (batch: (Dataset[T], Long) => DataFrame): StreamingQuery =
+    stream.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (b: Dataset[T], epochId: Long) =>
+        val out = batch(b, epochId)
+        outDir.foreach(append(out, _, epochId))
+      }
+      .start()
 }

@@ -47,10 +47,10 @@ class StreamingCmsSpec extends SparkSpec {
     val b = new StreamingCmsCounter(s"$tmpB/sketch")
     // batching A: two halves by id; batching B: odd/even interleave,
     // reversed order
-    a.processBatch(docs.filter(col("doc_id") < 250), "text")
-    a.processBatch(docs.filter(col("doc_id") >= 250), "text")
-    b.processBatch(docs.filter(col("doc_id") % 2 === 1), "text")
-    b.processBatch(docs.filter(col("doc_id") % 2 === 0), "text")
+    a.processBatch(docs.filter(col("doc_id") < 250), "text", 0L)
+    a.processBatch(docs.filter(col("doc_id") >= 250), "text", 1L)
+    b.processBatch(docs.filter(col("doc_id") % 2 === 1), "text", 0L)
+    b.processBatch(docs.filter(col("doc_id") % 2 === 0), "text", 1L)
     def state(c: StreamingCmsCounter) = c.sketch(spark).collect()
       .map(r => (r.getAs[Int]("d"), r.getAs[Long]("cell")) -> r.getAs[Long]("cnt"))
       .toMap

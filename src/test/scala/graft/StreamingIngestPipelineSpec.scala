@@ -212,4 +212,37 @@ class StreamingIngestPipelineSpec extends SparkSpec {
       assert(!runs.head._1.contains(p + 1), s"clone ${p + 1} must die")
     }
   }
+
+  test("a 1,000-source batch carries every pack cursor into the next batch") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    // one doc per source per batch: batch 1 packs every source on top
+    // of the |sources|-row cursor dim batch 0 left behind, so the
+    // cursor read-back must not grow with the number of sources
+    val sources = 1000
+    def doc(id: Long, src: Int) = IngestDoc(id, s"portal$src", id * 300000L,
+      (1 to 6).map(j => s"d${id}w$j").mkString(" "))
+    val batches = Seq(
+      (0 until sources).map(i => doc(i.toLong, i)),
+      (0 until sources).map(i => doc((sources + i).toLong, i)))
+    val root = Files.createTempDirectory("ingest_wide").toString
+    val pipe = new StreamingIngestPipeline(root, costMicro = 1000L,
+      capMicro = 20000000L, DupShareMax, MinBands, CtxLen)
+    val input = MemoryStream[IngestDoc]
+    val q = pipe.run(input.toDS(), s"$root/packed", s"$root/ckpt")
+    try {
+      batches.foreach { b => input.addData(b); q.processAllAvailable() }
+    } finally q.stop()
+
+    val packed = spark.read.parquet(s"$root/packed").collect()
+      .map(r => (r.getAs[String]("source"), r.getAs[Long]("doc_id"),
+        r.getAs[Long]("n_tokens"), r.getAs[Long]("cum_tokens")))
+    // unique bodies and an admit-all bucket: every doc survives
+    assert(packed.length === 2 * sources)
+    packed.groupBy(_._1).foreach { case (src, rows) =>
+      val Array(first, second) = rows.sortBy(_._2)
+      assert(first._4 === 0L, s"$src starts at 0")
+      assert(second._4 === first._3, s"$src resumes at its batch-0 cursor")
+    }
+  }
 }

@@ -2,7 +2,10 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.streaming.StreamingState
 
@@ -21,7 +24,10 @@ import graft.streaming.StreamingState
   *  - a legacy flat layout (stray `*.parquet` directly under the
   *    root) fails LOUDLY instead of being treated as empty history;
   *  - the `_graft_format` version marker is stamped at root creation
-  *    and an unknown version fails LOUDLY on both read and write.
+  *    and an unknown version fails LOUDLY on both read and write;
+  *  - `history` returns only ids strictly before the batch, or an
+  *    empty frame with the given schema, and no `src/main` file but
+  *    StreamingState.scala drives foreachBatch.
   */
 class StreamingStateSpec extends SparkSpec {
 
@@ -47,6 +53,32 @@ class StreamingStateSpec extends SparkSpec {
     assert(rows === 6L)
     // a missing root is empty history, not an error — on any scheme
     assert(StreamingState.batchIds(s"file:$plain/nope") === Seq.empty)
+
+    // history: the union of committed batches strictly before `before`,
+    // or an empty frame carrying the given schema
+    val schema = StructType(Seq(StructField("v", LongType)))
+    def hist(root: String, before: Option[Long]) =
+      StreamingState.history(spark, root, schema, before)
+    val empty = hist(s"file:$plain/nope", None)
+    assert(empty.schema === schema)
+    assert(empty.isEmpty)
+    def vals(before: Option[Long]) =
+      hist(schemed, before).collect().map(_.getLong(0)).sorted.toSeq
+    assert(vals(None) === Seq(1L, 2L, 3L))
+    assert(vals(Some(3L)) === Seq(1L, 2L), "batch 3 itself is not history")
+    assert(vals(Some(1L)) === Seq(1L, 2L))
+    assert(vals(Some(0L)) === Seq.empty, "no id before 0")
+    assert(hist(schemed, Some(0L)).schema === schema)
+  }
+
+  test("foreachBatch is driven only by StreamingState.run") {
+    // one runner owns the replay contract: a hand-rolled foreachBatch
+    // in another source file would re-implement it
+    val runners = Files.walk(java.nio.file.Paths.get("src/main")).iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
+      .filter(p => Files.readString(p).contains("foreachBatch"))
+      .map(_.getFileName.toString).toSeq
+    assert(runners === Seq("StreamingState.scala"))
   }
 
   test("a torn batch dir is not committed; replaying the epoch repairs it") {
