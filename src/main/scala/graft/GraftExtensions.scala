@@ -2,18 +2,17 @@ package graft
 
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.{GraftInternals, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 
 import graft.expressions.{ArrayDot, PolyHash, StripAccents}
 import graft.plans.TopKPerKeyStrategy
 
 /** SQL-surface registration of graft's native expressions, so
   * `spark.sql("SELECT graft_strip_accents(name) ...")` works next to
-  * the Column API, plus the planner strategy for graft's plan nodes:
-  *
-  *  - cluster deployments: `--conf spark.sql.extensions=graft.GraftExtensions`
-  *  - existing sessions (tests, notebooks): `GraftFunctions.register(spark)`;
-  *    `Plans.install` adds the strategy on first use (idempotent)
+  * the Column API, plus the planner strategy for graft's plan nodes.
+  * Sessions get it through `spark.sql.extensions=graft.GraftExtensions`:
+  * `Sessions.builder` sets it, and a cluster deployment passes it as
+  * `--conf`. Nothing installs it on a live session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -36,10 +35,4 @@ object GraftFunctions {
       (es: Seq[Expression]) => PolyHash(es.head)),
     ("graft_array_dot", info("graft_array_dot", "float-array dot product"),
       (es: Seq[Expression]) => ArrayDot(es.head, es(1))))
-
-  /** Register into an already-built session (temp-function registry). */
-  def register(spark: SparkSession): Unit =
-    all.foreach { case (name, _, builder) =>
-      GraftInternals.registerFunction(spark, name, builder)
-    }
 }

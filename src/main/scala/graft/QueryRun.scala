@@ -53,11 +53,12 @@ object QueryRun {
     ns
   }
 
-  /** Queries that localCheckpoint iterative models (kmeansFit and
-    * friends) leave cached RDD blocks behind; across a sweep those
+  /** Operators that localCheckpoint a frame (staged prefixes, the
+    * curve tables, the cell refinement and CC loops) never release it,
+    * so a query leaves cached RDD blocks behind; across a sweep those
     * accumulate into real GC/storage pressure that bills later queries
-    * (q69 measured 8x slower inside the full sweep than alone). Each
-    * query starts from a clean storage state. */
+    * (a pinning query once measured 8x slower inside the full sweep
+    * than alone). Each query starts from a clean storage state. */
   def cleanUp(spark: SparkSession): Unit =
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
 

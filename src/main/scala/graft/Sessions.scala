@@ -15,6 +15,10 @@ import org.apache.spark.sql.SparkSession
   * shuffled-hash-join threshold in Bench alone; r17 hoists it here).
   * Callers layer their own sizing confs (shuffle partitions etc.) on
   * top of the returned builder — later `.config` calls win.
+  *
+  * `spark.sql.extensions=graft.GraftExtensions` gives every session
+  * graft's planner strategy and SQL functions when it is built, so
+  * building a query never mutates the session.
   */
 object Sessions {
   /** Cores for local[] masters: the driver's scaling measurement sets
@@ -41,5 +45,6 @@ object Sessions {
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
         sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "64m"))
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
   }
 }

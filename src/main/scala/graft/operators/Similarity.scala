@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, GraftInternals}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.expressions.ArgBook
 import graft.functions.VectorFunctions._
 import graft.plans.Plans
 
@@ -49,6 +50,13 @@ object Similarity {
     df.withColumn("bucket", bucketBits.reduce(_ + _))
   }
 
+  /** The one per-query ranking rule: the top `k` rows per `q_vec_id`
+    * by `score` (descending when `desc`), ties to the lowest `vec_id`,
+    * ranked 1.. in `rank` — bounded heaps, never a window. */
+  def topKPerQuery(scored: DataFrame, score: String, desc: Boolean, k: Int): DataFrame =
+    Plans.topKPerKeyRanked(scored, Seq(scored("q_vec_id")),
+      Seq((scored(score), desc), (scored("vec_id"), false)), k, "rank")
+
   /** Exact top-k: queries broadcast against the corpus. The per-query
     * ranking runs through TopKPerKeyExec (bounded map-side heaps +
     * one shrunk exchange), NOT a row_number window — the window form
@@ -64,8 +72,7 @@ object Similarity {
       .withColumn("cos_e6",
         e6(cosineFrom(dot(col("q_emb"), col("embedding")), col("q_norm"), col("c_norm"))))
       .select(col("q_vec_id"), col("vec_id"), col("cos_e6"))
-    Plans.topKPerKeyRanked(scored, Seq(scored("q_vec_id")),
-      Seq((scored("cos_e6"), true), (scored("vec_id"), false)), k, "rank")
+    topKPerQuery(scored, "cos_e6", desc = true, k)
       .select(col("q_vec_id"), col("rank"), col("vec_id"), col("cos_e6"))
   }
 
@@ -80,8 +87,7 @@ object Similarity {
       .withColumn("cos_e6",
         e6(cosineFrom(dot(col("q_emb"), col("embedding")), col("q_norm"), col("c_norm"))))
       .select(col("q_vec_id"), col("bucket"), col("vec_id"), col("cos_e6"))
-    Plans.topKPerKeyRanked(scored, Seq(scored("q_vec_id")),
-      Seq((scored("cos_e6"), true), (scored("vec_id"), false)), k, "rank")
+    topKPerQuery(scored, "cos_e6", desc = true, k)
       .select(col("q_vec_id"), col("bucket"), col("rank"), col("vec_id"), col("cos_e6"))
   }
 
@@ -120,8 +126,7 @@ object Similarity {
       .withColumn("cos_e6",
         e6(cosineFrom(dot(col("q_emb"), col("embedding")), col("q_norm"), col("vn"))))
       .select(col("q_vec_id"), col("vec_id"), col("centroid_id"), col("cos_e6"))
-    Plans.topKPerKeyRanked(scored, Seq(scored("q_vec_id")),
-      Seq((scored("cos_e6"), true), (scored("vec_id"), false)), k, "rank")
+    topKPerQuery(scored, "cos_e6", desc = true, k)
       .select(col("q_vec_id"), col("rank"), col("vec_id"), col("centroid_id"), col("cos_e6"))
   }
 
@@ -258,74 +263,105 @@ object Similarity {
     GraftInternals.column(graft.expressions.LongSqDist(
       GraftInternals.expression(a), GraftInternals.expression(b)))
 
-  /** An id-sorted ArgBook from collected (id, codeword) rows. */
-  private def book(cands: Seq[(Long, Seq[Long])]): graft.expressions.ArgBook = {
-    val sorted = cands.sortBy(_._1)
-    new graft.expressions.ArgBook(sorted.map(_._1).toArray,
-      sorted.map(_._2.toArray).toArray)
+  /** The one book collector: a k-row model (ids in `id`, codewords in
+    * `cw`) collected and grouped by `key` into id-sorted ArgBooks. */
+  private def books(model: DataFrame, key: Column, id: String, cw: String,
+      what: String): Map[Long, ArgBook] = {
+    val byKey = model.select(key.cast("long"), col(id).cast("long"), col(cw)).collect()
+      .groupBy(_.getLong(0))
+      .map { case (k, rs) =>
+        val sorted = rs.map(r => (r.getLong(1), r.getSeq[Long](2).toArray)).sortBy(_._1)
+        k -> new ArgBook(sorted.map(_._1), sorted.map(_._2))
+      }
+    require(byKey.nonEmpty, s"empty $what")
+    byKey
   }
 
   /** Keyed nearest-codeword assignment via the native codegen'd
-    * ArgMinCodebook expression: struct(d, cid) per row, NULL when the
-    * key has no codebook. Replaces broadcast-join + min(struct(...))
-    * groupBy: an aggregation whose buffer carries an array column
-    * forces SortAggregate, while this is a primitive k x dim loop in
-    * whole-stage codegen — NO join, NO shuffle, no n x k
-    * intermediate. Codebooks are bounded by construction (PQ: <=256
-    * codes per block; the coarse quantizer: the IVF list count); a
-    * sharded-codebook regime would bring the join form back by
-    * choice, not by default. */
-  private def argminCol(vec: Column, key: Column,
-      books: Map[Long, graft.expressions.ArgBook]): Column =
-    GraftInternals.column(graft.expressions.ArgMinCodebook(
-      GraftInternals.expression(vec), GraftInternals.expression(key), books))
+    * ArgMinCodebook expression: `best` = struct(d, cid) per row of
+    * `vecs`, NULL when the row's `key` has no book in `model`. Replaces
+    * broadcast-join + min(struct(...)) groupBy: an aggregation whose
+    * buffer carries an array column forces SortAggregate, while this is
+    * a primitive k x dim loop in whole-stage codegen — NO join, NO
+    * shuffle, no n x k intermediate. Models are bounded by construction
+    * (PQ: <=256 codes per block; the coarse quantizer: the IVF list
+    * count); a sharded-codebook regime would bring the join form back
+    * by choice, not by default. */
+  private def nearest(vecs: DataFrame, vec: String, key: Column, model: DataFrame,
+      id: String, cw: String, what: String): DataFrame =
+    vecs.withColumn("best", GraftInternals.column(graft.expressions.ArgMinCodebook(
+      GraftInternals.expression(col(vec)), GraftInternals.expression(key.cast("long")),
+      books(model, key, id, cw, what))))
+
+  /** The one Lloyd update: per `keys` group, the floor-mean of the
+    * micro-int vector column `vec` as `out`. */
+  private def floorMean(assigned: DataFrame, keys: Seq[Column], vec: String,
+      out: String, dim: Int): DataFrame =
+    assigned.groupBy(keys: _*)
+      .agg(array((0 until dim).map { d =>
+        floor(sum(element_at(col(vec), d + 1)).cast("double") / count(lit(1))).cast("long")
+      }: _*).as(out))
+
+  /** A k-row model as a driver-built relation: collected once and
+    * sorted by its leading id columns, so later plans read a literal
+    * table (no pin, no lineage to re-run) whose rows do not depend on
+    * the input's partitioning. */
+  def onDriver(model: DataFrame): DataFrame = {
+    import scala.math.Ordering.Implicits.seqOrdering
+    val ids = 0 until model.schema.length - 1
+    val rows = model.collect().sortBy(r =>
+      ids.map(i => if (r.isNullAt(i)) Long.MinValue else r.getAs[Number](i).longValue))
+    model.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), model.schema)
+  }
+
+  /** The one exact-integer Lloyd loop, shared by the coarse quantizer
+    * and both PQ trainers. Every assignment collects its k-row model
+    * into the argmin expression anyway, so each round's model is
+    * collected ONCE into a driver-built relation ([[onDriver]]): one
+    * job per round, and nothing pinned. */
+  private final case class Lloyd(seeds: DataFrame, assign: DataFrame => DataFrame,
+      update: DataFrame => DataFrame) {
+    /** The assignment of round `iters`. */
+    def run(iters: Int): DataFrame =
+      (2 to iters).foldLeft(assign(onDriver(seeds)))((a, _) => assign(onDriver(update(a))))
+
+    /** (that assignment, the model refreshed from it). */
+    def fit(iters: Int): (DataFrame, DataFrame) = {
+      val a = run(iters)
+      (a, onDriver(update(a)))
+    }
+  }
+
+  /** (vec_id, m): the micro-int form of (vec_id, embedding) vectors. */
+  def microVecs(vecs: DataFrame): DataFrame =
+    vecs.select(col("vec_id"), microVec(col("embedding")).as("m"))
 
   /** Assign each vector to its nearest centroid (lowest id on ties).
     * The centroid table is collected (it is k-sized by construction)
     * into the expression's reference codebook; the corpus is never
     * joined, shuffled, or aggregated for assignment. */
-  def kmeansAssign(vecs: DataFrame, cents: DataFrame): DataFrame = {
-    val local = cents.select(col("cid").cast("long"), col("cm")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1))).toSeq
-    require(local.nonEmpty, "empty centroid table")
-    vecs.withColumn("best",
-        argminCol(col("m"), lit(0L), Map(0L -> book(local))))
+  def kmeansAssign(vecs: DataFrame, cents: DataFrame): DataFrame =
+    nearest(vecs, "m", lit(0L), cents, "cid", "cm", "centroid table")
       .select(col("vec_id"), col("best.cid").as("cluster"),
         col("best.d").as("dist"), col("m"))
+
+  /** Coarse-quantizer Lloyd from deterministic seeds (the k lowest
+    * vector ids of the input). */
+  private def coarseLloyd(vecs: DataFrame, k: Int, dim: Int): Lloyd = {
+    val base = microVecs(vecs)
+    Lloyd(base.orderBy(col("vec_id")).limit(k).select(col("vec_id").as("cid"), col("m").as("cm")),
+      kmeansAssign(base, _), floorMean(_, Seq(col("cluster").as("cid")), "m", "cm", dim))
   }
 
-  /** Per-cluster floor-mean centroids from an assignment. */
-  def kmeansUpdate(assigned: DataFrame, dim: Int): DataFrame =
-    assigned.groupBy(col("cluster").as("cid"))
-      .agg(array((0 until dim).map { d =>
-        floor(sum(element_at(col("m"), d + 1)).cast("double") / count(lit(1))).cast("long")
-      }: _*).as("cm"))
-
-  /** `iters` Lloyd rounds from deterministic seeds (the k lowest vector
-    * ids of the input). Returns (final assignment incl. the micro
+  /** `iters` Lloyd rounds. Returns (final assignment incl. the micro
     * vector, centroids refreshed from that assignment) — the trained
     * quantizer an IVF index searches against. */
-  def kmeansFit(vecs: DataFrame, k: Int, dim: Int, iters: Int): (DataFrame, DataFrame) = {
-    val base = vecs.select(col("vec_id"), microVec(col("embedding")).as("m"))
-    // Each round's centroids are localCheckpoint-materialized: the k-row
-    // model is computed ONCE per round (one corpus pass) instead of its
-    // whole training lineage re-executing for every downstream consumer
-    // (assignment, residuals, probes all broadcast it). Standard
-    // iterative-algorithm lineage truncation — the data stays
-    // distributed, nothing is collected to the driver.
-    var cents = base.orderBy(col("vec_id")).limit(k)
-      .select(col("vec_id").as("cid"), col("m").as("cm")).localCheckpoint()
-    var assigned = kmeansAssign(base, cents)
-    (2 to iters).foreach { _ =>
-      cents = kmeansUpdate(assigned, dim).localCheckpoint()
-      assigned = kmeansAssign(base, cents)
-    }
-    (assigned, kmeansUpdate(assigned, dim).localCheckpoint())
-  }
+  def kmeansFit(vecs: DataFrame, k: Int, dim: Int, iters: Int): (DataFrame, DataFrame) =
+    coarseLloyd(vecs, k, dim).fit(iters)
 
   /** Final assignment only: (vec_id, cluster, dist). */
   def kmeans(vecs: DataFrame, k: Int, dim: Int, iters: Int): DataFrame =
-    kmeansFit(vecs, k, dim, iters)._1.select(col("vec_id"), col("cluster"), col("dist"))
+    coarseLloyd(vecs, k, dim).run(iters).select(col("vec_id"), col("cluster"), col("dist"))
 
   /** Exact integer dot of micro-int vectors (products <= ~1e12, x dim
     * << 2^63). */
@@ -339,6 +375,20 @@ object Similarity {
   def microNorm(a: Column): Column =
     sqrt(GraftInternals.column(graft.expressions.LongSumSq(
       GraftInternals.expression(a))).cast("double"))
+
+  /** The one probe step: each query's `nprobe` nearest centroids by
+    * exact integer squared L2, ties to the lowest centroid id — the
+    * local top-k half of a probe-then-merge search. `queries` is
+    * (vec_id, embedding); the k-row model broadcasts. Returns
+    * (q_vec_id, qm, cluster, cm, p_rank). */
+  def probeLists(queries: DataFrame, cents: DataFrame, nprobe: Int): DataFrame = {
+    val scored = microVecs(queries).select(col("vec_id").as("q_vec_id"), col("m").as("qm"))
+      .crossJoin(broadcast(cents.select(col("cid"), col("cm"))))
+      .withColumn("p_dist", sqDist(col("qm"), col("cm")))
+    Plans.topKPerKeyRanked(scored, Seq(scored("q_vec_id")),
+      Seq((scored("p_dist"), false), (scored("cid"), false)), nprobe, "p_rank")
+      .select(col("q_vec_id"), col("qm"), col("cid").as("cluster"), col("cm"), col("p_rank"))
+  }
 
   // --------------------------------------------------------------------
   // Product quantization (PQ): compress each vector to `PqBlocks` small
@@ -371,17 +421,22 @@ object Similarity {
         col("bs.block").as("block") :+ col("bs.sub").as("sub"): _*)
   }
 
-  /** Per-block codebooks keyed by the block id. */
-  private def blockBooks(codebook: DataFrame,
-      codeCol: String): Map[Long, graft.expressions.ArgBook] = {
-    val byBlock = codebook
-      .select(col("block").cast("long"), col(codeCol).cast("long"), col("cw"))
-      .collect()
-      .groupBy(_.getLong(0))
-      .view.mapValues(_.map(r => (r.getLong(1), r.getSeq[Long](2))).toSeq).toMap
-    require(byBlock.nonEmpty, "empty codebook")
-    byBlock.map { case (b, cands) => b -> book(cands) }.toMap
+  /** The one residual encode: each vector's nearest centroid, its
+    * RESIDUAL (vector minus centroid), and that residual's PQ
+    * subvectors — (vec_id, cluster, block, sub). */
+  def residualSubvectors(vecs: DataFrame, cents: DataFrame): DataFrame = {
+    val resid = kmeansAssign(microVecs(vecs), cents)
+      .join(broadcast(cents.select(col("cid").as("cluster"), col("cm"))), Seq("cluster"))
+      .select(col("vec_id"), col("cluster"), subVec(col("m"), col("cm")).as("m"))
+    pqSubvectors(resid, carry = Seq("cluster"))
   }
+
+  /** Nearest PQ codeword per (vector, block) subvector under `key`'s
+    * books; a key absent from the codebook drops the row, as the
+    * former inner join did. */
+  private def pqNearest(subs: DataFrame, key: Column, cb: DataFrame, id: String,
+      what: String): DataFrame =
+    nearest(subs, "sub", key, cb, id, "cw", what).filter(col("best").isNotNull)
 
   /** PQ encode: per (vector, block), the nearest codeword id (integer
     * L2, ties to the lowest code). The codebook is tiny by
@@ -389,12 +444,7 @@ object Similarity {
     * map-side with no join and no aggregation; the codes table IS the
     * index. */
   def pqEncode(subs: DataFrame, codebook: DataFrame, carry: Seq[String] = Nil): DataFrame =
-    subs
-      .withColumn("best",
-        argminCol(col("sub"), col("block").cast("long"), blockBooks(codebook, "code")))
-      // a block key absent from the codebook mirrors the former inner
-      // join: the row is dropped (parity with pqAssignLocal)
-      .filter(col("best").isNotNull)
+    pqNearest(subs, col("block"), codebook, "code", "codebook")
       .select(col("vec_id") +: carry.map(col) :+ col("block") :+
         col("best.cid").as("code"): _*)
 
@@ -411,9 +461,32 @@ object Similarity {
     val scored = corpusCodes.join(broadcast(adc), Seq("block", "code"))
       .groupBy(col("q_vec_id"), col("vec_id"))
       .agg(sum(col("d")).as("adc_dist"))
-    Plans.topKPerKeyRanked(scored, Seq(scored("q_vec_id")),
-      Seq((scored("adc_dist"), false), (scored("vec_id"), false)), k, "rank")
+    topKPerQuery(scored, "adc_dist", desc = false, k)
       .select(col("q_vec_id"), col("rank"), col("vec_id"), col("adc_dist"))
+  }
+
+  /** The one IVF-PQ scan: each query probes its `nprobe` lists, builds
+    * a per-(probed list, block, code) ADC table on its own residual,
+    * and sums over the COMPRESSED `codes` (vec_id, cluster, block,
+    * code) of the probed lists only — the raw corpus is never read.
+    * `cents`, `codebook` and `codes` may be in-memory frames or a
+    * persisted index: with `codes` partitioned by cluster, the
+    * broadcast ADC join prunes the scan to the probed list
+    * directories. */
+  def ivfPqScan(queries: DataFrame, cents: DataFrame, codebook: DataFrame,
+      codes: DataFrame, nprobe: Int, k: Int): DataFrame = {
+    val probes = probeLists(queries, cents, nprobe)
+      .select(col("q_vec_id").as("vec_id"), col("cluster"), subVec(col("qm"), col("cm")).as("m"))
+    val adc = pqSubvectors(probes, carry = Seq("cluster"))
+      .join(broadcast(codebook), Seq("block"))
+      .select(col("vec_id").as("q_vec_id"), col("cluster"), col("block"), col("code"),
+        sqDist(col("sub"), col("cw")).as("d"))
+    val scored = codes.join(broadcast(adc), Seq("cluster", "block", "code"))
+      .groupBy(col("q_vec_id"), col("vec_id"), col("cluster"))
+      .agg(sum(col("d")).as("adc_dist"))
+    topKPerQuery(scored, "adc_dist", desc = false, k)
+      .select(col("q_vec_id"), col("rank"), col("vec_id"),
+        col("cluster").as("centroid_id"), col("adc_dist"))
   }
 
   /** IVF-PQ — the billion-scale composition: corpus vectors are
@@ -427,33 +500,10 @@ object Similarity {
     * codeword. */
   def ivfPqTopK(queries: DataFrame, corpus: DataFrame, cents: DataFrame,
       codebookOf: DataFrame => DataFrame, nprobe: Int, k: Int): DataFrame = {
-    val assigned = kmeansAssign(
-      corpus.select(col("vec_id"), microVec(col("embedding")).as("m")), cents)
-    val resid = assigned
-      .join(broadcast(cents.select(col("cid").as("cluster"), col("cm"))), Seq("cluster"))
-      .select(col("vec_id"), col("cluster"),
-        subVec(col("m"), col("cm")).as("m"))
-    val rsubs = pqSubvectors(resid, carry = Seq("cluster"))
+    val rsubs = residualSubvectors(corpus, cents)
     val codebook = codebookOf(rsubs)
-    val codes = pqEncode(rsubs, codebook, carry = Seq("cluster"))
-    val qm = queries.select(col("vec_id").as("q_vec_id"), microVec(col("embedding")).as("qm"))
-    val probeScored = qm.crossJoin(broadcast(cents))
-      .withColumn("p_dist", sqDist(col("qm"), col("cm")))
-    val probes = Plans.topKPerKeyRanked(probeScored, Seq(probeScored("q_vec_id")),
-      Seq((probeScored("p_dist"), false), (probeScored("cid"), false)), nprobe, "p_rank")
-      .select(col("q_vec_id").as("vec_id"), col("cid").as("cluster"),
-        subVec(col("qm"), col("cm")).as("m"))
-    val adc = pqSubvectors(probes, carry = Seq("cluster"))
-      .join(broadcast(codebook), Seq("block"))
-      .select(col("vec_id").as("q_vec_id"), col("cluster"), col("block"), col("code"),
-        sqDist(col("sub"), col("cw")).as("d"))
-    val scored = codes.join(broadcast(adc), Seq("cluster", "block", "code"))
-      .groupBy(col("q_vec_id"), col("vec_id"), col("cluster"))
-      .agg(sum(col("d")).as("adc_dist"))
-    Plans.topKPerKeyRanked(scored, Seq(scored("q_vec_id")),
-      Seq((scored("adc_dist"), false), (scored("vec_id"), false)), k, "rank")
-      .select(col("q_vec_id"), col("rank"), col("vec_id"),
-        col("cluster").as("centroid_id"), col("adc_dist"))
+    ivfPqScan(queries, cents, codebook, pqEncode(rsubs, codebook, carry = Seq("cluster")),
+      nprobe, k)
   }
 
   /** One Lloyd assignment over every PQ block at once: the per-block
@@ -462,22 +512,9 @@ object Similarity {
     * codegen'd loop (exact integer subspace L2, ties to the lowest
     * codeword id) — no join, no shuffle per iteration. */
   def pqAssignTrained(subs: DataFrame, cb: DataFrame): DataFrame =
-    subs
-      .withColumn("best",
-        argminCol(col("sub"), col("block").cast("long"), blockBooks(cb, "cid")))
-      // a block key absent from the codebook mirrors the former inner
-      // join: the row is dropped (parity with pqAssignLocal)
-      .filter(col("best").isNotNull)
+    pqNearest(subs, col("block"), cb, "cid", "codebook")
       .select(col("vec_id"), col("block"), col("best.cid").as("code"),
         col("best.d").as("dist"), col("sub"))
-
-  /** Per-block floor-mean codeword refresh (q69's update with block in
-    * the key). */
-  def pqUpdateCodebooks(assigned: DataFrame, subDim: Int): DataFrame =
-    assigned.groupBy(col("block"), col("code").as("cid"))
-      .agg(array((0 until subDim).map { d =>
-        floor(sum(element_at(col("sub"), d + 1)).cast("double") / count(lit(1))).cast("long")
-      }: _*).as("cw"))
 
   /** Learn per-block PQ codebooks with exact-integer Lloyd — q69's
     * training applied independently in every subspace, executed as ONE
@@ -488,15 +525,10 @@ object Similarity {
       iters: Int): (DataFrame, DataFrame) = {
     val seedIds = subs.select(col("vec_id")).distinct()
       .orderBy(col("vec_id")).limit(k)
-    var cb = subs.join(broadcast(seedIds), Seq("vec_id"))
-      .select(col("vec_id").as("cid"), col("block"), col("sub").as("cw"))
-      .localCheckpoint()
-    var assigned = pqAssignTrained(subs, cb)
-    (2 to iters).foreach { _ =>
-      cb = pqUpdateCodebooks(assigned, subDim).localCheckpoint()
-      assigned = pqAssignTrained(subs, cb)
-    }
-    (assigned, pqUpdateCodebooks(assigned, subDim).localCheckpoint())
+    Lloyd(subs.join(broadcast(seedIds), Seq("vec_id"))
+        .select(col("vec_id").as("cid"), col("block"), col("sub").as("cw")),
+      pqAssignTrained(subs, _),
+      floorMean(_, Seq(col("block"), col("code").as("cid")), "sub", "cw", subDim)).fit(iters)
   }
 
   /** One Lloyd assignment with LOCAL (per-cluster) codebooks: the
@@ -506,32 +538,10 @@ object Similarity {
     * subspace clusters independently map-side. Codebooks stay tiny
     * (clusters x blocks x codes); the residual stream is never
     * joined, shuffled, or aggregated for scoring. */
-  def pqAssignLocal(rsubs: DataFrame, cb: DataFrame): DataFrame = {
-    val byKey = cb
-      .select(col("cluster").cast("long"), col("block").cast("long"),
-        col("cid").cast("long"), col("cw"))
-      .collect()
-      .groupBy(r => r.getLong(0) * PqBlocks + r.getLong(1))
-      .view.mapValues(_.map(r => (r.getLong(2), r.getSeq[Long](3))).toSeq).toMap
-    require(byKey.nonEmpty, "empty local codebook")
-    val books = byKey.map { case (k, cands) => k -> book(cands) }.toMap
-    rsubs
-      .withColumn("best",
-        argminCol(col("sub"),
-          (col("cluster") * PqBlocks + col("block")).cast("long"), books))
-      // a (cluster, block) key absent from the codebook mirrors the
-      // former inner join: the row is dropped
-      .filter(col("best").isNotNull)
+  def pqAssignLocal(rsubs: DataFrame, cb: DataFrame): DataFrame =
+    pqNearest(rsubs, col("cluster") * PqBlocks + col("block"), cb, "cid", "local codebook")
       .select(col("vec_id"), col("cluster"), col("block"),
         col("best.cid").as("code"), col("best.d").as("dist"), col("sub"))
-  }
-
-  /** Per-(cluster, block) floor-mean codeword refresh. */
-  def pqUpdateLocalCodebooks(assigned: DataFrame, subDim: Int): DataFrame =
-    assigned.groupBy(col("cluster"), col("block"), col("code").as("cid"))
-      .agg(array((0 until subDim).map { d =>
-        floor(sum(element_at(col("sub"), d + 1)).cast("double") / count(lit(1))).cast("long")
-      }: _*).as("cw"))
 
   /** Learn per-(cluster, block) residual codebooks with exact-integer
     * Lloyd — the full FAISS-style IVF-PQ training recipe: each
@@ -547,15 +557,11 @@ object Similarity {
     val seedIds = rsubs.select(col("cluster"), col("vec_id")).distinct()
       .withColumn("cid", (row_number().over(byCluster) - 1).cast("long"))
       .filter(col("cid") < k)
-    var cb = rsubs.join(broadcast(seedIds), Seq("cluster", "vec_id"))
-      .select(col("cid"), col("cluster"), col("block"), col("sub").as("cw"))
-      .localCheckpoint()
-    var assigned = pqAssignLocal(rsubs, cb)
-    (2 to iters).foreach { _ =>
-      cb = pqUpdateLocalCodebooks(assigned, subDim).localCheckpoint()
-      assigned = pqAssignLocal(rsubs, cb)
-    }
-    (assigned, pqUpdateLocalCodebooks(assigned, subDim).localCheckpoint())
+    Lloyd(rsubs.join(broadcast(seedIds), Seq("cluster", "vec_id"))
+        .select(col("cid"), col("cluster"), col("block"), col("sub").as("cw")),
+      pqAssignLocal(rsubs, _),
+      floorMean(_, Seq(col("cluster"), col("block"), col("code").as("cid")), "sub", "cw",
+        subDim)).fit(iters)
   }
 
   /** Two-stage retrieval: the IVF-PQ compressed scan produces a cheap
@@ -579,17 +585,33 @@ object Similarity {
     * corpus is filtered by a broadcast hash join, never shuffled. */
   def exactRescoreTopK(short: DataFrame, queries: DataFrame, corpus: DataFrame,
       k: Int): DataFrame = {
-    val cm = corpus.select(col("vec_id"), microVec(col("embedding")).as("m"))
-    val qm = queries.select(col("vec_id").as("q_vec_id"), microVec(col("embedding")).as("qm"))
-    val rescored = cm.join(broadcast(short), Seq("vec_id"))
+    val qm = microVecs(queries).select(col("vec_id").as("q_vec_id"), col("m").as("qm"))
+    val rescored = microVecs(corpus).join(broadcast(short), Seq("vec_id"))
       .join(broadcast(qm), Seq("q_vec_id"))
       .withColumn("cos_e6", e6(intDot(col("qm"), col("m")).cast("double") /
         (microNorm(col("qm")) * microNorm(col("m")))))
       .select(col("q_vec_id"), col("vec_id"), col("cos_e6"))
-    Plans.topKPerKeyRanked(rescored, Seq(rescored("q_vec_id")),
-      Seq((rescored("cos_e6"), true), (rescored("vec_id"), false)), k, "rank")
+    topKPerQuery(rescored, "cos_e6", desc = true, k)
       .select(col("q_vec_id"), col("rank"), col("vec_id"), col("cos_e6"))
   }
+
+  /** The inverted lists of a trained index: every corpus vector in its
+    * nearest centroid's list, (cluster, vec_id, m, nrm). */
+  private def invertedLists(corpus: DataFrame, cents: DataFrame): DataFrame =
+    kmeansAssign(microVecs(corpus), cents)
+      .select(col("cluster"), col("vec_id"), col("m"), microNorm(col("m")).as("nrm"))
+
+  /** [[probeLists]] with the query norm: (cluster, q_vec_id, qm, q_nrm, p_rank). */
+  private def normedProbes(queries: DataFrame, cents: DataFrame, nprobe: Int): DataFrame =
+    probeLists(queries, cents, nprobe).select(col("cluster"), col("q_vec_id"), col("qm"),
+      microNorm(col("qm")).as("q_nrm"), col("p_rank"))
+
+  /** Exact integer cosine of each probe against the members of its
+    * probed list; the probes broadcast. */
+  private def cosInLists(lists: DataFrame, probes: DataFrame): DataFrame =
+    lists.join(broadcast(probes), Seq("cluster"))
+      .withColumn("cos_e6",
+        e6(intDot(col("qm"), col("m")).cast("double") / (col("q_nrm") * col("nrm"))))
 
   /** Search an IVF index built on a TRAINED quantizer (`kmeansFit._2`):
     * corpus vectors are assigned to their nearest trained centroid —
@@ -603,23 +625,9 @@ object Similarity {
     * appended; the per-query work is Sum(probed list sizes). */
   def ivfTrainedTopK(queries: DataFrame, corpus: DataFrame, cents: DataFrame,
       nprobe: Int, k: Int): DataFrame = {
-    val lists = kmeansAssign(
-      corpus.select(col("vec_id"), microVec(col("embedding")).as("m")), cents)
-      .select(col("cluster"), col("vec_id"), col("m"), microNorm(col("m")).as("nrm"))
-    val qm = queries.select(col("vec_id").as("q_vec_id"), microVec(col("embedding")).as("qm"))
-    val probeScored = qm.crossJoin(broadcast(cents))
-      .withColumn("p_dist", sqDist(col("qm"), col("cm")))
-      .select(col("q_vec_id"), col("qm"), col("cid"), col("p_dist"))
-    val probes = Plans.topKPerKeyRanked(probeScored, Seq(probeScored("q_vec_id")),
-      Seq((probeScored("p_dist"), false), (probeScored("cid"), false)), nprobe, "p_rank")
-      .select(col("cid").as("cluster"), col("q_vec_id"), col("qm"),
-        microNorm(col("qm")).as("q_nrm"))
-    val scored = lists.join(broadcast(probes), Seq("cluster"))
-      .withColumn("cos_e6",
-        e6(intDot(col("qm"), col("m")).cast("double") / (col("q_nrm") * col("nrm"))))
+    val scored = cosInLists(invertedLists(corpus, cents), normedProbes(queries, cents, nprobe))
       .select(col("q_vec_id"), col("vec_id"), col("cluster"), col("cos_e6"))
-    Plans.topKPerKeyRanked(scored, Seq(scored("q_vec_id")),
-      Seq((scored("cos_e6"), true), (scored("vec_id"), false)), k, "rank")
+    topKPerQuery(scored, "cos_e6", desc = true, k)
       .select(col("q_vec_id"), col("rank"), col("vec_id"),
         col("cluster").as("centroid_id"), col("cos_e6"))
   }
@@ -644,23 +652,9 @@ object Similarity {
       sweep: Seq[Int], k: Int): DataFrame = {
     require(sweep.nonEmpty && sweep.forall(_ >= 1), s"bad nprobe sweep $sweep")
     val maxNp = sweep.max
-    val lists = kmeansAssign(
-      corpus.select(col("vec_id"), microVec(col("embedding")).as("m")), cents)
-      .select(col("cluster"), col("vec_id"), col("m"), microNorm(col("m")).as("nrm"))
-      .localCheckpoint()
-    val qm = queries.select(col("vec_id").as("q_vec_id"),
-      microVec(col("embedding")).as("qm"))
-    val probeScored = qm.crossJoin(broadcast(cents))
-      .withColumn("p_dist", sqDist(col("qm"), col("cm")))
-      .select(col("q_vec_id"), col("qm"), col("cid"), col("p_dist"))
-    val probes = Plans.topKPerKeyRanked(probeScored, Seq(probeScored("q_vec_id")),
-      Seq((probeScored("p_dist"), false), (probeScored("cid"), false)), maxNp, "p_rank")
-      .select(col("cid").as("cluster"), col("q_vec_id"), col("qm"),
-        microNorm(col("qm")).as("q_nrm"), col("p_rank").cast("long").as("p_rank"))
-      .localCheckpoint()
-    val scored = lists.join(broadcast(probes), Seq("cluster"))
-      .withColumn("cos_e6",
-        e6(intDot(col("qm"), col("m")).cast("double") / (col("q_nrm") * col("nrm"))))
+    val lists = invertedLists(corpus, cents).localCheckpoint()
+    val probes = normedProbes(queries, cents, maxNp).localCheckpoint()
+    val scored = cosInLists(lists, probes)
       .select(col("q_vec_id"), col("vec_id"), col("p_rank"), col("cos_e6"))
       .localCheckpoint()
     val truth = bruteForceTopK(queries, corpus, k)
@@ -671,12 +665,11 @@ object Similarity {
       .select(col("p_rank"), coalesce(col("sz"), lit(0L)).as("sz"))
       .localCheckpoint()
     val denoms = lists.agg(count(lit(1)).as("n_corpus"))
-      .crossJoin(qm.agg(count(lit(1)).as("n_queries")))
+      .crossJoin(queries.agg(count(lit(1)).as("n_queries")))
       .select(col("n_queries"), col("n_corpus")).localCheckpoint()
     sweep.map { np =>
       val cand = scored.filter(col("p_rank") <= np)
-      val topk = Plans.topKPerKeyRanked(cand, Seq(cand("q_vec_id")),
-        Seq((cand("cos_e6"), true), (cand("vec_id"), false)), k, "rank")
+      val topk = topKPerQuery(cand, "cos_e6", desc = true, k)
         .select(col("q_vec_id"), col("vec_id"), lit(1L).as("hit"))
       val hitsAgg = truth.join(topk, Seq("q_vec_id", "vec_id"), "left")
         .agg(count(lit(1)).as("n_truth"),
@@ -717,10 +710,8 @@ object Similarity {
       codebookOf: (DataFrame, Int) => DataFrame): DataFrame = {
     require(sweep.nonEmpty && sweep.forall { case (b, c) =>
       b >= 1 && dim % b == 0 && c >= 2 }, s"bad PQ sweep $sweep")
-    val qm = queries.select(col("vec_id"), microVec(col("embedding")).as("m"))
-      .localCheckpoint()
-    val cm = corpus.select(col("vec_id"), microVec(col("embedding")).as("m"))
-      .localCheckpoint()
+    val qm = microVecs(queries).localCheckpoint()
+    val cm = microVecs(corpus).localCheckpoint()
     val truth = bruteForceTopK(queries, corpus, k)
       .select(col("q_vec_id"), col("vec_id")).localCheckpoint()
     val denoms = qm.agg(count(lit(1)).as("n_queries")).localCheckpoint()
@@ -851,7 +842,6 @@ object Similarity {
             col("p.dist"), col("p.m").as("m"))
         // injective per-round renumbering keeps split/unsplit ids
         // disjoint; localCheckpoint truncates the per-round lineage
-        // (the kmeansFit convention for iterative refinement)
         cur = rest.withColumn("cluster", col("cluster") * (f + 1L))
           .unionByName(picked)
           .localCheckpoint(false)

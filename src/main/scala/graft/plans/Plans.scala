@@ -2,14 +2,13 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeReference, Descending, NullsFirst, NullsLast, SortOrder}
 import org.apache.spark.sql.types.LongType
-import org.apache.spark.sql.{Column, DataFrame, GraftInternals, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftInternals}
 
-/** DataFrame-level entry points for graft's custom plan nodes. */
+/** DataFrame-level entry points for graft's custom plan nodes. Building
+  * one touches no session state: the node plans through
+  * [[TopKPerKeyStrategy]], which `graft.GraftExtensions` injects into
+  * every `graft.Sessions.builder` session. */
 object Plans {
-
-  /** Ensure the planner strategy is installed on a live session. */
-  def install(spark: SparkSession): Unit =
-    GraftInternals.addStrategy(spark, TopKPerKeyStrategy)
 
   /** Top-k rows per key ordered by `orderBy` (desc flag per column).
     * Equivalent to row_number() over (partition by keys order by ...)
@@ -31,7 +30,6 @@ object Plans {
                     orderCols: Seq[(Column, Boolean)], k: Int,
                     rankName: Option[String]): DataFrame = {
     val spark = df.sparkSession
-    install(spark)
     val analyzed = GraftInternals.analyzedPlan(df)
     val keys = keyCols.map(GraftInternals.expression)
     val order = orderCols.map { case (c, desc) =>

@@ -28,8 +28,8 @@ import org.apache.spark.sql.types.LongType
   *    in order.
   *
   * Memory is O(distinct-keys-per-partition * k); nothing is ever fully
-  * sorted. Wired via SparkSessionExtensions.injectPlannerStrategy or
-  * `spark.experimental.extraStrategies` (see Plans.topKPerKey).
+  * sorted. Wired via SparkSessionExtensions.injectPlannerStrategy
+  * (`graft.GraftExtensions`, set by `graft.Sessions.builder`).
   *
   * When `rankAttr` is set, the final exec appends the 1-based within-key
   * rank as a long column — the ranked top-k (ANN search result ranks,

@@ -553,8 +553,7 @@ object SimilarityQueries extends QueryFamily {
     * oracle unrolls the same two rounds across all blocks at once. */
   def pqTrainedCodebooks(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-    val subs = Similarity.pqSubvectors(
-      emb.select(col("vec_id"), Similarity.microVec(col("embedding")).as("m")))
+    val subs = Similarity.pqSubvectors(Similarity.microVecs(emb))
     Similarity.pqTrainCodebooks(subs, PqCodes, Similarity.PqSub, KmeansIters)._1
       .select(col("vec_id"), col("block").cast("long").as("block"),
         col("code"), col("dist"))
@@ -602,8 +601,7 @@ object SimilarityQueries extends QueryFamily {
     * 32x-narrower index that makes billion-scale ANN affordable. */
   def annPq(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-    val subs = Similarity.pqSubvectors(
-      emb.select(col("vec_id"), Similarity.microVec(col("embedding")).as("m")))
+    val subs = Similarity.pqSubvectors(Similarity.microVecs(emb))
     val codebook = subs
       .filter(col("vec_id") >= QuerySetBound && col("vec_id") < QuerySetBound + PqCodes)
       .select((col("vec_id") - QuerySetBound).as("code"), col("block"), col("sub").as("cw"))
@@ -665,8 +663,7 @@ object SimilarityQueries extends QueryFamily {
     * training step. */
   def annPqRefined(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-    val subs = Similarity.pqSubvectors(
-      emb.select(col("vec_id"), Similarity.microVec(col("embedding")).as("m")))
+    val subs = Similarity.pqSubvectors(Similarity.microVecs(emb))
     val codebook = subs
       .filter(col("vec_id") >= QuerySetBound && col("vec_id") < QuerySetBound + PqCodes)
       .select((col("vec_id") - QuerySetBound).as("code"), col("block"), col("sub").as("cw"))
@@ -978,14 +975,7 @@ object SimilarityQueries extends QueryFamily {
   def pqLocalCodebooks(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
     val cents = Similarity.kmeansFit(emb, KmeansK, Dim, KmeansIters)._2
-    val corpus = emb.filter(col("vec_id") >= QuerySetBound)
-    val assigned = Similarity.kmeansAssign(
-      corpus.select(col("vec_id"), Similarity.microVec(col("embedding")).as("m")), cents)
-    val resid = assigned
-      .join(broadcast(cents.select(col("cid").as("cluster"), col("cm"))), Seq("cluster"))
-      .select(col("vec_id"), col("cluster"),
-        Similarity.subVec(col("m"), col("cm")).as("m"))
-    val rsubs = Similarity.pqSubvectors(resid, carry = Seq("cluster"))
+    val rsubs = Similarity.residualSubvectors(emb.filter(col("vec_id") >= QuerySetBound), cents)
     Similarity.pqTrainLocalCodebooks(rsubs, PqCodes, Similarity.PqSub, KmeansIters)._1
       .select(col("vec_id"), col("cluster"),
         col("block").cast("long").as("block"), col("code"), col("dist"))

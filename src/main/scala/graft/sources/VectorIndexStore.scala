@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 import graft.operators.Similarity
-import graft.plans.Plans
 
 /** Persisted IVF-PQ index — the "build once, search many" contract a
   * real vector deployment needs (the reference has no vector store;
@@ -27,13 +26,7 @@ object VectorIndexStore {
   def build(s: SparkSession, corpus: DataFrame, path: String,
       k: Int, dim: Int, iters: Int): Unit = {
     val cents = Similarity.kmeansFit(corpus, k, dim, iters)._2
-    val assigned = Similarity.kmeansAssign(
-      corpus.select(col("vec_id"), Similarity.microVec(col("embedding")).as("m")), cents)
-    val resid = assigned
-      .join(broadcast(cents.select(col("cid").as("cluster"), col("cm"))), Seq("cluster"))
-      .select(col("vec_id"), col("cluster"),
-        Similarity.subVec(col("m"), col("cm")).as("m"))
-    val rsubs = Similarity.pqSubvectors(resid, carry = Seq("cluster"))
+    val rsubs = Similarity.residualSubvectors(corpus, cents)
     // codebook = residual subvectors of the CodebookCodes lowest ids
     // (deterministic; a production build k-means each block — q69
     // demonstrates that training — the store contract is identical)
@@ -41,9 +34,8 @@ object VectorIndexStore {
       .orderBy(col("vec_id")).limit(CodebookCodes)
       .withColumn("code", row_number().over(
         org.apache.spark.sql.expressions.Window.orderBy(col("vec_id"))).cast("long") - 1)
-    val cb = rsubs.join(broadcast(cbIds), Seq("vec_id"))
-      .select(col("code"), col("block"), col("sub").as("cw"))
-      .localCheckpoint()
+    val cb = Similarity.onDriver(rsubs.join(broadcast(cbIds), Seq("vec_id"))
+      .select(col("code"), col("block"), col("sub").as("cw")))
     val codes = Similarity.pqEncode(rsubs, cb, carry = Seq("cluster"))
     cents.write.mode(SaveMode.Overwrite).parquet(s"$path/centroids")
     cb.write.mode(SaveMode.Overwrite).parquet(s"$path/codebook")
@@ -53,32 +45,12 @@ object VectorIndexStore {
 
   val CodebookCodes = 16
 
-  /** ADC top-k against the persisted index: queries quantize against
-    * the loaded (tiny) model; the codes scan prunes to probed cluster
-    * partitions via the partition filter on `cluster`. */
+  /** ADC top-k against the persisted index: the shared IVF-PQ scan over
+    * the three persisted tables. Queries quantize against the loaded
+    * (tiny) model; the codes scan prunes to probed cluster partitions
+    * via the partition filter on `cluster`. */
   def search(s: SparkSession, queries: DataFrame, path: String,
-      nprobe: Int, topK: Int): DataFrame = {
-    val cents = s.read.parquet(s"$path/centroids")
-    val codebook = s.read.parquet(s"$path/codebook")
-    val codes = s.read.parquet(s"$path/codes")
-    val qm = queries.select(col("vec_id").as("q_vec_id"),
-      Similarity.microVec(col("embedding")).as("qm"))
-    val probeScored = qm.crossJoin(broadcast(cents))
-      .withColumn("p_dist", Similarity.sqDist(col("qm"), col("cm")))
-    val probes = Plans.topKPerKeyRanked(probeScored, Seq(probeScored("q_vec_id")),
-      Seq((probeScored("p_dist"), false), (probeScored("cid"), false)), nprobe, "p_rank")
-      .select(col("q_vec_id").as("vec_id"), col("cid").as("cluster"),
-        Similarity.subVec(col("qm"), col("cm")).as("m"))
-    val adc = Similarity.pqSubvectors(probes, carry = Seq("cluster"))
-      .join(broadcast(codebook), Seq("block"))
-      .select(col("vec_id").as("q_vec_id"), col("cluster"), col("block"), col("code"),
-        Similarity.sqDist(col("sub"), col("cw")).as("d"))
-    val scored = codes.join(broadcast(adc), Seq("cluster", "block", "code"))
-      .groupBy(col("q_vec_id"), col("vec_id"), col("cluster"))
-      .agg(sum(col("d")).as("adc_dist"))
-    Plans.topKPerKeyRanked(scored, Seq(scored("q_vec_id")),
-      Seq((scored("adc_dist"), false), (scored("vec_id"), false)), topK, "rank")
-      .select(col("q_vec_id"), col("rank"), col("vec_id"),
-        col("cluster").as("centroid_id"), col("adc_dist"))
-  }
+      nprobe: Int, topK: Int): DataFrame =
+    Similarity.ivfPqScan(queries, s.read.parquet(s"$path/centroids"),
+      s.read.parquet(s"$path/codebook"), s.read.parquet(s"$path/codes"), nprobe, topK)
 }

@@ -59,9 +59,7 @@ class StreamingSemDedup(val memberDir: String, val tauE6: Long) {
   def processBatch(arrivals: DataFrame, cents: DataFrame,
       batchId: Long): DataFrame = {
     val s = arrivals.sparkSession
-    val newMem = Similarity.kmeansAssign(
-      arrivals.select(col("vec_id"),
-        Similarity.microVec(col("embedding")).as("m")), cents)
+    val newMem = Similarity.kmeansAssign(Similarity.microVecs(arrivals), cents)
       .select(col("vec_id").cast("long"), col("cluster").cast("long"),
         col("dist").cast("long"), col("m"))
       .localCheckpoint()

@@ -12,21 +12,6 @@ object GraftInternals {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Register a temp SQL function into a live session's registry. */
-  def registerFunction(s: SparkSession, name: String,
-                       builder: Seq[Expression] => Expression): Unit =
-    s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "built-in")
-
-  /** Install an extra planner strategy on a live session (idempotent). */
-  def addStrategy(s: SparkSession, strategy: org.apache.spark.sql.execution.SparkStrategy): Unit = {
-    val exp = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
-    if (!exp.extraStrategies.contains(strategy)) {
-      exp.extraStrategies = exp.extraStrategies :+ strategy
-    }
-  }
-
   /** The planner strategies an extensions object would build into a
     * session (`buildPlannerStrategies` is `private[sql]`). */
   def plannerStrategies(ext: SparkSessionExtensions, s: SparkSession)

@@ -1,9 +1,12 @@
 package graft
 
+import org.apache.spark.sql.functions.col
+
+import graft.plans.{Plans, TopKPerKeyExec}
+
 class ExtensionsSpec extends SparkSpec {
 
-  test("graft functions are callable from SQL after registration") {
-    GraftFunctions.register(spark)
+  test("graft functions are callable from SQL on a Sessions.builder session") {
     val r = spark.sql(
       """SELECT graft_strip_accents('São João') AS s,
         |       graft_poly_hash('ab1') AS h,
@@ -20,5 +23,14 @@ class ExtensionsSpec extends SparkSpec {
     new GraftExtensions().apply(ext)
     assert(org.apache.spark.sql.GraftInternals.plannerStrategies(ext, spark)
       .contains(graft.plans.TopKPerKeyStrategy))
+  }
+
+  test("a top-k frame plans to TopKPerKeyExec without adding session strategies") {
+    val df = spark.range(20).select((col("id") % 3).as("g"), col("id"))
+    val top = Plans.topKPerKeyRanked(df, Seq(df("g")), Seq((df("id"), true)), 2, "rk")
+    val plan = top.queryExecution.sparkPlan
+    assert(plan.collectFirst { case e: TopKPerKeyExec => e }.isDefined, plan.toString)
+    assert(top.count() == 6)
+    assert(spark.experimental.extraStrategies.isEmpty, spark.experimental.extraStrategies)
   }
 }
