@@ -37,8 +37,7 @@ object JaccardProbe {
     // partial ceiling, what the incremental fold caps it to, and the
     // free scratch the run would see — so an operator can size
     // jaccardMergeBytes/stagingDir BEFORE a 20-minute phase 1
-    val root = spark.conf.getOption(Dedup.StagingDirConf)
-      .getOrElse(System.getProperty("java.io.tmpdir"))
+    val root = Dedup.scratchBase(spark)
     val estPeak = Dedup.peakScratchBytes(s.vol, bands,
       Dedup.jaccardMergeBytes(spark.conf, root))
     println(s"""{"dir":"$dir","cap":$cap,"n_shingles":${s.nShingles},""" +

@@ -4,9 +4,11 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
 
+import graft.operators.Dedup
+
 /** The one "run a query, time it, clean up" core behind the harness
   * mains (Bench, ABBench, ScaleBench, JobProf); Verify shares its
-  * clean-up.
+  * scope and clean-up. Clean-up runs after the timed phases.
   *
   * Materialization uses the `noop` sink, not count(): count() lets
   * Catalyst prune projection work (a map-only query would measure an
@@ -31,18 +33,27 @@ object QueryRun {
   def apply(spark: SparkSession, name: String, dir: String): Run = {
     val t0 = System.nanoTime()
     var built = Option.empty[Long]
-    val failure =
+    var t2 = t0
+    val failure = scoped(spark, name) {
       try {
         val df = SparkEntry.queries(name)(spark, dir)
         built = Some(System.nanoTime())
         df.write.format("noop").mode("overwrite").save()
         None
       } catch { case NonFatal(e) => Some(e) }
-    val t2 = System.nanoTime()
+      finally t2 = System.nanoTime()
+    }
     val t1 = built.getOrElse(t2)
-    cleanUp(spark)
     Run(name, (t1 - t0) / 1e9, (t2 - t1) / 1e9, failure)
   }
+
+  /** The clean-up: runs `body` (query `name`) in a pin scope of its
+    * own, then releases, blocking, every pin that scope made and no
+    * other scope's. Pins left across a sweep add up to GC and storage
+    * pressure that bills later queries (a pinning query once measured
+    * 8x slower inside the full sweep than alone). */
+  def scoped[T](spark: SparkSession, name: String)(body: => T): T =
+    Dedup.withPinScope(spark, name, blocking = true)(body)
 
   /** Registered query names from a comma list; an unknown name fails
     * before any query runs. */
@@ -53,18 +64,9 @@ object QueryRun {
     ns
   }
 
-  /** Operators that localCheckpoint a frame (staged prefixes, the
-    * curve tables, the cell refinement and CC loops) never release it,
-    * so a query leaves cached RDD blocks behind; across a sweep those
-    * accumulate into real GC/storage pressure that bills later queries
-    * (a pinning query once measured 8x slower inside the full sweep
-    * than alone). Each query starts from a clean storage state. */
-  def cleanUp(spark: SparkSession): Unit =
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-
   /** Pays session/codegen startup outside the timings: one run of
     * `SparkEntry.entry`. A failure is reported on stderr, not fatal. */
   def warmup(spark: SparkSession): Unit =
-    try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
+    try scoped(spark, "warmup")(SparkEntry.entry(spark).write.format("noop").mode("overwrite").save())
     catch { case NonFatal(e) => System.err.println(s"WARNING: warmup failed: $e") }
 }

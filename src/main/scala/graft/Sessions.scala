@@ -42,8 +42,13 @@ object Sessions {
       // 30 hottest queries; r17 full-sweep A/B at 32 cores, same box
       // back-to-back: 254.6 s (64m) vs 283.3 s (0) — the joins it
       // converts (q206/q207/q229/q233) account for most of the gap.
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "64m"))
+      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
+      // nanosecond timestamps read as longs (see `Tables.events`)
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // 8m pages, not the heap-derived 64m: every Tungsten consumer and
+      // every broadcast hash relation (kept until GC) holds a page; at 64m
+      // CurationFunnelSpec's 500 docs filled 3.9 GB of a 4.1 GB pool.
+      .config("spark.buffer.pageSize", "8m")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.extensions", "graft.GraftExtensions")
   }

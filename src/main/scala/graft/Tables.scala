@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.types.LongType
 
 /** Loaders for the driver-generated TPC-H-ish tables (see TESTDATA.md).
   *
@@ -26,24 +28,19 @@ object Tables {
   def lineitem(s: SparkSession, dir: String): DataFrame = load(s, dir, "lineitem")
   /** events.parquet has shipped with two `ts` physical types across
     * testdata generations: TIMESTAMP(NANOS) — which Spark 4 refuses to
-    * read as a timestamp, so nanos come in as raw longs
-    * (`nanosAsLong`) and are rebuilt with exact integer division
-    * (`div`, not float division — epoch nanos exceed double's 53-bit
+    * read as a timestamp, so nanos come in as raw longs (the
+    * `nanosAsLong` session conf) and are rebuilt with exact integer
+    * division (`div`, not float division — epoch nanos exceed double's 53-bit
     * mantissa, and the truncation matches DuckDB's epoch_us()) — and
     * plain TIMESTAMP(MICROS), which reads as NTZ and only needs the
     * session-UTC cast to the comparable timestamp type. Dispatch on
     * the schema actually read so both generations work. */
   def events(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = load(s, dir, "events")
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts",
-          org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))
-      case _ =>
-        raw.withColumn("ts",
-          org.apache.spark.sql.functions.col("ts").cast("timestamp"))
-    }
+    raw.withColumn("ts", raw.schema("ts").dataType match {
+      case LongType => expr("timestamp_micros(ts div 1000)")
+      case _ => col("ts").cast("timestamp")
+    })
   }
   def documents(s: SparkSession, dir: String): DataFrame = load(s, dir, "documents")
   def embeddings(s: SparkSession, dir: String): DataFrame = load(s, dir, "embeddings")

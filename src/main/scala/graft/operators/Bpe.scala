@@ -108,7 +108,7 @@ object Bpe {
     * Ties break lexicographically on the wrapped pair. Returns the
     * merge table and the final dictionary. */
   def trainSequential(dict0: DataFrame, rounds: Int): (Seq[Merge], DataFrame) = {
-    var dict = dict0.localCheckpoint()
+    var dict = Dedup.stage(dict0, eager = true)
     val merges = Seq.newBuilder[Merge]
     var applied = 0
     var exhausted = false
@@ -123,9 +123,11 @@ object Bpe {
         val merged = "." + unwrap(wa) + unwrap(wb) + "."
         applied += 1
         merges += Merge(applied.toLong, unwrap(wa), unwrap(wb), unwrap(merged), n)
-        dict = dict
-          .select(expr(s"replace(wstr, ${sqlLit(s"$wa  $wb")}, ${sqlLit(merged)})").as("wstr"), col("freq"))
-          .localCheckpoint()
+        val next = Dedup.stage(dict.select(
+          expr(s"replace(wstr, ${sqlLit(s"$wa  $wb")}, ${sqlLit(merged)})").as("wstr"),
+          col("freq")), eager = true)
+        Dedup.release(dict)
+        dict = next
       }
     }
     (merges.result(), dict)
@@ -150,7 +152,7 @@ object Bpe {
   def trainBatchedRounds(dict0: DataFrame, totalMerges: Int,
       batchK: Int): (Seq[Seq[Merge]], DataFrame) = {
     require(batchK >= 1, "batchK must be >= 1")
-    var dict = dict0.localCheckpoint()
+    var dict = Dedup.stage(dict0, eager = true)
     val rounds = Seq.newBuilder[Seq[Merge]]
     var applied = 0
     var exhausted = false
@@ -175,7 +177,9 @@ object Bpe {
           applied += 1
           Merge(applied.toLong, unwrap(wa), unwrap(wb), unwrap(wa) + unwrap(wb), n)
         }
-        dict = dict.select(expr(mergeExpr).as("wstr"), col("freq")).localCheckpoint()
+        val next = Dedup.stage(dict.select(expr(mergeExpr).as("wstr"), col("freq")), eager = true)
+        Dedup.release(dict)
+        dict = next
       }
     }
     (rounds.result(), dict)

@@ -42,26 +42,26 @@ object Collector {
     var done = false
     while (!done && fresh.size < maxPages) {
       // materialize the fetch once; every later use reads the checkpoint
-      val batch = fetchPage(page).localCheckpoint(true)
-      val newRows = (seenKeys match {
-        case Some(k) => batch.join(k, keyCols, "left_anti")
-        case None => batch
-      }).localCheckpoint(true)
+      val batch = Dedup.stage(fetchPage(page), eager = true)
+      val newRows = Dedup.stage(
+        seenKeys.fold(batch)(batch.join(_, keyCols, "left_anti")), eager = true)
+      Dedup.release(batch)
       // the same count the reference logs as "N novas" — served from the
       // materialized checkpoint, no recompute
       val nNew = newRows.count()
-      if (nNew == 0) done = true
+      if (nNew == 0) { done = true; Dedup.release(newRows) }
       else {
         fresh += newRows
         totalNew += nNew
         val pageKeys = newRows.select(keyCols.map(col): _*).distinct()
-        seenKeys = Some((seenKeys match {
-          case Some(k) => k.unionByName(pageKeys)
-          case None => pageKeys
-        }).localCheckpoint(true)) // truncate lineage every page
+        // truncate lineage every page; the previous key set is released
+        val keys = Dedup.stage(seenKeys.fold(pageKeys)(_.unionByName(pageKeys)), eager = true)
+        seenKeys.foreach(Dedup.release(_))
+        seenKeys = Some(keys)
         page += 1
       }
     }
+    seenKeys.foreach(Dedup.release(_))
     val out = fresh.reduceOption(_.unionByName(_))
       .getOrElse(fetchPage(startPage).limit(0))
     Sweep(out, fresh.size, totalNew)

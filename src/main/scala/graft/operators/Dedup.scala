@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -28,34 +30,103 @@ import graft.functions.TextFunctions._
   */
 object Dedup {
 
-  /** Spark conf key: when set to a directory, self-join inputs are
-    * staged as parquet there instead of localCheckpoint. */
+  /** Spark conf key: when set to a directory, every [[stage]] pin is a
+    * parquet stage and all [[scratchDir]] data lives below it. */
   val StagingDirConf = "spark.graft.stagingDir"
 
-  /** Materialization point for DataFrames feeding multiple consumers
-    * (self-join sides + size aggregates): plan reuse does not fire
-    * across joins, so without this the tokenize/explode pipeline runs
-    * once per consumer.
-    *
-    *  - default: `localCheckpoint` — fast, executor-local, NOT
-    *    fault-tolerant (a lost executor loses its partitions and fails
-    *    the job at 1000-node scale);
-    *  - with `spark.graft.stagingDir` set: a staging parquet write +
-    *    read-back — the reliable production form (any executor can
-    *    re-read lost partitions from shared storage). */
-  def stage(df: DataFrame): DataFrame =
-    df.sparkSession.conf.getOption(StagingDirConf) match {
-      case Some(dir) => stageParquet(df, dir)
-      case None => df.localCheckpoint(false)
-    }
+  /** Spark local property (per thread) naming the pin scope: the owner
+    * (a query, a streamed batch) that releases every pin [[stage]]
+    * makes while it is set, and no other owner's ([[withPinScope]]). */
+  val PinScope = "graft.pin.scope"
 
-  /** Writes `df` as parquet to a fresh directory under `root` and
-    * returns the read-back scan: the staged frame survives RDD cleanup
-    * (an unpersist between queries), which a localCheckpoint does not. */
-  def stageParquet(df: DataFrame, root: String): DataFrame = {
-    val path = s"$root/stage_${java.util.UUID.randomUUID()}"
+  /** The one materialization point: a pinned frame feeding several
+    * consumers (self-join sides, size aggregates, loop rounds) runs
+    * once, and its lineage is truncated. Default: `localCheckpoint` —
+    * fast, executor-local, NOT fault-tolerant (a lost executor fails
+    * the job at 1000-node scale). With `spark.graft.stagingDir` set:
+    * an eager parquet stage under [[scratchDir]], which any executor
+    * can re-read from shared storage.
+    *
+    * The pin belongs to the current [[PinScope]], whose owner releases
+    * it: the query (`QueryRun`), the streamed batch
+    * (`StreamingState.run`), or a loop that [[release]]s round k-1 once
+    * round k is pinned. Reading a released checkpoint fails loudly
+    * (`CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`), never with wrong rows. */
+  def stage(df: DataFrame, eager: Boolean = false): DataFrame = {
+    val spark = df.sparkSession
+    if (spark.conf.getOption(StagingDirConf).isDefined) return stageParquet(df)
+    // named before any job runs, so a failed eager job leaves no
+    // unnamed pin that its scope's release would miss
+    val pinned = df.localCheckpoint(eager = false)
+    val rdds = pinnedRdds(pinned)
+    rdds.foreach(_.setName(pinName(spark.sparkContext.getLocalProperty(PinScope))))
+    if (eager) rdds.foreach(_.count())
+    pinned
+  }
+
+  /** Writes `df` to a fresh `stage_` dir under [[scratchDir]] and
+    * returns the read-back scan. */
+  def stageParquet(df: DataFrame): DataFrame = {
+    val path = scratchDir(df.sparkSession, "stage")
     df.write.mode("overwrite").parquet(path)
     df.sparkSession.read.parquet(path)
+  }
+
+  /** Releases the pins `df` reads: its [[stage]] checkpoints and stage
+    * dirs, never a table's files. */
+  def release(df: DataFrame): Unit = {
+    val spark = df.sparkSession
+    pinnedRdds(df).filter(r => Option(r.name).exists(_.startsWith(PinPrefix)))
+      .foreach(_.unpersist(blocking = false))
+    val base = new Path(scratchBase(spark))
+    val root = base.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(base)
+    df.inputFiles.map(new Path(_).getParent).distinct
+      .filter(d => d.getName.startsWith("stage_") && (d.getParent == root ||
+        d.getParent.getName.startsWith(ScopeDirPrefix) && d.getParent.getParent == root))
+      .foreach(deleteScratch(spark, _))
+  }
+
+  /** Runs `body` in a fresh [[PinScope]] of `owner` on this thread,
+    * then releases every pin made in it, and its scratch dir; an outer
+    * scope's pins are never touched. */
+  def withPinScope[T](spark: SparkSession, owner: String, blocking: Boolean)(body: => T): T = {
+    val sc = spark.sparkContext
+    val (outer, scope) = (sc.getLocalProperty(PinScope), s"$owner-${java.util.UUID.randomUUID()}")
+    sc.setLocalProperty(PinScope, scope)
+    try body finally {
+      sc.setLocalProperty(PinScope, outer)
+      sc.getPersistentRDDs.values.filter(_.name == pinName(scope)).foreach(_.unpersist(blocking))
+      deleteScratch(spark, new Path(scratchBase(spark), ScopeDirPrefix + scope))
+    }
+  }
+
+  /** A fresh `<kind>_<uuid>` scratch dir below `spark.graft.stagingDir`
+    * (executor-visible storage on a cluster), else the JVM tmpdir, in
+    * the current pin scope's dir if any; deleted at JVM exit at the
+    * latest (Hadoop FileSystem delete-on-exit). */
+  def scratchDir(spark: SparkSession, kind: String): String = {
+    val base = new Path(scratchBase(spark))
+    val parent = Option(spark.sparkContext.getLocalProperty(PinScope))
+      .fold(base)(s => new Path(base, ScopeDirPrefix + s))
+    val dir = new Path(parent, s"${kind}_${java.util.UUID.randomUUID()}")
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.mkdirs(dir)
+    fs.deleteOnExit(if (parent == base) dir else parent)
+    dir.toString
+  }
+
+  private val PinPrefix = "graft.pin"
+  private val ScopeDirPrefix = "graft_scope_"
+  private def pinName(scope: String): String = s"$PinPrefix[${Option(scope).getOrElse("")}]"
+  private def pinnedRdds(df: DataFrame) = df.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
+
+  /** The scratch root: `spark.graft.stagingDir`, else the JVM tmpdir. */
+  def scratchBase(spark: SparkSession): String =
+    spark.conf.getOption(StagingDirConf).getOrElse(System.getProperty("java.io.tmpdir"))
+
+  private def deleteScratch(spark: SparkSession, dir: Path): Unit = {
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.delete(dir, true)) fs.cancelDeleteOnExit(dir)
   }
 
   /** Exact dedup: keep the smallest id per content hash. Min-agg +
@@ -186,12 +257,6 @@ object Dedup {
     probe.inputFiles.isEmpty || inputBytes(probe) >= thr
   }
 
-  /** Spark conf key: kill switch for [[spread]], for in-JVM A/B
-    * measurement (ABBench interleaves arms with it). Only an explicit
-    * `false` (any case) turns spread off; any other value, or none,
-    * leaves it on, so a malformed value never fails a query. */
-  val SpreadEnabledConf = "spark.graft.spread.enabled"
-
   /** Spread a SMALL scan across the cluster before per-row-EXPENSIVE
     * work (regex cascades, timestamp parsing, tokenization, codec
     * decode). A parquet scan parallelizes at ROW-GROUP granularity:
@@ -216,8 +281,6 @@ object Dedup {
     * also returns unchanged. */
   def spread(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    if (spark.conf.getOption(SpreadEnabledConf).exists(_.equalsIgnoreCase("false")))
-      return df
     val files = df.inputFiles
     if (files.isEmpty) return df
     val cores = spark.sparkContext.defaultParallelism
@@ -679,31 +742,19 @@ object Dedup {
     require(nBands >= 2, s"nBands $nBands: use jaccardPairs below 2")
     requireThr(thrE6)
     val spark = sh.sparkSession
-    val root = spark.conf.getOption(StagingDirConf)
-      .getOrElse(System.getProperty("java.io.tmpdir"))
-    val mergeBytes = jaccardMergeBytes(spark.conf, root)
-    preflightDiskGuard(spark, sh, dfCap, nBands, root, mergeBytes, measuredVol)
+    // band partials, fold accumulator and the survivors, which back
+    // the returned frame: the dir lives as long as its pin scope
+    val dir = scratchDir(spark, "jacc_bands")
+    val mergeBytes = jaccardMergeBytes(spark.conf, dir)
+    preflightDiskGuard(spark, sh, dfCap, nBands, dir, mergeBytes, measuredVol)
     val (withSize0, key) = sizedKeyed(sh, idCol, dfCap, probeFrom)
     val withSize = withSize0.withColumn("__band", pmod(hash(col(key)), lit(nBands)))
-    val sizes = withSize.select(col(idCol), col("set_size")).distinct()
-      .localCheckpoint()
-    val dir = s"$root/jacc_bands_${java.util.UUID.randomUUID()}"
-    val hconf = spark.sparkContext.hadoopConfiguration
-    def exists(p: String): Boolean = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(hconf).exists(hp)
-    }
-    def delete(p: String): Unit = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(hconf).delete(hp, true)
-      ()
-    }
-    def dirBytes(p: String): Long = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      val fs = hp.getFileSystem(hconf)
-      if (!fs.exists(hp)) 0L
-      else fs.getContentSummary(hp).getLength
-    }
+    val sizes = stage(withSize.select(col(idCol), col("set_size")).distinct(), eager = true)
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def exists(p: String): Boolean = fs.exists(new Path(p))
+    def delete(p: String): Unit = fs.delete(new Path(p), true)
+    def dirBytes(p: String): Long =
+      if (exists(p)) fs.getContentSummary(new Path(p)).getLength else 0L
     val sizeA = broadcast(sizes.select(col(idCol).as("doc_a"), col("set_size").as("size_a")))
     val sizeB = broadcast(sizes.select(col(idCol).as("doc_b"), col("set_size").as("size_b")))
     // phase 1: sequential per-band partials, sliced by pair hash.
@@ -786,12 +837,6 @@ object Dedup {
     // the caller materializes anything else
     unmerged.foreach(bnd => delete(s"$dir/band=$bnd"))
     accDir.foreach(delete)
-    // the SURVIVOR dir backs the returned DataFrame, so it must
-    // outlive this call — retention is JVM-lifetime: registered for
-    // deletion at shutdown so repeated scale runs in one process
-    // don't accumulate orphaned parquet (consumers that need the
-    // result past the JVM should write it somewhere owned)
-    registerShutdownCleanup(dir, hconf)
     val survPaths = (0 until nBands).map(sl => s"$survDir/slice=$sl")
       .filter(exists)
     if (survPaths.isEmpty)
@@ -805,33 +850,6 @@ object Dedup {
           org.apache.spark.sql.types.StructField("union_n", org.apache.spark.sql.types.LongType),
           org.apache.spark.sql.types.StructField("jaccard_e6", org.apache.spark.sql.types.LongType))))
     else spark.read.parquet(survPaths: _*)
-  }
-
-  /** One shutdown hook sweeping every banded-run staging dir created
-    * by this JVM (band partials are deleted eagerly above; this
-    * reclaims the surv dirs whose files back returned DataFrames). */
-  private val cleanupDirs = new java.util.concurrent.ConcurrentLinkedQueue[
-    (String, org.apache.hadoop.conf.Configuration)]()
-  // Registered through Hadoop's ShutdownHookManager ABOVE the
-  // FileSystem ClientFinalizer priority: a raw Runtime hook races the
-  // FS cache close, so the sweep could land on an already-closed
-  // filesystem and silently leak the staging parquet.
-  private lazy val cleanupHook: Unit = {
-    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
-      () => cleanupDirs.forEach { case (d, conf) =>
-        try {
-          val p = new org.apache.hadoop.fs.Path(d)
-          p.getFileSystem(conf).delete(p, true)
-          ()
-        } catch { case _: Throwable => () }
-      },
-      org.apache.hadoop.fs.FileSystem.SHUTDOWN_HOOK_PRIORITY + 10)
-  }
-  private def registerShutdownCleanup(dir: String,
-      conf: org.apache.hadoop.conf.Configuration): Unit = {
-    cleanupHook
-    cleanupDirs.add((dir, conf))
-    ()
   }
 
   /** CONTAINMENT pairs — |A∩B| / min(|A|,|B|) >= `thrE6/1e6` via the
@@ -1067,9 +1085,9 @@ object Dedup {
     * min of its own label and its neighbors' labels; converges in
     * O(component diameter) rounds (near-dup clusters are shallow).
     * Each round is fully distributed (one join + one aggregate);
-    * `localCheckpoint` truncates the growing lineage — the standard
-    * Spark iterative-algorithm pattern — and the driver only evaluates
-    * a scalar convergence count, never row data. `maxIter` bounds the
+    * [[stage]] truncates the growing lineage (the standard Spark
+    * iterative pattern; round k-1 is released once round k is pinned)
+    * and the driver only evaluates a scalar convergence count. `maxIter` bounds the
     * worst case (a path graph).
     *
     * Shuffle shape (r16): the static edge list is hash-partitioned by
@@ -1089,30 +1107,30 @@ object Dedup {
     * count; strictly less data moved per round. */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 20): DataFrame = {
-    val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
+    val edges = stage(pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .repartition(col("dst"))
-      .localCheckpoint()
-    var labels = edges.select(col("src").as("node")).distinct()
-      .withColumn("lab", col("node"))
-      .localCheckpoint()
+      .repartition(col("dst")), eager = true)
+    var labels = stage(edges.select(col("src").as("node")).distinct()
+      .withColumn("lab", col("node")), eager = true)
     // round 1's frontier is every node (initial labels all "changed")
     var frontier = labels
     var iter = 0
     while (iter < maxIter && !frontier.isEmpty) {
       val nbrMin = edges.join(frontier, edges("dst") === frontier("node"))
         .groupBy(col("src")).agg(min(col("lab")).as("nbr_lab"))
-      val updated = labels
+      val updated = stage(labels
         .join(nbrMin, labels("node") === nbrMin("src"), "left")
         .select(col("node"), col("lab"),
-          least(col("lab"), coalesce(col("nbr_lab"), col("lab"))).as("new_lab"))
-        .localCheckpoint()
-      // both views below read the checkpointed blocks — no recompute
+          least(col("lab"), coalesce(col("nbr_lab"), col("lab"))).as("new_lab")), eager = true)
+      // round k is pinned: round k-1 has no reader left
+      release(labels)
+      // both views below read the pinned round — no recompute
       frontier = updated.filter(col("new_lab") < col("lab"))
         .select(col("node"), col("new_lab").as("lab"))
       labels = updated.select(col("node"), col("new_lab").as("lab"))
       iter += 1
     }
+    release(edges)
     labels
   }
 }

@@ -319,7 +319,7 @@ object Similarity {
     * into the argmin expression anyway, so each round's model is
     * collected ONCE into a driver-built relation ([[onDriver]]): one
     * job per round, and nothing pinned. */
-  private final case class Lloyd(seeds: DataFrame, assign: DataFrame => DataFrame,
+  private[graft] final case class Lloyd(seeds: DataFrame, assign: DataFrame => DataFrame,
       update: DataFrame => DataFrame) {
     /** The assignment of round `iters`. */
     def run(iters: Int): DataFrame =
@@ -522,13 +522,17 @@ object Similarity {
     * k lowest vector ids' subvectors. Returns (final assignment incl.
     * dist, trained codebooks). */
   def pqTrainCodebooks(subs: DataFrame, k: Int, subDim: Int,
-      iters: Int): (DataFrame, DataFrame) = {
+      iters: Int): (DataFrame, DataFrame) =
+    pqLloyd(subs, k, subDim).fit(iters)
+
+  /** The PQ trainer's Lloyd loop (`run` alone skips the model refresh). */
+  private[graft] def pqLloyd(subs: DataFrame, k: Int, subDim: Int): Lloyd = {
     val seedIds = subs.select(col("vec_id")).distinct()
       .orderBy(col("vec_id")).limit(k)
     Lloyd(subs.join(broadcast(seedIds), Seq("vec_id"))
         .select(col("vec_id").as("cid"), col("block"), col("sub").as("cw")),
       pqAssignTrained(subs, _),
-      floorMean(_, Seq(col("block"), col("code").as("cid")), "sub", "cw", subDim)).fit(iters)
+      floorMean(_, Seq(col("block"), col("code").as("cid")), "sub", "cw", subDim))
   }
 
   /** One Lloyd assignment with LOCAL (per-cluster) codebooks: the
@@ -552,7 +556,10 @@ object Similarity {
     * `rsubs`: (vec_id, cluster, block, sub) residual subvectors.
     * Returns (final assignment incl. dist, trained codebooks). */
   def pqTrainLocalCodebooks(rsubs: DataFrame, k: Int, subDim: Int,
-      iters: Int): (DataFrame, DataFrame) = {
+      iters: Int): (DataFrame, DataFrame) =
+    pqLocalLloyd(rsubs, k, subDim).fit(iters)
+
+  private[graft] def pqLocalLloyd(rsubs: DataFrame, k: Int, subDim: Int): Lloyd = {
     val byCluster = Window.partitionBy(col("cluster")).orderBy(col("vec_id"))
     val seedIds = rsubs.select(col("cluster"), col("vec_id")).distinct()
       .withColumn("cid", (row_number().over(byCluster) - 1).cast("long"))
@@ -561,7 +568,7 @@ object Similarity {
         .select(col("cid"), col("cluster"), col("block"), col("sub").as("cw")),
       pqAssignLocal(rsubs, _),
       floorMean(_, Seq(col("cluster"), col("block"), col("code").as("cid")), "sub", "cw",
-        subDim)).fit(iters)
+        subDim))
   }
 
   /** Two-stage retrieval: the IVF-PQ compressed scan produces a cheap
@@ -652,21 +659,20 @@ object Similarity {
       sweep: Seq[Int], k: Int): DataFrame = {
     require(sweep.nonEmpty && sweep.forall(_ >= 1), s"bad nprobe sweep $sweep")
     val maxNp = sweep.max
-    val lists = invertedLists(corpus, cents).localCheckpoint()
-    val probes = normedProbes(queries, cents, maxNp).localCheckpoint()
-    val scored = cosInLists(lists, probes)
-      .select(col("q_vec_id"), col("vec_id"), col("p_rank"), col("cos_e6"))
-      .localCheckpoint()
-    val truth = bruteForceTopK(queries, corpus, k)
-      .select(col("q_vec_id"), col("vec_id")).localCheckpoint()
+    def pin(df: DataFrame) = Dedup.stage(df, eager = true)
+    val lists = pin(invertedLists(corpus, cents))
+    val probes = pin(normedProbes(queries, cents, maxNp))
+    val scored = pin(cosInLists(lists, probes)
+      .select(col("q_vec_id"), col("vec_id"), col("p_rank"), col("cos_e6")))
+    val truth = pin(bruteForceTopK(queries, corpus, k)
+      .select(col("q_vec_id"), col("vec_id")))
     val sizes = lists.groupBy(col("cluster")).agg(count(lit(1)).as("sz"))
-    val probeSizes = probes.select(col("cluster"), col("p_rank"))
+    val probeSizes = pin(probes.select(col("cluster"), col("p_rank"))
       .join(sizes, Seq("cluster"), "left")
-      .select(col("p_rank"), coalesce(col("sz"), lit(0L)).as("sz"))
-      .localCheckpoint()
-    val denoms = lists.agg(count(lit(1)).as("n_corpus"))
+      .select(col("p_rank"), coalesce(col("sz"), lit(0L)).as("sz")))
+    val denoms = pin(lists.agg(count(lit(1)).as("n_corpus"))
       .crossJoin(queries.agg(count(lit(1)).as("n_queries")))
-      .select(col("n_queries"), col("n_corpus")).localCheckpoint()
+      .select(col("n_queries"), col("n_corpus")))
     sweep.map { np =>
       val cand = scored.filter(col("p_rank") <= np)
       val topk = topKPerQuery(cand, "cos_e6", desc = true, k)
@@ -710,11 +716,11 @@ object Similarity {
       codebookOf: (DataFrame, Int) => DataFrame): DataFrame = {
     require(sweep.nonEmpty && sweep.forall { case (b, c) =>
       b >= 1 && dim % b == 0 && c >= 2 }, s"bad PQ sweep $sweep")
-    val qm = microVecs(queries).localCheckpoint()
-    val cm = microVecs(corpus).localCheckpoint()
-    val truth = bruteForceTopK(queries, corpus, k)
-      .select(col("q_vec_id"), col("vec_id")).localCheckpoint()
-    val denoms = qm.agg(count(lit(1)).as("n_queries")).localCheckpoint()
+    def pin(df: DataFrame) = Dedup.stage(df, eager = true)
+    val qm = pin(microVecs(queries))
+    val cm = pin(microVecs(corpus))
+    val truth = pin(bruteForceTopK(queries, corpus, k).select(col("q_vec_id"), col("vec_id")))
+    val denoms = pin(qm.agg(count(lit(1)).as("n_queries")))
     sweep.map { case (blocks, codes) =>
       val csubs = pqSubvectorsAt(cm, blocks, dim)
       val qsubs = pqSubvectorsAt(qm, blocks, dim)
@@ -841,10 +847,9 @@ object Similarity {
             (col("p.cluster") * (f + 1L) + col("p.sub") + 1L).as("cluster"),
             col("p.dist"), col("p.m").as("m"))
         // injective per-round renumbering keeps split/unsplit ids
-        // disjoint; localCheckpoint truncates the per-round lineage
-        cur = rest.withColumn("cluster", col("cluster") * (f + 1L))
-          .unionByName(picked)
-          .localCheckpoint(false)
+        // disjoint; the lazy pin truncates the per-round lineage
+        cur = Dedup.stage(rest.withColumn("cluster", col("cluster") * (f + 1L))
+          .unionByName(picked))
         round += 1
       }
     }

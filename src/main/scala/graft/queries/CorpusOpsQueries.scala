@@ -847,10 +847,9 @@ object CorpusOpsQueries extends QueryFamily {
         .select(col("dst").as("source"),
           expr("(rank_e6 * 850000 div 1000000) div outdeg").as("c"))
         .groupBy(col("source")).agg(sum(col("c")).as("in_mass"))
-      rank = nodes.join(contrib, Seq("source"), "left")
+      rank = Dedup.stage(nodes.join(contrib, Seq("source"), "left")
         .select(col("source"),
-          (lit(150000L) + coalesce(col("in_mass"), lit(0L))).as("rank_e6"))
-        .localCheckpoint(false)
+          (lit(150000L) + coalesce(col("in_mass"), lit(0L))).as("rank_e6")))
     }
     rank.join(outdeg.withColumnRenamed("src", "source"), Seq("source"), "left")
       .select(col("source"), col("rank_e6"),
@@ -942,18 +941,16 @@ object CorpusOpsQueries extends QueryFamily {
       val aRaw = nodes.join(aContrib, Seq("source"), "left")
         .select(col("source"), coalesce(col("raw"), lit(0L)).as("raw"))
       val amx = aRaw.agg(greatest(max(col("raw")), lit(1L)).as("mx"))
-      auth = aRaw.crossJoin(broadcast(amx))
-        .select(col("source"), expr("raw * 1000000 div mx").as("a_e6"))
-        .localCheckpoint(false)
+      auth = Dedup.stage(aRaw.crossJoin(broadcast(amx))
+        .select(col("source"), expr("raw * 1000000 div mx").as("a_e6")))
       val hContrib = edges.join(auth, edges("dst") === auth("source"))
         .groupBy(col("src")).agg(sum(col("a_e6")).as("raw"))
         .withColumnRenamed("src", "source")
       val hRaw = nodes.join(hContrib, Seq("source"), "left")
         .select(col("source"), coalesce(col("raw"), lit(0L)).as("raw"))
       val hmx = hRaw.agg(greatest(max(col("raw")), lit(1L)).as("mx"))
-      hub = hRaw.crossJoin(broadcast(hmx))
-        .select(col("source"), expr("raw * 1000000 div mx").as("h_e6"))
-        .localCheckpoint(false)
+      hub = Dedup.stage(hRaw.crossJoin(broadcast(hmx))
+        .select(col("source"), expr("raw * 1000000 div mx").as("h_e6")))
     }
     nodes.join(hub, Seq("source")).join(auth, Seq("source"))
       .join(outdeg.withColumnRenamed("src", "source"), Seq("source"), "left")

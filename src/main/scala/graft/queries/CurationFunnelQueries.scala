@@ -65,24 +65,11 @@ object CurationFunnelQueries extends QueryFamily {
     * component rounds, downstream stages) reads the staged scan,
     * row-identical by the staging contract. Parquet, not the default
     * localCheckpoint: a checkpointed frame carries its origin plan's
-    * inflated size estimates into later join choices.
-    *
-    * The staged files live under one fresh root per call — below
-    * `spark.graft.stagingDir` when it is set (a multi-node cluster
-    * needs executor-visible storage), else below the JVM tmpdir — that
-    * is registered with the Hadoop FileSystem's delete-on-exit, so it
-    * cannot outlive the JVM. It is not deleted earlier: the returned
-    * plan reads it. Building the funnel touches no JVM-global state
-    * and no session conf. */
+    * inflated size estimates into later join choices. The staged dirs
+    * go with the caller's pin scope. Building the funnel touches no
+    * JVM-global state and no session conf. */
   private def funnel(s: SparkSession, dir: String,
       tailPct: Option[Int]): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(
-      s.conf.getOption(Dedup.StagingDirConf)
-        .getOrElse(System.getProperty("java.io.tmpdir")),
-      s"graft_funnel_${java.util.UUID.randomUUID()}")
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.mkdirs(root)
-    fs.deleteOnExit(root)
     val stages = CurationPipeline.curateExtendedStages(
       Tables.documents(s, dir), col("doc_id") % EvalMod === 0,
       sentenceSegs(col("text")),
@@ -90,7 +77,7 @@ object CurationFunnelQueries extends QueryFamily {
       seed = Seed, nShards = NShards,
       surprisalTailMilli = TailMilli, lineMinDf = LineMinDf,
       surprisalTailPct = tailPct, cfg = cfg,
-      staging = Some(Dedup.stageParquet(_, root.toString)))
+      staging = Some(Dedup.stageParquet))
     val rows = stages.zipWithIndex.map { case ((name, thunk), i) =>
       val df = thunk()
       // text stages: Σ length(text) pins the (possibly rewritten)

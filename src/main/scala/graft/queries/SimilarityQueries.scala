@@ -554,7 +554,7 @@ object SimilarityQueries extends QueryFamily {
   def pqTrainedCodebooks(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
     val subs = Similarity.pqSubvectors(Similarity.microVecs(emb))
-    Similarity.pqTrainCodebooks(subs, PqCodes, Similarity.PqSub, KmeansIters)._1
+    Similarity.pqLloyd(subs, PqCodes, Similarity.PqSub).run(KmeansIters)
       .select(col("vec_id"), col("block").cast("long").as("block"),
         col("code"), col("dist"))
       .orderBy(col("vec_id"), col("block"))
@@ -976,7 +976,7 @@ object SimilarityQueries extends QueryFamily {
     val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
     val cents = Similarity.kmeansFit(emb, KmeansK, Dim, KmeansIters)._2
     val rsubs = Similarity.residualSubvectors(emb.filter(col("vec_id") >= QuerySetBound), cents)
-    Similarity.pqTrainLocalCodebooks(rsubs, PqCodes, Similarity.PqSub, KmeansIters)._1
+    Similarity.pqLocalLloyd(rsubs, PqCodes, Similarity.PqSub).run(KmeansIters)
       .select(col("vec_id"), col("cluster"),
         col("block").cast("long").as("block"), col("code"), col("dist"))
       .orderBy(col("vec_id"), col("block"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.operators.Dedup
 import graft.queries.CdcQueries
 
 /** Incremental content-defined-chunk dedup — the streaming form of
@@ -56,8 +57,7 @@ class StreamingCdcDedup(val chunkDir: String) {
   def processBatch(arrivals: DataFrame, textCol: String, idCol: String,
       batchId: Long): DataFrame = {
     val s = arrivals.sparkSession
-    val newChunks = CdcQueries.chunkTable(arrivals, textCol, idCol)
-      .localCheckpoint()
+    val newChunks = Dedup.stage(CdcQueries.chunkTable(arrivals, textCol, idCol), eager = true)
     // (doc, h) occurrence grain: n_occ repeats collapse before any
     // join, and same-hash chunks share content, so one clen suffices
     val occ = newChunks.groupBy(col("doc_id"), col("h"))
@@ -73,7 +73,7 @@ class StreamingCdcDedup(val chunkDir: String) {
       .join(newChunks.select(col("h")).distinct(), Seq("h"), "left_semi")
       .select(col("h")).distinct()
       .withColumn("in_hist", lit(true))
-    val verdicts = occ.join(firstDoc, Seq("h"))
+    val verdicts = Dedup.stage(occ.join(firstDoc, Seq("h"))
       .join(histHit, Seq("h"), "left")
       .withColumn("is_dup", coalesce(col("in_hist"), lit(false)) ||
         col("doc_id") > col("first_doc") || col("n_occ") >= 2)
@@ -83,8 +83,7 @@ class StreamingCdcDedup(val chunkDir: String) {
         sum(when(col("is_dup"), col("n_occ")).otherwise(0L)).as("dup_chunks_at_ingest"),
         sum(when(col("is_dup"), col("n_occ") * col("clen")).otherwise(0L)).as("dup_chars_at_ingest"))
       .withColumn("dup_share_at_ingest_e6",
-        expr("dup_chars_at_ingest * 1000000 div n_chars"))
-      .localCheckpoint()
+        expr("dup_chars_at_ingest * 1000000 div n_chars")), eager = true)
     StreamingState.append(newChunks, chunkDir, batchId)
     verdicts
   }

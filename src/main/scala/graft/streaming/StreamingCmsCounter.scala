@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.functions.TextFunctions.{fold, tokens}
+import graft.operators.Dedup
 import graft.queries.ScaleOpsQueries
 
 /** Incremental count-min heavy-hitter counting — q171's streaming
@@ -45,13 +46,12 @@ class StreamingCmsCounter(val sketchDir: String) {
     * Returns this batch's partial counters (what was appended). */
   def processBatch(arrivals: DataFrame, textCol: String,
       batchId: Long): DataFrame = {
-    val batchCells = ScaleOpsQueries.cmsCounters(
+    val batchCells = Dedup.stage(ScaleOpsQueries.cmsCounters(
       arrivals
         .select(explode_outer(tokens(fold(col(textCol)))).as("tok"))
         .filter(col("tok").isNotNull)
         .groupBy(col("tok")).agg(count(lit(1)).as("c")))
-      .select(col("d").cast("int").as("d"), col("cell"), col("cnt"))
-      .localCheckpoint()
+      .select(col("d").cast("int").as("d"), col("cell"), col("cnt")), eager = true)
     StreamingState.append(batchCells, sketchDir, batchId)
     batchCells
   }

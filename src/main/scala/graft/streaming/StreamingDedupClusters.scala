@@ -58,7 +58,7 @@ class StreamingDedupClusters(val indexDir: String, val clustersDir: String) {
     val s = arrivals.sparkSession
     val verdicts = lsh.processBatch(arrivals, textCol, idCol, batchSeq)
     if (!verdicts.isEmpty) {
-      val assign = currentAssignments(s, Some(batchSeq)).localCheckpoint()
+      val assign = Dedup.stage(currentAssignments(s, Some(batchSeq)), eager = true)
       val pairs = verdicts.select(col("doc_a"), col("doc_b"))
       val edges = pairs
         .join(assign.select(col("node").as("doc_a"), col("lab").as("la")),
@@ -71,14 +71,13 @@ class StreamingDedupClusters(val indexDir: String, val clustersDir: String) {
       // also keep self-edges for brand-new paired nodes whose pair
       // collapsed into one label (both endpoints new + identical) so
       // they still receive an assignment row
-      val newNodes = pairs
+      val newNodes = Dedup.stage(pairs
         .select(col("doc_a").as("node")).union(pairs.select(col("doc_b")))
         .distinct()
-        .join(assign, Seq("node"), "left_anti")
-        .localCheckpoint()
+        .join(assign, Seq("node"), "left_anti"), eager = true)
       if (!edges.isEmpty) {
+        // (node = old label or new node, lab = root), read from CC's pin
         val comp = Dedup.connectedComponents(edges, "a", "b")
-          .localCheckpoint() // (node = old label or new node, lab = root)
         val relabelExisting = assign
           .join(comp.filter(col("node") =!= col("lab"))
             .select(col("node").as("lab"), col("lab").as("root")), Seq("lab"))
@@ -87,8 +86,7 @@ class StreamingDedupClusters(val indexDir: String, val clustersDir: String) {
           .join(comp.withColumnRenamed("lab", "root"), Seq("node"), "left")
           .select(col("node"), coalesce(col("root"), col("node")).as("lab"))
         StreamingState.append(relabelExisting.unionByName(newAssigned)
-          .withColumn("batch_seq", lit(batchSeq))
-          .localCheckpoint(), clustersDir, batchSeq)
+          .withColumn("batch_seq", lit(batchSeq)), clustersDir, batchSeq)
       } else if (!newNodes.isEmpty) {
         // every new pair collapsed inside existing clusters — only
         // genuinely-new nodes (paired with their own label) remain

@@ -5,6 +5,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.DataFrame
 
+import graft.operators.Dedup
 import graft.queries.CorpusAuditQueries
 
 /** Incremental length-distribution drift monitoring — q162's streaming
@@ -40,15 +41,14 @@ class StreamingDriftMonitor(val histDir: String) {
   def processBatch(arrivals: DataFrame, textCol: String,
       sourceCol: String, batchId: Long): DataFrame = {
     val s = arrivals.sparkSession
-    val batchBins = arrivals
+    val batchBins = Dedup.stage(arrivals
       .select(col(sourceCol).as("source"),
         CorpusAuditQueries.lengthBin(col(textCol)).as("bin"))
-      .groupBy(col("source"), col("bin")).agg(count(lit(1)).as("c_sb"))
-      .localCheckpoint()
+      .groupBy(col("source"), col("bin")).agg(count(lit(1)).as("c_sb")), eager = true)
     val folded = StreamingState.history(s, histDir, histSchema, Some(batchId))
       .unionByName(batchBins)
       .groupBy(col("source"), col("bin")).agg(sum(col("c_sb")).as("c_sb"))
-    val verdict = CorpusAuditQueries.driftFromBins(folded).localCheckpoint()
+    val verdict = Dedup.stage(CorpusAuditQueries.driftFromBins(folded), eager = true)
     StreamingState.append(batchBins, histDir, batchId)
     verdict
   }

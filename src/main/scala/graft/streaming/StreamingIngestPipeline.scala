@@ -9,6 +9,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 
 import graft.functions.TextFunctions
+import graft.operators.Dedup
 
 object StreamingIngestPipeline {
   /** One arriving document: id-ordered per the ingest contract
@@ -118,7 +119,7 @@ class StreamingIngestPipeline(
     val cap = capMicro
     // every doc with its admission flag and the post-fold bucket state;
     // the state after a source's last doc in fold order is its final one
-    val folded = batch.groupByKey(_.source).flatMapGroups {
+    val folded = Dedup.stage(batch.groupByKey(_.source).flatMapGroups {
       (src: String, rows: Iterator[IngestDoc]) =>
         var st = bPrior.value.get(src)
         val docs = rows.toSeq.sortBy(d => (d.ts_us, d.doc_id))
@@ -127,7 +128,7 @@ class StreamingIngestPipeline(
           st = Some(next)
           (d, lvl <= cap, i == docs.length - 1, next.lastUs, next.level)
         }
-    }.toDF("doc", "admitted", "final", "last_us", "level").localCheckpoint()
+    }.toDF("doc", "admitted", "final", "last_us", "level"), eager = true)
     val admitted = folded.filter(col("admitted")).select(col("doc.*")).as[IngestDoc]
     // only the |sources|-row dim is collected, never the batch
     val finals = folded.filter(col("final"))
@@ -152,8 +153,7 @@ class StreamingIngestPipeline(
     val cdcReject = cdcVerdicts
       .filter(col("dup_share_at_ingest_e6") >= dupShareMaxE6)
       .select(col("doc_id"))
-    val s1 = admitted.join(cdcReject, Seq("doc_id"), "left_anti")
-      .localCheckpoint()
+    val s1 = Dedup.stage(admitted.join(cdcReject, Seq("doc_id"), "left_anti"), eager = true)
 
     // LSH gate: drop the later member of every candidate pair
     val lshVerdicts = lsh.processBatch(s1, "text", "doc_id", batchId)
@@ -168,7 +168,7 @@ class StreamingIngestPipeline(
     val base = dimFrame(s, cursorSchema, cursors).withColumnRenamed("cum_tokens", "base")
     val wPrev = Window.partitionBy(col("source")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val packed = s2
+    val packed = Dedup.stage(s2
       .select(col("doc_id"), col("source"),
         size(TextFunctions.tokens(col("text"))).cast("long").as("n_tokens"))
       .join(broadcast(base), Seq("source"), "left")
@@ -177,8 +177,8 @@ class StreamingIngestPipeline(
       .select(col("doc_id"), col("source"), col("n_tokens"), col("cum_tokens"),
         expr(s"cum_tokens div $ctxLen").as("seq_id"),
         (col("cum_tokens") % ctxLen).as("offset_in_seq"),
-        (col("cum_tokens") % ctxLen + col("n_tokens") > ctxLen).as("straddles"))
-      .localCheckpoint()
+        (col("cum_tokens") % ctxLen + col("n_tokens") > ctxLen).as("straddles")),
+      eager = true)
     val advanced = packed.groupBy(col("source"))
       .agg(max(col("cum_tokens") + col("n_tokens")).as("cum")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap

@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.functions.VectorFunctions._
-import graft.operators.Similarity
+import graft.operators.{Dedup, Similarity}
 import graft.plans.Plans
 import graft.queries.VectorMiningQueries
 
@@ -66,12 +66,11 @@ class StreamingKnnGraph(val stateDir: String) {
     * own output. */
   def processBatch(arrivals: DataFrame, batchId: Long): DataFrame = {
     val s = arrivals.sparkSession
-    val newVecs = arrivals.select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
-      .withColumn("nrm", norm(col("embedding")))
-      .localCheckpoint()
-    val newBands = Similarity.neardupBandRows(newVecs, "vec_id", "embedding")
-      .select(col("vec_id"), col("band_id").cast("int"), col("band_val"))
-      .localCheckpoint()
+    val newVecs = Dedup.stage(arrivals
+      .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
+      .withColumn("nrm", norm(col("embedding"))), eager = true)
+    val newBands = Dedup.stage(Similarity.neardupBandRows(newVecs, "vec_id", "embedding")
+      .select(col("vec_id"), col("band_id").cast("int"), col("band_val")), eager = true)
     val targetBands = StreamingState.history(s, bandsDir, bandSchema, Some(batchId))
       .unionByName(newBands)
     val cand = newBands.select(col("vec_id").as("p_id"), col("band_id"), col("band_val"))
@@ -90,9 +89,10 @@ class StreamingKnnGraph(val stateDir: String) {
         col("nrm").as("norm_b")), Seq("vec_id_b"))
       .withColumn("cos_e6",
         e6(cosineFrom(dot(col("emb_a"), col("emb_b")), col("norm_a"), col("norm_b"))))
-    val edges = scored.select(col("vec_id_a").as("src"), col("vec_id_b").as("dst"), col("cos_e6"))
-      .union(scored.select(col("vec_id_b").as("src"), col("vec_id_a").as("dst"), col("cos_e6")))
-      .localCheckpoint()
+    val edges = Dedup.stage(
+      scored.select(col("vec_id_a").as("src"), col("vec_id_b").as("dst"), col("cos_e6"))
+        .union(scored.select(col("vec_id_b").as("src"), col("vec_id_a").as("dst"), col("cos_e6"))),
+      eager = true)
     StreamingState.append(newBands, bandsDir, batchId)
     StreamingState.append(newVecs, vecsDir, batchId)
     edges

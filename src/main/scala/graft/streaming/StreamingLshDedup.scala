@@ -48,15 +48,14 @@ class StreamingLshDedup(val indexDir: String) {
   def processBatch(arrivals: DataFrame, textCol: String,
       idCol: String, batchId: Long): DataFrame = {
     val s = arrivals.sparkSession
-    val newBands = Dedup.minhashBands(
+    val newBands = Dedup.stage(Dedup.minhashBands(
       Dedup.minhashSignatures(
         Dedup.shingles(arrivals, textCol, idCol), idCol), idCol)
       .select(col(idCol).cast("long").as("doc_id"),
-        col("band_id").cast("int"), col("band_val"))
-      .localCheckpoint()
+        col("band_id").cast("int"), col("band_val")), eager = true)
     val target = StreamingState.history(s, indexDir, bandSchema, Some(batchId))
       .unionByName(newBands)
-    val verdicts = newBands
+    val verdicts = Dedup.stage(newBands
       .select(col("doc_id").as("p_id"), col("band_id"), col("band_val"))
       .join(target.select(col("doc_id").as("t_id"), col("band_id"),
         col("band_val")), Seq("band_id", "band_val"))
@@ -64,8 +63,7 @@ class StreamingLshDedup(val indexDir: String) {
       .select(least(col("p_id"), col("t_id")).as("doc_a"),
         greatest(col("p_id"), col("t_id")).as("doc_b"), col("band_id"))
       .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count_distinct(col("band_id")).as("n_bands"))
-      .localCheckpoint()
+      .agg(count_distinct(col("band_id")).as("n_bands")), eager = true)
     StreamingState.append(newBands, indexDir, batchId)
     verdicts
   }

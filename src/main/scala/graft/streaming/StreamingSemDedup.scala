@@ -5,7 +5,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.operators.Similarity
+import graft.operators.{Dedup, Similarity}
 
 /** Incremental SemDeDup — the streaming form of q156, completing the
   * dedup-on-ingest family next to StreamingLshDedup (lexical) and
@@ -59,10 +59,9 @@ class StreamingSemDedup(val memberDir: String, val tauE6: Long) {
   def processBatch(arrivals: DataFrame, cents: DataFrame,
       batchId: Long): DataFrame = {
     val s = arrivals.sparkSession
-    val newMem = Similarity.kmeansAssign(Similarity.microVecs(arrivals), cents)
+    val newMem = Dedup.stage(Similarity.kmeansAssign(Similarity.microVecs(arrivals), cents)
       .select(col("vec_id").cast("long"), col("cluster").cast("long"),
-        col("dist").cast("long"), col("m"))
-      .localCheckpoint()
+        col("dist").cast("long"), col("m")), eager = true)
     val hist = StreamingState.history(s, memberDir, memberSchema, Some(batchId))
     val target = hist.unionByName(newMem)
     // arrivals dominated by anything already known (history or batch)
@@ -88,7 +87,7 @@ class StreamingSemDedup(val memberDir: String, val tauE6: Long) {
     val baseline = newMem.join(domNew, Seq("vec_id"), "left")
       .select(col("vec_id"), col("cluster"), col("dist"),
         coalesce(col("near_delta"), lit(0L)).as("near_delta"), col("max_cos_e6"))
-    val deltas = baseline.unionByName(domOld).localCheckpoint()
+    val deltas = Dedup.stage(baseline.unionByName(domOld), eager = true)
     StreamingState.append(newMem, memberDir, batchId)
     deltas
   }

@@ -170,14 +170,18 @@ object StreamingState {
   /** Drive `stream` through foreachBatch: each micro-batch goes through
     * `batch` with its epochId, and when `outDir` is set the returned
     * frame is [[append]]ed to `outDir/batch=<epochId>` — readable as
-    * one table via `spark.read.parquet(outDir)`. */
+    * one table via `spark.read.parquet(outDir)`. Each epoch is a pin
+    * scope: its pins are released (non-blocking) once its output is
+    * appended; state that outlives a batch lives in parquet. */
   def run[T](stream: Dataset[T], outDir: Option[String], checkpointDir: String)
       (batch: (Dataset[T], Long) => DataFrame): StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (b: Dataset[T], epochId: Long) =>
-        val out = batch(b, epochId)
-        outDir.foreach(append(out, _, epochId))
+        graft.operators.Dedup.withPinScope(b.sparkSession, s"batch-$epochId", blocking = false) {
+          val out = batch(b, epochId)
+          outDir.foreach(append(out, _, epochId))
+        }
       }
       .start()
 }

@@ -104,23 +104,6 @@ class DedupSpec extends SparkSpec {
     assert(Dedup.spread(mem) eq mem)
   }
 
-  test("spread kill switch: only an explicit false turns it off, other values never throw") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_spread3").toString
-    (1L to 100L).toDF("id").coalesce(1).write.mode("overwrite").parquet(dir)
-    val df = spark.read.parquet(dir)
-    try {
-      // malformed values leave spread on: a product query must not
-      // fail on a switch it only reads
-      Seq("off", "1").foreach { v =>
-        spark.conf.set(Dedup.SpreadEnabledConf, v)
-        assert(Dedup.spread(df).rdd.getNumPartitions ==
-          spark.sparkContext.defaultParallelism, s"conf $v")
-      }
-      spark.conf.set(Dedup.SpreadEnabledConf, "FALSE")
-      assert(Dedup.spread(df) eq df)
-    } finally spark.conf.unset(Dedup.SpreadEnabledConf)
-  }
-
   test("lsh bucket assignment is deterministic and brute-force topk ranks by cos_e6") {
     val vecs = Seq(
       (0L, Array.tabulate(64)(i => (i % 7).toFloat / 7f)),
