@@ -21,6 +21,15 @@ import graft.operators.{Curation, Dedup}
   * whole flow is one DAG Catalyst optimizes together, and each
   * survivor set is just a column filter, so nothing materializes
   * until the packed layout is written.
+  *
+  * Each signal table is built once and every gate reads it, as in the
+  * funnel oracle's CTE chain (`CurationFunnelQueries`; [[curate]] has
+  * no LM tail or DSIR, and the dup-gram stage builds its own 5-grams):
+  *
+  *   terms = termCounts(rewritten)  (`qtokc`) -> tokenStats: quality gate
+  *     -> unigramSurprisal: LM tail;  ⋉ unique (`ddt`) -> DSIR
+  *   qsh = shingles(qualified)  (`csh`) -> contamination: decontaminate
+  *     -> ⋉ clean (`dsh`) -> jaccardPairs: near-dup clusters
   */
 object CurationPipeline {
 
@@ -75,25 +84,17 @@ object CurationPipeline {
     // 2. quality gate: integer repetition thresholds (fixed, or the
     // corpus-relative dupTailPct percentile rule)
     val quality = qualitySurvivors(
-      Curation.repetitionStats(reps, "text", "doc_id"), cfg, st)
+      Curation.tokenStats(Curation.termCounts(reps, "text", "doc_id"), "doc_id"), cfg, st)
     val qualified = st(reps.join(quality, Seq("doc_id"), "left_semi"))
 
-    // 3. decontamination: drop training docs overlapping the eval set
-    val contaminated = Curation.contamination(qualified, "text", "doc_id", evalPred)
-      .filter(col("n_contaminated") * 100 >= col("n_shingles") * cfg.contaminationPct)
-      .select(col("doc_id"))
-    val clean = st(qualified.filter(!evalPred)
-      .join(contaminated, Seq("doc_id"), "left_anti"))
+    // 3. decontamination: drop training docs overlapping the eval set;
+    // the qualified docs' shingles feed 4a too, recomputed per consumer
+    // (as curateExtendedStages does at scale; below scale `st` is a no-op)
+    val qsh = Dedup.shingles(qualified, "text", "doc_id")
+    val clean = st(decontaminate(qualified, qsh, evalPred, cfg))
 
     // 4a. near-dup clustering: keep one representative per cluster
-    val pairs = Dedup.jaccardPairs(
-      Dedup.shingles(clean, "text", "doc_id"), "doc_id",
-      dfCap = Some(cfg.jaccardDfCap))
-      .select(col("doc_a"), col("doc_b"))
-    val dupes = Dedup.connectedComponents(pairs, "doc_a", "doc_b")
-      .filter(col("node") =!= col("lab")) // non-representatives
-      .select(col("node").as("doc_id"))
-    val clustered = st(clean.join(dupes, Seq("doc_id"), "left_anti"))
+    val clustered = st(keepClusterReps(clean, qsh, cfg))
 
     // 4b. exact-substring signal AFTER clustering (Lee et al. 2022):
     // catches docs mostly built of n-grams duplicated across OTHER
@@ -122,7 +123,7 @@ object CurationPipeline {
     *        `surprisalTailMilli` milli-bits/token are cut — or, with
     *        `surprisalTailPct = Some(p)`, at or past the corpus's own
     *        exact p-th percentile, derived in one dim-sized pass;
-    *        see [[surprisalTailThreshold]])
+    *        see [[valueTailThreshold]])
     *     -> decontamination -> near-dup clustering -> dup-gram filter
     *     -> optional DSIR selection (q130: keep docs whose importance
     *        weight vs `dsirTarget`'s LM is positive)
@@ -144,38 +145,19 @@ object CurationPipeline {
     curateExtendedStages(docs, evalPred, segs, dsirTarget, seed, nShards,
       surprisalTailMilli, lineMinDf, surprisalTailPct, cfg).last._2()
 
-  /** The corpus-relative LM-tail threshold: the exact `pct`-th
-    * percentile (integer-rank order statistic — the q81 exact-median
-    * machinery generalized) of `milli_bits_per_token` over a
-    * [[Curation.unigramSurprisal]] frame. PERCENTILE_DISC semantics:
-    * the smallest milli-bits value whose cumulative doc count reaches
-    * pct% of the corpus; docs AT or PAST it are the (100-pct)% tail
-    * (plus ties at the threshold value). Returns ONE row (thr).
-    *
-    * Why it exists: the fixed `surprisalTailMilli` default is
-    * corpus-DEPENDENT — sized to the gate corpora (~3-4k milli-bits/
-    * token) it sits below a high-entropy corpus's mean and empties
-    * the pipeline (the zipf rungs at ~10.5 bits/token, SURVEY §5
-    * r13). A 100 TB run derives the cut from its own corpus instead.
-    *
-    * Scale shape: the corpus collapses to a milli-bits HISTOGRAM
-    * first (one row per distinct integer milli-bit value — bounded by
-    * the value resolution, ~1e4 rows, never the corpus), and the
-    * cumulative walk is a window over that dim frame only (a
-    * single-stratum window over a value-resolution-bounded input, the
-    * q255 df-histogram grain — NOT a corpus window). */
-  def surprisalTailThreshold(surprisal: DataFrame, pct: Int): DataFrame =
-    valueTailThreshold(surprisal, "milli_bits_per_token", pct)
-
-  /** The generic corpus-relative tail rule behind
-    * [[surprisalTailThreshold]] and the `dupTailPct` repetition cut:
-    * the exact `pct`-th percentile (PERCENTILE_DISC, integer-rank) of
-    * any BOUNDED-RESOLUTION integer value column. The corpus collapses
-    * to a value histogram first (one row per distinct integer value —
-    * bounded by the value resolution, never the corpus), and the
-    * cumulative walk is a window over that dim frame only. Returns ONE
-    * row (thr): the smallest value whose cumulative doc count reaches
-    * pct% — docs AT or PAST it are the (100-pct)% tail plus ties. */
+  /** The corpus-relative tail rule behind `surprisalTailPct` and
+    * `dupTailPct`: the exact `pct`-th percentile (PERCENTILE_DISC,
+    * integer-rank — the q81 exact-median machinery generalized) of any
+    * BOUNDED-RESOLUTION integer value column. A fixed cut is
+    * corpus-DEPENDENT: the 5200 milli-bits default, sized to the gate
+    * corpora, sits below a high-entropy corpus's mean and empties the
+    * pipeline (the zipf rungs at ~10.5 bits/token, SURVEY §5 r13).
+    * The corpus collapses to a value histogram first (one row per
+    * distinct integer value — bounded by the value resolution, never
+    * the corpus), and the cumulative walk is a window over that dim
+    * frame only. Returns ONE row (thr): the smallest value whose
+    * cumulative doc count reaches pct% — docs AT or PAST it are the
+    * (100-pct)% tail plus ties. */
   def valueTailThreshold(df: DataFrame, valueCol: String, pct: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(pct >= 1 && pct <= 100, s"pct must be in [1,100]: $pct")
@@ -189,26 +171,44 @@ object CurationPipeline {
       .agg(min(col(valueCol)).as("thr"))
   }
 
-  /** The quality-gate survivor ids for a repetition-stats frame under
-    * `cfg`'s repetition rule — fixed `maxDupE6`, or the
-    * corpus-relative `dupTailPct` percentile cut (one extra dim-sized
-    * pass over the stats frame, which is staged for its two consumers
-    * under `st`). Both modes also apply the structural `minTokens`
-    * floor. */
-  private def qualitySurvivors(rstats: DataFrame, cfg: Config,
-      st: DataFrame => DataFrame): DataFrame = cfg.dupTailPct match {
-    case Some(pct) =>
-      val r2 = st(rstats)
-      r2.crossJoin(broadcast(
-        valueTailThreshold(r2, "dup_token_e6", pct)
-          .withColumnRenamed("thr", "dup_thr")))
-        .filter(col("n_tokens") >= cfg.minTokens &&
-          col("dup_token_e6") < col("dup_thr"))
-        .select(col("doc_id"))
-    case None =>
-      rstats.filter(col("n_tokens") >= cfg.minTokens &&
-        col("dup_token_e6") < cfg.maxDupE6)
-        .select(col("doc_id"))
+  /** `df`'s rows below the cut on `valueCol`: the fixed `cut`, or with
+    * `pct` set the frame's own [[valueTailThreshold]] (one extra
+    * dim-sized pass; the frame is read twice, so it goes through `st`). */
+  private def belowCut(df: DataFrame, valueCol: String, cut: Long, pct: Option[Int],
+      st: DataFrame => DataFrame): DataFrame = pct match {
+    case Some(p) =>
+      val staged = st(df)
+      staged.crossJoin(broadcast(valueTailThreshold(staged, valueCol, p)))
+        .filter(col(valueCol) < col("thr"))
+    case None => df.filter(col(valueCol) < cut)
+  }
+
+  /** The quality-gate survivor ids of a [[Curation.tokenStats]] frame:
+    * the repetition cut (fixed `maxDupE6`, or the `dupTailPct` rule over
+    * every doc) and the structural `minTokens` floor. */
+  private def qualitySurvivors(stats: DataFrame, cfg: Config,
+      st: DataFrame => DataFrame): DataFrame =
+    belowCut(stats, "dup_token_e6", cfg.maxDupE6, cfg.dupTailPct, st)
+      .filter(col("n_tokens") >= cfg.minTokens).select(col("doc_id"))
+
+  /** `qualified`'s training docs, minus those whose eval-set share of
+    * their shingles (`sh`) reaches `contaminationPct`. */
+  private def decontaminate(qualified: DataFrame, sh: DataFrame, evalPred: Column,
+      cfg: Config): DataFrame =
+    qualified.filter(!evalPred).join(Curation.contamination(sh, "doc_id", evalPred)
+      .filter(col("n_contaminated") * 100 >= col("n_shingles") * cfg.contaminationPct)
+      .select(col("doc_id")), Seq("doc_id"), "left_anti")
+
+  /** `clean` with one representative per near-dup cluster, the
+    * clusters built from shingle table `sh` restricted to `clean`. */
+  private def keepClusterReps(clean: DataFrame, sh: DataFrame, cfg: Config): DataFrame = {
+    val pairs = Dedup.jaccardPairs(
+      sh.join(clean.select(col("doc_id")), Seq("doc_id"), "left_semi"), "doc_id",
+      dfCap = Some(cfg.jaccardDfCap))
+      .select(col("doc_a"), col("doc_b"))
+    clean.join(Dedup.connectedComponents(pairs, "doc_a", "doc_b")
+      .filter(col("node") =!= col("lab")) // non-representatives
+      .select(col("node").as("doc_id")), Seq("doc_id"), "left_anti")
   }
 
   /** The staged decomposition of [[curateExtended]]: named stage
@@ -248,50 +248,35 @@ object CurationPipeline {
         .join(kept.withColumnRenamed("kept_text", "text"), Seq("doc_id"))
         .filter(length(col("text")) > 0)
     }
-    // the per-doc surprisal frame (read twice in pct mode: threshold
-    // + cut) and the repetition-quality survivor ids
-    lazy val surprisal = st(Curation.unigramSurprisal(rewritten, "text", "doc_id"))
-    lazy val qualityIds = st(qualitySurvivors(
-      Curation.repetitionStats(rewritten, "text", "doc_id"), cfg, st))
+    // the (doc, tok) table of the rewritten text: the quality gate,
+    // the LM tail and DSIR read it
+    lazy val terms = st(Curation.termCounts(rewritten, "text", "doc_id"))
 
     // 2. quality gate + 3. LM-surprisal tail drop (fixed milli-bits
     // cut, or — when `surprisalTailPct` is set — the corpus-relative
-    // percentile cut derived from the SAME surprisal frame in one
-    // extra dim-sized pass; see [[surprisalTailThreshold]])
+    // percentile cut derived from the SAME surprisal frame; see
+    // [[valueTailThreshold]]). Every rewritten doc has a term row, so
+    // keeping the docs below the cut drops exactly the tail.
     lazy val qualified = st {
-      val lmTail = surprisalTailPct match {
-        case Some(pct) =>
-          surprisal
-            .crossJoin(broadcast(surprisalTailThreshold(surprisal, pct)))
-            .filter(col("milli_bits_per_token") >= col("thr"))
-            .select(col("doc_id"))
-        case None =>
-          surprisal
-            .filter(col("milli_bits_per_token") >= surprisalTailMilli)
-            .select(col("doc_id"))
-      }
-      rewritten.join(qualityIds, Seq("doc_id"), "left_semi")
-        .join(lmTail, Seq("doc_id"), "left_anti")
+      val lmKeep = belowCut(Curation.unigramSurprisal(terms, "doc_id"),
+        "milli_bits_per_token", surprisalTailMilli, surprisalTailPct, st)
+      rewritten
+        .join(qualitySurvivors(Curation.tokenStats(terms, "doc_id"), cfg, st),
+          Seq("doc_id"), "left_semi")
+        .join(lmKeep.select(col("doc_id")), Seq("doc_id"), "left_semi")
     }
 
-    // 4. decontaminate, 5. near-dup cluster, 6. dup-gram filter
-    lazy val clean = st {
-      val contaminated = Curation.contamination(qualified, "text", "doc_id", evalPred)
-        .filter(col("n_contaminated") * 100 >= col("n_shingles") * cfg.contaminationPct)
-        .select(col("doc_id"))
-      qualified.filter(!evalPred)
-        .join(contaminated, Seq("doc_id"), "left_anti")
+    // 4. decontaminate, 5. near-dup cluster, 6. dup-gram filter. The
+    // qualified docs' shingles feed the first two; at scale each
+    // consumer recomputes them from the staged survivors, since staging
+    // the corpus-sized shingle stream measured slower (x16 CurationBench
+    // decontaminate, median of 3-4 runs: 10.2 s staged, 8.0 s not)
+    lazy val qsh = {
+      val sh = Dedup.shingles(qualified, "text", "doc_id")
+      if (Dedup.atScale(docs)) sh else st(sh)
     }
-    lazy val clustered = st {
-      val pairs = Dedup.jaccardPairs(
-        Dedup.shingles(clean, "text", "doc_id"), "doc_id",
-        dfCap = Some(cfg.jaccardDfCap))
-        .select(col("doc_a"), col("doc_b"))
-      val dupes = Dedup.connectedComponents(pairs, "doc_a", "doc_b")
-        .filter(col("node") =!= col("lab"))
-        .select(col("node").as("doc_id"))
-      clean.join(dupes, Seq("doc_id"), "left_anti")
-    }
+    lazy val clean = st(decontaminate(qualified, qsh, evalPred, cfg))
+    lazy val clustered = st(keepClusterReps(clean, qsh, cfg))
     lazy val unique = {
       val gramDups = Curation.dupNgrams(clustered, "text", "doc_id", cfg.dupGramN)
         .filter(col("n_dup_grams") * 100 >= col("n_grams") * cfg.dupSharePct)
@@ -304,7 +289,7 @@ object CurationPipeline {
     // 7. optional DSIR target selection
     lazy val selected = dsirTarget match {
       case Some(target) =>
-        val keep = Curation.dsirWeights(unique, "text", "doc_id", target)
+        val keep = Curation.dsirWeights(terms, unique, "doc_id", target)
           .filter(col("weight_e6") > 0L).select(col("doc_id"))
         unique.join(keep, Seq("doc_id"), "left_semi")
       case None => unique

@@ -8,7 +8,7 @@ import org.apache.spark.sql.GraftInternals
 /** Job-level profile of SparkEntry queries — the local[N] stand-in for
   * the Spark UI's Jobs/Stages tabs (the UI is disabled). Each rep of
   * each query prints construction vs execution seconds, job and stage
-  * counts, shuffle volumes, and the query's serial-stage share: the
+  * counts (jobs also per phase), shuffle volumes, and the query's serial-stage share: the
   * executor time spent in stages of 1-2 tasks. A single-row-group
   * parquet scan cannot be split, so per-row-expensive chains sitting
   * directly on a small scan serialize on one core; `all` finds them
@@ -34,7 +34,7 @@ object JobProf {
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.synchronized {
         jobs += Job(e.jobId,
-          Option(e.properties.getProperty("spark.job.description")).getOrElse(""), e.time)
+          Option(e.properties.getProperty(QueryRun.JobDescription)).getOrElse(""), e.time)
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit = jobs.synchronized {
         jobs.find(_.id == e.jobId).foreach(j => j.ms = e.time - j.start)
@@ -57,8 +57,10 @@ object JobProf {
         GraftInternals.drainListenerBus(spark)
         val serialMs = stages.filter(_.tasks <= 2).map(_.runMs).sum
         val totalMs = stages.map(_.runMs).sum
+        def phaseJobs(phase: String) = jobs.count(_.desc == s"$name $phase")
         println(f"[jobprof] $name rep $r: construct ${run.constructS}%.2f s, " +
-          f"execute ${run.executeS}%.2f s, jobs ${jobs.size}, stages ${stages.size}, " +
+          f"execute ${run.executeS}%.2f s, jobs ${jobs.size} (construct " +
+          f"${phaseJobs("construct")}, execute ${phaseJobs("execute")}), stages ${stages.size}, " +
           f"shuffleRead ${stages.map(_.shuffleRead).sum / 1e6}%.1f MB, " +
           f"shuffleWrite ${stages.map(_.shuffleWrite).sum / 1e6}%.1f MB, " +
           f"serialMs $serialMs / totalMs $totalMs " +

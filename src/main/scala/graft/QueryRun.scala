@@ -31,21 +31,28 @@ object QueryRun {
   }
 
   def apply(spark: SparkSession, name: String, dir: String): Run = {
+    val sc = spark.sparkContext
+    val outerDesc = sc.getLocalProperty(JobDescription)
     val t0 = System.nanoTime()
     var built = Option.empty[Long]
     var t2 = t0
     val failure = scoped(spark, name) {
       try {
+        sc.setJobDescription(s"$name construct")
         val df = SparkEntry.queries(name)(spark, dir)
         built = Some(System.nanoTime())
+        sc.setJobDescription(s"$name execute")
         df.write.format("noop").mode("overwrite").save()
         None
       } catch { case NonFatal(e) => Some(e) }
-      finally t2 = System.nanoTime()
+      finally { t2 = System.nanoTime(); sc.setJobDescription(outerDesc) }
     }
     val t1 = built.getOrElse(t2)
     Run(name, (t1 - t0) / 1e9, (t2 - t1) / 1e9, failure)
   }
+
+  /** The job description [[apply]] sets: `<name> construct`, then `<name> execute`. */
+  val JobDescription = "spark.job.description"
 
   /** The clean-up: runs `body` (query `name`) in a pin scope of its
     * own, then releases, blocking, every pin that scope made and no

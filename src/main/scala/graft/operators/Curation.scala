@@ -59,52 +59,62 @@ object Curation {
   def phoneCount(c: Column): Column =
     size(regexp_extract_all(regexp_replace(c, EmailRegex, "<EMAIL>"), lit(PhoneRegex), lit(0)))
 
+  // ---- term counts: the one (doc, tok) table -------------------------
+
+  /** The (idCol, tok, tf) count of each folded token in each document
+    * (the funnel oracle's `qtokc`), which every token-level signal reads.
+    * OUTER explode with the null filter on the generated column: no
+    * isnotnull/size>0 predicate is inferred on the fold chain, so nothing
+    * expensive lands in the scan filter (the q15/q61 pushdown trap). */
+  def termCounts(df: DataFrame, textCol: String, idCol: String): DataFrame =
+    df.select(col(idCol), explode_outer(tokens(fold(col(textCol)))).as("tok"))
+      .filter(col("tok").isNotNull)
+      .groupBy(col(idCol), col("tok")).agg(count(lit(1)).as("tf"))
+
   // ---- repetition signals (Gopher-style quality filtering) -----------
 
-  /** Per-document word-level repetition signals on the folded token
-    * stream: token/distinct counts, most-frequent-token share,
-    * most-frequent-bigram share, duplicate-token share (all e6
-    * integers). Two hash-agg chains (token, bigram) joined on doc id —
-    * each is a partial-agg shuffle of (doc, gram) pairs, nothing
-    * quadratic, no windows over the corpus. */
-  def repetitionStats(df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    // OUTER explodes over pre-built gram lists: no isnotnull/size>0
-    // predicate is inferred on the fold chain, so nothing expensive
-    // lands in the scan filter (the q15/q61 pushdown-recompute trap).
-    val toked = df.select(col(idCol), tokens(fold(col(textCol))).as("toks"))
-    val tokStats = toked
-      .select(col(idCol), explode_outer(col("toks")).as("tok"))
-      .filter(col("tok").isNotNull)
-      .groupBy(col(idCol), col("tok")).agg(count(lit(1)).as("cnt"))
-      .groupBy(col(idCol)).agg(
-        sum(col("cnt")).as("n_tokens"),
+  /** Per-document token repetition signals of a [[termCounts]] table:
+    * token and distinct-token counts, most-frequent-token and
+    * duplicate-token shares (e6 integers). */
+  def tokenStats(terms: DataFrame, idCol: String): DataFrame =
+    terms.groupBy(col(idCol)).agg(
+        sum(col("tf")).as("n_tokens"),
         count(lit(1)).as("n_distinct_tokens"),
-        max(col("cnt")).as("top_tok_cnt"))
-    val bgStats = toked
-      .select(col(idCol), explode_outer(
-        graft.functions.GraftFunctions.tokenShingles(col("toks"), 2)).as("bg"))
+        max(col("tf")).as("top_tok_cnt"))
+      .select(col(idCol), col("n_tokens"), col("n_distinct_tokens"),
+        e6(col("top_tok_cnt").cast("double") / col("n_tokens")).as("top_token_e6"),
+        e6((col("n_tokens") - col("n_distinct_tokens")).cast("double")
+          / col("n_tokens")).as("dup_token_e6"))
+
+  /** [[tokenStats]] plus the most-frequent-bigram share
+    * (`top_bigram_e6`): two hash-agg chains (token, bigram) joined on
+    * doc id — each is a partial-agg shuffle of (doc, gram) pairs,
+    * nothing quadratic, no windows over the corpus. */
+  def repetitionStats(df: DataFrame, textCol: String, idCol: String): DataFrame = {
+    // outer explode over the pre-built bigram list, as in termCounts
+    val bgStats = df
+      .select(col(idCol), explode_outer(graft.functions.GraftFunctions
+        .tokenShingles(tokens(fold(col(textCol))), 2)).as("bg"))
       .filter(col("bg").isNotNull)
       .groupBy(col(idCol), col("bg")).agg(count(lit(1)).as("cnt"))
       .groupBy(col(idCol)).agg(max(col("cnt")).as("top_bg_cnt"))
-    tokStats.join(bgStats, Seq(idCol), "left")
+    tokenStats(termCounts(df, textCol, idCol), idCol)
+      .join(bgStats, Seq(idCol), "left")
       .select(col(idCol),
-        col("n_tokens"), col("n_distinct_tokens"),
-        e6(col("top_tok_cnt").cast("double") / col("n_tokens")).as("top_token_e6"),
+        col("n_tokens"), col("n_distinct_tokens"), col("top_token_e6"),
         e6(coalesce(col("top_bg_cnt"), lit(0L)).cast("double")
           / greatest(col("n_tokens") - 1, lit(1L))).as("top_bigram_e6"),
-        e6((col("n_tokens") - col("n_distinct_tokens")).cast("double")
-          / col("n_tokens")).as("dup_token_e6"))
+        col("dup_token_e6"))
   }
 
   // ---- eval-set decontamination --------------------------------------
 
-  /** For each training doc, how many of its distinct 3-gram shingles
-    * appear anywhere in the (small, broadcast) eval set. The flag uses
-    * the integer predicate 2*hits >= shingles — no float compare.
-    * `evalPred` selects the held-out docs. */
-  def contamination(df: DataFrame, textCol: String, idCol: String,
-      evalPred: Column): DataFrame = {
-    val sh = Dedup.shingles(df, textCol, idCol)
+  /** For each training doc of a (idCol, shingle) table
+    * ([[Dedup.shingles]]), how many of its distinct shingles appear
+    * anywhere in the (small, broadcast) eval set. The flag uses the
+    * integer predicate 2*hits >= shingles — no float compare.
+    * `evalPred` selects the held-out docs (over the table's columns). */
+  def contamination(sh: DataFrame, idCol: String, evalPred: Column): DataFrame = {
     val evalSh = sh.filter(evalPred).select(col("shingle")).distinct()
       .withColumn("hit", lit(1L))
     sh.filter(!evalPred)
@@ -404,14 +414,11 @@ object Curation {
   /** Top-k characteristic terms per document, ranked by
     * (tf desc, df asc, term asc) — document frequency IS the idf
     * ordering, so no engine-variant `ln` enters the comparison and the
-    * pick is bit-reproducible. tf is a (doc, tok) hash agg; df
+    * pick is bit-reproducible. tf is the [[termCounts]] table; df
     * aggregates the same pairs once more by tok; the per-doc top-k
     * runs through TopKPerKeyExec (bounded heaps), not a window. */
   def topTerms(df: DataFrame, textCol: String, idCol: String, k: Int): DataFrame = {
-    val tf = df.select(col(idCol), tokens(fold(col(textCol))).as("toks"))
-      .select(col(idCol), explode_outer(col("toks")).as("tok"))
-      .filter(col("tok").isNotNull)
-      .groupBy(col(idCol), col("tok")).agg(count(lit(1)).as("tf"))
+    val tf = termCounts(df, textCol, idCol)
     val dfreq = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     val scored = tf.join(dfreq, Seq("tok"))
       .select(col(idCol), col("tok"), col("tf"), col("df"))
@@ -486,25 +493,21 @@ object Curation {
     * `ln` — which engines round differently in the last ulp — ever
     * enters a hash-compared column. Per-doc score = total bits over
     * token instances and milli-bits/token (integer floor division).
-    * Shape: (doc, tok) hash agg → tok-level corpus counts → token-keyed
-    * join back → doc-keyed re-agg (the q91 two-shuffle shape); the
-    * corpus total is a 1-row broadcast. */
-  def unigramSurprisal(df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    // (doc, tok) counts feed the LM table AND the scoring join-back;
-    // stage once so the corpus is scanned/exploded a single time
-    val docTok = Dedup.stage(df
-      .select(col(idCol), explode_outer(tokens(fold(col(textCol)))).as("tok"))
-      .filter(col("tok").isNotNull)
-      .groupBy(col(idCol), col("tok")).agg(count(lit(1)).as("dc")))
-    val tokc = docTok.groupBy(col("tok")).agg(sum(col("dc")).as("cnt"))
+    * Input: a [[termCounts]] table. Shape: tok-level corpus counts →
+    * token-keyed join back → doc-keyed re-agg (the q91 two-shuffle
+    * shape); the corpus total is a 1-row broadcast. */
+  def unigramSurprisal(terms: DataFrame, idCol: String): DataFrame = {
+    // the (doc, tok) counts feed the LM table AND the scoring join-back
+    val docTok = Dedup.stage(terms)
+    val tokc = docTok.groupBy(col("tok")).agg(sum(col("tf")).as("cnt"))
     val total = tokc.agg(sum(col("cnt")).as("n_total"))
     val bits = tokc.crossJoin(broadcast(total))
       .select(col("tok"),
         (length(bin(col("n_total"))) - length(bin(col("cnt")))).cast("long").as("bits"))
     docTok.join(bits, Seq("tok"))
       .groupBy(col(idCol))
-      .agg(sum(col("dc")).as("n_tokens"),
-        sum(col("dc") * col("bits")).as("total_bits"))
+      .agg(sum(col("tf")).as("n_tokens"),
+        sum(col("tf") * col("bits")).as("total_bits"))
       .withColumn("milli_bits_per_token",
         expr("(1000 * total_bits) div n_tokens"))
   }
@@ -520,19 +523,16 @@ object Curation {
     * before committing to a merge table (the apply-side complement of
     * q121/q125). */
   def vocabCoverage(df: DataFrame, textCol: String, idCol: String, v: Int): DataFrame = {
-    val docTok = Dedup.stage(df
-      .select(col(idCol), explode_outer(tokens(fold(col(textCol)))).as("tok"))
-      .filter(col("tok").isNotNull)
-      .groupBy(col(idCol), col("tok")).agg(count(lit(1)).as("dc")))
-    val tokc = docTok.groupBy(col("tok")).agg(sum(col("dc")).as("cnt"))
+    val docTok = Dedup.stage(termCounts(df, textCol, idCol))
+    val tokc = docTok.groupBy(col("tok")).agg(sum(col("tf")).as("cnt"))
       .withColumn("g", lit(1))
     val vocab = graft.plans.Plans.topKPerKeyRanked(tokc, Seq(tokc("g")),
       Seq((tokc("cnt"), true), (tokc("tok"), false)), v, "rnk")
       .select(col("tok"), lit(true).as("in_vocab"))
     docTok.join(broadcast(vocab), Seq("tok"), "left")
       .groupBy(col(idCol))
-      .agg(sum(col("dc")).as("n_tokens"),
-        sum(when(col("in_vocab").isNull, col("dc")).otherwise(0L)).as("n_oov"),
+      .agg(sum(col("tf")).as("n_tokens"),
+        sum(when(col("in_vocab").isNull, col("tf")).otherwise(0L)).as("n_oov"),
         count_distinct(when(col("in_vocab").isNull, col("tok"))).as("n_oov_types"))
       .withColumn("oov_e6",
         e6(col("n_oov").cast("double") / col("n_tokens")))
@@ -580,10 +580,7 @@ object Curation {
     * pseudo-relevance feedback probes the same staged tables twice). */
   def bm25Stats(df: DataFrame, textCol: String, idCol: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val docTok = Dedup.stage(df
-      .select(col(idCol), explode_outer(tokens(fold(col(textCol)))).as("tok"))
-      .filter(col("tok").isNotNull)
-      .groupBy(col(idCol), col("tok")).agg(count(lit(1)).as("tf")))
+    val docTok = Dedup.stage(termCounts(df, textCol, idCol))
     val dfreq = docTok.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     val dl = docTok.groupBy(col(idCol)).agg(sum(col("tf")).as("dl"))
     val norms = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total"))
@@ -674,21 +671,19 @@ object Curation {
     * ratio deviation `round(1e6·r) − 1e6` where
     * `r = ((cnt_tgt+1)·N_raw) / ((N_tgt+V)·cnt_raw)`, one fixed IEEE
     * double expression tree both engines evaluate identically.
-    * `weight_e6 = Σ dc·dev > 0` means the doc looks more like the
-    * target distribution than the background. Shape: one (doc, tok)
-    * hash agg feeds both LM tables (token-keyed aggs), joined back on
+    * `weight_e6 = Σ tf·dev > 0` means the doc looks more like the
+    * target distribution than the background. Input: a [[termCounts]]
+    * table, joined to `docs` for each doc's `targetCol` flag (so only
+    * the terms of `docs`' ids count). Shape: the flagged (doc, tok)
+    * table feeds both LM tables (token-keyed aggs), joined back on
     * token; LM normalizers are a 1-row broadcast. */
-  def dsirWeights(df: DataFrame, textCol: String, idCol: String,
+  def dsirWeights(terms: DataFrame, docs: DataFrame, idCol: String,
                   targetCol: Column): DataFrame = {
-    val docTok = Dedup.stage(df
-      .select(col(idCol), targetCol.as("is_target"),
-        explode_outer(tokens(fold(col(textCol)))).as("tok"))
-      .filter(col("tok").isNotNull)
-      .groupBy(col(idCol), col("is_target"), col("tok"))
-      .agg(count(lit(1)).as("dc")))
+    val docTok = Dedup.stage(terms.join(
+      docs.select(col(idCol), targetCol.as("is_target")), Seq(idCol)))
     val lm = docTok.groupBy(col("tok")).agg(
-      sum(col("dc")).as("cnt_raw"),
-      sum(when(col("is_target"), col("dc")).otherwise(0L)).as("cnt_tgt"))
+      sum(col("tf")).as("cnt_raw"),
+      sum(when(col("is_target"), col("tf")).otherwise(0L)).as("cnt_tgt"))
     val norms = lm.agg(
       sum(col("cnt_raw")).as("n_raw"),
       sum(col("cnt_tgt")).as("n_tgt"),
@@ -701,8 +696,8 @@ object Curation {
           .cast("long") - 1000000L).as("dev_e6"))
     docTok.join(devs, Seq("tok"))
       .groupBy(col(idCol))
-      .agg(sum(col("dc")).as("n_tokens"),
-        sum(col("dc") * col("dev_e6")).as("weight_e6"))
+      .agg(sum(col("tf")).as("n_tokens"),
+        sum(col("tf") * col("dev_e6")).as("weight_e6"))
       .withColumn("per_token_dev_e6", expr("weight_e6 div n_tokens"))
   }
 

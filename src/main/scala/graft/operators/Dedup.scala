@@ -51,9 +51,11 @@ object Dedup {
     * it: the query (`QueryRun`), the streamed batch
     * (`StreamingState.run`), or a loop that [[release]]s round k-1 once
     * round k is pinned. Reading a released checkpoint fails loudly
-    * (`CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`), never with wrong rows. */
+    * (`CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`), never with wrong rows. A bare
+    * pin read is returned as it is (one pin, not two; releasing either releases both). */
   def stage(df: DataFrame, eager: Boolean = false): DataFrame = {
     val spark = df.sparkSession
+    if (isPin(df)) { if (eager) pinnedRdds(df).foreach(_.count()); return df }
     if (spark.conf.getOption(StagingDirConf).isDefined) return stageParquet(df)
     // named before any job runs, so a failed eager job leaves no
     // unnamed pin that its scope's release would miss
@@ -119,6 +121,11 @@ object Dedup {
   private val ScopeDirPrefix = "graft_scope_"
   private def pinName(scope: String): String = s"$PinPrefix[${Option(scope).getOrElse("")}]"
   private def pinnedRdds(df: DataFrame) = df.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
+  private def isPin(df: DataFrame): Boolean = df.queryExecution.logical match {
+    case r: LogicalRDD => Option(r.rdd.name).exists(_.startsWith(PinPrefix))
+    case p => p.children.isEmpty && df.inputFiles.nonEmpty &&
+      df.inputFiles.forall(f => new Path(f).getParent.getName.startsWith("stage_"))
+  }
 
   /** The scratch root: `spark.graft.stagingDir`, else the JVM tmpdir. */
   def scratchBase(spark: SparkSession): String =

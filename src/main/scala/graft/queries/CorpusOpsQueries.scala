@@ -234,7 +234,7 @@ object CorpusOpsQueries extends QueryFamily {
     // r16 spread the scan head; r17 reverted (driver: q127 +0.39 vs
     // r15, scale 0.61; r17 in-JVM A/B: revert −0.30 s)
     Curation.unigramSurprisal(
-      Tables.documents(s, dir).select(col("doc_id"), col("text")), "text", "doc_id")
+      Curation.termCounts(Tables.documents(s, dir), "text", "doc_id"), "doc_id")
       .withColumn("bucket",
         when(col("milli_bits_per_token") < HeadMaxMilli, "head")
           .when(col("milli_bits_per_token") < MiddleMaxMilli, "middle")
@@ -396,8 +396,8 @@ object CorpusOpsQueries extends QueryFamily {
     * positive — the deterministic selection signal importance
     * resampling draws against. */
   def dsirWeights(s: SparkSession, dir: String): DataFrame =
-    Curation.dsirWeights(Tables.documents(s, dir), "text", "doc_id",
-      col("lang") === "en")
+    Curation.dsirWeights(Curation.termCounts(Tables.documents(s, dir), "text", "doc_id"),
+      Tables.documents(s, dir), "doc_id", col("lang") === "en")
       .withColumn("target_like", col("weight_e6") > 0L)
       .select(col("doc_id"), col("n_tokens"), col("weight_e6"),
         col("per_token_dev_e6"), col("target_like"))
@@ -1357,7 +1357,7 @@ object CorpusOpsQueries extends QueryFamily {
     import org.apache.spark.sql.expressions.Window
     // r16 spread reverted in r17 (in-JVM A/B: revert −0.41 s)
     val sur = Curation.unigramSurprisal(
-      Tables.documents(s, dir).select(col("doc_id"), col("text")), "text", "doc_id")
+      Curation.termCounts(Tables.documents(s, dir), "text", "doc_id"), "doc_id")
       .withColumn("bucket",
         when(col("milli_bits_per_token") < HeadMaxMilli, "head")
           .when(col("milli_bits_per_token") < MiddleMaxMilli, "middle")

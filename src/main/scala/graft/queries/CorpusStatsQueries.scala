@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.Tables
 import graft.functions.GraftFunctions.tokenShingles
 import graft.functions.TextFunctions.{fold, tokens}
-import graft.operators.Similarity
+import graft.operators.{Curation, Similarity}
 import graft.plans.Plans
 
 /** Corpus-level measurement operators a pretraining pipeline runs
@@ -413,7 +413,7 @@ object CorpusStatsQueries extends QueryFamily {
     val clf = graft.operators.Curation.textClassifier(docs, "text", "doc_id",
       CorpusOpsQueries.ClassifierBuckets)
       .select(col("doc_id"), (col("score_sum") >= 0).as("clf_keep"))
-    val lm = graft.operators.Curation.unigramSurprisal(docs, "text", "doc_id")
+    val lm = Curation.unigramSurprisal(Curation.termCounts(docs, "text", "doc_id"), "doc_id")
       .select(col("doc_id"),
         (col("milli_bits_per_token") < CorpusOpsQueries.MiddleMaxMilli).as("lm_keep"))
     val cells = rules.join(clf, Seq("doc_id")).join(lm, Seq("doc_id"))
@@ -572,12 +572,10 @@ object CorpusStatsQueries extends QueryFamily {
     * constant-key bounded heap (the q129 vocab pick — nothing
     * corpus-sized sorts), and N is a 1-row broadcast. */
   def tokenBurstiness(s: SparkSession, dir: String): DataFrame = {
-    val docTok = Tables.documents(s, dir)
-      .select(col("doc_id"), explode(tokens(fold(col("text")))).as("tok"))
-      .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("c"))
+    val docTok = Curation.termCounts(Tables.documents(s, dir), "text", "doc_id")
     val tokStats = docTok.groupBy(col("tok"))
-      .agg(count(lit(1)).as("df"), sum(col("c")).as("cnt"),
-        sum(col("c") * col("c")).as("s2"))
+      .agg(count(lit(1)).as("df"), sum(col("tf")).as("cnt"),
+        sum(col("tf") * col("tf")).as("s2"))
     val n = Tables.documents(s, dir).agg(count(lit(1)).as("n_docs"))
     val g = tokStats.withColumn("g", lit(1))
     Plans.topKPerKeyRanked(g, Seq(g("g")),

@@ -63,7 +63,9 @@ object CurationFunnelQueries extends QueryFamily {
     * each multi-consumer frame once as parquet and reads it back
     * ([[Dedup.stageParquet]]): every consumer (aggregate rows,
     * component rounds, downstream stages) reads the staged scan,
-    * row-identical by the staging contract. Parquet, not the default
+    * row-identical by the staging contract. Besides the survivor sets,
+    * the two shared signal tables are staged once each, as the oracle
+    * materializes `qtokc` and `csh`. Parquet, not the default
     * localCheckpoint: a checkpointed frame carries its origin plan's
     * inflated size estimates into later join choices. The staged dirs
     * go with the caller's pin scope. Building the funnel touches no
@@ -100,7 +102,7 @@ object CurationFunnelQueries extends QueryFamily {
 
   /** q256: the funnel with the CORPUS-RELATIVE LM-tail rule — the
     * threshold is the corpus's own exact `TailPct`-th percentile of
-    * milli-bits/token ([[CurationPipeline.surprisalTailThreshold]]),
+    * milli-bits/token ([[CurationPipeline.valueTailThreshold]]),
     * not a fixed constant. Gates the self-tuning mode the zipf
     * campaign showed is necessary (a fixed cut sized to one corpus
     * empties another — SURVEY §5 r13); the oracle re-derives the same

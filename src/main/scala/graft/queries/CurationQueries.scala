@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.Tables
-import graft.operators.Curation
+import graft.operators.{Curation, Dedup}
 
 /** Training-data curation layer (SURVEY.md §2 D′): repetition-signal
   * quality filtering, PII scrubbing, eval-set decontamination, and
@@ -68,7 +68,8 @@ object CurationQueries extends QueryFamily {
   def dupTail(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    val stats = Curation.repetitionStats(Tables.documents(s, dir), "text", "doc_id")
+    val stats = Curation.tokenStats(
+        Curation.termCounts(Tables.documents(s, dir), "text", "doc_id"), "doc_id")
       .select(col("doc_id"), col("dup_token_e6"))
     val hist = stats.groupBy(col("dup_token_e6")).agg(count(lit(1)).as("cnt"))
     val cum = hist.withColumn("cum",
@@ -224,8 +225,8 @@ object CurationQueries extends QueryFamily {
     * predicate). The decontamination step a pretraining corpus runs
     * against its eval suites. */
   def contamination(s: SparkSession, dir: String): DataFrame =
-    Curation.contamination(Tables.documents(s, dir), "text", "doc_id",
-      col("doc_id") % EvalMod === 0)
+    Curation.contamination(Dedup.shingles(Tables.documents(s, dir), "text", "doc_id"),
+      "doc_id", col("doc_id") % EvalMod === 0)
       .orderBy(col("doc_id"))
 
   val contaminationSql: String =
@@ -391,7 +392,7 @@ object CurationQueries extends QueryFamily {
     * centroid recipe). */
   def doremiMix(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val dom = Curation.unigramSurprisal(docs, "text", "doc_id")
+    val dom = Curation.unigramSurprisal(Curation.termCounts(docs, "text", "doc_id"), "doc_id")
       .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"),

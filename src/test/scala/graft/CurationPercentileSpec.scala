@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.Curation
 
-/** Pins [[CurationPipeline.surprisalTailThreshold]] — the
+/** Pins [[CurationPipeline.valueTailThreshold]] on milli-bits — the
   * corpus-relative LM-tail rule (exact integer-rank percentile over
   * the surprisal frame) — against an independent driver-side
   * computation: sort every doc's milli-bits value, and for each pct
@@ -17,7 +17,7 @@ class CurationPercentileSpec extends SparkSpec {
 
   private def surpOf(docsN: Int) = {
     val docs = Tables.documents(spark, sfDir).limit(docsN)
-    Curation.unigramSurprisal(docs, "text", "doc_id")
+    Curation.unigramSurprisal(Curation.termCounts(docs, "text", "doc_id"), "doc_id")
   }
 
   test("derived threshold equals the driver-side order statistic, across pcts") {
@@ -29,7 +29,7 @@ class CurationPercentileSpec extends SparkSpec {
     for (pct <- Seq(10, 50, 80, 95, 99, 100)) {
       val expected = values(
         values.indices.find(i => (i + 1) * 100 >= n.toLong * pct).get)
-      val got = CurationPipeline.surprisalTailThreshold(surp, pct)
+      val got = CurationPipeline.valueTailThreshold(surp, "milli_bits_per_token", pct)
         .collect().head.getLong(0)
       assert(got === expected, s"pct=$pct n=$n")
     }
@@ -46,8 +46,9 @@ class CurationPercentileSpec extends SparkSpec {
     // the threshold the pipeline must have used: derived over the
     // REWRITTEN frame (stage 2's survivors), not the raw corpus
     val rewritten = pctStages("line_dedup")()
-    val surp = Curation.unigramSurprisal(rewritten, "text", "doc_id")
-    val thr = CurationPipeline.surprisalTailThreshold(surp, pct)
+    val surp = Curation.unigramSurprisal(
+      Curation.termCounts(rewritten, "text", "doc_id"), "doc_id")
+    val thr = CurationPipeline.valueTailThreshold(surp, "milli_bits_per_token", pct)
       .collect().head.getLong(0)
     // every rewritten doc at/past thr is absent downstream; every
     // quality-passing doc below thr is present at stage 3

@@ -1,6 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.functions.TextFunctions.sentenceSegs
+import graft.operators.{Curation, Dedup}
 
 class CurationPipelineSpec extends SparkSpec {
 
@@ -169,5 +173,85 @@ class CurationPipelineSpec extends SparkSpec {
     assert(Set(1L, 2L, 3L, 6L).subsetOf(ids))
     assert(ids.intersect(Set(4L, 5L)).size === 1, ids)
     assert(ids.size === 5)
+  }
+
+  test("curateExtendedStages gates read the table of their own survivor set, in every tail mode") {
+    import spark.implicits._
+    val evalPred = col("doc_id") % 97 === 0
+    val target = col("lang") === "en"
+    val tailMilli = 5200L
+    def ids(df: DataFrame): Set[Long] = df.select(col("doc_id")).as[Long].collect().toSet
+    // PERCENTILE_DISC over driver-side values
+    def pctile(values: Seq[Long], pct: Int): Long = {
+      val v = values.sorted
+      v(v.indices.find(i => (i + 1) * 100L >= v.size.toLong * pct).get)
+    }
+    // connected components on the driver: every member but the min id
+    def nonReps(pairs: Seq[(Long, Long)]): Set[Long] = {
+      val parent = scala.collection.mutable.Map.empty[Long, Long]
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      pairs.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      parent.keys.filter(x => find(x) != x).toSet
+    }
+
+    for ((tailPct, cfg) <- Seq(
+        None -> CurationPipeline.Config(),
+        Some(95) -> CurationPipeline.Config(),
+        None -> CurationPipeline.Config(dupTailPct = Some(80)))) QueryRun.scoped(spark, "rewiring") {
+      val mode = s"tailPct=$tailPct dupTailPct=${cfg.dupTailPct}"
+      // every frame pinned (as the funnel stages them), so each stage
+      // and each shared table is computed once
+      val stages = CurationPipeline.curateExtendedStages(
+        Tables.documents(spark, sfDir), evalPred, sentenceSegs(col("text")),
+        dsirTarget = Some(target), surprisalTailMilli = tailMilli,
+        surprisalTailPct = tailPct, cfg = cfg, staging = Some(Dedup.stage(_))).toMap
+
+      // quality + LM tail from termCounts(rewritten)
+      val rewritten = stages("line_dedup")()
+      val terms = Curation.termCounts(rewritten, "text", "doc_id")
+      val stats = Curation.tokenStats(terms, "doc_id")
+        .select(col("doc_id"), col("n_tokens"), col("dup_token_e6"))
+        .as[(Long, Long, Long)].collect().toSeq
+      val milli = Curation.unigramSurprisal(terms, "doc_id")
+        .select(col("doc_id"), col("milli_bits_per_token")).as[(Long, Long)].collect().toMap
+      val dupThr = cfg.dupTailPct.fold(cfg.maxDupE6)(p => pctile(stats.map(_._3), p))
+      val lmThr = tailPct.fold(tailMilli)(p => pctile(milli.values.toSeq, p))
+      val qualified = stages("quality_lm_gate")()
+      val wantQualified = stats.collect {
+        case (id, n, dup) if n >= cfg.minTokens && dup < dupThr && milli(id) < lmThr => id
+      }.toSet
+      assert(ids(qualified) === wantQualified, mode)
+      assert(wantQualified.nonEmpty && wantQualified.size < stats.size, mode)
+
+      // decontamination from shingles(qualified)
+      val contaminated = ids(Curation.contamination(
+          Dedup.shingles(qualified, "text", "doc_id"), "doc_id", evalPred)
+        .filter(col("n_contaminated") * 100 >= col("n_shingles") * cfg.contaminationPct))
+      val clean = stages("decontaminate")()
+      assert(ids(clean) === ids(qualified.filter(!evalPred)) -- contaminated, mode)
+
+      // near-dup clusters from shingles(clean)
+      val pairs = Dedup.jaccardPairs(Dedup.shingles(clean, "text", "doc_id"), "doc_id",
+          dfCap = Some(cfg.jaccardDfCap))
+        .select(col("doc_a"), col("doc_b")).as[(Long, Long)].collect().toSeq
+      val clustered = ids(stages("neardup_cluster")())
+      assert(clustered === ids(clean) -- nonReps(pairs), mode)
+      assert(pairs.nonEmpty, mode)
+
+      // DSIR from termCounts(unique)
+      val unique = stages("dupgram_filter")()
+      val keep = ids(Curation.dsirWeights(Curation.termCounts(unique, "text", "doc_id"),
+          unique, "doc_id", target)
+        .filter(col("weight_e6") > 0L))
+      val selected = ids(stages("dsir_select")())
+      assert(selected === ids(unique).intersect(keep), mode)
+      assert(selected.nonEmpty && selected.size < ids(unique).size, mode)
+    }
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Curation
+import graft.operators.{Curation, Dedup}
 
 class CurationSpec extends SparkSpec {
   import org.apache.spark.sql.Row
@@ -106,7 +106,8 @@ class CurationSpec extends SparkSpec {
       (0L, "alpha beta gamma delta epsilon"), // eval doc (id % 2 == 0... use pred)
       (1L, "alpha beta gamma delta zeta"), // 3 of 3 shingles? no: 3 shared of 3? compute below
       (3L, "one two three four five"))).toDF("doc_id", "text")
-    val out = Curation.contamination(df, "text", "doc_id", col("doc_id") === 0)
+    val out = Curation.contamination(Dedup.shingles(df, "text", "doc_id"), "doc_id",
+      col("doc_id") === 0)
       .orderBy(col("doc_id")).collect()
     // doc 1 shingles: "alpha beta gamma","beta gamma delta","gamma delta zeta";
     // first two appear in eval doc 0 -> 2/3 contaminated, flagged.

@@ -111,4 +111,20 @@ class PinScopeSpec extends SparkSpec {
     } finally spark.conf.unset(Dedup.StagingDirConf)
     assert(staging.list().isEmpty)
   }
+
+  test("staging a pin returns it: one pin, not two") {
+    QueryRun.scoped(spark, "restage") {
+      val pin = Dedup.stage(spark.range(4).toDF("id"))
+      val before = persisted
+      assert(Dedup.stage(pin) eq pin)
+      assert(Dedup.stage(pin, eager = true) eq pin)
+      assert(persisted == before)
+      val dir = Dedup.stageParquet(spark.range(6).toDF("id"))
+      assert(Dedup.stage(dir) eq dir)
+      assert(persisted == before)
+      // a derived frame is not a pin read
+      assert(!(Dedup.stage(pin.filter(col("id") > 1)) eq pin))
+      assert((persisted -- before).size == 1)
+    }
+  }
 }

@@ -514,9 +514,9 @@ class PlanAuditSpec extends SparkSpec {
 
   test("q256 percentile threshold: the cumulative walk rides the milli-bits histogram, not the corpus") {
     import org.apache.spark.sql.functions.col
-    val surp = graft.operators.Curation.unigramSurprisal(
-      Tables.documents(spark, sfDir), "text", "doc_id")
-    val p = plan(CurationPipeline.surprisalTailThreshold(surp, 95))
+    val surp = graft.operators.Curation.unigramSurprisal(graft.operators.Curation
+      .termCounts(Tables.documents(spark, sfDir), "text", "doc_id"), "doc_id")
+    val p = plan(CurationPipeline.valueTailThreshold(surp, "milli_bits_per_token", 95))
     // ONE unpartitioned window exists by design, but its input is the
     // value histogram: the corpus collapses through a
     // milli_bits-keyed hash aggregate BEFORE the window, so the

@@ -8,6 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Ids of the live pins made outside any pin scope (`graft.pin[]`). */
+  def unscopedPins: Set[Int] = spark.sparkContext.getPersistentRDDs
+    .collect { case (id, r) if r.name == "graft.pin[]" => id }.toSet
 }
 
 object SparkSpec {

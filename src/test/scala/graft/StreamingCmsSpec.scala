@@ -43,18 +43,22 @@ class StreamingCmsSpec extends SparkSpec {
       .select(col("doc_id"), col("text"))
     val tmpA = java.nio.file.Files.createTempDirectory("cmsA").toFile
     val tmpB = java.nio.file.Files.createTempDirectory("cmsB").toFile
+    val unscoped = unscopedPins
+    // each batch in its own pin scope, as StreamingState.run runs it
+    def scoped[T](body: => T): T = QueryRun.scoped(spark, "cms-batching")(body)
     val a = new StreamingCmsCounter(s"$tmpA/sketch")
     val b = new StreamingCmsCounter(s"$tmpB/sketch")
     // batching A: two halves by id; batching B: odd/even interleave,
     // reversed order
-    a.processBatch(docs.filter(col("doc_id") < 250), "text", 0L)
-    a.processBatch(docs.filter(col("doc_id") >= 250), "text", 1L)
-    b.processBatch(docs.filter(col("doc_id") % 2 === 1), "text", 0L)
-    b.processBatch(docs.filter(col("doc_id") % 2 === 0), "text", 1L)
+    scoped(a.processBatch(docs.filter(col("doc_id") < 250), "text", 0L))
+    scoped(a.processBatch(docs.filter(col("doc_id") >= 250), "text", 1L))
+    scoped(b.processBatch(docs.filter(col("doc_id") % 2 === 1), "text", 0L))
+    scoped(b.processBatch(docs.filter(col("doc_id") % 2 === 0), "text", 1L))
     def state(c: StreamingCmsCounter) = c.sketch(spark).collect()
       .map(r => (r.getAs[Int]("d"), r.getAs[Long]("cell")) -> r.getAs[Long]("cnt"))
       .toMap
     assert(state(a) === state(b))
     assert(state(a).nonEmpty)
+    assert((unscopedPins -- unscoped).isEmpty, "a batch pinned outside its scope")
   }
 }

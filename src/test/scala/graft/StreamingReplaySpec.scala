@@ -55,21 +55,24 @@ class StreamingReplaySpec extends SparkSpec {
 
   test("re-delivering a batch with the same id is state-idempotent") {
     import spark.implicits._
+    val unscoped = unscopedPins
+    // each batch in its own pin scope, as StreamingState.run runs it
+    def scoped[T](body: => T): T = QueryRun.scoped(spark, "replay-idempotent")(body)
     val all = docs()
     val batches = Seq(all.filter(_.doc_id < 80), all.filter(_.doc_id >= 80))
 
     def drive(root: String, replaySecond: Boolean): Set[Seq[Any]] = {
       val pipe = new StreamingIngestPipeline(root, Cost, Cap, DupShareMax,
         MinBands, CtxLen)
-      val out0 = pipe.processBatch(batches(0).toSeq.toDS(), 0L)
-        .collect().map(_.toSeq).toSet
-      val out1a = pipe.processBatch(batches(1).toSeq.toDS(), 1L)
-        .collect().map(_.toSeq).toSet
+      val out0 = scoped(pipe.processBatch(batches(0).toSeq.toDS(), 0L)
+        .collect().map(_.toSeq).toSet)
+      val out1a = scoped(pipe.processBatch(batches(1).toSeq.toDS(), 1L)
+        .collect().map(_.toSeq).toSet)
       if (replaySecond) {
         // the crash case: batch 1 ran fully (all state written) but the
         // streaming commit was lost — foreachBatch re-delivers id 1
-        val out1b = pipe.processBatch(batches(1).toSeq.toDS(), 1L)
-          .collect().map(_.toSeq).toSet
+        val out1b = scoped(pipe.processBatch(batches(1).toSeq.toDS(), 1L)
+          .collect().map(_.toSeq).toSet)
         assert(out1b === out1a, "replayed packed rows must equal the originals")
       }
       out0 ++ out1a
@@ -93,6 +96,7 @@ class StreamingReplaySpec extends SparkSpec {
         StreamingState.batchIds(s"$rootB/$sub"),
         s"batch ids of $sub diverged under replay")
     }
+    assert((unscopedPins -- unscoped).isEmpty, "a batch pinned outside its scope")
   }
 
   test("component state is replay-idempotent: SemDedup, KnnGraph, CmsCounter, DriftMonitor") {
@@ -102,6 +106,8 @@ class StreamingReplaySpec extends SparkSpec {
     import graft.operators.Similarity
     import graft.queries.SimilarityQueries
 
+    val unscoped = unscopedPins
+    def scoped[T](body: => T): T = QueryRun.scoped(spark, "replay-components")(body)
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("source"), col("text")).limit(120)
       .localCheckpoint()
@@ -129,31 +135,32 @@ class StreamingReplaySpec extends SparkSpec {
 
     check("semdedup")({ (root, replay) =>
       val op = new StreamingSemDedup(s"$root/members", 400000L)
-      op.processBatch(emb.filter(col("vec_id") < 60), cents, 0L)
-      op.processBatch(emb.filter(col("vec_id") >= 60), cents, 1L)
-      if (replay) op.processBatch(emb.filter(col("vec_id") >= 60), cents, 1L)
+      scoped(op.processBatch(emb.filter(col("vec_id") < 60), cents, 0L))
+      scoped(op.processBatch(emb.filter(col("vec_id") >= 60), cents, 1L))
+      if (replay) scoped(op.processBatch(emb.filter(col("vec_id") >= 60), cents, 1L))
     }, root => Seq(s"$root/members"))
 
     check("knn")({ (root, replay) =>
       val op = new StreamingKnnGraph(s"$root/knn")
-      op.processBatch(emb.filter(col("vec_id") < 60), 0L)
-      op.processBatch(emb.filter(col("vec_id") >= 60), 1L)
-      if (replay) op.processBatch(emb.filter(col("vec_id") >= 60), 1L)
+      scoped(op.processBatch(emb.filter(col("vec_id") < 60), 0L))
+      scoped(op.processBatch(emb.filter(col("vec_id") >= 60), 1L))
+      if (replay) scoped(op.processBatch(emb.filter(col("vec_id") >= 60), 1L))
     }, root => Seq(s"$root/knn/bands", s"$root/knn/vecs"))
 
     check("cms")({ (root, replay) =>
       val op = new StreamingCmsCounter(s"$root/cms")
-      op.processBatch(docs.filter(col("doc_id") < 60), "text", 0L)
-      op.processBatch(docs.filter(col("doc_id") >= 60), "text", 1L)
-      if (replay) op.processBatch(docs.filter(col("doc_id") >= 60), "text", 1L)
+      scoped(op.processBatch(docs.filter(col("doc_id") < 60), "text", 0L))
+      scoped(op.processBatch(docs.filter(col("doc_id") >= 60), "text", 1L))
+      if (replay) scoped(op.processBatch(docs.filter(col("doc_id") >= 60), "text", 1L))
     }, root => Seq(s"$root/cms"))
 
     check("drift")({ (root, replay) =>
       val op = new StreamingDriftMonitor(s"$root/hist")
-      op.processBatch(docs.filter(col("doc_id") < 60), "text", "source", 0L)
-      op.processBatch(docs.filter(col("doc_id") >= 60), "text", "source", 1L)
-      if (replay) op.processBatch(docs.filter(col("doc_id") >= 60), "text", "source", 1L)
+      scoped(op.processBatch(docs.filter(col("doc_id") < 60), "text", "source", 0L))
+      scoped(op.processBatch(docs.filter(col("doc_id") >= 60), "text", "source", 1L))
+      if (replay) scoped(op.processBatch(docs.filter(col("doc_id") >= 60), "text", "source", 1L))
     }, root => Seq(s"$root/hist"))
+    assert((unscopedPins -- unscoped).isEmpty, "a batch pinned outside its scope")
   }
 
   test("restart from checkpoint mid-stream equals the uninterrupted run") {
