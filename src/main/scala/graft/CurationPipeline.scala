@@ -89,7 +89,6 @@ object CurationPipeline {
 
     // 3. decontamination: drop training docs overlapping the eval set;
     // the qualified docs' shingles feed 4a too, recomputed per consumer
-    // (as curateExtendedStages does at scale; below scale `st` is a no-op)
     val qsh = Dedup.shingles(qualified, "text", "doc_id")
     val clean = st(decontaminate(qualified, qsh, evalPred, cfg))
 
@@ -255,8 +254,9 @@ object CurationPipeline {
     // 2. quality gate + 3. LM-surprisal tail drop (fixed milli-bits
     // cut, or — when `surprisalTailPct` is set — the corpus-relative
     // percentile cut derived from the SAME surprisal frame; see
-    // [[valueTailThreshold]]). Every rewritten doc has a term row, so
-    // keeping the docs below the cut drops exactly the tail.
+    // [[valueTailThreshold]]). A doc with no term row has no
+    // tokenStats row either, so the quality gate drops it; among the
+    // docs it keeps, keeping those below the cut drops exactly the tail.
     lazy val qualified = st {
       val lmKeep = belowCut(Curation.unigramSurprisal(terms, "doc_id"),
         "milli_bits_per_token", surprisalTailMilli, surprisalTailPct, st)
@@ -267,14 +267,9 @@ object CurationPipeline {
     }
 
     // 4. decontaminate, 5. near-dup cluster, 6. dup-gram filter. The
-    // qualified docs' shingles feed the first two; at scale each
-    // consumer recomputes them from the staged survivors, since staging
-    // the corpus-sized shingle stream measured slower (x16 CurationBench
-    // decontaminate, median of 3-4 runs: 10.2 s staged, 8.0 s not)
-    lazy val qsh = {
-      val sh = Dedup.shingles(qualified, "text", "doc_id")
-      if (Dedup.atScale(docs)) sh else st(sh)
-    }
+    // qualified docs' shingles feed the first two, each consumer
+    // recomputing them from the staged survivors
+    lazy val qsh = Dedup.shingles(qualified, "text", "doc_id")
     lazy val clean = st(decontaminate(qualified, qsh, evalPred, cfg))
     lazy val clustered = st(keepClusterReps(clean, qsh, cfg))
     lazy val unique = {

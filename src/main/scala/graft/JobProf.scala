@@ -34,7 +34,7 @@ object JobProf {
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.synchronized {
         jobs += Job(e.jobId,
-          Option(e.properties.getProperty(QueryRun.JobDescription)).getOrElse(""), e.time)
+          Option(e.properties.getProperty("spark.job.description")).getOrElse(""), e.time)
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit = jobs.synchronized {
         jobs.find(_.id == e.jobId).foreach(j => j.ms = e.time - j.start)

@@ -32,7 +32,7 @@ object QueryRun {
 
   def apply(spark: SparkSession, name: String, dir: String): Run = {
     val sc = spark.sparkContext
-    val outerDesc = sc.getLocalProperty(JobDescription)
+    val outerDesc = sc.getLocalProperty("spark.job.description")
     val t0 = System.nanoTime()
     var built = Option.empty[Long]
     var t2 = t0
@@ -50,9 +50,6 @@ object QueryRun {
     val t1 = built.getOrElse(t2)
     Run(name, (t1 - t0) / 1e9, (t2 - t1) / 1e9, failure)
   }
-
-  /** The job description [[apply]] sets: `<name> construct`, then `<name> execute`. */
-  val JobDescription = "spark.job.description"
 
   /** The clean-up: runs `body` (query `name`) in a pin scope of its
     * own, then releases, blocking, every pin that scope made and no

@@ -43,10 +43,9 @@ object Collector {
     while (!done && fresh.size < maxPages) {
       // materialize the fetch once; every later use reads the checkpoint
       val batch = Dedup.stage(fetchPage(page), eager = true)
-      val newRows = seenKeys.fold(batch) { seen =>
-        try Dedup.stage(batch.join(seen, keyCols, "left_anti"), eager = true)
-        finally Dedup.release(batch)
-      }
+      val newRows = Dedup.stage(
+        seenKeys.fold(batch)(batch.join(_, keyCols, "left_anti")), eager = true)
+      Dedup.release(batch)
       // the same count the reference logs as "N novas" — served from the
       // materialized checkpoint, no recompute
       val nNew = newRows.count()

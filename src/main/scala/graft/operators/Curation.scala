@@ -497,8 +497,11 @@ object Curation {
     * token-keyed join back → doc-keyed re-agg (the q91 two-shuffle
     * shape); the corpus total is a 1-row broadcast. */
   def unigramSurprisal(terms: DataFrame, idCol: String): DataFrame = {
-    // the (doc, tok) counts feed the LM table AND the scoring join-back
-    val docTok = Dedup.stage(terms)
+    // the (doc, tok) counts feed the LM table AND the scoring join-back,
+    // pinned once (a caller's pin is read as it is); the null filter the
+    // tok join infers, put on every read, lets the LM's two uses share one exchange
+    val docTok = (if (Dedup.isPin(terms)) terms else Dedup.stage(terms))
+      .filter(col("tok").isNotNull)
     val tokc = docTok.groupBy(col("tok")).agg(sum(col("tf")).as("cnt"))
     val total = tokc.agg(sum(col("cnt")).as("n_total"))
     val bits = tokc.crossJoin(broadcast(total))
@@ -681,6 +684,7 @@ object Curation {
                   targetCol: Column): DataFrame = {
     val docTok = Dedup.stage(terms.join(
       docs.select(col(idCol), targetCol.as("is_target")), Seq(idCol)))
+      .filter(col("tok").isNotNull) // one LM exchange, as in unigramSurprisal
     val lm = docTok.groupBy(col("tok")).agg(
       sum(col("tf")).as("cnt_raw"),
       sum(when(col("is_target"), col("tf")).otherwise(0L)).as("cnt_tgt"))

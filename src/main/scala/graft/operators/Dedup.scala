@@ -51,11 +51,9 @@ object Dedup {
     * it: the query (`QueryRun`), the streamed batch
     * (`StreamingState.run`), or a loop that [[release]]s round k-1 once
     * round k is pinned. Reading a released checkpoint fails loudly
-    * (`CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`), never with wrong rows. A bare
-    * pin read is returned as it is (one pin, not two; releasing either releases both). */
+    * (`CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`), never with wrong rows. */
   def stage(df: DataFrame, eager: Boolean = false): DataFrame = {
     val spark = df.sparkSession
-    if (isPin(df)) { if (eager) pinnedRdds(df).foreach(_.count()); return df }
     if (spark.conf.getOption(StagingDirConf).isDefined) return stageParquet(df)
     // named before any job runs, so a failed eager job leaves no
     // unnamed pin that its scope's release would miss
@@ -78,14 +76,17 @@ object Dedup {
     * dirs, never a table's files. */
   def release(df: DataFrame): Unit = {
     val spark = df.sparkSession
-    pinnedRdds(df).filter(r => Option(r.name).exists(_.startsWith(PinPrefix)))
-      .foreach(_.unpersist(blocking = false))
-    val base = new Path(scratchBase(spark))
-    val root = base.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(base)
+    pinnedRdds(df).filter(isPinRdd).foreach(_.unpersist(blocking = false))
     df.inputFiles.map(new Path(_).getParent).distinct
-      .filter(d => d.getName.startsWith("stage_") && (d.getParent == root ||
-        d.getParent.getName.startsWith(ScopeDirPrefix) && d.getParent.getParent == root))
-      .foreach(deleteScratch(spark, _))
+      .filter(isStageDir(spark, _)).foreach(deleteScratch(spark, _))
+  }
+
+  /** Whether `df` is a bare read of a [[stage]] pin (its checkpoint, or its
+    * stage dir under the scratch root), which an operator reads as it is. */
+  def isPin(df: DataFrame): Boolean = df.queryExecution.logical match {
+    case r: LogicalRDD => isPinRdd(r.rdd)
+    case p => p.children.isEmpty && df.inputFiles.nonEmpty &&
+      df.inputFiles.forall(f => isStageDir(df.sparkSession, new Path(f).getParent))
   }
 
   /** Runs `body` in a fresh [[PinScope]] of `owner` on this thread,
@@ -121,10 +122,13 @@ object Dedup {
   private val ScopeDirPrefix = "graft_scope_"
   private def pinName(scope: String): String = s"$PinPrefix[${Option(scope).getOrElse("")}]"
   private def pinnedRdds(df: DataFrame) = df.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
-  private def isPin(df: DataFrame): Boolean = df.queryExecution.logical match {
-    case r: LogicalRDD => Option(r.rdd.name).exists(_.startsWith(PinPrefix))
-    case p => p.children.isEmpty && df.inputFiles.nonEmpty &&
-      df.inputFiles.forall(f => new Path(f).getParent.getName.startsWith("stage_"))
+  private def isPinRdd(r: org.apache.spark.rdd.RDD[_]) = Option(r.name).exists(_.startsWith(PinPrefix))
+  /** A `stage_` dir directly under the scratch root or a scope dir in it. */
+  private def isStageDir(spark: SparkSession, d: Path): Boolean = {
+    val base = new Path(scratchBase(spark))
+    val root = base.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(base)
+    d.getName.startsWith("stage_") && (d.getParent == root ||
+      d.getParent.getName.startsWith(ScopeDirPrefix) && d.getParent.getParent == root)
   }
 
   /** The scratch root: `spark.graft.stagingDir`, else the JVM tmpdir. */

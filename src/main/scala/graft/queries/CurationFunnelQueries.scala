@@ -64,8 +64,9 @@ object CurationFunnelQueries extends QueryFamily {
     * ([[Dedup.stageParquet]]): every consumer (aggregate rows,
     * component rounds, downstream stages) reads the staged scan,
     * row-identical by the staging contract. Besides the survivor sets,
-    * the two shared signal tables are staged once each, as the oracle
-    * materializes `qtokc` and `csh`. Parquet, not the default
+    * the shared term table is staged once, as the oracle materializes
+    * `qtokc`; the shingles (`csh`) are recomputed by each of their two
+    * consumers from the staged qualified docs. Parquet, not the default
     * localCheckpoint: a checkpointed frame carries its origin plan's
     * inflated size estimates into later join choices. The staged dirs
     * go with the caller's pin scope. Building the funnel touches no

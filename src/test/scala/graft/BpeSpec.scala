@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Bpe
+import graft.operators.{Bpe, Dedup}
 
 /** The BPE trainer library: batched training must reproduce
   * sequential BPE at batchK = 1, stay deterministic at batchK > 1,
@@ -51,6 +51,17 @@ class BpeSpec extends SparkSpec {
     // different pair (spot sanity, not exact-set equality by design)
     val inter = merges.map(_.merged).toSet.intersect(seqm.map(_.merged).toSet)
     assert(inter.size >= 8)
+  }
+
+  test("training from a caller's pinned dictionary leaves the pin readable") {
+    Dedup.withPinScope(spark, "bpe-caller", blocking = true) {
+      val n = dict().count()
+      Seq(Dedup.stage(dict(), eager = true), Dedup.stageParquet(dict())).foreach { pinned =>
+        Bpe.trainSequential(pinned, 2)
+        Bpe.trainBatchedRounds(pinned, 4, batchK = 2)
+        assert(pinned.count() === n)
+      }
+    }
   }
 
   test("batched merge table is conflict-free at K > 1: per-round symbol-disjoint, replayable") {

@@ -3,9 +3,9 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 
-import graft.operators.Dedup
+import graft.operators.{Curation, Dedup}
 import graft.streaming.StreamingIngestPipeline
 import graft.streaming.StreamingIngestPipeline.IngestDoc
 
@@ -112,19 +112,27 @@ class PinScopeSpec extends SparkSpec {
     assert(staging.list().isEmpty)
   }
 
-  test("staging a pin returns it: one pin, not two") {
-    QueryRun.scoped(spark, "restage") {
-      val pin = Dedup.stage(spark.range(4).toDF("id"))
+  test("an operator handed a pinned table reads it: one pin, not two") {
+    QueryRun.scoped(spark, "repin") {
+      val text = spark.range(4).select(col("id").as("doc_id"), lit("a b a").as("text"))
+      val terms = Dedup.stage(Curation.termCounts(text, "text", "doc_id"))
+      val dir = Dedup.stageParquet(Curation.termCounts(text, "text", "doc_id"))
+      assert(Dedup.isPin(terms) && Dedup.isPin(dir))
+      assert(!Dedup.isPin(terms.filter(col("tf") > 1)) && !Dedup.isPin(text))
       val before = persisted
-      assert(Dedup.stage(pin) eq pin)
-      assert(Dedup.stage(pin, eager = true) eq pin)
+      assert(Curation.unigramSurprisal(terms, "doc_id").count() == 4L)
+      assert(Curation.unigramSurprisal(dir, "doc_id").count() == 4L)
       assert(persisted == before)
-      val dir = Dedup.stageParquet(spark.range(6).toDF("id"))
-      assert(Dedup.stage(dir) eq dir)
-      assert(persisted == before)
-      // a derived frame is not a pin read
-      assert(!(Dedup.stage(pin.filter(col("id") > 1)) eq pin))
+      // a derived table is pinned by the operator, as before
+      Curation.unigramSurprisal(terms.filter(col("tf") > 0), "doc_id").count()
       assert((persisted -- before).size == 1)
     }
+    // a stage_ dir outside the scratch root is a table, not a pin
+    val table = Files.createTempDirectory("not_scratch")
+    val outside = table.resolve("stage_table").toString
+    try {
+      spark.range(3).toDF("id").write.parquet(outside)
+      assert(!Dedup.isPin(spark.read.parquet(outside)))
+    } finally new scala.reflect.io.Directory(table.toFile).deleteRecursively()
   }
 }
