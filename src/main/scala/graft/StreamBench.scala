@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.GraftInternals
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -18,6 +20,9 @@ import graft.streaming.StreamingIngestPipeline.IngestDoc
   * full micro-batch turn including every state read, index append,
   * dim snapshot and packed-output write. The first batch is reported
   * separately (plan + codec warmup) and excluded from p50/p95.
+  * `jobs_p50` is the median Spark job count of the same steady
+  * batches (every job of a micro-batch carries its batch id), so a
+  * batch that starts running more jobs shows in the JSON line.
   *
   * Usage: runMain graft.StreamBench <dir> [batchSize] [maxDocs]
   *
@@ -53,6 +58,12 @@ object StreamBench {
     val pipe = new StreamingIngestPipeline(root, costMicro = 1000L,
       capMicro = 20000000L, dupShareMaxE6 = 950000L, minBands = 1L,
       ctxLen = 512)
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Long, Int]()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
+          .foreach { b => jobs.merge(b.toLong, 1, _ + _); () }
+    })
     val input = MemoryStream[IngestDoc]
     val q = pipe.run(input.toDS(), s"$root/packed", s"$root/ckpt")
     val times = scala.collection.mutable.ArrayBuffer.empty[Double]
@@ -69,15 +80,19 @@ object StreamBench {
     } finally q.stop()
     val totalS = (System.nanoTime() - t0) / 1e9
     val packed = spark.read.parquet(s"$root/packed").count()
-    val steady = times.drop(1).sorted
-    def pct(p: Double): Double =
-      if (steady.isEmpty) times.head
+    GraftInternals.drainListenerBus(spark)
+    def pct(xs: Seq[Double], p: Double): Double = {
+      val steady = xs.drop(1).sorted
+      if (steady.isEmpty) xs.head
       else steady(math.min(steady.size - 1, (p * steady.size).toInt))
+    }
+    val batchJobs = times.indices.map(i => jobs.getOrDefault(i.toLong, 0).toDouble)
     println(f"""{"mode":"streaming","dir":"$dir","docs":${docs.length},""" +
       f""""batch_size":$batchSize,"batches":${times.size},""" +
       f""""total_s":$totalS%.1f,"rows_per_sec":${docs.length / totalS}%.0f,""" +
-      f""""first_batch_s":${times.head}%.2f,"p50_batch_s":${pct(0.5)}%.2f,""" +
-      f""""p95_batch_s":${pct(0.95)}%.2f,"packed_rows":$packed}""")
+      f""""first_batch_s":${times.head}%.2f,"p50_batch_s":${pct(times.toSeq, 0.5)}%.2f,""" +
+      f""""jobs_p50":${pct(batchJobs, 0.5)}%.0f,""" +
+      f""""p95_batch_s":${pct(times.toSeq, 0.95)}%.2f,"packed_rows":$packed}""")
     org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
     spark.stop()
   }

@@ -25,9 +25,11 @@ import graft.queries.CdcQueries
   *
   * Scale shape: state is the append-only chunk-hash parquet table — a
   * storage-dedup index lives on disk, not in the state store; the
-  * per-batch probe is an md5-keyed equi-join whose left side is one
-  * micro-batch (broadcastable), so incremental cost is an index seek
-  * per arriving chunk, never a corpus scan.
+  * per-batch probe is an md5-keyed equi-join whose broadcast side is
+  * the micro-batch's hashes, so incremental cost is an index seek per
+  * arriving chunk, never a corpus shuffle. The verdict takes two
+  * exchanges: one keyed by hash (each hash's first batch doc and
+  * whether the store holds it), one keyed by doc.
   *
   * Replay idempotency is the batch-keyed contract of [[StreamingState]]. */
 class StreamingCdcDedup(val chunkDir: String) {
@@ -52,38 +54,47 @@ class StreamingCdcDedup(val chunkDir: String) {
     * survivor set depended on where batch boundaries fell; a pair
     * split across batches kept its first copy, the same pair
     * co-batched kept neither. Batch-size invariance of the composed
-    * ingest pipeline is spec-pinned on exactly this case.) Verdicts
-    * are materialized BEFORE the append. */
+    * ingest pipeline is spec-pinned on exactly this case.) The
+    * verdicts' history is listed before the append and pruned to ids
+    * before `batchId`, so the probe never sees this batch's chunks;
+    * the verdict pin is filled by its first reader. */
   def processBatch(arrivals: DataFrame, textCol: String, idCol: String,
       batchId: Long): DataFrame = {
     val s = arrivals.sparkSession
-    val newChunks = Dedup.stage(CdcQueries.chunkTable(arrivals, textCol, idCol), eager = true)
-    // (doc, h) occurrence grain: n_occ repeats collapse before any
-    // join, and same-hash chunks share content, so one clen suffices
-    val occ = newChunks.groupBy(col("doc_id"), col("h"))
-      .agg(max(col("len")).as("len"), max(col("clen")).as("clen"),
-        count(lit(1)).as("n_occ"))
-    val firstDoc = newChunks.groupBy(col("h"))
-      .agg(min(col("doc_id")).as("first_doc"))
-    // history probe: semi-join the index's h column against this
-    // batch's hashes (cheaper than the former full-history count agg —
-    // the scan is column-pruned either way, but nothing re-aggregates
-    // the whole store per batch)
+    val newChunks = Dedup.stage(CdcQueries.chunkTable(arrivals, textCol, idCol))
+    // history probe: the index's h column against this batch's hashes
+    // as the broadcast side — an index seek, never a corpus shuffle
     val histHit = StreamingState.history(s, chunkDir, chunkSchema, Some(batchId))
-      .join(newChunks.select(col("h")).distinct(), Seq("h"), "left_semi")
-      .select(col("h")).distinct()
-      .withColumn("in_hist", lit(true))
-    val verdicts = Dedup.stage(occ.join(firstDoc, Seq("h"))
-      .join(histHit, Seq("h"), "left")
-      .withColumn("is_dup", coalesce(col("in_hist"), lit(false)) ||
-        col("doc_id") > col("first_doc") || col("n_occ") >= 2)
+      .select(col("h"))
+      .join(broadcast(newChunks.select(col("h"))), Seq("h"), "left_semi")
+    // one pass keyed by h: a hash's first batch doc, and whether the
+    // store holds it (hot history hashes collapse map-side)
+    val firsts = newChunks.select(col("h"), col("doc_id"), lit(false).as("in_hist"))
+      .unionByName(histHit.select(col("h"), lit(null).cast("long").as("doc_id"),
+        lit(true).as("in_hist")))
+      .groupBy(col("h"))
+      .agg(min(col("doc_id")).as("doc_id"), max(col("in_hist")).as("in_hist"))
+    // one pass keyed by doc: each (doc, h) occurrence count next to its
+    // first-doc mark. An occurrence is a dup unless its doc is the
+    // hash's first, the store lacks it, and it does not repeat in-doc
+    // (same-hash chunks share content, so one clen suffices)
+    val occ = newChunks.select(col("doc_id"), col("h"), col("len"), col("clen"),
+        lit(null).cast("boolean").as("first_in_hist"))
+      .unionByName(firsts.select(col("doc_id"), col("h"), lit(null).cast("long").as("len"),
+        lit(null).cast("long").as("clen"), col("in_hist").as("first_in_hist")))
+      .repartition(col("doc_id"))
+      .groupBy(col("doc_id"), col("h"))
+      .agg(max(col("len")).as("len"), max(col("clen")).as("clen"),
+        count(col("len")).as("n_occ"), max(col("first_in_hist")).as("first_in_hist"))
+    val verdicts = Dedup.stage(occ
+      .withColumn("is_dup", coalesce(col("first_in_hist"), lit(true)) || col("n_occ") >= 2)
       .groupBy(col("doc_id"))
       .agg(max(col("len")).as("n_chars"),
         sum(col("n_occ")).as("n_chunks"),
         sum(when(col("is_dup"), col("n_occ")).otherwise(0L)).as("dup_chunks_at_ingest"),
         sum(when(col("is_dup"), col("n_occ") * col("clen")).otherwise(0L)).as("dup_chars_at_ingest"))
       .withColumn("dup_share_at_ingest_e6",
-        expr("dup_chars_at_ingest * 1000000 div n_chars")), eager = true)
+        expr("dup_chars_at_ingest * 1000000 div n_chars")))
     StreamingState.append(newChunks, chunkDir, batchId)
     verdicts
   }

@@ -54,8 +54,12 @@ object StreamingIngestPipeline {
   * indexes (chunk hashes, LSH bands) are append-only parquet tables —
   * disk state, seekable by equi-join, never a RocksDB store holding
   * the corpus — while the per-source bucket levels and pack cursors
-  * are bounded dims persisted as tiny parquet snapshots (the
-  * bounded-model pattern: |sources| rows, rewritten per batch).
+  * are bounded dims (|sources| rows) held on the driver, keyed by the
+  * batch id they are as of, and persisted per batch as tiny parquet
+  * snapshots — the durable record, read back only when the driver
+  * copy is not the pre-batch state: after a restart (a fresh instance
+  * starts empty) or when a batch id is replayed. Every gate and the
+  * packer read them from the driver, so a batch pays no job for them.
   * Rejected docs' chunks and bands ARE indexed ("dedup against
   * everything seen"): a near-dup of a rejected doc is still a
   * near-dup, and the index append happens before the gate filter so
@@ -64,7 +68,11 @@ object StreamingIngestPipeline {
   * Replay idempotency is the batch-keyed contract of [[StreamingState]];
   * the dims follow it as per-batch SNAPSHOTS read as-of `batchId - 1`
   * (a replay re-reads exactly the pre-batch dims, so no admission cost
-  * is double-charged), with old snapshots beyond a short tail pruned. */
+  * is double-charged), with old snapshots beyond a short tail pruned.
+  *
+  * Job shape: a micro-batch is bound by per-job latency, not data, so
+  * each frame is pinned only when several consumers read it, and each
+  * pin is lazy — the first job that reads it fills it. */
 class StreamingIngestPipeline(
     val stateRoot: String,
     val costMicro: Long, val capMicro: Long,
@@ -86,6 +94,23 @@ class StreamingIngestPipeline(
     StructField("source", StringType),
     StructField("cum_tokens", LongType)))
 
+  /** Both dims as they stand after batch `asOf` commits. */
+  private case class Dims(asOf: Long,
+      buckets: Map[String, Streaming.BucketState], cursors: Map[String, Long])
+
+  /** The driver copy of the dims; batches run one at a time. */
+  @volatile private var dims: Option[Dims] = None
+
+  /** The dims a batch `batchId` must see: the driver copy when it is
+    * the state after `batchId - 1`, else the latest snapshots strictly
+    * before `batchId` (a restart, a replayed id). */
+  private def dimsBefore(s: SparkSession, batchId: Long): Dims =
+    dims.filter(_.asOf == batchId - 1).getOrElse(Dims(batchId - 1,
+      readDim(s, bucketDir, bucketSchema, batchId)
+        .map(r => r.getString(0) -> Streaming.BucketState(r.getLong(1), r.getLong(2))).toMap,
+      readDim(s, cursorDir, cursorSchema, batchId)
+        .map(r => r.getString(0) -> r.getLong(1)).toMap))
+
   /** The dim rows of the latest snapshot strictly BEFORE `batchId` —
     * what a replay of `batchId` must see (|sources| rows at most). */
   private def readDim(s: SparkSession, dir: String, schema: StructType,
@@ -93,26 +118,20 @@ class StreamingIngestPipeline(
     StreamingState.batchDirs(dir, Some(batchId)).lastOption
       .fold(Seq.empty[Row])(d => s.read.schema(schema).parquet(d).collect().toSeq)
 
-  private def dimFrame(s: SparkSession, schema: StructType, rows: Seq[Row]): DataFrame =
-    s.createDataFrame(rows.asJava, schema)
-
   private def writeDim(s: SparkSession, dir: String, schema: StructType,
       rows: Seq[Row], batchId: Long): Unit = {
-    StreamingState.append(dimFrame(s, schema, rows).coalesce(1), dir, batchId)
+    StreamingState.append(s.createDataFrame(rows.asJava, schema).coalesce(1), dir, batchId)
     StreamingState.pruneBefore(dir, batchId, DimSnapshotsKept)
   }
 
-  /** Stage 1: per-source leaky-bucket admission for one micro-batch.
-    * Returns (admitted docs, updated per-source states). The fold is
-    * per-source sequential — exactly `Streaming.advanceBucket` — run
-    * once, distributed via groupByKey; prior levels come from the
-    * bounded persisted dim as of the previous batch. */
-  def admitBatch(batch: Dataset[IngestDoc], batchId: Long)
-      : (Dataset[IngestDoc], Seq[Row]) = {
+  /** Stage 1: per-source leaky-bucket admission for one micro-batch
+    * from the `prior` bucket states. Returns (admitted docs, updated
+    * per-source states). The fold is per-source sequential — exactly
+    * `Streaming.advanceBucket` — run once, distributed via groupByKey. */
+  def admitBatch(batch: Dataset[IngestDoc], prior: Map[String, Streaming.BucketState])
+      : (Dataset[IngestDoc], Map[String, Streaming.BucketState]) = {
     val s = batch.sparkSession
     import s.implicits._
-    val prior = readDim(s, bucketDir, bucketSchema, batchId)
-      .map(r => r.getString(0) -> Streaming.BucketState(r.getLong(1), r.getLong(2))).toMap
     val bPrior = s.sparkContext.broadcast(prior)
     // locals so the task closures capture values, not `this`
     val cost = costMicro
@@ -128,14 +147,14 @@ class StreamingIngestPipeline(
           st = Some(next)
           (d, lvl <= cap, i == docs.length - 1, next.lastUs, next.level)
         }
-    }.toDF("doc", "admitted", "final", "last_us", "level"), eager = true)
-    val admitted = folded.filter(col("admitted")).select(col("doc.*")).as[IngestDoc]
-    // only the |sources|-row dim is collected, never the batch
-    val finals = folded.filter(col("final"))
-      .select(col("doc.source"), col("last_us"), col("level")).collect().toSeq
-    val untouched = (prior.keySet -- finals.map(_.getString(0)))
-      .toSeq.map(src => Row(src, prior(src).lastUs, prior(src).level))
-    (admitted, finals ++ untouched)
+    }.toDF("doc", "admitted", "final", "last_us", "level"))
+    // only the |sources|-row dim is collected, never the batch; this
+    // job fills the pin, so the broadcast is done with after it
+    val finals = try folded.filter(col("final"))
+      .select(col("doc.source"), col("last_us"), col("level")).collect()
+      .map(r => r.getString(0) -> Streaming.BucketState(r.getLong(1), r.getLong(2)))
+    finally bPrior.destroy()
+    (folded.filter(col("admitted")).select(col("doc.*")).as[IngestDoc], prior ++ finals)
   }
 
   /** One micro-batch through all four stages; returns this batch's
@@ -144,48 +163,51 @@ class StreamingIngestPipeline(
     * the same id reproduces (not compounds) the state transition. */
   def processBatch(batch: Dataset[IngestDoc], batchId: Long): DataFrame = {
     val s = batch.sparkSession
-    val (admittedDs, bucketRows) = admitBatch(batch, batchId)
+    val before = dimsBefore(s, batchId)
+    val (admittedDs, buckets) = admitBatch(batch, before.buckets)
     val admitted = admittedDs.toDF()
-    writeDim(s, bucketDir, bucketSchema, bucketRows, batchId)
+    writeDim(s, bucketDir, bucketSchema,
+      buckets.toSeq.map { case (src, b) => Row(src, b.lastUs, b.level) }, batchId)
 
     // CDC gate: at-ingest storage-dup share, index write inside
-    val cdcVerdicts = cdc.processBatch(admitted, "text", "doc_id", batchId)
-    val cdcReject = cdcVerdicts
+    val cdcReject = cdc.processBatch(admitted, "text", "doc_id", batchId)
       .filter(col("dup_share_at_ingest_e6") >= dupShareMaxE6)
       .select(col("doc_id"))
-    val s1 = Dedup.stage(admitted.join(cdcReject, Seq("doc_id"), "left_anti"), eager = true)
+    // the CDC survivors feed only the LSH gate, so they are not pinned
+    val s1 = admitted.join(broadcast(cdcReject), Seq("doc_id"), "left_anti")
 
     // LSH gate: drop the later member of every candidate pair
-    val lshVerdicts = lsh.processBatch(s1, "text", "doc_id", batchId)
-    val lshReject = lshVerdicts.filter(col("n_bands") >= minBands)
-      .select(col("doc_b").as("doc_id")).distinct()
-    val s2 = s1.join(lshReject, Seq("doc_id"), "left_anti")
+    val lshReject = lsh.processBatch(s1, "text", "doc_id", batchId)
+      .filter(col("n_bands") >= minBands)
+      .select(col("doc_b").as("doc_id"))
+    val s2 = admitted.join(broadcast(cdcReject.unionByName(lshReject)), Seq("doc_id"), "left_anti")
 
-    // pack survivors onto each source's running window cursor: the base
-    // is a broadcast join against the cursor dim, so the plan stays the
-    // same size at any number of sources
-    val cursors = readDim(s, cursorDir, cursorSchema, batchId)
-    val base = dimFrame(s, cursorSchema, cursors).withColumnRenamed("cum_tokens", "base")
-    val wPrev = Window.partitionBy(col("source")).orderBy(col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
+    // pack survivors onto each source's running window cursor, read
+    // from the driver-held dim as one map literal (the plan stays the
+    // same size at any number of sources)
+    val base = typedLit(before.cursors.filter(_._1 != null))
+    val w = Window.partitionBy(col("source")).orderBy(col("doc_id"))
     val packed = Dedup.stage(s2
       .select(col("doc_id"), col("source"),
         size(TextFunctions.tokens(col("text"))).cast("long").as("n_tokens"))
-      .join(broadcast(base), Seq("source"), "left")
-      .withColumn("cum_tokens", coalesce(sum(col("n_tokens")).over(wPrev), lit(0L)) +
-        coalesce(col("base"), lit(0L)))
+      .withColumn("cum_tokens", coalesce(sum(col("n_tokens")).over(
+          w.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)) +
+        coalesce(try_element_at(base, col("source")), lit(0L)))
       .select(col("doc_id"), col("source"), col("n_tokens"), col("cum_tokens"),
         expr(s"cum_tokens div $ctxLen").as("seq_id"),
         (col("cum_tokens") % ctxLen).as("offset_in_seq"),
-        (col("cum_tokens") % ctxLen + col("n_tokens") > ctxLen).as("straddles")),
-      eager = true)
-    val advanced = packed.groupBy(col("source"))
-      .agg(max(col("cum_tokens") + col("n_tokens")).as("cum")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val merged = (cursors.map(r => r.getString(0) -> r.getLong(1)).toMap ++ advanced)
-      .map { case (src, cum) => Row(src, cum) }.toSeq
-    writeDim(s, cursorDir, cursorSchema, merged, batchId)
-    packed
+        (col("cum_tokens") % ctxLen + col("n_tokens") > ctxLen).as("straddles"),
+        lead(col("doc_id"), 1).over(w).isNull.as("last")))
+    // a source's cursor advances to its last survivor's end; this job
+    // fills the pin before the output append reads it
+    val advanced = packed.filter(col("last"))
+      .select(col("source"), col("cum_tokens") + col("n_tokens")).collect()
+      .map(r => r.getString(0) -> r.getLong(1))
+    val cursors = before.cursors ++ advanced
+    writeDim(s, cursorDir, cursorSchema,
+      cursors.toSeq.map { case (src, cum) => Row(src, cum) }, batchId)
+    dims = Some(Dims(batchId, buckets, cursors))
+    packed.drop("last")
   }
 
   /** Drive a document stream end-to-end, writing each batch's packed

@@ -27,9 +27,9 @@ import graft.operators.Dedup
   * keyed by (band_id, band_val) — corpus-sized state lives on disk
   * where a 100 TB/day stream needs it, NOT in the state store (a
   * RocksDB state holding every band of the corpus is the wrong
-  * tool); the per-batch probe is an equi-join whose left side is one
-  * micro-batch — broadcastable — so the incremental cost per batch
-  * is a banded index seek, not a corpus scan-and-shuffle.
+  * tool); the per-batch probe is an equi-join whose broadcast side is
+  * one micro-batch's bands, so the incremental cost per batch is a
+  * banded index seek, not a corpus scan-and-shuffle.
   *
   * Replay idempotency is the batch-keyed contract of [[StreamingState]]. */
 class StreamingLshDedup(val indexDir: String) {
@@ -42,9 +42,10 @@ class StreamingLshDedup(val indexDir: String) {
   /** One micro-batch: returns this batch's candidate verdicts
     * (doc_a < doc_b, n_bands — q23's output shape) and writes the
     * batch's bands to the index under `batch=<batchId>` (overwrite —
-    * a replay of the same id is idempotent). The
-    * verdicts are materialized BEFORE the write so the probe never
-    * sees its own output. */
+    * a replay of the same id is idempotent). The verdicts' history
+    * is listed before the write and pruned to ids before `batchId`,
+    * so the probe never sees its own output; the verdict pin is
+    * filled by its first reader. */
   def processBatch(arrivals: DataFrame, textCol: String,
       idCol: String, batchId: Long): DataFrame = {
     val s = arrivals.sparkSession
@@ -52,18 +53,22 @@ class StreamingLshDedup(val indexDir: String) {
       Dedup.minhashSignatures(
         Dedup.shingles(arrivals, textCol, idCol), idCol), idCol)
       .select(col(idCol).cast("long").as("doc_id"),
-        col("band_id").cast("int"), col("band_val")), eager = true)
+        col("band_id").cast("int"), col("band_val")))
     val target = StreamingState.history(s, indexDir, bandSchema, Some(batchId))
       .unionByName(newBands)
-    val verdicts = Dedup.stage(newBands
-      .select(col("doc_id").as("p_id"), col("band_id"), col("band_val"))
-      .join(target.select(col("doc_id").as("t_id"), col("band_id"),
-        col("band_val")), Seq("band_id", "band_val"))
+    // the batch's bands are the broadcast side: the index is scanned
+    // once and never shuffled; one exchange keyed by the pair counts
+    // its distinct bands
+    val verdicts = Dedup.stage(target
+      .select(col("doc_id").as("t_id"), col("band_id"), col("band_val"))
+      .join(broadcast(newBands.select(col("doc_id").as("p_id"), col("band_id"),
+        col("band_val"))), Seq("band_id", "band_val"))
       .filter(col("p_id") =!= col("t_id"))
       .select(least(col("p_id"), col("t_id")).as("doc_a"),
         greatest(col("p_id"), col("t_id")).as("doc_b"), col("band_id"))
+      .repartition(col("doc_a"), col("doc_b"))
       .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count_distinct(col("band_id")).as("n_bands")), eager = true)
+      .agg(count_distinct(col("band_id")).as("n_bands")))
     StreamingState.append(newBands, indexDir, batchId)
     verdicts
   }

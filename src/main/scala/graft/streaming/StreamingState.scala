@@ -1,7 +1,9 @@
 package graft.streaming
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
@@ -107,7 +109,11 @@ object StreamingState {
     * LOUDLY on a legacy flat layout (stray `*.parquet` directly under
     * the root): treating pre-batch-layout state as empty would restart
     * ids at 0 alongside the old files and silently drop all history. */
-  def batchIds(root: String): Seq[Long] = {
+  def batchIds(root: String): Seq[Long] = committed(root).map(_._1)
+
+  /** The committed batches under `root`, ascending: each id with its
+    * dir and the parquet parts directly under it (see [[batchIds]]). */
+  private def committed(root: String): Seq[(Long, Path, Array[FileStatus])] = {
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(hadoopConf)
     if (!fs.exists(rootPath) || !fs.getFileStatus(rootPath).isDirectory) Seq.empty
@@ -122,12 +128,13 @@ object StreamingState {
           "history. Migrate the files into batch=0 (or point at a fresh root).")
       entries.flatMap { e =>
         e.getPath.getName match {
-          case BatchRe(id) if e.isDirectory &&
-            fs.listStatus(e.getPath).exists(s =>
-              s.isFile && s.getPath.getName.endsWith(".parquet")) => Some(id.toLong)
+          case BatchRe(id) if e.isDirectory =>
+            val parts = fs.listStatus(e.getPath)
+              .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+            if (parts.nonEmpty) Some((id.toLong, e.getPath, parts)) else None
           case _ => None
         }
-      }.sorted
+      }.sortBy(_._1)
     }
   }
 
@@ -154,12 +161,27 @@ object StreamingState {
 
   /** The committed batches of `root` strictly before `before` (all of
     * them when `before` is None) as one frame, or an empty frame with
-    * `schema` when there are none: the history a batch may see. */
+    * `schema` when there are none: the history a batch may see.
+    *
+    * The scan's file index is built from the parts [[committed]]
+    * listed, so Spark lists nothing: handed more than
+    * `parallelPartitionDiscovery.threshold` (32) dirs, its own listing
+    * would run a Spark job on every read. */
   def history(s: SparkSession, root: String, schema: StructType,
       before: Option[Long]): DataFrame = {
-    val dirs = batchDirs(root, before)
-    if (dirs.nonEmpty) s.read.schema(schema).parquet(dirs: _*)
-    else s.createDataFrame(s.sparkContext.emptyRDD[Row], schema)
+    val batches = committed(root).filter { case (id, _, _) => before.forall(id < _) }
+    if (batches.isEmpty) s.createDataFrame(s.sparkContext.emptyRDD[Row], schema)
+    else {
+      val parts = batches.map { case (_, dir, files) => dir -> files }.toMap
+      val listed = new FileStatusCache {
+        override def getLeafFiles(path: Path): Option[Array[FileStatus]] = parts.get(path)
+        override def putLeafFiles(path: Path, files: Array[FileStatus]): Unit = ()
+        override def invalidateAll(): Unit = ()
+      }
+      val index = new InMemoryFileIndex(s, batches.map(_._2), Map.empty, Some(schema), listed)
+      s.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema, schema,
+        None, new ParquetFileFormat, Map.empty)(s))
+    }
   }
 
   /** Write batch `batchId`'s contribution to `root` with overwrite, so a

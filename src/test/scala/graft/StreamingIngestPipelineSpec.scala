@@ -2,13 +2,15 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.GraftInternals
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Curation, Dedup}
 import graft.queries.CdcQueries
-import graft.streaming.{Streaming, StreamingIngestPipeline}
+import graft.streaming.{Streaming, StreamingIngestPipeline, StreamingState}
 import graft.streaming.StreamingIngestPipeline.IngestDoc
 
 /** The ingest-to-packed composition: every stage of the streamed
@@ -38,9 +40,46 @@ class StreamingIngestPipelineSpec extends SparkSpec {
   private val MinBands = 1L
   private val CtxLen = 512
 
-  test("streamed composition equals the batch formulation per stage") {
+  // 60 docs: unique 25-token bodies except three planted exact-dup
+  // pairs (CDC-gate kills) and two near-dup pairs (suffix-perturbed:
+  // pass CDC, die at the LSH gate); pair members are ADJACENT ids so
+  // a stride-2 batching co-batches every pair while an offset stride
+  // straddles them — under the former df>=2-over-the-batch rule the
+  // co-batched run rejected BOTH members (survivor set depended on
+  // boundary placement); the causal rule keeps the first copy
+  // either way, and the LSH drop-later rule is invariant under the
+  // monotone-id ingest contract
+  private val Pairs = Set(10L, 30L, 50L)
+  private val NearPairs = Set(20L, 40L)
+  private lazy val synthetic: Seq[IngestDoc] = {
+    def body(i: Long) = (1 to 25).map(j => s"w${i}_$j token$j").mkString(" ")
+    (0L until 60L).map { i =>
+      val text =
+        if (Pairs.contains(i - 1)) body(i - 1)
+        else if (NearPairs.contains(i - 1))
+          body(i - 1) + Seq.fill(4)(" appendix clause").mkString + " fim"
+        else body(i)
+      IngestDoc(i, s"s${i % 3}", i * 300000L, text)
+    }
+  }
+
+  /** Run `batches` through a fresh pipeline object on `root`, one
+    * micro-batch per element, from `input` (a new source unless given)
+    * and the streaming checkpoint under `root`. */
+  private def drive(root: String, costMicro: Long, batches: Seq[Seq[IngestDoc]],
+      input: Option[MemoryStream[IngestDoc]] = None): Unit = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
+    val pipe = new StreamingIngestPipeline(root, costMicro, Cap, DupShareMax,
+      MinBands, CtxLen)
+    val in = input.getOrElse(MemoryStream[IngestDoc])
+    val q = pipe.run(in.toDS(), s"$root/packed", s"$root/ckpt")
+    try batches.foreach { b => in.addData(b); q.processAllAvailable() }
+    finally q.stop()
+  }
+
+  test("streamed composition equals the batch formulation per stage") {
+    import spark.implicits._
 
     val base = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("source"), col("text")).collect()
@@ -59,13 +98,7 @@ class StreamingIngestPipelineSpec extends SparkSpec {
     val union = batches.flatten
 
     val root = Files.createTempDirectory("ingest_pipe").toString
-    val pipe = new StreamingIngestPipeline(root, Cost, Cap, DupShareMax,
-      MinBands, CtxLen)
-    val input = MemoryStream[IngestDoc]
-    val q = pipe.run(input.toDS(), s"$root/packed", s"$root/ckpt")
-    try {
-      batches.foreach { b => input.addData(b); q.processAllAvailable() }
-    } finally q.stop()
+    drive(root, Cost, batches)
 
     // ---- stage 1 expected: sequential bucket fold on the union ----
     val expAdmitted = union.groupBy(_.source).flatMap { case (_, ds) =>
@@ -156,39 +189,12 @@ class StreamingIngestPipelineSpec extends SparkSpec {
   }
 
   test("survivors and packed layout are invariant to batch boundaries") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // 60 docs: unique 25-token bodies except three planted exact-dup
-    // pairs (CDC-gate kills) and two near-dup pairs (suffix-perturbed:
-    // pass CDC, die at the LSH gate); pair members are ADJACENT ids so
-    // a stride-2 batching co-batches every pair while an offset stride
-    // straddles them — under the former df>=2-over-the-batch rule the
-    // co-batched run rejected BOTH members (survivor set depended on
-    // boundary placement); the causal rule keeps the first copy
-    // either way, and the LSH drop-later rule is invariant under the
-    // monotone-id ingest contract
-    def body(i: Long) = (1 to 25).map(j => s"w${i}_$j token$j").mkString(" ")
-    val pairs = Set(10L, 30L, 50L)
-    val nearPairs = Set(20L, 40L)
-    val docs = (0L until 60L).map { i =>
-      val text =
-        if (pairs.contains(i - 1)) body(i - 1)
-        else if (nearPairs.contains(i - 1))
-          body(i - 1) + Seq.fill(4)(" appendix clause").mkString + " fim"
-        else body(i)
-      IngestDoc(i, s"s${i % 3}", i * 300000L, text)
-    }
+    val docs = synthetic
     // admission sized to admit everything: the invariance under test
     // is the dedup gates', not load shedding's
     def runWith(batching: Seq[Seq[IngestDoc]]): (Seq[Long], Map[Long, (Long, Long)]) = {
       val root = Files.createTempDirectory("ingest_inv").toString
-      val pipe = new StreamingIngestPipeline(root, costMicro = 1000L,
-        capMicro = 20000000L, DupShareMax, MinBands, CtxLen)
-      val input = MemoryStream[IngestDoc]
-      val q = pipe.run(input.toDS(), s"$root/packed", s"$root/ckpt")
-      try {
-        batching.foreach { b => input.addData(b); q.processAllAvailable() }
-      } finally q.stop()
+      drive(root, 1000L, batching)
       val packed = spark.read.parquet(s"$root/packed").collect()
         .map(r => r.getAs[Long]("doc_id") ->
           ((r.getAs[Long]("cum_tokens"), r.getAs[Long]("seq_id"))))
@@ -207,15 +213,13 @@ class StreamingIngestPipelineSpec extends SparkSpec {
     }
     // the first copy of every planted pair survives, the clone dies —
     // exact pairs at the CDC gate, near pairs at the LSH gate
-    (pairs ++ nearPairs).foreach { p =>
+    (Pairs ++ NearPairs).foreach { p =>
       assert(runs.head._1.contains(p), s"first copy $p must survive")
       assert(!runs.head._1.contains(p + 1), s"clone ${p + 1} must die")
     }
   }
 
   test("a 1,000-source batch carries every pack cursor into the next batch") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
     // one doc per source per batch: batch 1 packs every source on top
     // of the |sources|-row cursor dim batch 0 left behind, so the
     // cursor read-back must not grow with the number of sources
@@ -226,13 +230,7 @@ class StreamingIngestPipelineSpec extends SparkSpec {
       (0 until sources).map(i => doc(i.toLong, i)),
       (0 until sources).map(i => doc((sources + i).toLong, i)))
     val root = Files.createTempDirectory("ingest_wide").toString
-    val pipe = new StreamingIngestPipeline(root, costMicro = 1000L,
-      capMicro = 20000000L, DupShareMax, MinBands, CtxLen)
-    val input = MemoryStream[IngestDoc]
-    val q = pipe.run(input.toDS(), s"$root/packed", s"$root/ckpt")
-    try {
-      batches.foreach { b => input.addData(b); q.processAllAvailable() }
-    } finally q.stop()
+    drive(root, 1000L, batches)
 
     val packed = spark.read.parquet(s"$root/packed").collect()
       .map(r => (r.getAs[String]("source"), r.getAs[Long]("doc_id"),
@@ -244,5 +242,59 @@ class StreamingIngestPipelineSpec extends SparkSpec {
       assert(first._4 === 0L, s"$src starts at 0")
       assert(second._4 === first._3, s"$src resumes at its batch-0 cursor")
     }
+  }
+
+  test("a steady-state micro-batch runs at most 20 Spark jobs") {
+    // every job of a micro-batch carries its batch id; batch 0 plans
+    // cold, batches 1 and 2 are the steady state
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Long, Int]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
+          .foreach { b => jobs.merge(b.toLong, 1, _ + _); () }
+    }
+    GraftInternals.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      drive(Files.createTempDirectory("ingest_jobs").toString, 1000L, synthetic.grouped(20).toSeq)
+      GraftInternals.drainListenerBus(spark)
+    } finally spark.sparkContext.removeSparkListener(l)
+    Seq(1L, 2L).foreach { b =>
+      assert(jobs.getOrDefault(b, 0) > 0, s"batch $b ran no job")
+      assert(jobs.get(b) <= 20, s"batch $b ran ${jobs.get(b)} jobs")
+    }
+  }
+
+  test("a fresh instance resumes from the committed dims as the unbroken run does") {
+    // a cost above the per-source arrival gap fills each bucket, so the
+    // third batch sheds only if the carried levels are right; the pack
+    // cursors carry every source's running offset
+    val batches = synthetic.grouped(20).toSeq
+    val cost = 2000000L
+    val rootU = Files.createTempDirectory("ingest_unbroken").toString
+    drive(rootU, cost, batches)
+    val rootR = Files.createTempDirectory("ingest_restart").toString
+    val input = {
+      import spark.implicits._
+      implicit val sqlCtx = spark.sqlContext
+      MemoryStream[IngestDoc]
+    }
+    drive(rootR, cost, batches.take(2), Some(input))
+    // the same source and checkpoint, a new pipeline object: its
+    // driver-held dims start empty
+    drive(rootR, cost, batches.drop(2), Some(input))
+
+    def rows(dir: String): Map[Long, Set[Seq[Any]]] =
+      StreamingState.batchIds(dir).map { id =>
+        id -> spark.read.parquet(StreamingState.batchDir(dir, id)).collect().map(_.toSeq).toSet
+      }.toMap
+    for (sub <- Seq("packed", "bucket_state", "pack_cursor")) {
+      val u = rows(s"$rootU/$sub")
+      assert(u.keySet === Set(0L, 1L, 2L), sub)
+      assert(rows(s"$rootR/$sub") === u, s"$sub differs after the restart")
+    }
+    val packed = rows(s"$rootU/packed")
+    assert(packed(2L).nonEmpty, "the last batch packs survivors")
+    assert(packed.values.map(_.size).sum < synthetic.size - 5, "admission must shed")
   }
 }

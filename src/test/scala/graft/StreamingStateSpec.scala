@@ -4,6 +4,8 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.GraftInternals
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -27,7 +29,9 @@ import graft.streaming.StreamingState
   *    and an unknown version fails LOUDLY on both read and write;
   *  - `history` returns only ids strictly before the batch, or an
   *    empty frame with the given schema, and no `src/main` file but
-  *    StreamingState.scala drives foreachBatch.
+  *    StreamingState.scala drives foreachBatch;
+  *  - reading history costs no more jobs at 40 batch dirs than at 5
+  *    (past Spark's parallel-listing threshold of 32 paths).
   */
 class StreamingStateSpec extends SparkSpec {
 
@@ -69,6 +73,32 @@ class StreamingStateSpec extends SparkSpec {
     assert(vals(Some(1L)) === Seq(1L, 2L))
     assert(vals(Some(0L)) === Seq.empty, "no id before 0")
     assert(hist(schemed, Some(0L)).schema === schema)
+  }
+
+  test("a history read launches no more jobs at 40 batch dirs than at 5") {
+    import spark.implicits._
+    val schema = StructType(Seq(StructField("v", LongType)))
+    def jobsToCount(n: Int): (Long, Int) = {
+      val root = s"${Files.createTempDirectory("ss_hist")}/root$n"
+      (0 until n).map(i => (i.toLong, i.toLong)).toDF("v", "batch")
+        .write.partitionBy("batch").parquet(root)
+      assert(StreamingState.batchIds(root) === (0L until n.toLong))
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val l = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+      }
+      GraftInternals.drainListenerBus(spark)
+      spark.sparkContext.addSparkListener(l)
+      try {
+        val rows = StreamingState.history(spark, root, schema, Some(n.toLong)).count()
+        GraftInternals.drainListenerBus(spark)
+        (rows, jobs.get)
+      } finally spark.sparkContext.removeSparkListener(l)
+    }
+    val (rows5, jobs5) = jobsToCount(5)
+    val (rows40, jobs40) = jobsToCount(40)
+    assert(rows5 === 5L && rows40 === 40L)
+    assert(jobs40 <= jobs5, s"40 dirs: $jobs40 jobs, 5 dirs: $jobs5")
   }
 
   test("foreachBatch is driven only by StreamingState.run") {
