@@ -3,40 +3,39 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.queries.CurationFunnelQueries
+
 /** End-to-end scale bench for the composed [[CurationPipeline]] — the
   * artifact a user actually ships (`curateExtended`: exact dedup ->
   * line dedup -> quality/LM gate -> decontaminate -> near-dup cluster
   * -> dup-gram filter -> DSIR -> epoch shuffle -> packing). Every
   * stage is individually benched in SURVEY §5; this measures the
-  * COMPOSITION, where the multi-consumer staging either pays or
-  * re-scans, and prints ONE JSON line with total wall-clock and the
+  * COMPOSITION and prints ONE JSON line with total wall-clock and the
   * per-stage breakdown.
   *
-  * Usage: runMain graft.CurationBench <docsDir> [mode]
-  *  - mode `stages` (default): materialize each stage of
-  *    [[CurationPipeline.curateExtendedStages]] in order through a
-  *    noop sink. With staging active each stage's localCheckpoint is
-  *    reused by its consumers, so write k's wall-clock is stage k's
-  *    INCREMENTAL cost and the sum is the end-to-end total.
-  *  - mode `fused`: one `curateExtended` call -> one noop write (no
-  *    per-stage attribution — the A/B total for the staged walk).
+  * Usage: runMain graft.CurationBench <docsDir>
+  *
+  * It builds and writes each stage of
+  * [[CurationPipeline.curateExtendedStages]] in order through a noop
+  * sink. Each multi-consumer frame is a parquet stage written when its
+  * stage is built and read by its consumers, so stage k's wall-clock
+  * (build + write) is its INCREMENTAL cost and the sum is the
+  * end-to-end total.
   * Env knobs (same convention as ScaleBench):
-  *  - SPARK_GRAFT_STAGE_MIN_BYTES -> spark.graft.stageMinInputBytes
-  *    (0 forces staging ON, a huge value forces it OFF — the A/B
-  *    switch for the multi-consumer staging verdict)
-  *  - SPARK_GRAFT_STAGING_DIR -> spark.graft.stagingDir (parquet
-  *    staging instead of localCheckpoint)
-  *  - SPARK_GRAFT_CUR_TAIL_MILLI -> the LM-surprisal cut (milli-bits/
-  *    token; corpus-relative — see the site comment)
-  *  - SPARK_GRAFT_CUR_TAIL_PCT -> derive the cut as the corpus's own
-  *    exact percentile instead (the shipped q256 self-tuning mode;
-  *    overrides TAIL_MILLI)
+  *  - SPARK_GRAFT_STAGING_DIR -> spark.graft.stagingDir (where the
+  *    parquet stages land, instead of the JVM tmpdir)
+  *  - SPARK_GRAFT_CUR_TAIL_PCT -> the LM-surprisal cut is the corpus's
+  *    own exact percentile (the q256 rule); with neither this nor
+  *    TAIL_MILLI set, the q256 percentile
+  *    ([[graft.queries.CurationFunnelQueries.TailPct]], 95)
+  *  - SPARK_GRAFT_CUR_TAIL_MILLI -> a fixed LM-surprisal cut instead
+  *    (milli-bits/token; corpus-relative — see the site comment;
+  *    TAIL_PCT overrides it)
   *  - SPARK_GRAFT_CUR_DUP_PCT -> derive the REPETITION cut as a
   *    corpus percentile too (the q257 rule, Config.dupTailPct) —
   *    with both pct knobs the quality gate is fully self-tuning
   *  - SPARK_GRAFT_CUR_COUNTS=1 -> also report per-stage survivor
-  *    counts (stages mode; counted after timing, over the staged
-  *    frames)
+  *    counts (counted after timing, over the staged frames)
   * The near-dup stage's jaccard shape is measured, not configured
   * (see [[graft.operators.Dedup.jaccardPairs]]), as in ScaleBench.
   *
@@ -48,9 +47,8 @@ import org.apache.spark.sql.functions._
   */
 object CurationBench {
   def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: CurationBench <docsDir> [stages|fused]")
+    require(args.length == 1, "usage: CurationBench <docsDir>")
     val dir = args(0)
-    val mode = if (args.length > 1) args(1) else "stages"
     val spark = Sessions.builder("32")
       // same AQE sizing rationale as ScaleBench: high initial count,
       // AQE coalesces small stages back down
@@ -59,9 +57,6 @@ object CurationBench {
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    sys.env.get("SPARK_GRAFT_STAGE_MIN_BYTES").foreach { v =>
-      spark.conf.set(graft.operators.Dedup.StageMinInputBytesConf, v)
-    }
     sys.env.get("SPARK_GRAFT_STAGING_DIR").foreach { d =>
       spark.conf.set(graft.operators.Dedup.StagingDirConf, d)
     }
@@ -74,16 +69,14 @@ object CurationBench {
         |  i -> array_join(slice(split(text, ' +'), i * 12 + 1, 12), ' '))""".stripMargin)
     val dsirTarget = Some(col("doc_id") % 11 === 3)
     // LM-tail threshold is CORPUS-RELATIVE (a 100 TB run tunes it to
-    // cut the worst few percent): the pipeline default (5200, sized to
-    // the template gate corpora at ~3-4k milli-bits/token) sits BELOW
-    // the zipf rungs' ~10.5 bits/token mean and would cut everything,
-    // so scale runs pass the rung's own tail here
-    val tailMilli = sys.env.get("SPARK_GRAFT_CUR_TAIL_MILLI")
-      .map(_.toLong).getOrElse(5200L)
-    // SPARK_GRAFT_CUR_TAIL_PCT engages the pipeline's own
-    // corpus-relative percentile mode (q256's rule) instead of the
-    // manual milli value — the self-tuning form a scale run wants
+    // cut the worst few percent): the pipeline's fixed default (5200,
+    // sized to the template gate corpora at ~3-4k milli-bits/token)
+    // sits BELOW the scale rungs' mean (the x16 flat rung kept 0 of
+    // 77,856 docs; the zipf rungs sit at ~10.5 bits/token), so the
+    // default is q256's percentile rule and a fixed cut is opt-in
+    val tailMilli = sys.env.get("SPARK_GRAFT_CUR_TAIL_MILLI").map(_.toLong)
     val tailPct = sys.env.get("SPARK_GRAFT_CUR_TAIL_PCT").map(_.toInt)
+      .orElse(if (tailMilli.isEmpty) Some(CurationFunnelQueries.TailPct) else None)
     // SPARK_GRAFT_CUR_DUP_PCT engages the corpus-relative REPETITION
     // cut (q257's rule — Config.dupTailPct): with both pct knobs set
     // the quality gate is fully self-tuning, no corpus-sized constant
@@ -92,36 +85,30 @@ object CurationBench {
 
     val t0 = System.nanoTime()
     val stages = CurationPipeline.curateExtendedStages(docs, evalPred, segs,
-      dsirTarget, surprisalTailMilli = tailMilli, surprisalTailPct = tailPct,
-      cfg = CurationPipeline.Config(dupTailPct = dupPct))
-    val stageTimes: Seq[(String, Double)] = mode match {
-      case "fused" =>
-        stages.last._2().write.format("noop").mode("overwrite").save()
-        Seq("fused_total" -> (System.nanoTime() - t0) / 1e9)
-      case _ =>
-        stages.map { case (name, thunk) =>
-          val ts = System.nanoTime()
-          thunk().write.format("noop").mode("overwrite").save()
-          val t = (System.nanoTime() - ts) / 1e9
-          System.err.println(f"[curationbench] $name: $t%.2f s")
-          name -> t
-        }
+      dsirTarget, surprisalTailMilli = tailMilli.getOrElse(CurationFunnelQueries.TailMilli),
+      surprisalTailPct = tailPct, cfg = CurationPipeline.Config(dupTailPct = dupPct))
+    val stageTimes = stages.map { case (name, thunk) =>
+      val ts = System.nanoTime()
+      thunk().write.format("noop").mode("overwrite").save()
+      val t = (System.nanoTime() - ts) / 1e9
+      System.err.println(f"[curationbench] $name: $t%.2f s")
+      name -> t
     }
     val totalS = (System.nanoTime() - t0) / 1e9
-    // survivor counts OUTSIDE the timed section (stages mode only:
-    // each staged frame is already materialized, so the recount rides
-    // the checkpoints) — the context that says which stages did work
+    // survivor counts OUTSIDE the timed section (each staged frame is
+    // already written, so the recount reads the stages) — the context
+    // that says which stages did work
     val rowsJson =
-      if (mode != "fused" && sys.env.get("SPARK_GRAFT_CUR_COUNTS").contains("1"))
+      if (sys.env.get("SPARK_GRAFT_CUR_COUNTS").contains("1"))
         stages.map { case (name, thunk) => "\"" + name + s"""\":${thunk().count()}""" }
           .mkString(""","rows":{""", ",", "}")
       else ""
     val stagesJson = stageTimes
       .map { case (k, v) => "\"" + k + f"""\":$v%.2f""" }
       .mkString("{", ",", "}")
-    println(f"""{"mode":"$mode","dir":"$dir","total_s":$totalS%.1f,""" +
+    println(f"""{"dir":"$dir","total_s":$totalS%.1f,""" +
       tailPct.map(p => s""""tail_pct":$p,""")
-        .getOrElse(f""""tail_milli":$tailMilli,""") +
+        .getOrElse(s""""tail_milli":${tailMilli.get},""") +
       dupPct.map(p => s""""dup_pct":$p,""").getOrElse("") +
       s""""stages":$stagesJson$rowsJson}""")
     spark.stop()

@@ -17,10 +17,10 @@ import graft.operators.{Curation, Dedup}
   *     -> context-window sequence packing
   *
   * Each stage is one of the independently-tested operators; this
-  * object only wires them. Every stage is a declarative plan — the
-  * whole flow is one DAG Catalyst optimizes together, and each
-  * survivor set is just a column filter, so nothing materializes
-  * until the packed layout is written.
+  * object only wires them. Each survivor set is a semi/anti join over
+  * declarative plans, and every frame with more than one consumer is
+  * written once as a parquet stage ([[Dedup.stageParquet]]) while the
+  * flow is built, so building it runs Spark jobs.
   *
   * Each signal table is built once and every gate reads it, as in the
   * funnel oracle's CTE chain (`CurationFunnelQueries`; [[curate]] has
@@ -54,22 +54,23 @@ object CurationPipeline {
       splitTrainPct: Int = 80,
       splitValidPct: Int = 87)
 
-  /** Adaptive multi-consumer staging for the pipeline's survivor
-    * chain: every stage output below feeds 2-3 consumers (a signal
-    * computation PLUS the semi/anti join keeping the survivors), and
-    * plan reuse does not fire across joins — unstaged, stage k's
-    * filter re-runs every upstream stage once per consumer, so the
-    * earliest stages re-execute MANY times across the whole flow (the
-    * zipf x64 A/B in SURVEY §5 prices this). Past
-    * [[Dedup.StageMinInputBytes]] of scan input each multi-consumer
-    * frame is staged ([[Dedup.stage]]: localCheckpoint, or parquet
-    * under `spark.graft.stagingDir`); below it the fixed
-    * materialization cost never pays back and the flow stays one
-    * fused DAG Catalyst optimizes together (the gate corpora). A
-    * scan-less input (in-memory test frames) has an UNKNOWN footprint
-    * and takes the staged shape — both shapes are row-identical. */
-  private def stageAt(big: Boolean)(df: DataFrame): DataFrame =
-    if (big) Dedup.stage(df) else df
+  // Every multi-consumer frame of the flow is staged once, at every
+  // corpus size: each stage output feeds 2-3 consumers (a signal
+  // computation plus the semi/anti join keeping the survivors), plan
+  // reuse does not fire across joins, and unstaged, stage k re-runs
+  // every upstream stage once per consumer (near-dup clustering once
+  // per label-propagation round). A parquet stage, not a
+  // localCheckpoint pin: a checkpointed frame carries its origin plan's
+  // inflated size estimates into later join choices. Measured on a
+  // 4-core box: `CurationBench` at sf0.1 took 43.4 s and 43.8 s with
+  // the frames fused (unstaged below 8 MiB of scan input) and 19.8 s
+  // and 21.9 s staged; the sf0.001 end-to-end spec 17.8 s fused and
+  // 5.7 s staged. On the q253 funnel (the traced
+  // `dedup_curation` benchmark run), lazy localCheckpoint pins read
+  // 94 construct jobs, 168 MB input and 24.97 s, eager pins 102 jobs,
+  // 190 MB and 25.58 s, and parquet stages 90 jobs, 87 MB and 23.07 s.
+  // The stages land under `spark.graft.stagingDir` (else the JVM
+  // tmpdir) in the caller's pin scope, which deletes them.
 
   /** `evalPred` marks held-out docs (they are removed from the output
     * and define the contamination set). Returns the packed layout of
@@ -77,33 +78,29 @@ object CurationPipeline {
     * seq_id, offset_in_seq, straddles). */
   def curate(docs: DataFrame, evalPred: Column,
       cfg: Config = Config()): DataFrame = {
-    val st = stageAt(Dedup.atScale(docs)) _
     // 1. exact dedup: cheapest first, everything downstream shrinks
-    val reps = st(Dedup.exact(docs, "text", "doc_id"))
+    val reps = Dedup.stageParquet(Dedup.exact(docs, "text", "doc_id"))
 
     // 2. quality gate: integer repetition thresholds (fixed, or the
     // corpus-relative dupTailPct percentile rule)
     val quality = qualitySurvivors(
-      Curation.tokenStats(Curation.termCounts(reps, "text", "doc_id"), "doc_id"), cfg, st)
-    val qualified = st(reps.join(quality, Seq("doc_id"), "left_semi"))
+      Curation.tokenStats(Curation.termCounts(reps, "text", "doc_id"), "doc_id"), cfg)
+    val qualified = Dedup.stageParquet(reps.join(quality, Seq("doc_id"), "left_semi"))
 
     // 3. decontamination: drop training docs overlapping the eval set;
     // the qualified docs' shingles feed 4a too, recomputed per consumer
     val qsh = Dedup.shingles(qualified, "text", "doc_id")
-    val clean = st(decontaminate(qualified, qsh, evalPred, cfg))
+    val clean = Dedup.stageParquet(decontaminate(qualified, qsh, evalPred, cfg))
 
     // 4a. near-dup clustering: keep one representative per cluster
-    val clustered = st(keepClusterReps(clean, qsh, cfg))
+    val clustered = Dedup.stageParquet(keepClusterReps(clean, qsh, cfg))
 
     // 4b. exact-substring signal AFTER clustering (Lee et al. 2022):
     // catches docs mostly built of n-grams duplicated across OTHER
     // surviving docs (boilerplate below the Jaccard threshold).
     // Running it after rep-keeping means duplicated content keeps its
     // one representative instead of losing every copy.
-    val gramDups = Curation.dupNgrams(clustered, "text", "doc_id", cfg.dupGramN)
-      .filter(col("n_dup_grams") * 100 >= col("n_grams") * cfg.dupSharePct)
-      .select(col("doc_id"))
-    val unique = clustered.join(gramDups, Seq("doc_id"), "left_anti")
+    val unique = dropDupGrams(clustered, cfg)
 
     // 5. per-source quota downsample, then 6. pack into context windows
     val sampled = Curation.stratifiedSample(unique, "source", "doc_id", cfg.sampleDenom)
@@ -130,8 +127,7 @@ object CurationPipeline {
     *     -> EPOCH SHUFFLE (q131) and packing in shuffled order — the
     *        layout a training run actually reads.
     *
-    * `segs` is the line segmentation (array<string> over `text`).
-    * Still one declarative DAG below the staging threshold; each
+    * `segs` is the line segmentation (array<string> over `text`). Each
     * survivor set is a semi/anti join and the text rewrite is the only
     * stage that materializes a new column. */
   def curateExtended(docs: DataFrame, evalPred: Column, segs: Column,
@@ -172,11 +168,11 @@ object CurationPipeline {
 
   /** `df`'s rows below the cut on `valueCol`: the fixed `cut`, or with
     * `pct` set the frame's own [[valueTailThreshold]] (one extra
-    * dim-sized pass; the frame is read twice, so it goes through `st`). */
-  private def belowCut(df: DataFrame, valueCol: String, cut: Long, pct: Option[Int],
-      st: DataFrame => DataFrame): DataFrame = pct match {
+    * dim-sized pass; the frame is read twice, so it is staged). */
+  private def belowCut(df: DataFrame, valueCol: String, cut: Long,
+      pct: Option[Int]): DataFrame = pct match {
     case Some(p) =>
-      val staged = st(df)
+      val staged = Dedup.stageParquet(df)
       staged.crossJoin(broadcast(valueTailThreshold(staged, valueCol, p)))
         .filter(col(valueCol) < col("thr"))
     case None => df.filter(col(valueCol) < cut)
@@ -185,9 +181,8 @@ object CurationPipeline {
   /** The quality-gate survivor ids of a [[Curation.tokenStats]] frame:
     * the repetition cut (fixed `maxDupE6`, or the `dupTailPct` rule over
     * every doc) and the structural `minTokens` floor. */
-  private def qualitySurvivors(stats: DataFrame, cfg: Config,
-      st: DataFrame => DataFrame): DataFrame =
-    belowCut(stats, "dup_token_e6", cfg.maxDupE6, cfg.dupTailPct, st)
+  private def qualitySurvivors(stats: DataFrame, cfg: Config): DataFrame =
+    belowCut(stats, "dup_token_e6", cfg.maxDupE6, cfg.dupTailPct)
       .filter(col("n_tokens") >= cfg.minTokens).select(col("doc_id"))
 
   /** `qualified`'s training docs, minus those whose eval-set share of
@@ -210,37 +205,35 @@ object CurationPipeline {
       .select(col("node").as("doc_id")), Seq("doc_id"), "left_anti")
   }
 
+  /** `df` minus the docs whose share of `dupGramN`-grams duplicated in
+    * other docs of `df` reaches `dupSharePct`. */
+  private def dropDupGrams(df: DataFrame, cfg: Config): DataFrame =
+    df.join(Curation.dupNgrams(df, "text", "doc_id", cfg.dupGramN)
+      .filter(col("n_dup_grams") * 100 >= col("n_grams") * cfg.dupSharePct)
+      .select(col("doc_id")), Seq("doc_id"), "left_anti")
+
   /** The staged decomposition of [[curateExtended]]: named stage
     * outputs, each built ON FIRST ACCESS (the thunks close over lazy
     * vals) so a measurement harness ([[CurationBench]]) can
     * materialize stage k before stage k+1's construction begins and
     * attribute wall-clock per stage — the near-dup clustering stage
     * runs its label-propagation rounds EAGERLY at construction, and
-    * under AQE an eager staging (or a localCheckpoint's toRdd) runs a
-    * frame's shuffle stages at construction too, so a strict
-    * decomposition would charge all upstream work to whichever stage
-    * is built first. The last entry is [[curateExtended]]'s return
-    * value; forcing only it reproduces the plain composed flow.
-    *
-    * `staging` materializes each multi-consumer frame of the flow.
-    * `None` applies the scan-footprint rule of [[stageAt]]. A caller
-    * that forces every stage (the q253/q256 funnel gates) passes a
-    * function that stages every frame unconditionally — the funnel's
-    * writes the frame as parquet and reads it back. Either way the
-    * rows are identical. */
+    * each multi-consumer frame is written as a parquet stage when its
+    * thunk first runs, so a strict decomposition would charge all
+    * upstream work to whichever stage is built first. The last entry
+    * is [[curateExtended]]'s return value; forcing only it reproduces
+    * the plain composed flow. */
   def curateExtendedStages(docs: DataFrame, evalPred: Column, segs: Column,
       dsirTarget: Option[Column] = None,
       seed: String = "ep1", nShards: Int = 8,
       surprisalTailMilli: Long = 5200L,
       lineMinDf: Int = 2,
       surprisalTailPct: Option[Int] = None,
-      cfg: Config = Config(),
-      staging: Option[DataFrame => DataFrame] = None): Seq[(String, () => DataFrame)] = {
-    val st = staging.getOrElse(stageAt(Dedup.atScale(docs)) _)
+      cfg: Config = Config()): Seq[(String, () => DataFrame)] = {
     // 1. exact dedup, then line-level dedup rewrites the text the rest
     // of the flow sees (boilerplate lines vanish before any signal)
-    lazy val reps = st(Dedup.exact(docs, "text", "doc_id"))
-    lazy val rewritten = st {
+    lazy val reps = Dedup.stageParquet(Dedup.exact(docs, "text", "doc_id"))
+    lazy val rewritten = Dedup.stageParquet {
       val kept = Curation.lineDedup(reps, "doc_id", segs, ". ", lineMinDf)
         .select(col("doc_id"), col("kept_text"))
       reps.drop("text")
@@ -249,7 +242,7 @@ object CurationPipeline {
     }
     // the (doc, tok) table of the rewritten text: the quality gate,
     // the LM tail and DSIR read it
-    lazy val terms = st(Curation.termCounts(rewritten, "text", "doc_id"))
+    lazy val terms = Dedup.stageParquet(Curation.termCounts(rewritten, "text", "doc_id"))
 
     // 2. quality gate + 3. LM-surprisal tail drop (fixed milli-bits
     // cut, or — when `surprisalTailPct` is set — the corpus-relative
@@ -257,11 +250,11 @@ object CurationPipeline {
     // [[valueTailThreshold]]). A doc with no term row has no
     // tokenStats row either, so the quality gate drops it; among the
     // docs it keeps, keeping those below the cut drops exactly the tail.
-    lazy val qualified = st {
+    lazy val qualified = Dedup.stageParquet {
       val lmKeep = belowCut(Curation.unigramSurprisal(terms, "doc_id"),
-        "milli_bits_per_token", surprisalTailMilli, surprisalTailPct, st)
+        "milli_bits_per_token", surprisalTailMilli, surprisalTailPct)
       rewritten
-        .join(qualitySurvivors(Curation.tokenStats(terms, "doc_id"), cfg, st),
+        .join(qualitySurvivors(Curation.tokenStats(terms, "doc_id"), cfg),
           Seq("doc_id"), "left_semi")
         .join(lmKeep.select(col("doc_id")), Seq("doc_id"), "left_semi")
     }
@@ -270,15 +263,12 @@ object CurationPipeline {
     // qualified docs' shingles feed the first two, each consumer
     // recomputing them from the staged survivors
     lazy val qsh = Dedup.shingles(qualified, "text", "doc_id")
-    lazy val clean = st(decontaminate(qualified, qsh, evalPred, cfg))
-    lazy val clustered = st(keepClusterReps(clean, qsh, cfg))
+    lazy val clean = Dedup.stageParquet(decontaminate(qualified, qsh, evalPred, cfg))
+    lazy val clustered = Dedup.stageParquet(keepClusterReps(clean, qsh, cfg))
     lazy val unique = {
-      val gramDups = Curation.dupNgrams(clustered, "text", "doc_id", cfg.dupGramN)
-        .filter(col("n_dup_grams") * 100 >= col("n_grams") * cfg.dupSharePct)
-        .select(col("doc_id"))
-      val u = clustered.join(gramDups, Seq("doc_id"), "left_anti")
+      val u = dropDupGrams(clustered, cfg)
       // only multi-consumer when the DSIR stage follows
-      if (dsirTarget.isDefined) st(u) else u
+      if (dsirTarget.isDefined) Dedup.stageParquet(u) else u
     }
 
     // 7. optional DSIR target selection
@@ -292,7 +282,7 @@ object CurationPipeline {
 
     // 8. stratified sample, 9. epoch shuffle, 10. pack in read order
     lazy val packed = {
-      val sampled = st(Curation.stratifiedSample(selected, "source", "doc_id", cfg.sampleDenom)
+      val sampled = Dedup.stageParquet(Curation.stratifiedSample(selected, "source", "doc_id", cfg.sampleDenom)
         .select(col("doc_id"), col("source"), col("text")))
       val shuffled = sampled.join(
         Curation.epochShuffle(sampled.select(col("doc_id")), "doc_id", seed, nShards)

@@ -6,7 +6,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.{CurationPipeline, Tables}
 import graft.functions.Hashing
 import graft.functions.TextFunctions.{sentenceSegs, sentenceSegsSql}
-import graft.operators.Dedup
 
 /** The COMPOSED curation pipeline as a correctness gate (SURVEY.md §2
   * D′): every stage of [[CurationPipeline.curateExtendedStages]] is
@@ -32,9 +31,9 @@ import graft.operators.Dedup
   * independently end to end.
   *
   * Scale shape: identical to curateExtended (each stage is the audited
-  * operator; the funnel adds only 8 scalar aggregates), except that
-  * every multi-consumer frame is staged as parquet at any corpus size
-  * (see `funnel`), so each survivor chain materializes once.
+  * operator; the funnel adds only 8 scalar aggregates): every
+  * multi-consumer frame is a parquet stage at any corpus size, so each
+  * survivor chain materializes once.
   */
 object CurationFunnelQueries extends QueryFamily {
 
@@ -55,22 +54,15 @@ object CurationFunnelQueries extends QueryFamily {
     * cut of q253; `Some(p)` -> q256's corpus-relative percentile cut).
     *
     * Staging: the funnel forces EVERY stage thunk, and each of the 8
-    * scalar aggregates consumes the full stage prefix — unstaged (the
-    * gate corpora sit below `StageMinInputBytes`), stage k's plan
-    * re-runs every upstream stage once per consumer, and the near-dup
-    * stage's label-propagation rounds re-derive the whole prefix once
-    * per round. So the funnel passes a `staging` function that writes
-    * each multi-consumer frame once as parquet and reads it back
-    * ([[Dedup.stageParquet]]): every consumer (aggregate rows,
-    * component rounds, downstream stages) reads the staged scan,
-    * row-identical by the staging contract. Besides the survivor sets,
-    * the shared term table is staged once, as the oracle materializes
-    * `qtokc`; the shingles (`csh`) are recomputed by each of their two
-    * consumers from the staged qualified docs. Parquet, not the default
-    * localCheckpoint: a checkpointed frame carries its origin plan's
-    * inflated size estimates into later join choices. The staged dirs
-    * go with the caller's pin scope. Building the funnel touches no
-    * JVM-global state and no session conf. */
+    * scalar aggregates consumes the full stage prefix. The pipeline
+    * writes each multi-consumer frame once as a parquet stage, so every
+    * consumer (aggregate rows, component rounds, downstream stages)
+    * reads the staged scan. Besides the survivor sets, the shared term
+    * table is staged once, as the oracle materializes `qtokc`; the
+    * shingles (`csh`) are recomputed by each of their two consumers
+    * from the staged qualified docs. The staged dirs go with the
+    * caller's pin scope. Building the funnel touches no JVM-global
+    * state and no session conf. */
   private def funnel(s: SparkSession, dir: String,
       tailPct: Option[Int]): DataFrame = {
     val stages = CurationPipeline.curateExtendedStages(
@@ -79,8 +71,7 @@ object CurationFunnelQueries extends QueryFamily {
       dsirTarget = Some(col("lang") === "en"),
       seed = Seed, nShards = NShards,
       surprisalTailMilli = TailMilli, lineMinDf = LineMinDf,
-      surprisalTailPct = tailPct, cfg = cfg,
-      staging = Some(Dedup.stageParquet))
+      surprisalTailPct = tailPct, cfg = cfg)
     val rows = stages.zipWithIndex.map { case ((name, thunk), i) =>
       val df = thunk()
       // text stages: Σ length(text) pins the (possibly rewritten)

@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.Files
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -175,6 +177,37 @@ class CurationPipelineSpec extends SparkSpec {
     assert(ids.size === 5)
   }
 
+  test("curateExtendedStages stages every multi-consumer frame at any corpus size; its scope deletes them") {
+    def mk(i: Long, src: String, words: Seq[String]) =
+      (i, src, (0 until 24).map(j => words(j % words.size)).mkString(" "))
+    val inMemory = spark.createDataFrame(Seq(
+      mk(1L, "t", Seq("alpha", "beta", "gamma", "delta")),
+      mk(2L, "t", Seq("alpha", "beta", "gamma", "epsilon")),
+      mk(3L, "b", Seq("xray", "yankee", "zulu", "whiskey")),
+      mk(4L, "b", Seq("xray", "yankee", "zulu", "victor"))))
+      .toDF("doc_id", "source", "text")
+    // the parquet corpus sits below `spark.graft.stageMinInputBytes`
+    assert(!Dedup.atScale(Tables.documents(spark, sfDir)))
+    val multiConsumer = Seq("exact_dedup", "line_dedup", "quality_lm_gate",
+      "decontaminate", "neardup_cluster", "dupgram_filter")
+    val staging = Files.createTempDirectory("curation_stages").toFile
+    spark.conf.set(Dedup.StagingDirConf, staging.toString)
+    try Seq(
+        "sf0.001" -> (Tables.documents(spark, sfDir), col("lang") === "en"),
+        "in-memory" -> (inMemory, col("source") === "t")).foreach {
+      case (corpus, (docs, target)) =>
+        QueryRun.scoped(spark, "stages") {
+          val stages = CurationPipeline.curateExtendedStages(docs, col("doc_id") % 97 === 0,
+            sentenceSegs(col("text")), dsirTarget = Some(target),
+            surprisalTailMilli = 1000000L,
+            cfg = CurationPipeline.Config(minTokens = 5L, maxDupE6 = 900000L)).toMap
+          multiConsumer.foreach(name => assert(Dedup.isPin(stages(name)()), s"$name ($corpus)"))
+          assert(staging.list().nonEmpty, corpus)
+        }
+        assert(staging.list().isEmpty, s"$corpus: ${staging.list().toSeq}")
+    } finally spark.conf.unset(Dedup.StagingDirConf)
+  }
+
   test("curateExtendedStages gates read the table of their own survivor set, in every tail mode") {
     import spark.implicits._
     val evalPred = col("doc_id") % 97 === 0
@@ -205,12 +238,12 @@ class CurationPipelineSpec extends SparkSpec {
         Some(95) -> CurationPipeline.Config(),
         None -> CurationPipeline.Config(dupTailPct = Some(80)))) QueryRun.scoped(spark, "rewiring") {
       val mode = s"tailPct=$tailPct dupTailPct=${cfg.dupTailPct}"
-      // every frame pinned (as the funnel stages them), so each stage
+      // every multi-consumer frame is a parquet stage, so each stage
       // and each shared table is computed once
       val stages = CurationPipeline.curateExtendedStages(
         Tables.documents(spark, sfDir), evalPred, sentenceSegs(col("text")),
         dsirTarget = Some(target), surprisalTailMilli = tailMilli,
-        surprisalTailPct = tailPct, cfg = cfg, staging = Some(Dedup.stage(_))).toMap
+        surprisalTailPct = tailPct, cfg = cfg).toMap
 
       // quality + LM tail from termCounts(rewritten)
       val rewritten = stages("line_dedup")()
