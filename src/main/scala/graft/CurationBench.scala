@@ -21,9 +21,11 @@ import graft.queries.CurationFunnelQueries
   * stage is built and read by its consumers, so stage k's wall-clock
   * (build + write) is its INCREMENTAL cost and the sum is the
   * end-to-end total.
-  * Env knobs (same convention as ScaleBench):
-  *  - SPARK_GRAFT_STAGING_DIR -> spark.graft.stagingDir (where the
-  *    parquet stages land, instead of the JVM tmpdir)
+  * After the timed section it counts each stage's survivors (`rows`),
+  * reading the staged frames.
+  * The session is [[Sessions.scaleBuilder]]'s, as in ScaleBench
+  * (SPARK_GRAFT_STAGING_DIR -> spark.graft.stagingDir, where the
+  * parquet stages land instead of the JVM tmpdir). Env knobs:
   *  - SPARK_GRAFT_CUR_TAIL_PCT -> the LM-surprisal cut is the corpus's
   *    own exact percentile (the q256 rule); with neither this nor
   *    TAIL_MILLI set, the q256 percentile
@@ -34,8 +36,6 @@ import graft.queries.CurationFunnelQueries
   *  - SPARK_GRAFT_CUR_DUP_PCT -> derive the REPETITION cut as a
   *    corpus percentile too (the q257 rule, Config.dupTailPct) —
   *    with both pct knobs the quality gate is fully self-tuning
-  *  - SPARK_GRAFT_CUR_COUNTS=1 -> also report per-stage survivor
-  *    counts (counted after timing, over the staged frames)
   * The near-dup stage's jaccard shape is measured, not configured
   * (see [[graft.operators.Dedup.jaccardPairs]]), as in ScaleBench.
   *
@@ -49,17 +49,8 @@ object CurationBench {
   def main(args: Array[String]): Unit = {
     require(args.length == 1, "usage: CurationBench <docsDir>")
     val dir = args(0)
-    val spark = Sessions.builder("32")
-      // same AQE sizing rationale as ScaleBench: high initial count,
-      // AQE coalesces small stages back down
-      .config("spark.sql.shuffle.partitions", "512")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-      .getOrCreate()
+    val spark = Sessions.scaleBuilder("32").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    sys.env.get("SPARK_GRAFT_STAGING_DIR").foreach { d =>
-      spark.conf.set(graft.operators.Dedup.StagingDirConf, d)
-    }
 
     val docs = Tables.documents(spark, dir)
     val evalPred = col("doc_id") % 97 === 0
@@ -98,11 +89,8 @@ object CurationBench {
     // survivor counts OUTSIDE the timed section (each staged frame is
     // already written, so the recount reads the stages) — the context
     // that says which stages did work
-    val rowsJson =
-      if (sys.env.get("SPARK_GRAFT_CUR_COUNTS").contains("1"))
-        stages.map { case (name, thunk) => "\"" + name + s"""\":${thunk().count()}""" }
-          .mkString(""","rows":{""", ",", "}")
-      else ""
+    val rowsJson = stages.map { case (name, thunk) => "\"" + name + s"""\":${thunk().count()}""" }
+      .mkString("{", ",", "}")
     val stagesJson = stageTimes
       .map { case (k, v) => "\"" + k + f"""\":$v%.2f""" }
       .mkString("{", ",", "}")
@@ -110,7 +98,7 @@ object CurationBench {
       tailPct.map(p => s""""tail_pct":$p,""")
         .getOrElse(s""""tail_milli":${tailMilli.get},""") +
       dupPct.map(p => s""""dup_pct":$p,""").getOrElse("") +
-      s""""stages":$stagesJson$rowsJson}""")
+      s""""stages":$stagesJson,"rows":$rowsJson}""")
     spark.stop()
   }
 }

@@ -20,7 +20,9 @@ object QueryRun {
     * construction (building the DataFrame, including any eager jobs the
     * query runs while doing so) and execution (the noop write). On a
     * non-fatal throw `failure` holds it and the phase that threw is
-    * timed up to the throw. */
+    * timed up to the throw. Each phase's jobs carry the job description
+    * "<name> construct" or "<name> execute": the phase labels a
+    * [[JobLedger]] files them under. */
   final case class Run(name: String, constructS: Double, executeS: Double,
       failure: Option[Throwable]) {
     /** Wall seconds of a successful run; rethrows the failure. */

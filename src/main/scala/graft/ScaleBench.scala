@@ -9,9 +9,10 @@ package graft
   * Timing = min over reps of a [[QueryRun]] (same convention as
   * graft.Bench); a failed rep aborts the run.
   *
-  * Env knobs: SPARK_GRAFT_STAGING_DIR -> spark.graft.stagingDir
-  * (parquet staging instead of localCheckpoint), SPARK_GRAFT_CPUS
-  * (see [[Sessions]]). The near-dup operators pick their jaccard shape
+  * The session is [[Sessions.scaleBuilder]]'s: SPARK_GRAFT_STAGING_DIR
+  * -> spark.graft.stagingDir (parquet staging instead of
+  * localCheckpoint), SPARK_GRAFT_CPUS (see [[Sessions]]). The near-dup
+  * operators pick their jaccard shape
   * (one pass, prefix-filtered or banded) from what they measure on
   * each rung; the only input to that choice is the deployment budget
   * spark.graft.jaccardAutoBandVolume (1 bands every at-scale corpus,
@@ -24,28 +25,12 @@ object ScaleBench {
     val names = QueryRun.names(args(0))
     val dirs = args(1).split(",").map(_.trim).filter(_.nonEmpty)
     val reps = if (args.length > 2) args(2).toInt else 2
-    val spark = Sessions.builder("32")
-      // scale-correct shuffle sizing: let AQE pick per-stage
-      // parallelism downward from a high initial count instead of
-      // pinning 32 — at 64x data a fixed 32 makes every partition
-      // sort/spill superlinearly (a real cluster sizes partitions to
-      // the data, and AQE coalesces the small stages back to cheap)
-      .config("spark.sql.shuffle.partitions", "512")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
-      // local[32] wants finer post-coalesce grains than the 64 MB
-      // cluster default: keeps window/sort stages at full parallelism
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-      .getOrCreate()
+    val spark = Sessions.scaleBuilder("32").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // scale runs opt in to occupancy-driven SemDeDup cell refinement
     // (oracle-gate runs keep it off so a cap crossing fails loudly);
     // session-scoped conf, not a JVM-global property
     spark.conf.set(graft.operators.Similarity.AllowCellSplitConf, "true")
-    // optional parquet staging (the production Dedup.stage form):
-    // lets the ladder A/B localCheckpoint blocks vs on-disk staging
-    sys.env.get("SPARK_GRAFT_STAGING_DIR").foreach { d =>
-      spark.conf.set(graft.operators.Dedup.StagingDirConf, d)
-    }
 
     dirs.foreach { dir =>
       val times = names.map { n =>

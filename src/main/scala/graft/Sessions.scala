@@ -52,4 +52,22 @@ object Sessions {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.extensions", "graft.GraftExtensions")
   }
+
+  /** `builder` sized for the scale ladder (ScaleBench, CurationBench).
+    * AQE picks per-stage parallelism downward from a high initial count
+    * instead of pinning the core count: at 64x data a fixed 32 makes
+    * every partition sort/spill superlinearly (a real cluster sizes
+    * partitions to the data), and AQE coalesces the small stages back
+    * to cheap. local[32] wants finer post-coalesce grains than the
+    * 64 MB cluster default, which keeps window/sort stages at full
+    * parallelism. SPARK_GRAFT_STAGING_DIR, when set, is
+    * `spark.graft.stagingDir`, for detached runs. */
+  def scaleBuilder(defaultCpus: String): SparkSession.Builder = {
+    val b = builder(defaultCpus)
+      .config("spark.sql.shuffle.partitions", "512")
+      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
+    sys.env.get("SPARK_GRAFT_STAGING_DIR")
+      .fold(b)(b.config(graft.operators.Dedup.StagingDirConf, _))
+  }
 }

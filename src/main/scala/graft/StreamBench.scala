@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.GraftInternals
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -21,7 +19,7 @@ import graft.streaming.StreamingIngestPipeline.IngestDoc
   * dim snapshot and packed-output write. The first batch is reported
   * separately (plan + codec warmup) and excluded from p50/p95.
   * `jobs_p50` is the median Spark job count of the same steady
-  * batches (every job of a micro-batch carries its batch id), so a
+  * batches, as a [[JobLedger]] files them under their batch id, so a
   * batch that starts running more jobs shows in the JSON line.
   *
   * Usage: runMain graft.StreamBench <dir> [batchSize] [maxDocs]
@@ -58,12 +56,7 @@ object StreamBench {
     val pipe = new StreamingIngestPipeline(root, costMicro = 1000L,
       capMicro = 20000000L, dupShareMaxE6 = 950000L, minBands = 1L,
       ctxLen = 512)
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Long, Int]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
-          .foreach { b => jobs.merge(b.toLong, 1, _ + _); () }
-    })
+    val ledger = JobLedger.attach(spark)
     val input = MemoryStream[IngestDoc]
     val q = pipe.run(input.toDS(), s"$root/packed", s"$root/ckpt")
     val times = scala.collection.mutable.ArrayBuffer.empty[Double]
@@ -80,13 +73,12 @@ object StreamBench {
     } finally q.stop()
     val totalS = (System.nanoTime() - t0) / 1e9
     val packed = spark.read.parquet(s"$root/packed").count()
-    GraftInternals.drainListenerBus(spark)
     def pct(xs: Seq[Double], p: Double): Double = {
       val steady = xs.drop(1).sorted
       if (steady.isEmpty) xs.head
       else steady(math.min(steady.size - 1, (p * steady.size).toInt))
     }
-    val batchJobs = times.indices.map(i => jobs.getOrDefault(i.toLong, 0).toDouble)
+    val batchJobs = times.indices.map(i => ledger.tally(_.batchId.contains(i.toLong)).jobs.toDouble)
     println(f"""{"mode":"streaming","dir":"$dir","docs":${docs.length},""" +
       f""""batch_size":$batchSize,"batches":${times.size},""" +
       f""""total_s":$totalS%.1f,"rows_per_sec":${docs.length / totalS}%.0f,""" +

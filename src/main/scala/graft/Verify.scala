@@ -16,13 +16,21 @@ object Verify {
     val selected =
       if (only.isEmpty) SparkEntry.queries
       else SparkEntry.queries.filter { case (n, _) => only.contains(n) }
-    selected.foreach { case (name, fn) =>
-      try QueryRun.scoped(spark, name)(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name"))
-      catch { case NonFatal(e) =>
+    // each query's name goes to stderr before it runs, so Spark's own
+    // log lines (say, a dropped accumulator update) can be tied to it
+    val failed = selected.toSeq.flatMap { case (name, fn) =>
+      System.err.println(s"[verify] $name")
+      try {
+        QueryRun.scoped(spark, name)(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name"))
+        None
+      } catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
     }
+    System.err.println(s"[verify] ${selected.size - failed.size} of ${selected.size} " +
+      s"queries written; failed: ${if (failed.isEmpty) "none" else failed.sorted.mkString(",")}")
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.GraftInternals
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -247,21 +245,13 @@ class StreamingIngestPipelineSpec extends SparkSpec {
   test("a steady-state micro-batch runs at most 20 Spark jobs") {
     // every job of a micro-batch carries its batch id; batch 0 plans
     // cold, batches 1 and 2 are the steady state
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Long, Int]()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
-          .foreach { b => jobs.merge(b.toLong, 1, _ + _); () }
-    }
-    GraftInternals.drainListenerBus(spark)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      drive(Files.createTempDirectory("ingest_jobs").toString, 1000L, synthetic.grouped(20).toSeq)
-      GraftInternals.drainListenerBus(spark)
-    } finally spark.sparkContext.removeSparkListener(l)
+    val ledger = JobLedger.attach(spark)
+    try drive(Files.createTempDirectory("ingest_jobs").toString, 1000L, synthetic.grouped(20).toSeq)
+    finally ledger.detach()
     Seq(1L, 2L).foreach { b =>
-      assert(jobs.getOrDefault(b, 0) > 0, s"batch $b ran no job")
-      assert(jobs.get(b) <= 20, s"batch $b ran ${jobs.get(b)} jobs")
+      val jobs = ledger.tally(_.batchId.contains(b)).jobs
+      assert(jobs > 0, s"batch $b ran no job")
+      assert(jobs <= 20, s"batch $b ran $jobs jobs")
     }
   }
 

@@ -4,8 +4,6 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.GraftInternals
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -83,17 +81,11 @@ class StreamingStateSpec extends SparkSpec {
       (0 until n).map(i => (i.toLong, i.toLong)).toDF("v", "batch")
         .write.partitionBy("batch").parquet(root)
       assert(StreamingState.batchIds(root) === (0L until n.toLong))
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      val l = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-      }
-      GraftInternals.drainListenerBus(spark)
-      spark.sparkContext.addSparkListener(l)
+      val ledger = JobLedger.attach(spark)
       try {
         val rows = StreamingState.history(spark, root, schema, Some(n.toLong)).count()
-        GraftInternals.drainListenerBus(spark)
-        (rows, jobs.get)
-      } finally spark.sparkContext.removeSparkListener(l)
+        (rows, ledger.tally().jobs)
+      } finally ledger.detach()
     }
     val (rows5, jobs5) = jobsToCount(5)
     val (rows40, jobs40) = jobsToCount(40)
