@@ -4,6 +4,7 @@ import java.util.Properties
 
 import scala.collection.mutable
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerStageSubmitted}
 import org.apache.spark.sql.{GraftInternals, SparkSession}
 
@@ -98,6 +99,11 @@ object JobLedger {
   }
 
   private val SerialTasks = 2
+
+  /** Generated classes compiled in this JVM so far, by every session:
+    * Spark times each compile into one JVM-global histogram, whose count
+    * is exact (its time sum is sampled). Diff two reads to count a span. */
+  def codegenCompiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** A ledger of the jobs started after this call. */
   def attach(spark: SparkSession): JobLedger = {

@@ -8,7 +8,9 @@ package graft
   * parquet scan cannot be split, so per-row-expensive chains sitting
   * directly on a small scan serialize on one core; `all` finds them
   * fleet-wide. For a single query the last rep also lists its jobs.
-  * Every count comes from a [[JobLedger]].
+  * Every job, stage and shuffle count comes from a [[JobLedger]];
+  * `codegen` is the number of generated classes the rep compiled
+  * ([[JobLedger.codegenCompiles]]).
   *
   * Usage: runMain graft.JobProf <q|q1,q2,...|all> [sfDir] [reps]
   */
@@ -28,8 +30,10 @@ object JobProf {
       var ok = true // a failed rep fails the query: its later reps are skipped
       for (r <- 1 to reps if ok) {
         ledger.reset()
+        val compiled = JobLedger.codegenCompiles
         val run = QueryRun(spark, name, sfDir)
         val all = ledger.tally()
+        val codegen = JobLedger.codegenCompiles - compiled
         def phaseJobs(phase: String) = ledger.tally(_.description.contains(s"$name $phase")).jobs
         println(f"[jobprof] $name rep $r: construct ${run.constructS}%.2f s, " +
           f"execute ${run.executeS}%.2f s, jobs ${all.jobs} (construct " +
@@ -37,7 +41,7 @@ object JobProf {
           f"shuffleRead ${all.shuffleRead / 1e6}%.1f MB, " +
           f"shuffleWrite ${all.shuffleWrite / 1e6}%.1f MB, " +
           f"serialMs ${all.serialRunMs} / totalMs ${all.runMs} " +
-          f"(${100.0 * all.serialRunMs / math.max(1L, all.runMs)}%.0f%%)")
+          f"(${100.0 * all.serialRunMs / math.max(1L, all.runMs)}%.0f%%), codegen $codegen")
         run.failure.foreach(e => System.err.println(s"[jobprof] $name rep $r failed: $e"))
         ok = run.failure.isEmpty
         if (names.size == 1 && (r == reps || !ok))

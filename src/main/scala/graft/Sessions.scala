@@ -49,6 +49,16 @@ object Sessions {
       // every broadcast hash relation (kept until GC) holds a page; at 64m
       // CurationFunnelSpec's 500 docs filled 3.9 GB of a 4.1 GB pool.
       .config("spark.buffer.pageSize", "8m")
+      // Spark's generated-class cache is one JVM-wide LRU keyed by
+      // (context class loader, code), so in local mode a class used on
+      // both sides takes two entries: one under the driver thread's
+      // loader, one under the executor task's session loader. Measured
+      // working sets: a 4-batch ingest stream compiles 108 classes in
+      // all, one q253 run 286. At the default 100 entries every steady
+      // micro-batch recompiled the 65-69 classes the batch before it had
+      // evicted (about 0.5 s a batch), and a second q253 run all 286.
+      // Static: read once, when CodeGenerator first initializes.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.extensions", "graft.GraftExtensions")
   }

@@ -21,6 +21,10 @@ import graft.streaming.StreamingIngestPipeline.IngestDoc
   * `jobs_p50` is the median Spark job count of the same steady
   * batches, as a [[JobLedger]] files them under their batch id, so a
   * batch that starts running more jobs shows in the JSON line.
+  * `first_batch_codegen` and `codegen_p50` count the generated classes
+  * Spark compiled during the first batch and during the median steady
+  * batch ([[JobLedger.codegenCompiles]]): a steady batch re-plans the
+  * same query, so it should find every class in Spark's codegen cache.
   *
   * Usage: runMain graft.StreamBench <dir> [batchSize] [maxDocs]
   *
@@ -60,15 +64,19 @@ object StreamBench {
     val input = MemoryStream[IngestDoc]
     val q = pipe.run(input.toDS(), s"$root/packed", s"$root/ckpt")
     val times = scala.collection.mutable.ArrayBuffer.empty[Double]
+    val compiles = scala.collection.mutable.ArrayBuffer.empty[Double]
     val t0 = System.nanoTime()
     try {
       docs.grouped(batchSize).foreach { b =>
         val bt = System.nanoTime()
+        val bc = JobLedger.codegenCompiles
         input.addData(b.toSeq)
         q.processAllAvailable()
         val t = (System.nanoTime() - bt) / 1e9
         times += t
-        System.err.println(f"[streambench] batch ${times.size - 1}: ${b.size} docs, $t%.2f s")
+        compiles += (JobLedger.codegenCompiles - bc).toDouble
+        System.err.println(f"[streambench] batch ${times.size - 1}: ${b.size} docs, $t%.2f s, " +
+          f"${compiles.last}%.0f classes compiled")
       }
     } finally q.stop()
     val totalS = (System.nanoTime() - t0) / 1e9
@@ -84,6 +92,7 @@ object StreamBench {
       f""""total_s":$totalS%.1f,"rows_per_sec":${docs.length / totalS}%.0f,""" +
       f""""first_batch_s":${times.head}%.2f,"p50_batch_s":${pct(times.toSeq, 0.5)}%.2f,""" +
       f""""jobs_p50":${pct(batchJobs, 0.5)}%.0f,""" +
+      f""""first_batch_codegen":${compiles.head}%.0f,"codegen_p50":${pct(compiles.toSeq, 0.5)}%.0f,""" +
       f""""p95_batch_s":${pct(times.toSeq, 0.95)}%.2f,"packed_rows":$packed}""")
     org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
     spark.stop()

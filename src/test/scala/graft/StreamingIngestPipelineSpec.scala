@@ -63,17 +63,30 @@ class StreamingIngestPipelineSpec extends SparkSpec {
 
   /** Run `batches` through a fresh pipeline object on `root`, one
     * micro-batch per element, from `input` (a new source unless given)
-    * and the streaming checkpoint under `root`. */
+    * and the streaming checkpoint under `root`; `afterBatch` runs once
+    * each batch is processed. */
   private def drive(root: String, costMicro: Long, batches: Seq[Seq[IngestDoc]],
-      input: Option[MemoryStream[IngestDoc]] = None): Unit = {
+      input: Option[MemoryStream[IngestDoc]] = None, afterBatch: () => Unit = () => ()): Unit = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val pipe = new StreamingIngestPipeline(root, costMicro, Cap, DupShareMax,
       MinBands, CtxLen)
     val in = input.getOrElse(MemoryStream[IngestDoc])
     val q = pipe.run(in.toDS(), s"$root/packed", s"$root/ckpt")
-    try batches.foreach { b => in.addData(b); q.processAllAvailable() }
+    try batches.foreach { b => in.addData(b); q.processAllAvailable(); afterBatch() }
     finally q.stop()
+  }
+
+  /** The stream the steady-state budgets read, run once for all of
+    * them: three 20-doc batches, the ledger of their jobs, and the
+    * generated classes each batch compiled. */
+  private lazy val steady: (JobLedger, Seq[Long]) = {
+    val ledger = JobLedger.attach(spark)
+    val marks = scala.collection.mutable.ArrayBuffer(JobLedger.codegenCompiles)
+    try drive(Files.createTempDirectory("ingest_jobs").toString, 1000L,
+      synthetic.grouped(20).toSeq, afterBatch = () => marks += JobLedger.codegenCompiles)
+    finally ledger.detach()
+    (ledger, marks.toSeq.zip(marks.tail).map { case (a, b) => b - a })
   }
 
   test("streamed composition equals the batch formulation per stage") {
@@ -245,14 +258,22 @@ class StreamingIngestPipelineSpec extends SparkSpec {
   test("a steady-state micro-batch runs at most 20 Spark jobs") {
     // every job of a micro-batch carries its batch id; batch 0 plans
     // cold, batches 1 and 2 are the steady state
-    val ledger = JobLedger.attach(spark)
-    try drive(Files.createTempDirectory("ingest_jobs").toString, 1000L, synthetic.grouped(20).toSeq)
-    finally ledger.detach()
+    val (ledger, _) = steady
     Seq(1L, 2L).foreach { b =>
       val jobs = ledger.tally(_.batchId.contains(b)).jobs
       assert(jobs > 0, s"batch $b ran no job")
       assert(jobs <= 20, s"batch $b ran $jobs jobs")
     }
+  }
+
+  test("a steady-state micro-batch compiles no new generated class") {
+    // batch 2 plans what batch 1 planned (batch 1 still differs from
+    // batch 0's empty history), so each of its classes is in Spark's
+    // codegen cache; a cache smaller than a batch's working set
+    // recompiles the classes the batch before evicted
+    val (_, compiled) = steady
+    assert(compiled.size === 3)
+    assert(compiled(2) === 0L, s"batch 2 compiled ${compiled(2)} classes (per batch: $compiled)")
   }
 
   test("a fresh instance resumes from the committed dims as the unbroken run does") {
